@@ -350,7 +350,7 @@ def main() -> None:
     # Materialize it up front as its own timed entry instead: the total
     # still pays the cost exactly once, and each member then measures
     # only its own tail.
-    from etl_sh_design_spark import registry_ext
+    from etl_sh_design_spark import memo, registry_ext
 
     # dev-only subset (set below for the sweep too): when iterating on
     # named queries, skip the composite and sf1 sections unless asked
@@ -372,16 +372,13 @@ def main() -> None:
     def _family_entry(name, build, invalidate=None) -> None:
         if only_set is not None and name not in only_set:
             return
-        # NOTE (ADVICE r12): `invalidate` clears the Python memo dicts
-        # and the catalog cache so each repeat honestly re-pays the
-        # full build, but the PRIOR run's lazily-localCheckpointed
-        # blocks stay in executor storage until the session drops them
-        # (PySpark exposes no handle to unpersist a LogicalRDD's
-        # backing blocks, and force-unpersisting every persistent RDD
-        # would break OTHER families' still-live checkpoints — lineage
-        # is truncated, lost blocks are unrecoverable). At sf0.1 the
-        # residue is MB-scale; the repeat measures a warm-storage
-        # build, which is the quantity we compare round-over-round.
+        # NOTE (ADVICE r12): `invalidate` drops the memo families (and
+        # the catalog cache) so each repeat honestly re-pays the full
+        # build, but the PRIOR run's lazily-localCheckpointed blocks
+        # stay in executor storage until the session ends (see the
+        # memo module docstring). At sf0.1 the residue is MB-scale; the
+        # repeat measures a warm-storage build, which is the quantity
+        # we compare round-over-round.
         vals: list[float] = []
         for r in range(_n_family_runs):
             if r > 0 and invalidate is not None:
@@ -406,35 +403,36 @@ def main() -> None:
         if len(vals) > 1:
             spreads[name] = round(vals[1] - vals[0], 3)
 
-    def _clear_dedup_family() -> None:
-        registry_ext._DEDUP_PAIRS_CACHE.clear()
-        registry_ext._DEDUP_COMPONENTS_CACHE.clear()
-        registry_ext._DEDUP_SIGS_CACHE.clear()
-        registry_ext._DOCS_SIGS_CACHE.clear()
-        spark.catalog.clearCache()
+    def _clear(*families: str):
+        """An invalidator dropping `families` from the session memo and
+        the catalog cache."""
+
+        def invalidate() -> None:
+            for family in families:
+                memo.clear(family)
+            spark.catalog.clearCache()
+
+        return invalidate
 
     _family_entry(
         "dedup_family_shared_subplan",
         lambda: registry_ext.dedup_components(spark, SF_DIR).count(),
-        invalidate=_clear_dedup_family,
+        invalidate=_clear("dedup"),
     )
 
     # The PQ family (pq_ann_topk, ivfpq_*, pq_rerank_topk,
     # pq_shortlist_audit, pq_recall_audit) shares one codegen surface:
     # the subspace explode -> broadcast-codebook join -> argmin
-    # train/encode chain. It is deliberately NOT memoized (codebooks
-    # are KB-sized and retraining is cheaper than cross-query cache
-    # coupling), but the chain's first execution carries the family's
-    # whole-stage-codegen JIT — in the driver's single-run sweep that
-    # landed on pq_recall_audit (8.65 s vs 3.79 s builder-warm,
-    # VERDICT r10 item 7). Pay the JIT once as its own timed entry so
-    # each member reports its own tail (same attribution fix as
+    # train/encode chain, whose train+encode+ADC prefixes are
+    # session-memoized (the memo module's "pq" family — the eleven
+    # family entries each retrained identical codebooks). The chain's
+    # first execution also carries the family's whole-stage-codegen
+    # JIT — in the driver's single-run sweep that landed on
+    # pq_recall_audit (8.65 s cold vs 3.79 s warm, VERDICT r10
+    # item 7). Pay the build once as its own timed entry so each member
+    # reports its own tail (same attribution fix as
     # dedup_family_shared_subplan).
     from etl_sh_design_spark.operators import pq as _pq
-
-    def _clear_pq_family() -> None:
-        _pq._PQ_MEMO.clear()
-        spark.catalog.clearCache()
 
     _family_entry(
         "pq_family_shared",
@@ -443,34 +441,16 @@ def main() -> None:
             k=5,
             n_queries=10,
         ).write.format("noop").mode("overwrite").save(),
-        invalidate=_clear_pq_family,
+        invalidate=_clear("pq", "ivfpq"),
     )
     if only_set is None or "pq_family_shared" in only_set:
         spark.catalog.clearCache()
-    # Round 12: the PQ/IVF-PQ train+encode+ADC prefixes are memoized
-    # per session (operators/pq.py _PQ_MEMO — the eleven family
-    # entries each retrained identical codebooks). Like the dedup
-    # family's entry above, the IVF-PQ index build is owned by its own
-    # timed entry so each member measures only its tail; the total
-    # still pays the build exactly once. (pq_family_shared above
-    # already owns the flat-PQ build through its pq_topk call.)
-    def _clear_ivfpq_only() -> None:
-        # drop ONLY the IVF-PQ prefixes ("ivfpq_adc"/"ivfpq_index"
-        # tagged keys) so the repeat re-pays this entry's own build
-        # while the flat-PQ prefixes pq_family_shared just built (and
-        # owns) stay warm for the member tails. The tag sits at key
-        # position 2 — (applicationId, planHash, tag, *params) — so
-        # match it exactly (ADVICE r12: a startswith over every string
-        # param would sweep up a future id_col/vec_col beginning with
-        # "ivfpq", or silently keep a differently-named IVF tag warm).
-        for k in [
-            k
-            for k in _pq._PQ_MEMO
-            if len(k) > 2 and k[2] in {"ivfpq_adc", "ivfpq_index"}
-        ]:
-            del _pq._PQ_MEMO[k]
-        spark.catalog.clearCache()
-
+    # Like the flat-PQ entry above, the IVF-PQ index build ("ivfpq"
+    # memo family) is owned by its own timed entry so each member
+    # measures only its tail; the total still pays the build exactly
+    # once. Its repeats drop ONLY the "ivfpq" family, so the flat-PQ
+    # prefixes pq_family_shared just built (and owns) stay warm for the
+    # member tails.
     _family_entry(
         "ivfpq_family_shared",
         lambda: _pq.ivfpq_topk(
@@ -478,12 +458,12 @@ def main() -> None:
             k=5,
             n_queries=10,
         ).write.format("noop").mode("overwrite").save(),
-        invalidate=_clear_ivfpq_only,
+        invalidate=_clear("ivfpq"),
     )
     if only_set is None or "ivfpq_family_shared" in only_set:
         spark.catalog.clearCache()
     # Round 12: the synthetic tiling chain (slots -> runs) is
-    # session-memoized (plans/tiling._SYNTH_MEMO) and shared by six
+    # session-memoized (the "tiling" memo family) and shared by six
     # queries; own its build as a timed entry (same attribution
     # discipline as the other *_family_shared entries).
     from etl_sh_design_spark.plans import tiling as _tiling
@@ -491,7 +471,7 @@ def main() -> None:
     _family_entry(
         "tiling_family_shared",
         lambda: _tiling.runs(spark).count(),
-        invalidate=_tiling._SYNTH_MEMO.clear,
+        invalidate=lambda: memo.clear("tiling"),
     )
     # Round 12: the two multi-variant acceptance queries share ONE
     # memoized per-(variant, event) hit table (registry_r7.mv_per_hit
@@ -504,8 +484,8 @@ def main() -> None:
         "acceptance_family_shared",
         lambda: _r7.mv_per_hit(spark).count(),
         # clear only the per-hit table; the static variant corner set
-        # (_MV_VARIANTS_MEMO) is dimension metadata, not timed work
-        invalidate=_r7._MV_HITS_MEMO.clear,
+        # ("mv_variants") is dimension metadata, not timed work
+        invalidate=lambda: memo.clear("mv_hits"),
     )
     # Determinism (round-4 verdict task 7): headline queries run
     # N_RUNS times back-to-back and report the BEST (warm) time, with
@@ -664,7 +644,7 @@ def main() -> None:
         # the monsters: best-of-2 with recorded spread (see above).
         # The optional pre_repeat hook makes the second run honest —
         # dedup_family_shared_subplan is session-memoized, so without
-        # clearing the memo its repeat would time a dict lookup.
+        # clearing the memo its repeat would time a memo hit.
         SF1_REPEAT = {
             "dedup_family_shared_subplan",
             "semantic_dedup",
@@ -774,19 +754,13 @@ def main() -> None:
         # sub-plan as its own timed entry at sf1 too (the sf0.1 sweep
         # does the same), so minhash_lsh_neardup measures its
         # post-shared TAIL at both scales instead of tail-vs-family
-        def _clear_dedup_memo() -> None:
-            # repeat honesty: drop the session memo so run 2 rebuilds
-            # the shared sub-plan; run 2 then leaves the memo WARM for
-            # the downstream family tails, same as a single run did
-            _rext._DEDUP_PAIRS_CACHE.clear()
-            _rext._DEDUP_COMPONENTS_CACHE.clear()
-            _rext._DEDUP_SIGS_CACHE.clear()
-            _rext._DOCS_SIGS_CACHE.clear()
-
+        # repeat honesty: drop the session memo so run 2 rebuilds the
+        # shared sub-plan; run 2 then leaves the memo WARM for the
+        # downstream family tails, same as a single run did
         _sf1_entry(
             "dedup_family_shared_subplan",
             lambda: _rext.dedup_components(spark, SF10X).count(),
-            pre_repeat=_clear_dedup_memo,
+            pre_repeat=lambda: memo.clear("dedup"),
         )
         for name in SF1_HEADLINE:
             # ngram's run 1 leaves its own shingle table in the

@@ -36,46 +36,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from etl_sh_design_spark import memo
+
 M = 4  # subspaces
 SUBDIM = 16  # dims per subspace (M * SUBDIM = 64)
 KCODES = 16  # codes per subspace
 
 # ---------------------------------------------------------------- memo
-# Session-scoped memo of the family's shared sub-plans (round 12,
-# guide §2.4 "remove shuffles outright" applied across queries): the
-# eleven PQ/IVF-PQ registry entries each retrained the SAME codebooks
-# and re-encoded the SAME corpus from scratch (~2 s of identical work
-# per entry at sf0.1 — measured: pq_topk 2.7 s cold vs 0.75 s with the
-# train+encode stages memoized). Training is deterministic (seeded
-# init, 6dp-rounded means), so memoizing changes nothing about any
-# query's RESULT — only how often the identical prefix is computed
-# per session. Same discipline as registry_ext's dedup-family memo:
-# keyed on (applicationId, semanticHash(input plan), params), entries
-# from dead applications evicted on first touch, values are lazy
-# localCheckpoints (materialized by their first consumer, surviving
-# the bench's per-entry clearCache). The bench owns the build cost as
-# its own timed pre-sweep entries (pq_family_shared /
-# ivfpq_family_shared), so per-entry attribution stays honest.
-_PQ_MEMO: dict = {}
-
-
-def _memo_key(df: DataFrame, *params):
-    """(applicationId, analyzed-plan semantic hash, *params) — or None
-    when the plan hash is unavailable (then the caller just computes)."""
-    try:
-        h = df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:
-        return None
-    return (df.sparkSession.sparkContext.applicationId, h, *params)
-
-
-def _memo_get(key):
-    if key is None:
-        return None
-    app_id = key[0]
-    for k in [k for k in _PQ_MEMO if k[0] != app_id]:
-        del _PQ_MEMO[k]
-    return _PQ_MEMO.get(key)
+# The family's shared sub-plans are session-memoized (round 12, guide
+# §2.4 "remove shuffles outright" applied across queries): the eleven
+# PQ/IVF-PQ registry entries each retrained the SAME codebooks and
+# re-encoded the SAME corpus from scratch (~2 s of identical work per
+# entry at sf0.1 — measured: pq_topk 2.7 s cold vs 0.75 s with the
+# train+encode stages memoized). They live in the memo module's "pq"
+# (train, ADC) and "ivfpq" (index, ADC) families, keyed on the input
+# plan (memo.plan_key) and params; values are lazy localCheckpoints
+# (materialized by their first consumer, surviving the bench's
+# per-entry clearCache). The bench owns the build cost as its own
+# timed pre-sweep entries (pq_family_shared / ivfpq_family_shared), so
+# per-entry attribution stays honest.
+def _memo(family: str, embeddings: DataFrame, params: tuple, build):
+    key = (memo.plan_key(embeddings), *params)
+    return memo.get(embeddings.sparkSession, family, key, build)
 
 
 def _sqdist(a: str, b: str) -> F.Column:
@@ -110,21 +92,25 @@ def pq_train_encode(
     embeddings: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    memo: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """One Lloyd round per subspace -> (codebooks, codes).
 
     codebooks: (s, cluster, c array<double>) — M*K rows, broadcastable.
     codes:     (vec_id, s, code) — the compressed index.
 
-    Memoized per session (module note above); `memo=False` forces a
-    fresh build (used by ivfpq_topk, whose residual input plan is a
-    fresh localCheckpoint each call and is covered by the IVF-PQ
-    prefix memo instead, and by the memo-parity test)."""
-    key = _memo_key(embeddings, "train", id_col, vec_col) if memo else None
-    got = _memo_get(key)
-    if got is not None:
-        return got
+    Memoized per session (module note above)."""
+
+    def build():
+        codebooks, codes = _train_encode(embeddings, id_col, vec_col)
+        return codebooks, codes.localCheckpoint(eager=False)
+
+    return _memo("pq", embeddings, ("train", id_col, vec_col), build)
+
+
+def _train_encode(
+    embeddings: DataFrame, id_col: str, vec_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The un-memoized build behind pq_train_encode (codes left a plan)."""
     # Round 13 (VERDICT r12 #6, guide §5): `sub` is NOT checkpointed.
     # DataFrame.localCheckpoint(eager=False) runs full physical
     # planning + whole-stage codegen for its subtree at CONSTRUCTION
@@ -172,9 +158,6 @@ def pq_train_encode(
         .agg(F.min(F.struct("dist", "cluster")).alias("m"))
         .select("vec_id", "s", F.col("m.cluster").alias("code"))
     )
-    if key is not None:
-        codes = codes.localCheckpoint(eager=False)
-        _PQ_MEMO[key] = (codebooks, codes)
     return codebooks, codes
 
 
@@ -191,10 +174,19 @@ def _pq_adc(
     pq_rerank_topk (whose non-auto shortlist IS pq_topk at k=R),
     pq_rerank auto-R, pq_shortlist_audit and pq_recall_audit all rank
     or aggregate this same |queries| x |corpus| candidate set."""
-    key = _memo_key(embeddings, "adc", id_col, vec_col, n_queries)
-    got = _memo_get(key)
-    if got is not None:
-        return got
+    return _memo(
+        "pq",
+        embeddings,
+        ("adc", id_col, vec_col, n_queries),
+        lambda: _pq_adc_plan(embeddings, n_queries, id_col, vec_col).localCheckpoint(
+            eager=False
+        ),
+    )
+
+
+def _pq_adc_plan(
+    embeddings: DataFrame, n_queries: int, id_col: str, vec_col: str
+) -> DataFrame:
     codebooks, codes = pq_train_encode(embeddings, id_col, vec_col)
     q = _subvectors(
         embeddings.filter(F.col(id_col) < n_queries), id_col, vec_col
@@ -208,7 +200,7 @@ def _pq_adc(
             F.round(_sqdist("qv", "c") * 1e6).cast("bigint").alias("pmicro"),
         )
     )
-    adc = (
+    return (
         codes.join(
             F.broadcast(lut),
             (codes.s == lut.s) & (codes.code == lut.cluster),
@@ -217,10 +209,6 @@ def _pq_adc(
         .groupBy("qid", "vec_id")
         .agg(F.sum("pmicro").alias("adc_micro"))
     )
-    if key is not None:
-        adc = adc.localCheckpoint(eager=False)
-        _PQ_MEMO[key] = adc
-    return adc
 
 
 def pq_topk(
@@ -366,11 +354,19 @@ def ivfpq_topk(
     engines); each corpus vector lives in exactly one cell, so a
     neighbor never appears twice across probes; the PQ stages inherit
     pq_train_encode's contract."""
-    adc_key = _memo_key(embeddings, "ivfpq_adc", id_col, vec_col, n_queries, nprobe)
-    adc = _memo_get(adc_key)
-    if adc is not None:
-        return adc if _return_adc else _ivfpq_rank(adc, k)
+    adc = _memo(
+        "ivfpq",
+        embeddings,
+        ("adc", id_col, vec_col, n_queries, nprobe),
+        lambda: _ivfpq_adc_plan(embeddings, n_queries, nprobe, id_col, vec_col)
+        .localCheckpoint(eager=False),
+    )
+    return adc if _return_adc else _ivfpq_rank(adc, k)
 
+
+def _ivfpq_adc_plan(
+    embeddings: DataFrame, n_queries: int, nprobe: int, id_col: str, vec_col: str
+) -> DataFrame:
     scored, codebooks, codes_cells = _ivfpq_index(embeddings, id_col, vec_col)
 
     # top-nprobe cells per query (same rounded-cosine ranking and
@@ -408,7 +404,7 @@ def ivfpq_topk(
         "cluster",
         F.round(_sqdist("qv", "c") * 1e6).cast("bigint").alias("pmicro"),
     )
-    adc = (
+    return (
         codes_cells.join(
             F.broadcast(lut),
             (codes_cells.s == lut.s)
@@ -419,12 +415,6 @@ def ivfpq_topk(
         .groupBy("qid", "vec_id")
         .agg(F.sum("pmicro").alias("adc_micro"))
     )
-    if adc_key is not None:
-        adc = adc.localCheckpoint(eager=False)
-        _PQ_MEMO[adc_key] = adc
-    if _return_adc:
-        return adc
-    return _ivfpq_rank(adc, k)
 
 
 def _ivfpq_index(
@@ -434,12 +424,19 @@ def _ivfpq_index(
     residual codebooks, and the (vec_id, cell, s, code) codes table.
     Memoized per (session, corpus plan) — every nprobe/k/n_queries
     variant of ivfpq_topk shares one build."""
+    return _memo(
+        "ivfpq",
+        embeddings,
+        ("index", id_col, vec_col),
+        lambda: _ivfpq_index_build(embeddings, id_col, vec_col),
+    )
+
+
+def _ivfpq_index_build(
+    embeddings: DataFrame, id_col: str, vec_col: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     from etl_sh_design_spark.operators.similarity import _dot, _dvec, _norm
 
-    key = _memo_key(embeddings, "ivfpq_index", id_col, vec_col)
-    got = _memo_get(key)
-    if got is not None:
-        return got
     # no checkpoint on `v` (round 13, same reasoning as `sub` in
     # pq_train_encode): a cast projection is cheaper to re-derive in
     # its two consumers than one more planning+codegen pass per build
@@ -470,19 +467,18 @@ def _ivfpq_index(
     # the residual input is a fresh localCheckpoint plan each build, so
     # the train memo could never hit on it — the index memo here is the
     # cache for the whole prefix
-    codebooks, codes = pq_train_encode(resid, id_col="vec_id", vec_col="r", memo=False)
-    codes_cells = codes.join(resid.select("vec_id", "cell"), "vec_id")
-    if key is not None:
-        # `scored` stays a PLAIN plan (round 13): its only external
-        # consumer is ivfpq_topk's qprobe, which filters to the
-        # n_queries probe rows — as a plan, that filter pushes down to
-        # the parquet scan (a |queries| x N_COARSE-row job); a
-        # localCheckpoint would both pay one more planning+codegen
-        # pass per build AND materialize a corpus x N_COARSE row table
-        # that blocks the pushdown. codes_cells IS corpus-sized and
-        # reused by every nprobe/k variant's ADC join — checkpointed.
-        codes_cells = codes_cells.localCheckpoint(eager=False)
-        _PQ_MEMO[key] = (scored, codebooks, codes_cells)
+    codebooks, codes = _train_encode(resid, id_col="vec_id", vec_col="r")
+    # `scored` stays a PLAIN plan (round 13): its only external consumer
+    # is ivfpq_topk's qprobe, which filters to the n_queries probe rows
+    # — as a plan, that filter pushes down to the parquet scan (a
+    # |queries| x N_COARSE-row job); a localCheckpoint would both pay
+    # one more planning+codegen pass per build AND materialize a corpus
+    # x N_COARSE row table that blocks the pushdown. codes_cells IS
+    # corpus-sized and reused by every nprobe/k variant's ADC join —
+    # checkpointed.
+    codes_cells = codes.join(resid.select("vec_id", "cell"), "vec_id").localCheckpoint(
+        eager=False
+    )
     return scored, codebooks, codes_cells
 
 

@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_sh_design_spark import memo
 from etl_sh_design_spark.operators.partition import (
     PARTITION_LOOKUP_SQL,
     partition_lookup,
@@ -215,69 +216,33 @@ def _annulus_ok(x1, y1, x2, y2, r_in: float, r_out: float):
     return cond
 
 
-# (application id,) -> persisted slot table segments. The slot
-# pipeline feeds MANY downstream branches (chain windows, the two-pass
-# runs split, totals/flavors/boards) — without materialization the
-# Arrow polygon-flag stage re-executes once per branch per query
-# (measured 15-29 s/query); with one lazy localCheckpoint it runs once
-# per session (~1 s) and every consumer reads the 841-row result.
-# Lazy (eager=False): no job at DataFrame-construction time
-# (tests/test_lazy_construction.py).
-# Keyed on the JVM-side applicationId, NOT id(spark): a stopped
-# session's CPython address can be reused by a new SparkSession, which
-# would hand stale DataFrames bound to a dead JVM out of the memo
-# (ADVICE r7). applicationId is unique per SparkContext (in local mode
-# `local-<launch millis>`), so stale entries can never collide; they
-# are also evicted eagerly below to bound growth across restarts.
-_SLOTS_MEMO: dict[str, list] = {}
-
-# (application id, name) -> built DataFrame. Re-building these plans
-# per call would mint fresh expression IDs, which changes the
-# generated code TEXT and defeats the Janino compile cache — the
-# dominant cost for these dimension-sized pipelines is compilation,
-# not data.
-_DF_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
-def _session_key(spark: SparkSession) -> str:
-    app_id = spark.sparkContext.applicationId
-    # evict entries from dead sessions (different app id): a test
-    # suite or long-lived service that restarts Spark would otherwise
-    # accumulate unreachable JVM-bound plans here
-    for d in (_SLOTS_MEMO, _DF_MEMO):
-        for k in [k for k in d if (k if isinstance(k, str) else k[0]) != app_id]:
-            del d[k]
-    return app_id
-
-
-def _memo_df(spark: SparkSession, name: str, build) -> DataFrame:
-    key = (_session_key(spark), name)
-    got = _DF_MEMO.get(key)
-    if got is None:
-        got = build()
-        _DF_MEMO[key] = got
-    return got
-
-
+# The slot pipeline feeds MANY downstream branches (chain windows, the
+# two-pass runs split, totals/flavors/boards) — without materialization
+# the Arrow polygon-flag stage re-executes once per branch per query
+# (measured 15-29 s/query); memoized behind one lazy persist it runs
+# once per session (~1 s) and every consumer reads the 841-row result.
+# The face plans below are memoized too: re-building them per call
+# would mint fresh expression IDs, which changes the generated code
+# TEXT and defeats the Janino compile cache.
 def all_face_slots(spark: SparkSession) -> DataFrame:
-    """All four faces' slot tables, memoized per session behind one
-    lazy localCheckpoint. Two plans only: face1 (special r_inner=322 +
+    """All four faces' slot tables, memoized per session behind lazy
+    persists. Two plans only: face1 (special r_inner=322 +
     shorter attachments) and faces 2-4 together via the face-dim cross
     join — the per-plan cost here is Catalyst/Janino time, not data."""
-    key = _session_key(spark)
-    got = _SLOTS_MEMO.get(key)
-    if got is not None:
-        # a catalog.clearCache() (bench hygiene between queries) drops
-        # the persist registrations; re-mark every memoized segment
-        # lazily so consumers keep planning against the small cached
-        # sub-plans (persist() runs no job — the next action
-        # re-materializes once)
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        for df in got:
-            if df.storageLevel == StorageLevel.NONE:
-                df.persist()
-        return got[-1]
+    registry = memo.get(spark, "dee_faces", "slots", lambda: _all_face_slots_build(spark))
+    # a catalog.clearCache() (bench hygiene between queries) drops the
+    # persist registrations; re-mark every memoized segment lazily so
+    # consumers keep planning against the small cached sub-plans
+    # (persist() runs no job — the next action re-materializes once)
+    for df in registry:
+        if df.storageLevel == StorageLevel.NONE:
+            df.persist()
+    return registry[-1]
+
+
+def _all_face_slots_build(spark: SparkSession) -> list[DataFrame]:
     registry: list[DataFrame] = []
     first = config_slots_plan(
         spark,
@@ -303,10 +268,8 @@ def all_face_slots(spark: SparkSession) -> DataFrame:
     # jobs — breaking the no-jobs-at-construction contract
     # (tests/test_lazy_construction.py). persist is fully lazy and
     # Catalyst substitutes the cached segment into every consumer.
-    out = first.unionByName(rest).persist()
-    registry.append(out)
-    _SLOTS_MEMO[key] = registry
-    return out
+    registry.append(first.unionByName(rest).persist())
+    return registry
 
 
 def face_slots(spark: SparkSession, face: str) -> DataFrame:
@@ -500,7 +463,9 @@ def face_runs(
     board is re-tiled under the stricter yes-only filter. Same shape as
     plans.tiling.runs_two_pass_from but keyed by (face, iy)."""
     if slots is None and tuple(sorted(flavors, reverse=True)) == (7, 6, 3):
-        return _memo_df(spark, "face_runs", lambda: _face_runs_plan(spark, None, flavors))
+        return memo.get(
+            spark, "dee_faces", "face_runs", lambda: _face_runs_plan(spark, None, flavors)
+        )
     return _face_runs_plan(spark, slots, flavors)
 
 
@@ -707,7 +672,9 @@ def config_module_totals(
 
 
 def face_supermodules(spark: SparkSession) -> DataFrame:
-    return _memo_df(spark, "face_supermodules", lambda: _face_supermodules_plan(spark))
+    return memo.get(
+        spark, "dee_faces", "face_supermodules", lambda: _face_supermodules_plan(spark)
+    )
 
 
 def _face_supermodules_plan(spark: SparkSession) -> DataFrame:
@@ -738,7 +705,9 @@ def _face_supermodules_plan(spark: SparkSession) -> DataFrame:
 
 
 def face_module_totals(spark: SparkSession) -> DataFrame:
-    return _memo_df(spark, "face_module_totals", lambda: _face_module_totals_plan(spark))
+    return memo.get(
+        spark, "dee_faces", "face_module_totals", lambda: _face_module_totals_plan(spark)
+    )
 
 
 def _face_module_totals_plan(spark: SparkSession) -> DataFrame:
@@ -758,7 +727,9 @@ def _face_module_totals_plan(spark: SparkSession) -> DataFrame:
 
 
 def face_flavor_counts(spark: SparkSession) -> DataFrame:
-    return _memo_df(spark, "face_flavor_counts", lambda: _face_flavor_counts_plan(spark))
+    return memo.get(
+        spark, "dee_faces", "face_flavor_counts", lambda: _face_flavor_counts_plan(spark)
+    )
 
 
 def _face_flavor_counts_plan(spark: SparkSession) -> DataFrame:
@@ -855,7 +826,7 @@ def boards_from_supermodules(sm: DataFrame, face_dim: DataFrame) -> DataFrame:
 
 
 def face_boards(spark: SparkSession) -> DataFrame:
-    return _memo_df(spark, "face_boards", lambda: _face_boards_plan(spark))
+    return memo.get(spark, "dee_faces", "face_boards", lambda: _face_boards_plan(spark))
 
 
 def _face_boards_plan(spark: SparkSession) -> DataFrame:

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from etl_sh_design_spark import memo
 from etl_sh_design_spark.operators.partition import PARTITION_LOOKUP_SQL, partition_lookup
 
 # slot grid: right half-dee, rows of module slots
@@ -96,26 +97,16 @@ def _with_availability(n_blocked: DataFrame) -> DataFrame:
 # tile_flavor_counts / a5_slot_state_counts / j6_ordinal_join), each
 # paying the full grid + blocked-overlap + windows + two-pass-runs
 # chain (16-18 Exchange mentions per plan) over a dimension-sized
-# (~3k-row) result. One localCheckpoint per table per session — same
-# discipline as slots_real's _REAL_MEMO below and the dedup/PQ family
-# memos; keyed on applicationId so every bench/oracle invocation
-# recomputes from scratch. bench.py owns the build as its own timed
-# tiling_family_shared entry.
-_SYNTH_MEMO: dict[tuple, DataFrame] = {}
-
-
+# (~3k-row) result. One lazy localCheckpoint per table per session in
+# the memo module's "tiling" family; bench.py owns the build as its own
+# timed tiling_family_shared entry.
 def _synth_memo(spark: SparkSession, name: str, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, name)
-    got = _SYNTH_MEMO.get(key)
-    if got is None:
-        got = build().localCheckpoint(eager=False)
-        _SYNTH_MEMO[key] = got
-    return got
+    return memo.get(spark, "tiling", name, lambda: build().localCheckpoint(eager=False))
 
 
 def slots(spark: SparkSession) -> DataFrame:
     """U4 + P18 + J3 + W6: the slot table with availability state
-    (session-memoized; see _SYNTH_MEMO)."""
+    (session-memoized; see _synth_memo)."""
     return _synth_memo(spark, "slots", lambda: _slots_build(spark))
 
 
@@ -274,15 +265,6 @@ def polygon_bboxes(polys: dict[str, list]) -> list[tuple]:
     ]
 
 
-# (applicationId, geometry, segments, layout) -> built slot DataFrame.
-# Keyed on the JVM-side application id, NOT id(spark): a stopped
-# session's CPython address can be reused by a new SparkSession, which
-# would hand out DataFrames bound to a dead JVM (ADVICE r7). Rebuilt
-# plans also mint fresh expression IDs, defeating the Janino compile
-# cache — for this dimension-sized pipeline compile time IS the cost.
-_REAL_MEMO: dict[tuple, DataFrame] = {}
-
-
 def slots_real(
     spark: SparkSession,
     geometry: str = "polygon",
@@ -295,11 +277,21 @@ def slots_real(
     map-only — no shuffle before the neighbor window); geometry='bbox'
     uses the bounding-box over-approximation (pure codegen,
     SQL-expressible). Everything downstream (radial states, neighbor
-    rule) is shared with the stand-in path."""
-    key = (spark.sparkContext.applicationId, geometry, circle_segments, layout)
-    got = _REAL_MEMO.get(key)
-    if got is not None:
-        return got
+    rule) is shared with the stand-in path.
+
+    Session-memoized per (geometry, segments, layout): for this
+    dimension-sized pipeline compile time IS the cost."""
+    return memo.get(
+        spark,
+        "tiling_real",
+        (geometry, circle_segments, layout),
+        lambda: _slots_real_build(spark, geometry, circle_segments, layout),
+    )
+
+
+def _slots_real_build(
+    spark: SparkSession, geometry: str, circle_segments: int, layout: str
+) -> DataFrame:
     grid = _slot_grid(spark)
     polys = reference_blocked_polygons(circle_segments, layout)
     if geometry == "polygon":
@@ -326,9 +318,7 @@ def slots_real(
         )
     else:
         raise ValueError(f"unknown geometry {geometry!r}")
-    out = _with_availability(n_blocked)
-    _REAL_MEMO[key] = out
-    return out
+    return _with_availability(n_blocked)
 
 
 # The EXACT approximation gap between the real polygons and their
@@ -446,7 +436,7 @@ def runs_two_pass_from(s: DataFrame, pl: DataFrame) -> DataFrame:
 def runs(spark: SparkSession) -> DataFrame:
     """W5 + W6: contiguous available runs per row with the two-pass
     fallback -> (iy, start_ix, n_slots). Session-memoized (see
-    _SYNTH_MEMO); the build itself reads the memoized slots table."""
+    _synth_memo); the build itself reads the memoized slots table."""
     return _synth_memo(
         spark,
         "runs",

@@ -7,8 +7,8 @@ SURVEY.md §2.8/§2.9); they are the training-data-pipeline layer the
 engine adds, registered with the same Spark-vs-DuckDB oracle contract.
 
 Near-dup queries run on a deterministically AUGMENTED corpus
-(documents U mutated copies at doc_id+1000000) because the driver's
-synthetic corpus has no natural duplicates — the augmentation is
+(documents U mutated copies at doc_id + MUTATED_ID_OFFSET) because the
+driver's synthetic corpus has no natural duplicates — the augmentation is
 expressed identically in Spark and SQL, so results stay
 oracle-checkable.
 """
@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from etl_sh_design_spark import datagen
+from etl_sh_design_spark import datagen, memo
 from etl_sh_design_spark.functions import physics, text
 from etl_sh_design_spark.operators import multimodal
 from etl_sh_design_spark.operators.dedup import (
@@ -41,15 +41,19 @@ from etl_sh_design_spark.registry import _t, query
 # ---------------------------------------------------------------- corpora
 _TOKS = "filter(split(lower(text), '\\\\s+'), t -> t != '')"
 
+# Mutated copies take doc_id + MUTATED_ID_OFFSET, so every source
+# doc_id must stay below it or a copy would collide with an original.
+MUTATED_ID_OFFSET = 1000000
+
 CORPUS_EXACT_SQL = (
     "SELECT doc_id, text FROM documents "
-    "UNION ALL SELECT doc_id + 1000000 AS doc_id, text FROM documents"
+    f"UNION ALL SELECT doc_id + {MUTATED_ID_OFFSET} AS doc_id, text FROM documents"
 )
 
-CORPUS_MUTATED_SQL = r"""
+CORPUS_MUTATED_SQL = rf"""
 SELECT doc_id, text FROM documents
 UNION ALL
-SELECT doc_id + 1000000 AS doc_id,
+SELECT doc_id + {MUTATED_ID_OFFSET} AS doc_id,
        array_to_string(list_slice(toks, 1, len(toks) - 1), ' ') AS text
 FROM (SELECT doc_id,
              list_filter(string_split_regex(lower(text), '\s+'), t -> t != '') AS toks
@@ -66,17 +70,37 @@ def _repartitioned(spark, df):
     return df.repartition(spark.sparkContext.defaultParallelism)
 
 
+def _documents(spark, sf_dir):
+    """(doc_id, text) of the documents table. A doc_id at or above
+    MUTATED_ID_OFFSET fails the query inside the plan (no eager check,
+    so construction stays job-free) instead of silently colliding
+    with a mutated copy."""
+    doc_id = F.col("doc_id")
+    too_big = F.raise_error(
+        F.concat(
+            F.lit("documents.doc_id "),
+            doc_id.cast("string"),
+            F.lit(f" >= MUTATED_ID_OFFSET ({MUTATED_ID_OFFSET})"),
+        )
+    )
+    return _t(spark, sf_dir, "documents").select(
+        F.when(doc_id >= MUTATED_ID_OFFSET, too_big).otherwise(doc_id).alias("doc_id"),
+        "text",
+    )
+
+
 def _corpus_exact(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    d = _documents(spark, sf_dir)
     return _repartitioned(
-        spark, d.unionByName(d.select((F.col("doc_id") + 1000000).alias("doc_id"), "text"))
+        spark,
+        d.unionByName(d.select((F.col("doc_id") + MUTATED_ID_OFFSET).alias("doc_id"), "text")),
     )
 
 
 def _corpus_mutated(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    d = _documents(spark, sf_dir)
     mut = d.select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
+        (F.col("doc_id") + MUTATED_ID_OFFSET).alias("doc_id"),
         F.expr(
             f"array_join(slice({_TOKS}, 1, greatest(size({_TOKS}) - 1, 0)), ' ')"
         ).alias("text"),
@@ -976,34 +1000,11 @@ def q_mod_partition_totals(spark, sf_dir):
 # The expensive sub-plans (MinHash signatures -> LSH pairs, and pairs
 # -> connected components) are shared by minhash_lsh_neardup,
 # dedup_clusters, dedup_keep_best, and dedup_size_histogram: both
-# intermediate DataFrames are memoized per (session, sf_dir) so later
-# queries reuse the materialized result instead of recomputing the
-# pipeline. connected_components is eager (it counts/collects
-# internally), so the cached frames' remaining lineage is only the
-# cheap tail.
-_DEDUP_PAIRS_CACHE: dict = {}
-_DEDUP_COMPONENTS_CACHE: dict = {}
-_DEDUP_SIGS_CACHE: dict = {}
-_DOCS_SIGS_CACHE: dict = {}
-
-
-def _dedup_cache_key(spark, sf_dir):
-    """Key on the Spark application id, not id(spark): a stopped
-    session's id() can be reused by a new SparkSession object, which
-    would hand back DataFrames bound to a dead context. applicationId
-    is unique per started application. Entries from previous
-    applications are evicted on first touch by a new one."""
-    return (spark.sparkContext.applicationId, sf_dir)
-
-
-def _dedup_cache_get(cache, key):
-    app_id = key[0]
-    stale = [k for k in cache if k[0] != app_id]
-    for k in stale:
-        del cache[k]
-    return cache.get(key)
-
-
+# intermediate DataFrames are session-memoized per sf_dir (the memo
+# module's "dedup" family) so later queries reuse the materialized
+# result instead of recomputing the pipeline. connected_components is
+# eager (it counts/collects internally), so the cached frames'
+# remaining lineage is only the cheap tail.
 def dedup_signatures(spark, sf_dir):
     """MinHash signatures (doc_id, sig[16]) over the mutated corpus —
     memoized, so the whole dedup + sketch-eval family pays ONE
@@ -1022,17 +1023,19 @@ def dedup_signatures(spark, sf_dir):
     vocabulary shuffle (the wide form's vocab broadcast was the piece
     that aborted at the --ngram-100x probe and needed the
     shuffle-hash dispatch)."""
+    return memo.get(
+        spark, "dedup", ("sigs", sf_dir), lambda: _dedup_signatures_build(spark, sf_dir)
+    )
+
+
+def _dedup_signatures_build(spark, sf_dir):
     from etl_sh_design_spark.operators.dedup import minhash_signatures_mapside
 
-    key = _dedup_cache_key(spark, sf_dir)
-    got = _dedup_cache_get(_DEDUP_SIGS_CACHE, key)
-    if got is not None:
-        return got
     # Round 13 (guide §2.4 across queries): the signature map is
     # PER-ROW, so sig(docs UNION mutated) == sig(docs) UNION
     # sig(mutated) exactly, and the plain-documents rows are exactly
-    # the fused table's doc_id < 1000000 half. The family build signs
-    # the fused corpus ONCE (one codegen pass for the 16-seed
+    # the fused table's doc_id < MUTATED_ID_OFFSET half. The family
+    # build signs the fused corpus ONCE (one codegen pass for the 16-seed
     # projection — an A/B of signing the two halves separately
     # measured the build ~1.1 s SLOWER from the doubled
     # construction/codegen) and registers the documents half as a
@@ -1045,9 +1048,12 @@ def dedup_signatures(spark, sf_dir):
     sigs = minhash_signatures_mapside(
         _corpus_mutated(spark, sf_dir), k=16, n=3
     ).localCheckpoint(eager=False)
-    _DEDUP_SIGS_CACHE[key] = sigs
-    if _dedup_cache_get(_DOCS_SIGS_CACHE, key) is None:
-        _DOCS_SIGS_CACHE[key] = sigs.filter(F.col("doc_id") < 1000000)
+    memo.get(
+        spark,
+        "dedup",
+        ("docs_sigs", sf_dir),
+        lambda: sigs.filter(F.col("doc_id") < MUTATED_ID_OFFSET),
+    )
     return sigs
 
 
@@ -1062,54 +1068,47 @@ def docs_signatures(spark, sf_dir):
     documents half of every sig(documents UNION delta) plan factors
     out exactly. When the dedup family build has already signed the
     fused mutated corpus this session, the docs half IS that
-    checkpoint filtered to doc_id < 1000000 (registered by
+    checkpoint filtered to doc_id < MUTATED_ID_OFFSET (registered by
     dedup_signatures above — the bench's family entry runs first and
     owns the build); standalone consumers (the oracle runs each query
     alone) build the docs-only table here instead."""
     from etl_sh_design_spark.operators.dedup import minhash_signatures_mapside
 
-    key = _dedup_cache_key(spark, sf_dir)
-    got = _dedup_cache_get(_DOCS_SIGS_CACHE, key)
-    if got is not None:
-        return got
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    sigs = minhash_signatures_mapside(
-        _repartitioned(spark, d), k=16, n=3
-    ).localCheckpoint(eager=False)
-    _DOCS_SIGS_CACHE[key] = sigs
-    return sigs
+    return memo.get(
+        spark,
+        "dedup",
+        ("docs_sigs", sf_dir),
+        lambda: minhash_signatures_mapside(
+            _repartitioned(spark, _documents(spark, sf_dir)), k=16, n=3
+        ).localCheckpoint(eager=False),
+    )
 
 
 def dedup_lsh_pairs(spark, sf_dir):
     """(id_a, id_b, est_jaccard) MinHash-LSH pairs over the mutated
     corpus — memoized."""
-    key = _dedup_cache_key(spark, sf_dir)
-    got = _dedup_cache_get(_DEDUP_PAIRS_CACHE, key)
-    if got is not None:
-        return got
-    pairs = minhash_lsh_pairs(
-        _corpus_mutated(spark, sf_dir), sig=dedup_signatures(spark, sf_dir)
-    ).localCheckpoint(eager=False)
-    _DEDUP_PAIRS_CACHE[key] = pairs
-    return pairs
+    return memo.get(
+        spark,
+        "dedup",
+        ("pairs", sf_dir),
+        lambda: minhash_lsh_pairs(
+            _corpus_mutated(spark, sf_dir), sig=dedup_signatures(spark, sf_dir)
+        ).localCheckpoint(eager=False),
+    )
 
 
 def dedup_components(spark, sf_dir):
     """(node, component) for the mutated corpus — memoized."""
     from etl_sh_design_spark.operators.graph import connected_components
 
-    key = _dedup_cache_key(spark, sf_dir)
-    got = _dedup_cache_get(_DEDUP_COMPONENTS_CACHE, key)
-    if got is not None:
-        return got
-    corpus = _corpus_mutated(spark, sf_dir)
-    pairs = dedup_lsh_pairs(spark, sf_dir)
-    comp = connected_components(
-        corpus.select(F.col("doc_id").alias("node")),
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-    ).localCheckpoint(eager=False)
-    _DEDUP_COMPONENTS_CACHE[key] = comp
-    return comp
+    def build():
+        pairs = dedup_lsh_pairs(spark, sf_dir)
+        return connected_components(
+            _corpus_mutated(spark, sf_dir).select(F.col("doc_id").alias("node")),
+            pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+        ).localCheckpoint(eager=False)
+
+    return memo.get(spark, "dedup", ("components", sf_dir), build)
 
 
 # shared recursive-CTE closure (corpus -> MinHash sigs -> LSH candidates

@@ -23,6 +23,7 @@ top-k already pays, a |queries|-row broadcast join-back, and a
 
 from __future__ import annotations
 
+from etl_sh_design_spark import memo
 from etl_sh_design_spark.operators.pq import (
     pq_shortlist_audit,
     pq_shortlist_audit_oracle_sql,
@@ -81,30 +82,20 @@ from etl_sh_design_spark.operators.preference import (  # noqa: E402
 # The battery's shared sub-plan: every preference query (BT, the four
 # audits, label noise) starts from the SAME user-keyed adjacency
 # window over events, so — like the dedup family's signature/pair
-# sub-plans (registry_ext) — the comparison stream is memoized per
-# (application, sf_dir) as a lazy localCheckpoint: the first battery
-# query in a session pays the one exchange, the rest reuse the
-# materialized rows. Result-identical to recomputing (parity golden
-# in tests/test_r12.py); operators keep their standalone paths for
-# direct callers.
-_COMPARISONS_CACHE: dict = {}
-
-
+# sub-plans (registry_ext) — the comparison stream is session-memoized
+# per sf_dir as a lazy localCheckpoint: the first battery query in a
+# session pays the one exchange, the rest reuse the materialized rows.
+# Result-identical to recomputing (parity golden in tests/test_r12.py);
+# operators keep their standalone paths for direct callers.
 def battery_comparisons(spark, sf_dir):
-    from etl_sh_design_spark.registry_ext import (
-        _dedup_cache_get,
-        _dedup_cache_key,
+    return memo.get(
+        spark,
+        "comparisons",
+        sf_dir,
+        lambda: _rater_comparisons(_t(spark, sf_dir, "events")).localCheckpoint(
+            eager=False
+        ),
     )
-
-    key = _dedup_cache_key(spark, sf_dir)
-    got = _dedup_cache_get(_COMPARISONS_CACHE, key)
-    if got is not None:
-        return got
-    c = _rater_comparisons(_t(spark, sf_dir, "events")).localCheckpoint(
-        eager=False
-    )
-    _COMPARISONS_CACHE[key] = c
-    return c
 
 
 @query("bradley_terry_strengths", bradley_terry_oracle_sql(rounds=3))

@@ -13,6 +13,21 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _driver_mem() -> str:
+    """Default local-mode heap: a quarter of RAM, capped at 16g. A 48g
+    heap measurably degraded identical queries 4-10x via GC churn on
+    dimension-sized data; 16g is ample for every broadcast this engine
+    does (largest: ~256MB GEMM matrix)."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    except OSError:  # no procfs: the pre-sizing default
+        return "16g"
+    return f"{min(16 * 1024, kb // 4 // 1024)}m"
+
 
 def get_spark(
     app_name: str = "etl_sh_design_spark",
@@ -25,7 +40,8 @@ def get_spark(
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all cores. Shuffle
     partitions default to the core count — on a real cluster you would
     size this to ~2-3x total executor cores; AQE coalesces the excess
-    at runtime either way.
+    at runtime either way. The driver heap defaults to a quarter of
+    RAM capped at 16g; ``$SPARK_GRAFT_DRIVER_MEM`` overrides it.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -40,11 +56,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # NOTE: local-mode heap sized deliberately small-ish: a 48g heap
-        # measurably degraded identical queries 4-10x via GC churn on
-        # dimension-sized data; 16g is ample for every broadcast this
-        # engine does (largest: ~256MB GEMM matrix).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _driver_mem())
+        # pandas UDF workers import the engine by reference: put the
+        # package root on their path so they find it from any cwd
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.ui.enabled", "true" if ui else "false")
         # pure-inequality joins (containment join J1) fall back to
         # broadcast-nested-loop; allow a generous broadcast threshold so

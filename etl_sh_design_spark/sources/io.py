@@ -16,6 +16,7 @@
 from __future__ import annotations
 
 import os
+from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -91,6 +92,7 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     return clean, bad
 
 
+@lru_cache(maxsize=None)
 def load_yaml_layout_rows(path: str) -> list[tuple[str, str, str, float, float]]:
     """Driver-side flatten of a nested YAML layout database to
     (layout, disk, face, x, y) tuples, memoized per path (the parse is
@@ -102,9 +104,6 @@ def load_yaml_layout_rows(path: str) -> list[tuple[str, str, str, float, float]]
     with `!!python/tuple` tags (python yaml.dump of tuples), which the
     safe loader rejects. A SafeLoader subclass adds ONLY a tuple
     constructor — still no arbitrary-object construction."""
-    cached = _YAML_ROWS_CACHE.get(path)
-    if cached is not None:
-        return cached
     import yaml
 
     class _LayoutLoader(yaml.SafeLoader):
@@ -123,11 +122,7 @@ def load_yaml_layout_rows(path: str) -> list[tuple[str, str, str, float, float]]
             for face, centers in faces.items():
                 for x, y in centers:
                     rows.append((str(layout), str(disk), str(face), float(x), float(y)))
-    _YAML_ROWS_CACHE[path] = rows
     return rows
-
-
-_YAML_ROWS_CACHE: dict[str, list] = {}
 
 
 def derive_sensor_centers(

@@ -92,7 +92,7 @@ EAGER_BUILDERS = {
     "j6_ordinal_join": "checkpointed runs table shared by both join "
     "sides",
     "tile_slots": "may pay the session-memoized synthetic slot-table "
-    "checkpoint (plans/tiling._SYNTH_MEMO, round 12): whichever "
+    "checkpoint (the 'tiling' memo family, round 12): whichever "
     "tiling-chain consumer is constructed FIRST absorbs the one-time "
     "build jobs — the minhash_lsh_neardup contract",
     "tile_runs": "same shared memoized slots/runs chain",

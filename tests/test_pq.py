@@ -148,33 +148,36 @@ def test_blocked_gemm_equals_broadcast_path(spark):
 
 
 def test_pq_memo_parity(spark):
-    """Round-12 memo (operators/pq.py _PQ_MEMO): the session-scoped
-    train/ADC memo must be a pure plan cache — cold build, memo hit,
-    and a memo-bypassing fresh train must all agree bit-for-bit, and
-    keys must be scoped to this application."""
+    """Round-12 memo (the "pq" / "ivfpq" memo families): the
+    session-scoped train/ADC memo must be a pure plan cache — cold
+    build, memo hit, and a memo-bypassing fresh train must all agree
+    bit-for-bit."""
+    from etl_sh_design_spark import memo
     from etl_sh_design_spark.operators import pq
 
     e = _emb(spark)
-    pq._PQ_MEMO.clear()
+    memo.clear("pq")
+    memo.clear("ivfpq")
     cold = sorted(map(tuple, pq.pq_topk(e, k=5, n_queries=10).collect()))
-    assert pq._PQ_MEMO, "cold build must populate the memo"
-    app_id = spark.sparkContext.applicationId
-    assert all(k[0] == app_id for k in pq._PQ_MEMO)
+    assert memo.stats()["pq"]["entries"] > 0, "cold build must populate the memo"
+    hits = memo.stats()["pq"]["hits"]
     warm = sorted(map(tuple, pq.pq_topk(e, k=5, n_queries=10).collect()))
+    assert memo.stats()["pq"]["hits"] > hits
     assert cold == warm
 
     # memo-bypassing train == memoized train (codebooks and codes)
     cb_m, codes_m = pq.pq_train_encode(e)
-    cb_f, codes_f = pq.pq_train_encode(e, memo=False)
+    cb_f, codes_f = pq._train_encode(e, "vec_id", "embedding")
     assert sorted(map(tuple, cb_m.collect())) == sorted(map(tuple, cb_f.collect()))
     assert sorted(map(tuple, codes_m.collect())) == sorted(map(tuple, codes_f.collect()))
 
     # ivfpq: cold vs memo-hit, across nprobe variants sharing one index
-    pq._PQ_MEMO.clear()
+    memo.clear("ivfpq")
     cold1 = sorted(map(tuple, pq.ivfpq_topk(e, k=5, n_queries=10, nprobe=2).collect()))
     warm1 = sorted(map(tuple, pq.ivfpq_topk(e, k=5, n_queries=10, nprobe=2).collect()))
     assert cold1 == warm1
+    assert memo.stats()["ivfpq"]["entries"] == 2  # the index + the nprobe=2 ADC
     # a different nprobe must NOT hit the nprobe=2 ADC memo entry
     got1 = sorted(map(tuple, pq.ivfpq_topk(e, k=5, n_queries=10, nprobe=1).collect()))
-    assert {k[-1] for k in pq._PQ_MEMO if k[2] == "ivfpq_adc"} == {1, 2}
+    assert memo.stats()["ivfpq"]["entries"] == 3
     assert len(got1) > 0

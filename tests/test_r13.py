@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from etl_sh_design_spark import memo
 from etl_sh_design_spark.operators import similarity as sim
 from tests.conftest import SF_SMOKE
 
@@ -18,39 +19,52 @@ def _emb(spark):
     return spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
 
 
+def _panels():
+    return memo.stats().get("panels", {"hits": 0, "misses": 0, "entries": 0})
+
+
 def test_panel_broadcast_memoized_across_constructions(spark):
-    sim._PANEL_MEMO.clear()
+    memo.clear("panels")
     emb = _emb(spark)
     q = emb.filter(F.col("vec_id") < 5)
 
     r1 = sorted(
         tuple(r) for r in sim.cosine_topk(q, emb, k=3).collect()
     )
-    n_after_first = len(sim._PANEL_MEMO)
-    assert n_after_first == 1  # one distinct panel -> one entry
+    assert _panels()["entries"] == 1  # one distinct panel -> one entry
 
     # an identical re-construction (the best-of-N sweep shape) must HIT
-    # the memo: same broadcast object, no second entry, same rows
-    bc_first = next(iter(sim._PANEL_MEMO.values()))[0]
+    # the memo: no second entry, same rows
+    hits = _panels()["hits"]
     r2 = sorted(
         tuple(r) for r in sim.cosine_topk(q, emb, k=3).collect()
     )
-    assert len(sim._PANEL_MEMO) == 1
-    assert next(iter(sim._PANEL_MEMO.values()))[0] is bc_first
+    assert _panels()["entries"] == 1
+    assert _panels()["hits"] == hits + 1
     assert r1 == r2
 
+    # a hit hands back the SAME broadcast object
+    def build(pdf):
+        return len(pdf)
+
+    bc_first, _ = sim.session_broadcast_panel(q, "t_same", build)
+    bc_again, _ = sim.session_broadcast_panel(q, "t_same", build)
+    assert bc_again is bc_first
+    memo.clear("panels")
+
     # a DIFFERENT panel gets its own entry (keys are plan-scoped)
+    sim.cosine_topk(q, emb, k=3).collect()
     sim.cosine_topk(emb.filter(F.col("vec_id") < 7), emb, k=3).collect()
-    assert len(sim._PANEL_MEMO) == 2
-    sim._PANEL_MEMO.clear()
+    assert _panels()["entries"] == 2
+    memo.clear("panels")
 
 
 def test_panel_memo_empty_panel_stable(spark):
-    sim._PANEL_MEMO.clear()
+    memo.clear("panels")
     emb = _emb(spark)
     out = sim.cosine_topk(emb.filter(F.col("vec_id") < 0), emb, k=3)
     assert out.count() == 0
-    sim._PANEL_MEMO.clear()
+    memo.clear("panels")
 
 
 def test_signature_union_split_equals_fused(spark):
@@ -82,11 +96,11 @@ def test_signature_union_split_equals_fused(spark):
 def test_docs_signatures_memoized(spark):
     from etl_sh_design_spark import registry_ext
 
-    registry_ext._DOCS_SIGS_CACHE.clear()
+    memo.clear("dedup")
     a = registry_ext.docs_signatures(spark, SF_SMOKE)
     b = registry_ext.docs_signatures(spark, SF_SMOKE)
     assert a is b  # one documents-side signature build per session
-    registry_ext._DOCS_SIGS_CACHE.clear()
+    memo.clear("dedup")
 
 
 def test_docs_signatures_family_registered_half_identical(spark):
@@ -95,19 +109,16 @@ def test_docs_signatures_family_registered_half_identical(spark):
     identical to the standalone docs-only build (the oracle path)."""
     from etl_sh_design_spark import registry_ext
 
-    registry_ext._DEDUP_SIGS_CACHE.clear()
-    registry_ext._DOCS_SIGS_CACHE.clear()
+    memo.clear("dedup")
     registry_ext.dedup_signatures(spark, SF_SMOKE)  # registers the half
     via_family = sorted(
         (r["doc_id"], tuple(r["sig"]))
         for r in registry_ext.docs_signatures(spark, SF_SMOKE).collect()
     )
-    registry_ext._DEDUP_SIGS_CACHE.clear()
-    registry_ext._DOCS_SIGS_CACHE.clear()
+    memo.clear("dedup")
     standalone = sorted(
         (r["doc_id"], tuple(r["sig"]))
         for r in registry_ext.docs_signatures(spark, SF_SMOKE).collect()
     )
     assert via_family == standalone
-    registry_ext._DEDUP_SIGS_CACHE.clear()
-    registry_ext._DOCS_SIGS_CACHE.clear()
+    memo.clear("dedup")
