@@ -1,14 +1,19 @@
-"""Bias-voltage grouping — the canonical stateful-scan operator
-(SURVEY.md §2.5 W4, §2.10 U3; reference semantics bias_voltage.py:449-493,
-dee_geometry.py:496-538 — no code copied).
+"""Bias-voltage grouping (SURVEY.md §2.5 W4/W7, §2.10 U3; reference
+semantics bias_voltage.py:449-493, ETL.py:423-493, dee_geometry.py:496-538
+— no code copied).
 
-The greedy scan (open a new group when the running current budget would
-be exceeded OR the candidate's r_min falls below the breakdown curve of
-the group head's r_max) resets on a data-dependent threshold, which a
-SQL window cannot express — this is the engine's `applyInPandas`
-island. Contract for scale: groups are per (layer, vendor) partitions
-(small, bounded), everything heavy is pre-aggregated in DataFrame land
-BEFORE entering pandas (SURVEY.md §4.2 item 3).
+W4, the greedy scan (open a new group when the running current budget
+would be exceeded OR the candidate's r_min falls below the breakdown
+curve of the group head's r_max), resets on a data-dependent threshold,
+which a SQL window cannot express — this is the BV family's one
+`applyInPandas` island. Contract for scale: groups are per (layer,
+vendor) partitions (small, bounded), everything heavy is pre-aggregated
+in DataFrame land BEFORE entering pandas (SURVEY.md §4.2 item 3).
+
+W7, the exact consecutive-split search per supermodule, is a zero-UDF
+mask enumeration (`best_consecutive_split`) shared by the synthetic
+config search (`find_bv_config`) and the real-layout study
+(`registry_r6.bv_min_segments`).
 """
 
 from __future__ import annotations
@@ -17,7 +22,8 @@ import math
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from etl_sh_design_spark import datagen
@@ -116,170 +122,126 @@ def greedy_bv_groups(modules: DataFrame) -> DataFrame:
     )
 
 
-SM_CONFIG_SCHEMA = (
-    "layer int, band bigint, sm_ordinal bigint, seg_ordinal int, "
-    "n_modules int, sum_current double, r_min double, r_max double"
-)
+SM_SIZE = 7  # modules per pseudo-supermodule -> <= 2^6 split masks
+BUDGET_MICRO = 5_000_000  # W7 per-segment current budget: 5 mA in micro-amps
 
 
-def sm_assignments(modules: DataFrame, sm_size: int = 7) -> DataFrame:
+def sm_assignments(modules: DataFrame) -> DataFrame:
     """Group modules into pseudo-supermodules: per (layer, y-band row),
-    consecutive chunks of <= sm_size along x (reference SuperModule =
+    consecutive chunks of <= SM_SIZE along x (reference SuperModule =
     one readout-board row, ETL.py:312-533 shape)."""
-    from pyspark.sql import Window as W
-
-    m = modules.withColumn("band", F.col("module_id") % datagen.NY)
+    # Pinned partition count: this shuffle is byte-tiny, so AQE would
+    # coalesce it to one task, yet the split search keyed on it fans
+    # each SM out to <= 64 masks — the cost is CPU, not bytes.
+    n_part = modules.sparkSession.sparkContext.defaultParallelism
+    m = modules.withColumn("band", F.col("module_id") % datagen.NY).repartition(
+        n_part, "layer", "band"
+    )
     w = W.partitionBy("layer", "band").orderBy("x", "module_id")
     return m.withColumn(
-        "sm_ordinal", F.floor((F.row_number().over(w) - 1) / sm_size)
+        "sm_ordinal", F.floor((F.row_number().over(w) - 1) / SM_SIZE)
     )
 
 
-from functools import lru_cache
+def best_consecutive_split(positions: DataFrame, keys: list[str], seg_ok: Column) -> DataFrame:
+    """Exact search over the consecutive splits of each key's ordered
+    items (ETL.py:423-493 find_BV_config shape) by mask enumeration.
 
+    positions: one row per item, (keys..., p, r_min, r_max, cur_micro)
+    with p the 0-based position in split order. A key holds at most
+    SM_SIZE items (<= 64 masks); a larger one fails in-plan. Bit i of a
+    split mask cuts between positions i and i+1, so position p lies in
+    segment popcount(mask & ((1 << p) - 1)).
 
-@lru_cache(maxsize=None)
-def _segmentations(n: int) -> list[list[tuple[int, int]]]:
-    """All consecutive-split segmentations of n ordered items, indexed
-    by split mask (mask order = deterministic tie-break), ordered by
-    segment count so the first valid hit wins the min-segments
-    criterion early."""
-    out = []
-    for mask in range(1 << (n - 1)) if n > 1 else [0]:
-        segs, start = [], 0
-        for i in range(n - 1):
-            if mask & (1 << i):
-                segs.append((start, i + 1))
-                start = i + 1
-        segs.append((start, n))
-        out.append((len(segs), mask, segs))
-    out.sort(key=lambda t: (t[0], t[1]))
-    return out
+    seg_ok: boolean Column over one segment's n_modules, s_micro,
+    seg_rmin / seg_rmax (segment radius extremes), e_rmin / e_rmax
+    (extremes over the two endpoint items) and the keys. A mask is
+    valid when every segment is ok; per key the valid mask with fewest
+    segments, then least current spread (max - min s_micro), then
+    lowest mask wins. With no valid mask, every item is its own segment.
 
-
-def _config_search_factory(budget: float):
-    def _one_sm(layer: int, band: int, smo: int, pdf: pd.DataFrame, rows: list) -> None:
-        """W7: exact search over consecutive-split configs of one SM
-        (<= 7 modules -> <= 64 masks; ETL.py:423-493 semantics): pick
-        the valid split with fewest segments, then the most
-        current-balanced, then the lowest mask (deterministic).
-
-        Currents are quantized to integer micro-amps up front
-        (floor(c*1e6 + 0.5), matching SQL round-half-away on the
-        bit-identical module currents), so the budget check, the
-        balance tie-break, and the reported segment sums are exact
-        integer arithmetic — which is what makes this search
-        DuckDB-oracle-checkable instead of rows-only: raw float
-        partial sums would knife-edge both the validity predicate and
-        the balance comparison across engines."""
-        pdf = pdf.sort_values(["r_max", "module_id"], ascending=[False, True])
-        cur_micro = [int(math.floor(c * 1e6 + 0.5)) for c in pdf["current"]]
-        rmin = list(pdf["r_min"])
-        rmax = list(pdf["r_max"])
-        n = len(cur_micro)
-        budget_micro = int(math.floor(budget * 1e6 + 0.5))
-        csum = [0]
-        for c in cur_micro:
-            csum.append(csum[-1] + c)
-        limit_cache = {}
-        vendor = pdf["vendor"].iloc[0]
-
-        def seg_ok(a: int, b: int) -> bool:
-            if csum[b] - csum[a] > budget_micro:
-                return False
-            rmx = max(rmax[a:b])
-            if rmx not in limit_cache:
-                limit_cache[rmx] = _curve_limit(vendor, rmx)
-            return min(rmin[a:b]) > limit_cache[rmx]
-
-        best_key, best_segs = None, None
-        for n_segs, mask, segs in _segmentations(n):
-            if best_key is not None and n_segs > best_key[0]:
-                break  # sorted by segment count: no better split remains
-            if not all(seg_ok(a, b) for a, b in segs):
-                continue
-            sums = [csum[b] - csum[a] for a, b in segs]
-            key = (n_segs, max(sums) - min(sums), mask)
-            if best_key is None or key < best_key:
-                best_key, best_segs = key, segs
-        if best_segs is None:  # no valid split: every module its own group
-            best_segs = [(i, i + 1) for i in range(n)]
-        rows.extend(
-            (
-                layer,
-                band,
-                smo,
-                k,
-                (b - a),
-                (csum[b] - csum[a]) / 1e6,
-                min(rmin[a:b]),
-                max(rmax[a:b]),
-            )
-            for k, (a, b) in enumerate(best_segs)
+    Returns the chosen segments: (keys..., seg_id, n_segs, n_modules,
+    s_micro, seg_rmin, seg_rmax, e_rmin, e_rmax). Every stage is keyed
+    on a superset of keys, so positions hash-partitioned on a subset of
+    keys need no further exchange."""
+    n = F.col("n")
+    too_many = F.raise_error(
+        F.concat(
+            F.lit("best_consecutive_split: "),
+            n.cast("string"),
+            F.lit(f" items in one key > SM_SIZE ({SM_SIZE})"),
         )
-
-    def _config_search(pdf: pd.DataFrame) -> pd.DataFrame:
-        """One (layer, band) row-batch: loop the per-SM exact search
-        over the band's SM chunks. Batching ~6 SMs per pandas call
-        (instead of one group per SM) cuts the Arrow/Python per-group
-        overhead ~6x — the search itself is unchanged."""
-        layer = int(pdf["layer"].iloc[0])
-        band = int(pdf["band"].iloc[0])
-        rows: list = []
-        for smo, sub in pdf.groupby("sm_ordinal", sort=True):
-            _one_sm(layer, band, int(smo), sub, rows)
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "layer",
-                "band",
-                "sm_ordinal",
-                "seg_ordinal",
-                "n_modules",
-                "sum_current",
-                "r_min",
-                "r_max",
-            ],
+    )
+    segs = (
+        positions.withColumn("n", F.count(F.lit(1)).over(W.partitionBy(*keys)))
+        .withColumn("n", F.when(n <= SM_SIZE, n).otherwise(too_many))
+        .withColumn("mask", F.explode(F.sequence(F.lit(0), F.expr("shiftleft(1L, n - 1) - 1"))))
+        .withColumn("seg_id", F.bit_count(F.col("mask").bitwiseAND(F.expr("shiftleft(1L, p) - 1"))))
+        .groupBy(*keys, "n", "mask", "seg_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_modules"),
+            F.sum("cur_micro").alias("s_micro"),
+            F.min("r_min").alias("seg_rmin"),
+            F.max("r_max").alias("seg_rmax"),
+            F.least(F.min_by("r_min", "p"), F.max_by("r_min", "p")).alias("e_rmin"),
+            F.greatest(F.min_by("r_max", "p"), F.max_by("r_max", "p")).alias("e_rmax"),
         )
-
-    return _config_search
-
-
-def _curve_limit(vendor: str, r_max: float) -> float:
-    a, b = CURVES[vendor]
-    return a * math.log(r_max) + b
-
-
-def find_bv_config(modules: DataFrame, budget: float = 5.0) -> DataFrame:
-    """W7 BV config search per pseudo-supermodule (applyInPandas exact
-    search over <= 2^6 consecutive splits)."""
-    sm = sm_assignments(modules)
-    # mapInPandas over an explicit hash-repartition instead of
-    # groupBy().applyInPandas: the grouped-map's own exchange is
-    # byte-tiny here, so AQE coalesces it to ONE partition and the
-    # per-group Python search runs serially. The CPU cost is in the
-    # pandas groups, not the bytes — pinning the partition count keeps
-    # all cores busy; repartition(cols) guarantees each (layer, band)
-    # lands whole in one partition, so grouping semantics are identical.
-    n_part = sm.sparkSession.sparkContext.defaultParallelism
-    search = _config_search_factory(budget)
-
-    def run(batches):
-        frames = list(batches)
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True)
-        if pdf.empty:
-            return
-        for _, sub in pdf.groupby(["layer", "band"], sort=True):
-            yield search(sub)
-
+    )
+    # both windows share one sort on (keys, mask): a RANGE frame of the
+    # same mask's segments, then the whole key
+    by_mask = W.partitionBy(*keys).orderBy("mask")
+    one_mask = by_mask.rangeBetween(W.currentRow, W.currentRow)
+    whole_key = by_mask.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    n_segs = F.bit_count("mask") + 1
+    # valid masks first; failing that, the all-singles mask (n segments)
+    tier = F.when(F.bool_and(seg_ok).over(one_mask), 0).when(n_segs == n, 1).otherwise(2)
+    balance = F.max("s_micro").over(one_mask) - F.min("s_micro").over(one_mask)
     return (
-        sm.select(
-            "layer", "band", "sm_ordinal", "module_id", "vendor", "r_min", "r_max", "current"
+        segs.withColumn("n_segs", n_segs)
+        .withColumn("score", F.struct(tier, "n_segs", balance, "mask"))
+        .withColumn("best", F.min("score").over(whole_key))
+        .filter(F.col("score") == F.col("best"))
+        .drop("n", "mask", "score", "best")
+    )
+
+
+def find_bv_config(modules: DataFrame) -> DataFrame:
+    """W7 BV config search per pseudo-supermodule: modules ordered by
+    (r_max desc, module_id); a segment is ok within the BUDGET_MICRO
+    current budget and when its min r_min clears the breakdown curve of
+    the SM head's vendor at its max r_max.
+
+    Currents are quantized to integer micro-amps up front
+    (floor(c*1e6 + 0.5), matching SQL round-half-away on the
+    bit-identical module currents), so the budget check, the balance
+    tie-break, and the reported segment sums are exact integer
+    arithmetic — which is what makes this search DuckDB-oracle-checkable
+    instead of rows-only."""
+    sm_key = ["layer", "band", "sm_ordinal"]
+    w = W.partitionBy(*sm_key).orderBy(F.col("r_max").desc(), "module_id")
+    pos = (
+        sm_assignments(modules)
+        .select(
+            *sm_key,
+            "vendor",
+            (F.row_number().over(w) - 1).alias("p"),
+            "r_min",
+            "r_max",
+            F.floor(F.col("current") * 1e6 + 0.5).alias("cur_micro"),
         )
-        .repartition(n_part, "layer", "band")
-        .mapInPandas(run, SM_CONFIG_SCHEMA)
+        .withColumn("vendor0", F.min_by("vendor", "p").over(W.partitionBy(*sm_key)))
+    )
+    (fa, fb), (ha, hb) = CURVES["FBK"], CURVES["HPK"]
+    fbk = F.col("vendor0") == "FBK"
+    limit = F.when(fbk, fa).otherwise(ha) * F.log("seg_rmax") + F.when(fbk, fb).otherwise(hb)
+    ok = (F.col("s_micro") <= BUDGET_MICRO) & (F.col("seg_rmin") > limit)
+    return best_consecutive_split(pos, [*sm_key, "vendor0"], ok).select(
+        *sm_key,
+        F.col("seg_id").cast("int").alias("seg_ordinal"),
+        F.col("n_modules").cast("int"),
+        (F.col("s_micro") / 1e6).alias("sum_current"),
+        F.col("seg_rmin").alias("r_min"),
+        F.col("seg_rmax").alias("r_max"),
     )
 
 

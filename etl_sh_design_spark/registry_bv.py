@@ -1,17 +1,18 @@
 """Detector-study queries built on the stateful-scan operators:
-module derivation (A1/A2/P17), greedy BV grouping (W4), totals (A9).
+module derivation (A1/A2/P17), greedy BV grouping (W4), totals (A9),
+and the occupancy study.
 
-The greedy scan is not SQL-expressible (running-sum reset + head-
-dependent curve — SURVEY.md §7.4), so these register WITHOUT oracle
-SQL: the driver records rows-only checks, and golden invariants live in
-tests/test_golden_invariants.py (20 mA budget, module-count
-preservation)."""
+Every query registers with its DuckDB oracle SQL. The greedy scan's
+oracle is a recursive-CTE walk of the same ordered scan; golden
+invariants live in tests/test_golden_invariants.py (20 mA budget,
+module-count preservation)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from etl_sh_design_spark import datagen
+from etl_sh_design_spark.functions import physics
 from etl_sh_design_spark.operators.bv_grouping import (
     bv_totals,
     greedy_bv_groups,
@@ -20,31 +21,12 @@ from etl_sh_design_spark.operators.bv_grouping import (
 from etl_sh_design_spark.registry import query
 
 
+_NXNY = datagen.NX * datagen.NY
+
+
 @query(
     "module_rollup",
-    None,  # oracle added below via SQL on the fixture CTE
-)
-def q_module_rollup(spark, sf_dir):
-    """A1/A2/P17: sensor->module rollup with min/max corner radius,
-    summed current, vendor split."""
-    mods = modules_from_sensors(datagen.sensors(spark))
-    return mods.select(
-        "layer",
-        "module_id",
-        F.round("r_min", 6).alias("r_min"),
-        F.round("r_max", 6).alias("r_max"),
-        F.round("current", 6).alias("current"),
-        "n_sensors",
-        "vendor",
-    )
-
-
-# module_rollup IS SQL-expressible — attach the oracle explicitly.
-from etl_sh_design_spark.functions import physics  # noqa: E402
-from etl_sh_design_spark.registry import ORACLE  # noqa: E402
-
-_NXNY = datagen.NX * datagen.NY
-ORACLE["module_rollup"] = f"""
+    f"""
 WITH sensors AS ({datagen.SENSORS_SQL}),
 s AS (
   SELECT layer, sensor_id, x, y,
@@ -62,7 +44,21 @@ SELECT layer, module_id,
        CASE WHEN min(r) < 520.0e0 THEN 'FBK' ELSE 'HPK' END AS vendor
 FROM s
 GROUP BY 1, 2
-"""
+""",
+)
+def q_module_rollup(spark, sf_dir):
+    """A1/A2/P17: sensor->module rollup with min/max corner radius,
+    summed current, vendor split."""
+    mods = modules_from_sensors(datagen.sensors(spark))
+    return mods.select(
+        "layer",
+        "module_id",
+        F.round("r_min", 6).alias("r_min"),
+        F.round("r_max", 6).alias("r_max"),
+        F.round("current", 6).alias("current"),
+        "n_sensors",
+        "vendor",
+    )
 
 
 # The W4 greedy scan IS oracle-expressible after all: the sequential

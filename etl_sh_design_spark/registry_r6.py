@@ -347,6 +347,7 @@ def q_real_partition_flavors(spark, sf_dir):
 # --------------------------------------------------------------------
 # the bias_voltage.py study over the REAL layout (bias_voltage.py:18-175)
 # --------------------------------------------------------------------
+from etl_sh_design_spark.operators.bv_grouping import best_consecutive_split  # noqa: E402
 
 # Sensor active-corner half-extents (Sensor(42.5, 22), deadspace 0.5)
 _AHX, _AHY = 42.5 / 2 - 0.5, 22.0 / 2 - 0.5
@@ -450,42 +451,21 @@ def real_sm_modules(spark, modify_partitions: bool = False):
 
 def bv_min_segments(smm, cfg):
     """Minimum consecutive-split BV segmentation per (supermodule,
-    config) via pure-DataFrame mask enumeration (ETL.py:423-493
-    find_BV_config semantics: endpoint-corner validity, singles always
-    accepted).
+    config) with the W7 split search (ETL.py:423-493 find_BV_config
+    semantics: endpoint-corner validity, singles always accepted).
 
     smm: (row_ord, sm_idx, n_mod, p, r_min, r_max) — one row per
-    module position p (0-based, x-ordered) per supermodule, n_mod <= 7.
+    module position p (0-based, x-ordered) per supermodule; an SM with
+    more than bv_grouping.SM_SIZE (7) positions fails in-plan.
     cfg: (config, a, b) breakdown curves.
     Returns (config, row_ord, sm_idx, n_segs)."""
-    spark = smm.sparkSession
-    meta = smm.select("row_ord", "sm_idx", "n_mod").distinct()
-    masks = (
-        meta.crossJoin(F.broadcast(spark.range(64).select(F.col("id").alias("mask"))))
-        .filter(F.col("mask") < F.expr("shiftleft(1, n_mod - 1)"))
-        .select("row_ord", "sm_idx", "mask")
+    ok = (F.col("n_modules") == 1) | (
+        F.col("e_rmin") > F.col("a") * F.log("e_rmax") + F.col("b")
     )
-    segd = masks.join(smm, ["row_ord", "sm_idx"]).crossJoin(F.broadcast(cfg))
-    seg_id = F.bit_count(F.col("mask").bitwiseAND(F.expr("shiftleft(1, p) - 1")))
-    segs = (
-        segd.withColumn("seg_id", seg_id)
-        .groupBy("config", "a", "b", "row_ord", "sm_idx", "mask", "seg_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_in_seg"),
-            F.least(F.min_by("r_min", "p"), F.max_by("r_min", "p")).alias("e_rmin"),
-            F.greatest(F.min_by("r_max", "p"), F.max_by("r_max", "p")).alias("e_rmax"),
-        )
-    )
-    ok = (F.col("n_in_seg") == 1) | (
-        F.col("e_rmin") > F.col("a") * F.log(F.col("e_rmax")) + F.col("b")
-    )
-    meval = segs.groupBy("config", "row_ord", "sm_idx", "mask").agg(
-        F.min(ok.cast("int")).alias("valid"), F.count(F.lit(1)).alias("n_segs")
-    )
-    return (
-        meval.filter(F.col("valid") == 1)
-        .groupBy("config", "row_ord", "sm_idx")
-        .agg(F.min("n_segs").alias("n_segs"))
+    positions = smm.crossJoin(F.broadcast(cfg)).withColumn("cur_micro", F.lit(0))
+    best = best_consecutive_split(positions, ["config", "a", "b", "row_ord", "sm_idx"], ok)
+    return best.filter(F.col("seg_id") == 0).select(
+        "config", "row_ord", "sm_idx", F.col("n_segs").cast("bigint").alias("n_segs")
     )
 
 
@@ -585,11 +565,9 @@ def q_real_bv_study(spark, sf_dir):
     all-singles split guarantees a solution.
 
     Spark-first shape: ZERO UDFs — the <=2^6 split masks per SM are
-    ENUMERATED as rows (147 SMs x <=64 masks x <=7 positions x 8
+    exploded per module row (147 SMs x <=64 masks x <=7 positions x 8
     configs ~ 0.5M codegen rows), validity/minimum reduced by
-    aggregation. Every stage is a narrow transform or a
-    dimension-sized shuffle; the same shape would run on a
-    billion-module layout by keying the masks join on (row, sm)."""
+    aggregation and windows keyed on (config, row, sm)."""
     smm = real_sm_modules(spark)
     cfg = spark.createDataFrame(_BV_CONFIGS, "config STRING, a DOUBLE, b DOUBLE")
     minseg = bv_min_segments(smm, cfg)

@@ -7,7 +7,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_sh_design_spark.operators.bv_grouping import find_bv_config, modules_from_sensors
+from etl_sh_design_spark.operators.bv_grouping import (
+    BUDGET_MICRO,
+    SM_SIZE,
+    find_bv_config,
+    modules_from_sensors,
+)
 from etl_sh_design_spark.plans import tiling
 from etl_sh_design_spark.registry import query
 from etl_sh_design_spark import datagen
@@ -40,29 +45,13 @@ def q_tile_flavor_counts(spark, sf_dir):
     return tiling.flavor_counts(spark)
 
 
-@query("bv_config_search", None)  # W7: not SQL-expressible (exact search)
-def q_bv_config(spark, sf_dir):
-    """W7 per-supermodule BV config exact search (applyInPandas)."""
-    cfg = find_bv_config(modules_from_sensors(datagen.sensors(spark)))
-    return cfg.select(
-        "layer",
-        "band",
-        "sm_ordinal",
-        "seg_ordinal",
-        "n_modules",
-        F.round("sum_current", 6).alias("sum_current"),
-        F.round("r_min", 6).alias("r_min"),
-        F.round("r_max", 6).alias("r_max"),
-    )
-
-
 def _bv_config_search_sql() -> str:
-    """W7 oracle: the exact consecutive-split search, expressed as mask
-    enumeration in SQL. Feasible because (a) SMs hold <= 7 modules so
-    the whole search space is <= 64 masks x 7 positions per SM, and
-    (b) the Spark side quantizes currents to integer micro-amps, so
-    budget checks / balance tie-breaks / reported sums are exact
-    integers on both engines (bv_grouping._config_search_factory).
+    """W7 oracle: the same mask enumeration as
+    bv_grouping.best_consecutive_split, in DuckDB SQL. Feasible because
+    (a) SMs hold <= SM_SIZE modules so the whole search space is <= 64
+    masks x 7 positions per SM, and (b) currents are quantized to
+    integer micro-amps, so budget checks / balance tie-breaks /
+    reported sums are exact integers on both engines.
     seg_id(pos) = popcount(mask & ((1 << pos) - 1)) maps each module
     position to its segment under a split mask."""
     from etl_sh_design_spark.functions import physics
@@ -90,7 +79,7 @@ sm AS (
   SELECT layer, module_id, x, r_min, r_max, cur_micro, vendor,
          module_id % {ny} AS band,
          CAST(floor((row_number() OVER (PARTITION BY layer, module_id % {ny}
-                     ORDER BY x, module_id) - 1) / 7) AS BIGINT) AS sm_ordinal
+                     ORDER BY x, module_id) - 1) / {SM_SIZE}) AS BIGINT) AS sm_ordinal
   FROM mods
 ),
 pos AS (
@@ -121,7 +110,7 @@ segs AS (
 ),
 segv AS (
   SELECT *,
-         (s_micro <= 5000000) AND (seg_rmin >
+         (s_micro <= {BUDGET_MICRO}) AND (seg_rmin >
             (CASE WHEN vendor0 = 'FBK' THEN 435.93e0 ELSE 526.14e0 END) * ln(seg_rmax)
             + (CASE WHEN vendor0 = 'FBK' THEN -2251.2e0 ELSE -2792.0e0 END)) AS ok
   FROM segs
@@ -158,8 +147,18 @@ JOIN chosen c ON s.layer = c.layer AND s.band = c.band
 """
 
 
-from etl_sh_design_spark.registry import ORACLE as _ORACLE  # noqa: E402
-
-# W7 upgraded from rows-only to full hash oracle (micro-amp
-# quantization makes the search integer-exact cross-engine)
-_ORACLE["bv_config_search"] = _bv_config_search_sql()
+@query("bv_config_search", _bv_config_search_sql())
+def q_bv_config(spark, sf_dir):
+    """W7 per-supermodule BV config exact search (zero-UDF mask
+    enumeration, bv_grouping.best_consecutive_split)."""
+    cfg = find_bv_config(modules_from_sensors(datagen.sensors(spark)))
+    return cfg.select(
+        "layer",
+        "band",
+        "sm_ordinal",
+        "seg_ordinal",
+        "n_modules",
+        F.round("sum_current", 6).alias("sum_current"),
+        F.round("r_min", 6).alias("r_min"),
+        F.round("r_max", 6).alias("r_max"),
+    )

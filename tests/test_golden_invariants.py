@@ -87,13 +87,18 @@ def test_bv_config_search_validity(spark):
     )
 
     mods = modules_from_sensors(datagen.sensors(spark).filter(F.col("layer") == 1)).cache()
-    cfg = find_bv_config(mods, budget=5.0).cache()
-    assert cfg.agg(F.sum("n_modules")).collect()[0][0] == mods.count()
-    # single-module segments may exceed budget only when unavoidable
-    over = cfg.filter((F.col("sum_current") > 5.0) & (F.col("n_modules") > 1)).count()
-    assert over == 0
-    sm = sm_assignments(mods)
-    assert sm.groupBy("layer", "band", "sm_ordinal").count().filter(F.col("count") > 7).count() == 0
+    cfg = find_bv_config(mods).cache()
+    try:
+        assert cfg.agg(F.sum("n_modules")).collect()[0][0] == mods.count()
+        # single-module segments may exceed budget only when unavoidable
+        over = cfg.filter((F.col("sum_current") > 5.0) & (F.col("n_modules") > 1)).count()
+        assert over == 0
+        sm = sm_assignments(mods)
+        assert sm.groupBy("layer", "band", "sm_ordinal").count().filter(F.col("count") > 7).count() == 0
+    finally:
+        # a leaked cache would stand in for later plans of the same search
+        cfg.unpersist()
+        mods.unpersist()
 
 
 def test_simhash_banded_equals_bruteforce(spark):

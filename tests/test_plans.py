@@ -134,6 +134,25 @@ def test_scd2_single_exchange(spark):
     assert plan.count("Exchange") == 1, plan
 
 
+def test_bv_config_search_is_zero_udf_single_exchange(spark):
+    """W7: the split search runs no Python, and every stage after the
+    (layer, band) shuffle is keyed on a superset of it, so the search
+    over a cached modules table needs exactly one exchange."""
+    from etl_sh_design_spark import datagen
+    from etl_sh_design_spark.operators.bv_grouping import find_bv_config, modules_from_sensors
+
+    mods = modules_from_sensors(datagen.sensors(spark).filter(F.col("layer") == 1)).cache()
+    try:
+        plan = _plan(find_bv_config(mods))
+    finally:
+        mods.unpersist()
+    for node in ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, node
+    # the cached relation's own plan prints below the scan
+    above_cache = plan.split("InMemoryTableScan")[0]
+    assert above_cache.count("Exchange") == 1, above_cache
+
+
 def test_q13_outer_join_keeps_on_clause_filter(spark):
     """Q13: the o_orderpriority predicate must appear as a pushed scan
     filter on the orders side (it is an ON-clause filter of a left

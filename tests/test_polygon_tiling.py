@@ -260,7 +260,10 @@ def test_bv_min_segments_property_random_modules(spark):
     """Property check of the DataFrame mask-enumeration against a
     brute-force python reference on seeded random supermodules:
     random radii + random SM sizes (1..7), endpoint-validity
-    semantics, min segments must agree exactly."""
+    semantics, min segments must agree exactly. The same check then
+    runs the W7 rule (find_bv_config) on random module rows: budget,
+    whole-segment validity, (n_segs, balance, mask) tie-break and the
+    all-singles fallback, with chosen segments compared row by row."""
     import math
     import random
 
@@ -312,6 +315,97 @@ def test_bv_min_segments_property_random_modules(spark):
     for cname, a, b in cfgs:
         for sm, mods in by_sm.items():
             assert got[(cname, sm)] == brute(mods, a, b), (cname, sm)
+
+    from etl_sh_design_spark import datagen
+    from etl_sh_design_spark.operators.bv_grouping import (
+        BUDGET_MICRO,
+        CURVES,
+        SM_SIZE,
+        find_bv_config,
+    )
+
+    def splits(n):
+        # bit i of the mask cuts between positions i and i+1
+        for mask in range(1 << (n - 1)):
+            cuts = [i + 1 for i in range(n - 1) if mask & (1 << i)]
+            bounds = [0, *cuts, n]
+            yield mask, list(zip(bounds, bounds[1:]))
+
+    def brute_w7(mods):
+        """mods: (module_id, r_min, r_max, cur_micro, vendor) of one SM."""
+        mods = sorted(mods, key=lambda m: (-m[2], m[0]))
+        ca, cb = CURVES[mods[0][4]]
+        best = None
+        for mask, segs in splits(len(mods)):
+            parts = [mods[s:e] for s, e in segs]
+            sums = [sum(m[3] for m in part) for part in parts]
+            if all(
+                sm <= BUDGET_MICRO
+                and min(m[1] for m in part) > ca * math.log(max(m[2] for m in part)) + cb
+                for sm, part in zip(sums, parts)
+            ):
+                key = (len(parts), max(sums) - min(sums), mask)
+                if best is None or key < best[0]:
+                    best = (key, parts)
+        parts = best[1] if best else [[m] for m in mods]
+        return best is not None, [
+            (k, len(part), sum(m[3] for m in part) / 1e6,
+             min(m[1] for m in part), max(m[2] for m in part))
+            for k, part in enumerate(parts)
+        ]
+
+    # SMs are chunks of SM_SIZE consecutive k; radii cluster per SM so
+    # multi-module segments can clear the curve, and coarse currents
+    # make balance ties (mask tie-break) common. No split is valid in
+    # band 0 (6 mA modules bust the budget alone) nor in band 1's first
+    # SM (module k=0 sits below the breakdown curve on its own).
+    mod_rows = []
+    for band in range(8):
+        base = {}
+        for k in range(rng.randint(1, 17)):
+            r0 = base.setdefault(k // SM_SIZE, rng.uniform(400, 1100)) + rng.uniform(0, 40)
+            r1 = r0 + rng.uniform(5, 40)
+            if band == 1 and k == 0:
+                r0, r1 = 400.0, 1100.0
+            cur = 6.0 if band == 0 else rng.choice([0.5, 1.0, 1.5, 2.0, 2.5])
+            mod_rows.append(
+                (1, band + datagen.NY * k, float(k), r0, r1, cur, rng.choice(["FBK", "HPK"]))
+            )
+    modules = spark.createDataFrame(
+        mod_rows,
+        "layer INT, module_id BIGINT, x DOUBLE, r_min DOUBLE, r_max DOUBLE, "
+        "current DOUBLE, vendor STRING",
+    )
+    want, n_valid = {}, 0
+    for _, mid, x, rmin, rmax, cur, vendor in mod_rows:
+        sm = (mid % datagen.NY, int(x) // SM_SIZE)
+        want.setdefault(sm, []).append((mid, rmin, rmax, math.floor(cur * 1e6 + 0.5), vendor))
+    for sm, mods in want.items():
+        valid, want[sm] = brute_w7(mods)
+        n_valid += valid
+    assert 0 < n_valid < len(want)  # both the search and the fallback ran
+    got_w7 = {}
+    for r in find_bv_config(modules).collect():
+        got_w7.setdefault((r["band"], r["sm_ordinal"]), []).append(
+            (r["seg_ordinal"], r["n_modules"], r["sum_current"], r["r_min"], r["r_max"])
+        )
+    assert {sm: sorted(v) for sm, v in got_w7.items()} == want
+
+
+def test_split_search_rejects_oversized_supermodule(spark):
+    """An SM with more than SM_SIZE positions would need more split
+    masks than the search enumerates; it fails inside the job instead
+    of reporting a minimum over a truncated mask set."""
+    from etl_sh_design_spark.registry_r6 import bv_min_segments
+
+    smm = spark.createDataFrame(
+        [(0, 0, 8, p, 600.0 + p, 610.0 + p) for p in range(8)],
+        "row_ord INT, sm_idx INT, n_mod INT, p INT, r_min DOUBLE, r_max DOUBLE",
+    )
+    cfg = spark.createDataFrame([("c1", 435.93, -2251.2)], "config STRING, a DOUBLE, b DOUBLE")
+    out = bv_min_segments(smm, cfg)  # construction stays lazy
+    with pytest.raises(Exception, match="SM_SIZE"):
+        out.collect()
 
 
 def test_modify_partitions_toggle_changes_bv_channels(spark):

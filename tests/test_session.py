@@ -16,12 +16,12 @@ import sys
 sys.path.insert(0, {repo!r})
 from pyspark.sql import functions as F
 from etl_sh_design_spark import datagen
-from etl_sh_design_spark.operators.bv_grouping import find_bv_config, modules_from_sensors
+from etl_sh_design_spark.operators.bv_grouping import greedy_bv_groups, modules_from_sensors
 from etl_sh_design_spark.session import get_spark
 
 spark = get_spark(app_name="cwd-probe", cpus=2)
 mods = modules_from_sensors(datagen.sensors(spark).filter(F.col("layer") == 1))
-print("segments", find_bv_config(mods).count())
+print("groups", greedy_bv_groups(mods).count())
 spark.stop()
 """
 
@@ -38,6 +38,6 @@ def test_pandas_workers_import_engine_from_any_cwd(tmp_path):
         timeout=600,
     )
     assert out.returncode == 0, out.stderr[-4000:]
-    n = int(out.stdout.split("segments", 1)[1].split()[0])
+    n = int(out.stdout.split("groups", 1)[1].split()[0])
     assert n > 0
 

@@ -201,7 +201,7 @@ WHITELIST: dict[str, dict[str, str]] = {
     },
     "real_bv_study": {
         "GLOBAL_WIN": "rank over the 52-row distinct-y layout dimension",
-        "NESTED_LOOP": "64-row mask dim + range slice join (layout-bounded)",
+        "NESTED_LOOP": "8-row BV config dim cross joins (layout-bounded)",
     },
     "tile_flavor_counts": {"NESTED_LOOP": "slot x blocked-rect overlap (layout-bounded)"},
     # J8: zones dim table is O(10) rows
