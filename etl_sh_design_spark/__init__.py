@@ -9,7 +9,6 @@ text analysis, multimodal plumbing).
 Layout
 ------
 - ``session``    : tuned SparkSession builder
-- ``schemas``    : explicit StructType registry (SURVEY.md §1.4)
 - ``datagen``    : deterministic detector fixtures (sensors/rays/layers)
                    expressible identically in Spark and ANSI SQL
 - ``functions``  : scalar expression library (coordinate transforms,

@@ -1,19 +1,23 @@
 """Point-in-rectangle containment join — the engine's hot operator
-(SURVEY.md §2.3 J1/J2; reference `Dee.intersect` ETL.py:772-776).
+(SURVEY.md §2.3 J1; reference `Dee.intersect` ETL.py:772-776).
 
-Two physical strategies, same logical semantics:
+The strict predicate exists once, in `containment_predicate`; two
+physical joins apply it:
 
-1. `containment_join` — broadcast nested-loop join with a codegen'd
-   conjunctive predicate. Right for dimension-sized rectangle tables
-   (the reference's ~2k corners/face): O(points x rects) but fully
-   vectorized JVM-side, zero shuffle of the big side.
+1. `binned_containment_join` — the acceptance family's path and the
+   100 TB one: overlay a grid of cell width >= max rectangle extent,
+   duplicate each rectangle into every cell it overlaps (<= 4 cells
+   when cell >= rect), give points their single cell, then hash-join
+   on (extra keys, cell_x, cell_y) + exact predicate. Turns the nested
+   loop into an equi-join that scales linearly with both sides
+   (SURVEY.md §4.2 item 1).
 
-2. `binned_containment_join` — the 100 TB path: overlay a grid of cell
-   width >= max rectangle extent, duplicate each rectangle into every
-   cell it overlaps (<= 4 cells when cell >= rect), give points their
-   single cell, then hash-join on (layer, cell_x, cell_y) + exact
-   predicate. Turns the nested loop into a shuffle-partitioned equi-join
-   that scales linearly with both sides (SURVEY.md §4.2 item 1).
+2. `containment_join` — broadcast join on the extra keys with the
+   predicate as post-condition: O(points x rects per key). Only the
+   1-event MC sanity re-probe uses it (it needs the LEFT join).
+
+tests/test_plans.py checks that both return the same pairs as a
+brute-force strict-`<` scan.
 """
 
 from __future__ import annotations
@@ -99,25 +103,3 @@ def binned_containment_join(
     )
     return joined.drop("cell_x", "cell_y")
 
-
-def count_hits(
-    points: DataFrame,
-    rects: DataFrame,
-    point_key: str = "event_id",
-    layer_col: str = "layer",
-    px: str = "px",
-    py: str = "py",
-    strategy: str = "broadcast",
-    cell: float = 50.0,
-) -> DataFrame:
-    """J2: per-point count of distinct layers hit (the reference's
-    per-ray `n`, dee_geometry.py:593-608). Returns (point_key, n)."""
-    if strategy == "binned":
-        hits = binned_containment_join(points, rects, cell, px, py, extra_keys=[layer_col])
-    else:
-        hits = containment_join(points, rects, px, py, extra_keys=[layer_col]).drop(
-            rects[layer_col]
-        )
-    return hits.groupBy(point_key).agg(
-        F.countDistinct(layer_col).alias("n")
-    )

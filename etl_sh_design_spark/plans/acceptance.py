@@ -1,34 +1,38 @@
-"""Flagship pipeline: Monte-Carlo geometric acceptance (SURVEY.md §3.1
-stages 8-9; reference dee_geometry.py:570-700).
+"""Monte-Carlo geometric acceptance (SURVEY.md §3.1 stages 8-9;
+reference dee_geometry.py:570-700) and its variants: the real YAML
+layouts, several detector variants per ray, and the run comparison
+(registry_more.q_run_comparison).
 
-Logical plan (all declarative — Catalyst chooses broadcast for the
-dimension sides, the per-ray aggregation is the only real shuffle):
+Every Spark query of the family is a composition of three pieces:
 
-    rays(n)  ──crossJoin──  layers(4)          # P14 projection
-        │ px = z_mm*tan(theta)*cos(phi), py = ...
+    rays ──crossJoin── broadcast(layers)          # `project`: P14
+        │ (tags…, event_id, eta, layer, px, py)
         ▼
-    inner join sensors ON layer + containment  # J1, broadcast or binned
+    binned join sensors ON layer, cell + containment   # `hit_events`: J1
         ▼
-    groupBy event_id -> n = countDistinct(layer)   # J2
+    groupBy tags…, event_id -> n = countDistinct(layer)   # J2, hit events only
         ▼
-    rays left-join hits, n -> coalesce 0
-        ▼
-    groupBy eta_bin -> count / efficiency / mean n / mean t   # A10-A12, J7, P13
+    `profile` / `hit_histogram`: per (tags…, eta_bin) or (tags…, n),
+    ray totals from the rays, numerators from the hit events   # A10-A12, J7, P13
 
-Default strategy is the spatially-binned equi-join (J1 scale path):
-it cuts per-ray candidate rectangles from ~4k to ~4 and measured 2x
-faster than the broadcast nested predicate at 1M rays (6.5s vs 13s on
-local[32]); both strategies are proven result-identical in
-tests/test_plans.py. The rays side never shuffles under either — the
-only wide exchange is the bins-sized final aggregation.
+Zero-hit rays never materialize: eff, mean_n and the n = 0 bin are
+arithmetic over the two aggregates, so per-ray counts are never joined
+back to the rays. One ray generator (`spark.range`) is
+range-partitioned on event_id, so the per-event aggregation over it
+needs no shuffle; the exchanges left are the bins-sized aggregates. The DuckDB `*_sql` builders are the
+reference implementation (per-ray LEFT JOIN + avg); both shapes round
+to the same values.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import reduce
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_sh_design_spark import datagen
+from etl_sh_design_spark.functions.transforms import project_to_layer, time_resolution
 from etl_sh_design_spark.operators.containment import (
     binned_containment_join,
     containment_join,
@@ -37,65 +41,95 @@ from etl_sh_design_spark.operators.histogram import BinSpec
 
 ETA_BINS = BinSpec(20, datagen.ETA_LO, datagen.ETA_HI)
 T_COEFF = 45.0  # ps; dee_geometry.py:608
+# Containment grid cell: >= the largest active-area extent (42.5 mm on
+# the synthetic grid, 41.5 mm on the real layouts), so each sensor rect
+# spans at most 2 cells per axis.
+CELL_MM = 50.0
 
 
-def ray_hits(spark: SparkSession, n_rays: int, strategy: str = "binned") -> DataFrame:
-    """Per-ray hit counts: (event_id, eta, n). n = #layers whose sensor
-    active area contains the projected ray point (0..4)."""
-    rays = datagen.rays(spark, n_rays)
-    layers = datagen.layers(spark)
-    sensors = datagen.sensors(spark)
-
-    proj = (
-        rays.crossJoin(F.broadcast(layers))
-        .withColumn("px", F.col("z_mm") * F.col("tanth") * F.col("cphi"))
-        .withColumn("py", F.col("z_mm") * F.col("tanth") * F.col("sphi"))
-        .select("event_id", "layer", "px", "py")
-    )
-    if strategy == "binned":
-        # cell >= max rect extent (42.5mm in x) so each rect spans <=2 cells/axis
-        hits = binned_containment_join(proj, sensors, cell=50.0, extra_keys=["layer"])
-    else:
-        hits = proj.join(
-            F.broadcast(sensors),
-            (proj["layer"] == sensors["layer"])
-            & (sensors["ax1"] < proj["px"])
-            & (proj["px"] < sensors["ax2"])
-            & (sensors["ay1"] < proj["py"])
-            & (proj["py"] < sensors["ay2"]),
-            "inner",
-        ).drop(sensors["layer"])
-    n_per_event = hits.groupBy("event_id").agg(F.countDistinct("layer").alias("n"))
-    return (
-        rays.select("event_id", "eta")
-        .join(n_per_event, "event_id", "left")
-        .fillna({"n": 0})
+def project(spark: SparkSession, rays: DataFrame, tags=()) -> DataFrame:
+    """P14: every ray onto every layer plane ->
+    (tags…, event_id, eta, layer, px, py)."""
+    px, py = project_to_layer()
+    return rays.crossJoin(F.broadcast(datagen.layers(spark))).select(
+        *tags, "event_id", "eta", "layer", px.alias("px"), py.alias("py")
     )
 
 
-def acceptance_profile(
-    spark: SparkSession, n_rays: int, strategy: str = "binned"
+def hit_events(
+    spark: SparkSession, rays: DataFrame, sensors: DataFrame, tags=()
 ) -> DataFrame:
+    """(tags…, event_id, eta, n) for every event that hits at least one
+    layer; n = #layers whose sensor active area contains the projected
+    ray point (1..4).
+
+    A tag is a column of `rays` (e.g. `run`), carried through the
+    projection, or of `sensors` (e.g. `variant` of a tagged corner
+    union), carried through the join. Every acceptance rect side is
+    dimension-sized by contract, so it is pinned broadcast: the 4x-rays
+    projection never shuffles."""
+    proj = project(spark, rays, [t for t in tags if t in rays.columns])
+    hits = binned_containment_join(
+        proj, sensors, CELL_MM, extra_keys=["layer"], broadcast_rects=True
+    )
+    return hits.groupBy(*tags, "event_id").agg(
+        F.first("eta").alias("eta"), F.countDistinct("layer").alias("n")
+    )
+
+
+def profile(rays: DataFrame, hits: DataFrame, bins: BinSpec, tags=()) -> DataFrame:
+    """(tags…, eta_bin, n_rays, eff, mean_n, mean_t) from the rays
+    (which carry every tag) and their `hit_events`:
+
+        eff    = n_hit / n_rays
+        mean_n = sum(n) / n_rays          (misses contribute 0)
+        mean_t = sum(45/sqrt(n)) / n_hit  (misses excluded)
+
+    The sums are exact integers except sum_t, which is rounded with the
+    rest to absorb float-order drift."""
+    eta_bin = bins.bin_of("eta").alias("eta_bin")
+    keys = [*tags, "eta_bin"]
+    totals = rays.groupBy(*tags, eta_bin).agg(F.count(F.lit(1)).alias("n_rays"))
+    hit_agg = hits.groupBy(*tags, eta_bin).agg(
+        F.count(F.lit(1)).alias("n_hit"),
+        F.sum("n").alias("sum_n"),
+        F.sum(time_resolution("n", T_COEFF)).alias("sum_t"),
+    )
+    return totals.join(hit_agg, keys, "left").select(
+        *keys,
+        "n_rays",
+        F.round(F.coalesce("n_hit", F.lit(0)) / F.col("n_rays"), 6).alias("eff"),
+        F.round(F.coalesce("sum_n", F.lit(0)) / F.col("n_rays"), 6).alias("mean_n"),
+        F.round(F.col("sum_t") / F.col("n_hit"), 6).alias("mean_t"),
+    )
+
+
+def hit_histogram(rays: DataFrame, hits: DataFrame, tags=()) -> DataFrame:
+    """(tags…, n, cnt): Hist1D(nHits, "5,-0.5,4.5") from the rays
+    (which carry every tag) and their `hit_events`. The n = 0 bin is
+    the ray total minus the hit events, so it is always present."""
+    pos = hits.groupBy(*tags, F.col("n").cast("bigint").alias("n")).agg(
+        F.count(F.lit(1)).alias("cnt")
+    )
+    totals = rays.groupBy(*tags).agg(F.count(F.lit(1)).alias("n_rays"))
+    n_hit = pos.groupBy(*tags).agg(F.sum("cnt").alias("n_hit"))
+    # with no tags both sides are 1-row totals: a keyless left join
+    zero = totals.join(n_hit, list(tags) or None, "left").select(
+        *tags,
+        F.lit(0).cast("bigint").alias("n"),
+        (F.col("n_rays") - F.coalesce("n_hit", F.lit(0))).alias("cnt"),
+    )
+    return pos.unionByName(zero)
+
+
+def acceptance_profile(spark: SparkSession, n_rays: int) -> DataFrame:
     """Flagship result: efficiency + mean hit count + mean time
-    resolution per eta bin. All averages are exact-integer sums /
-    counts except mean_t (rounded to absorb float-order drift)."""
-    per_ray = ray_hits(spark, n_rays, strategy)
-    return (
-        per_ray.groupBy(ETA_BINS.bin_of("eta").alias("eta_bin"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rays"),
-            F.round(F.avg((F.col("n") > 0).cast("double")), 6).alias("eff"),
-            F.round(F.avg(F.col("n").cast("double")), 6).alias("mean_n"),
-            F.round(
-                F.avg(F.when(F.col("n") > 0, T_COEFF / F.sqrt(F.col("n")))), 6
-            ).alias("mean_t"),
-        )
-    )
+    resolution per eta bin."""
+    rays = datagen.rays(spark, n_rays)
+    return profile(rays, hit_events(spark, rays, datagen.sensors(spark)), ETA_BINS)
 
 
-def mc_sanity_probe(
-    spark: SparkSession, n_rays: int, min_hits: int = 3, strategy: str = "binned"
-) -> DataFrame:
+def mc_sanity_probe(spark: SparkSession, n_rays: int, min_hits: int = 3) -> DataFrame:
     """MC sanity re-probe (reference dee_geometry.py:712-810): take the
     FIRST ray with n >= min_hits hits (the reference picks the first
     v.n>2 vector), re-project it onto every layer, and re-count the
@@ -104,35 +138,21 @@ def mc_sanity_probe(
     geometry, not bookkeeping.
 
     One row per layer: (event_id, layer, px, py, n_sensors, hit).
-    The probe id is a 1-row broadcast; the re-projection re-runs the
-    SAME containment predicate as the flagship join, so a bookkeeping
-    bug would show as hit=true on a layer with n_sensors=0 (or vice
-    versa)."""
-    per_ray = ray_hits(spark, n_rays, strategy)
+    The probe id is a 1-row broadcast; the re-count is the broadcast
+    predicate join over the SAME containment predicate as the binned
+    flagship join, so a bookkeeping bug would show as hit=true on a
+    layer with n_sensors=0 (or vice versa)."""
+    rays = datagen.rays(spark, n_rays)
     probe_id = (
-        per_ray.filter(F.col("n") >= min_hits)
+        hit_events(spark, rays, datagen.sensors(spark))
+        .filter(F.col("n") >= min_hits)
         .agg(F.min("event_id").alias("event_id"))
     )
-    rays = datagen.rays(spark, n_rays).join(F.broadcast(probe_id), "event_id")
-    sensors = datagen.sensors(spark)
-    proj = (
-        rays.crossJoin(F.broadcast(datagen.layers(spark)))
-        .withColumn("px", F.col("z_mm") * F.col("tanth") * F.col("cphi"))
-        .withColumn("py", F.col("z_mm") * F.col("tanth") * F.col("sphi"))
-        .select("event_id", "layer", "px", "py")
-    )
-    probed = proj.join(
-        F.broadcast(sensors),
-        (proj["layer"] == sensors["layer"])
-        & (sensors["ax1"] < proj["px"])
-        & (proj["px"] < sensors["ax2"])
-        & (sensors["ay1"] < proj["py"])
-        & (proj["py"] < sensors["ay2"]),
-        "left",
-    )
+    proj = project(spark, rays.join(F.broadcast(probe_id), "event_id"))
+    probed = containment_join(proj, datagen.sensors(spark), extra_keys=["layer"], how="left")
     return (
-        probed.groupBy(proj["event_id"], proj["layer"], "px", "py")
-        .agg(F.count(sensors["sensor_id"]).alias("n_sensors"))
+        probed.groupBy("event_id", proj["layer"], "px", "py")
+        .agg(F.count("sensor_id").alias("n_sensors"))
         .select(
             "event_id",
             "layer",
@@ -170,11 +190,9 @@ GROUP BY 1, 2, pp.px, pp.py
 def hit_count_histogram(spark: SparkSession, n_rays: int) -> DataFrame:
     """A10 on the MC result: histogram of n (0..4) — the reference's
     `Hist1D(nHits, "5,-0.5,4.5")` (example.ipynb cell 19)."""
-    return (
-        ray_hits(spark, n_rays)
-        .groupBy(F.col("n").cast("bigint").alias("n"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    rays = datagen.rays(spark, n_rays)
+    hist = hit_histogram(rays, hit_events(spark, rays, datagen.sensors(spark)))
+    return hist.filter(F.col("cnt") > 0)  # per-ray GROUP BY n: no empty bins
 
 
 # =====================================================================
@@ -238,51 +256,9 @@ def real_layout_sensors(
     )
 
 
-def real_ray_hits(
-    spark: SparkSession,
-    n_rays: int,
-    yaml_path: str,
-    layout: str = "new",
-    strategy: str = "binned",
-) -> DataFrame:
-    """Per-ray hit counts (event_id, eta, n) over the REAL layout —
-    the flagship `ray_hits` plan with the real corner table swapped in
-    and rays restricted to the study's eta window."""
-    rays = datagen.rays(spark, n_rays).filter(
-        F.col("eta") < F.lit(REAL_ETA_BINS.hi)
-    )
-    sensors = real_layout_sensors(spark, yaml_path, layout)
-    proj = (
-        rays.crossJoin(F.broadcast(datagen.layers(spark)))
-        .withColumn("px", F.col("z_mm") * F.col("tanth") * F.col("cphi"))
-        .withColumn("py", F.col("z_mm") * F.col("tanth") * F.col("sphi"))
-        .select("event_id", "layer", "px", "py")
-    )
-    if strategy == "binned":
-        # cell >= the 41.5mm max active extent -> <=2 cells per axis.
-        # The corner table is dimension-sized by the layout contract
-        # but createDataFrame-sourced (no stats) — pin the broadcast
-        # so the 4x-rays proj side never shuffles (138->19 MB at 1e6
-        # rays, see binned_containment_join docstring).
-        hits = binned_containment_join(
-            proj, sensors, cell=50.0, extra_keys=["layer"], broadcast_rects=True
-        )
-    else:
-        hits = proj.join(
-            F.broadcast(sensors),
-            (proj["layer"] == sensors["layer"])
-            & (sensors["ax1"] < proj["px"])
-            & (proj["px"] < sensors["ax2"])
-            & (sensors["ay1"] < proj["py"])
-            & (proj["py"] < sensors["ay2"]),
-            "inner",
-        ).drop(sensors["layer"])
-    n_per_event = hits.groupBy("event_id").agg(F.countDistinct("layer").alias("n"))
-    return (
-        rays.select("event_id", "eta")
-        .join(n_per_event, "event_id", "left")
-        .fillna({"n": 0})
-    )
+def real_rays(spark: SparkSession, n_rays: int) -> DataFrame:
+    """The MC rays inside the real-layout study's eta window."""
+    return datagen.rays(spark, n_rays).filter(F.col("eta") < F.lit(REAL_ETA_BINS.hi))
 
 
 def real_hit_count_histogram(
@@ -291,37 +267,21 @@ def real_hit_count_histogram(
     """Hist1D(nHits) over a REAL layout — the stored-output twin of
     geometric_acceptance.ipynb cell 62 (`Hist1D(nHits['TDR'],
     "5,-0.5,4.5")`)."""
-    return (
-        real_ray_hits(spark, n_rays, yaml_path, layout)
-        .groupBy(F.col("n").cast("bigint").alias("n"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    rays = real_rays(spark, n_rays)
+    sensors = real_layout_sensors(spark, yaml_path, layout)
+    hist = hit_histogram(rays, hit_events(spark, rays, sensors))
+    return hist.filter(F.col("cnt") > 0)  # per-ray GROUP BY n: no empty bins
 
 
 def real_acceptance_profile(
-    spark: SparkSession,
-    n_rays: int,
-    yaml_path: str,
-    layout: str = "new",
-    strategy: str = "binned",
+    spark: SparkSession, n_rays: int, yaml_path: str, layout: str = "new"
 ) -> DataFrame:
     """Efficiency + mean hit count + mean time resolution per eta bin
-    over the REAL exported layout. Identical plan to the flagship
-    (rays never shuffle; the sensor dimension broadcasts; the only
-    wide exchange is the bins-sized final agg) — only the rect side
-    and the bin spec differ."""
-    per_ray = real_ray_hits(spark, n_rays, yaml_path, layout, strategy)
-    return (
-        per_ray.groupBy(REAL_ETA_BINS.bin_of("eta").alias("eta_bin"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rays"),
-            F.round(F.avg((F.col("n") > 0).cast("double")), 6).alias("eff"),
-            F.round(F.avg(F.col("n").cast("double")), 6).alias("mean_n"),
-            F.round(
-                F.avg(F.when(F.col("n") > 0, T_COEFF / F.sqrt(F.col("n")))), 6
-            ).alias("mean_t"),
-        )
-    )
+    over the REAL exported layout: the flagship plan with the real
+    corner table, the study's eta window and its bin spec."""
+    rays = real_rays(spark, n_rays)
+    sensors = real_layout_sensors(spark, yaml_path, layout)
+    return profile(rays, hit_events(spark, rays, sensors), REAL_ETA_BINS)
 
 
 def _real_hits_cte(n_rays: int, yaml_path: str, layout: str) -> str:
@@ -391,95 +351,41 @@ def real_hit_count_histogram_sql(
 
 # =====================================================================
 # ONE-PASS multi-variant acceptance: geometric_acceptance.ipynb cell 60
-# probes 4 detector variants PER RAY in a single pass. The efficient
-# Spark shape is one ray scan joined against a variant-TAGGED union of
-# corner tables — the ray side is projected once and never re-scanned
-# per variant; only the dimension-sized corner union grows with the
-# variant count.
+# probes 4 detector variants PER RAY in a single pass. The ray side is
+# projected once against a variant-TAGGED union of corner tables
+# (`variant_corners` -> `hit_events(..., tags=["variant"])`); only the
+# dimension-sized corner union grows with the variant count. The
+# registry memoizes that hit table once per session for both queries
+# (registry_r7.mv_per_hit).
 # =====================================================================
 
 
-def multi_variant_ray_hits(
-    spark: SparkSession,
-    n_rays: int,
-    variants: dict[str, DataFrame],
-) -> DataFrame:
-    """Per (variant, event) hit counts from a SINGLE ray scan.
+def variant_corners(variants: dict[str, DataFrame]) -> DataFrame:
+    """(variant, layer, ax1, ax2, ay1, ay2): the tagged union of the
+    variants' corner tables."""
+    return reduce(
+        DataFrame.unionByName,
+        [
+            corners.select(F.lit(name).alias("variant"), "layer", "ax1", "ax2", "ay1", "ay2")
+            for name, corners in variants.items()
+        ],
+    )
 
-    Each variant's corner table (layer, ax1, ax2, ay1, ay2) is tagged
-    and unioned; the binned containment join then matches every ray
-    projection against every variant's rectangles in ONE equi-join on
-    (layer, cell). Returns (variant, event_id, eta, n>0 rows only) —
-    misses are reconstructed arithmetically in the profile (zero rows
-    never materialize, so the plan does NOT blow up rays x variants)."""
-    rays = datagen.rays(spark, n_rays).filter(F.col("eta") < F.lit(REAL_ETA_BINS.hi))
-    tagged = None
-    for name, corners in variants.items():
-        t = corners.select(
-            F.lit(name).alias("variant"), "layer", "ax1", "ax2", "ay1", "ay2"
-        )
-        tagged = t if tagged is None else tagged.unionByName(t)
 
-    proj = (
-        rays.crossJoin(F.broadcast(datagen.layers(spark)))
-        .withColumn("px", F.col("z_mm") * F.col("tanth") * F.col("cphi"))
-        .withColumn("py", F.col("z_mm") * F.col("tanth") * F.col("sphi"))
-        .select("event_id", "eta", "layer", "px", "py")
-    )
-    hits = binned_containment_join(
-        proj, tagged, cell=50.0, extra_keys=["layer"], broadcast_rects=True
-    )
-    return hits.groupBy("variant", "event_id").agg(
-        F.first("eta").alias("eta"), F.countDistinct("layer").alias("n")
-    )
+def _variant_rays(spark: SparkSession, n_rays: int, variants) -> DataFrame:
+    """The study rays once per variant: the ray-total side of the
+    multi-variant aggregates (the projection never reads it)."""
+    vdim = spark.createDataFrame([(v,) for v in variants], "variant STRING")
+    return real_rays(spark, n_rays).crossJoin(F.broadcast(vdim))
 
 
 def multi_variant_acceptance(
-    spark: SparkSession,
-    n_rays: int,
-    variants: dict[str, DataFrame],
-    per_hit: DataFrame | None = None,
+    spark: SparkSession, n_rays: int, variants: dict[str, DataFrame], hits: DataFrame
 ) -> DataFrame:
     """(variant, eta_bin, n_rays, eff, mean_n, mean_t) for every
-    variant from one ray scan. Per-bin ray totals are computed ONCE
-    from the ray table (they are variant-independent); per-variant
-    numerators come from the hit rows alone, so zero-hit rays are never
-    materialized per variant:
-
-        eff    = n_hit_events / n_rays_bin
-        mean_n = sum(n) / n_rays_bin          (misses contribute 0)
-        mean_t = avg(45/sqrt(n)) over hit events (misses excluded,
-                 matching the single-variant profile's CASE WHEN n>0)
-
-    `per_hit` optionally injects an already-materialized
-    `multi_variant_ray_hits` table (the registry memoizes ONE such
-    table per session for the two multi-variant queries — the ray
-    scan + containment join is their dominant shared cost)."""
-    if per_hit is None:
-        per_hit = multi_variant_ray_hits(spark, n_rays, variants)
-    rays = datagen.rays(spark, n_rays).filter(F.col("eta") < F.lit(REAL_ETA_BINS.hi))
-    bin_col = REAL_ETA_BINS.bin_of("eta").alias("eta_bin")
-    bin_tot = rays.groupBy(bin_col).agg(F.count(F.lit(1)).alias("n_rays"))
-    vdim = per_hit.sparkSession.createDataFrame(
-        [(v,) for v in variants], "variant STRING"
-    )
-    grid = bin_tot.crossJoin(F.broadcast(vdim))
-    hit_agg = per_hit.groupBy("variant", REAL_ETA_BINS.bin_of("eta").alias("eta_bin")).agg(
-        F.count(F.lit(1)).alias("n_hit"),
-        F.sum("n").alias("sum_n"),
-        F.sum(T_COEFF / F.sqrt(F.col("n"))).alias("sum_t"),
-    )
-    return (
-        grid.join(hit_agg, ["variant", "eta_bin"], "left")
-        .select(
-            "variant",
-            "eta_bin",
-            "n_rays",
-            F.round(F.coalesce(F.col("n_hit"), F.lit(0)) / F.col("n_rays"), 6).alias("eff"),
-            F.round(F.coalesce(F.col("sum_n"), F.lit(0)) / F.col("n_rays"), 6).alias("mean_n"),
-            F.round(F.col("sum_t") / F.col("n_hit"), 6).alias("mean_t"),
-        )
-    )
+    variant; `hits` is the variant-tagged `hit_events` table of
+    `variant_corners(variants)`."""
+    return profile(_variant_rays(spark, n_rays, variants), hits, REAL_ETA_BINS, ["variant"])
 
 
 def multi_variant_acceptance_sql(
@@ -533,57 +439,16 @@ LEFT JOIN hit_agg h ON h.variant = v.variant AND h.eta_bin = t.eta_bin
 
 
 def multi_variant_hit_histogram(
-    spark: SparkSession,
-    n_rays: int,
-    variants: dict[str, DataFrame],
-    per_hit: DataFrame | None = None,
+    spark: SparkSession, n_rays: int, variants: dict[str, DataFrame], hits: DataFrame
 ) -> DataFrame:
     """Per-(variant, n) hit-count histogram + per-variant mean from
-    the SAME one-pass ray scan as `multi_variant_acceptance`
+    the same hit table as `multi_variant_acceptance`
     (geometric_acceptance.ipynb cells 62-66: `Hist1D(nHits[v],
-    "5,-0.5,4.5")` per variant and the printed histogram means).
-
-    The n=0 bin is reconstructed arithmetically (total rays minus the
-    variant's hit events), so zero-hit rays are never materialized per
-    variant — the hit sub-plan stays |hits|-sized, not rays x variants.
-    The positive-bin aggregate feeds both the histogram rows and the
-    per-variant mean; its shuffle is identical in both branches, so
-    Spark's ReuseExchange evaluates the ray scan once.
-
-    `per_hit` optionally injects an already-materialized
-    `multi_variant_ray_hits` table (see multi_variant_acceptance)."""
-    if per_hit is None:
-        per_hit = multi_variant_ray_hits(spark, n_rays, variants)
-    rays = datagen.rays(spark, n_rays).filter(F.col("eta") < F.lit(REAL_ETA_BINS.hi))
-    total = rays.agg(F.count(F.lit(1)).alias("n_total"))
-    pos = per_hit.groupBy(
-        "variant", F.col("n").cast("bigint").alias("n")
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    vdim = spark.createDataFrame([(v,) for v in variants], "variant STRING")
-    sums = pos.groupBy("variant").agg(
-        F.sum("cnt").alias("n_hit"), F.sum(F.col("n") * F.col("cnt")).alias("sum_n")
-    )
-    per_variant = (
-        vdim.crossJoin(F.broadcast(total))
-        .join(sums, "variant", "left")
-        .select(
-            "variant",
-            "n_total",
-            F.coalesce(F.col("n_hit"), F.lit(0)).alias("n_hit"),
-            F.round(
-                F.coalesce(F.col("sum_n"), F.lit(0)) / F.col("n_total"), 6
-            ).alias("mean_n"),
-        )
-    )
-    zero = per_variant.select(
-        "variant",
-        F.lit(0).cast("bigint").alias("n"),
-        (F.col("n_total") - F.col("n_hit")).alias("cnt"),
-    )
-    hist = pos.select("variant", "n", "cnt").unionByName(zero)
-    return hist.join(
-        F.broadcast(per_variant.select("variant", "mean_n")), "variant"
-    ).select("variant", "n", "cnt", "mean_n")
+    "5,-0.5,4.5")` per variant and the printed histogram means)."""
+    hist = hit_histogram(_variant_rays(spark, n_rays, variants), hits, ["variant"])
+    w = Window.partitionBy("variant")
+    mean_n = F.sum(F.col("n") * F.col("cnt")).over(w) / F.sum("cnt").over(w)
+    return hist.select("variant", "n", "cnt", F.round(mean_n, 6).alias("mean_n"))
 
 
 def multi_variant_hit_histogram_sql(

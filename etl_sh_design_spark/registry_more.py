@@ -193,54 +193,20 @@ def q_run_comparison(spark, sf_dir):
     profile bin. (The S6 Parquet run-cache sink/scan is exercised in
     tests/test_sources.py; the comparison join itself is this query.)
 
-    Both runs share ONE sensors pipeline and ONE containment join: rays
-    carry a run tag through the binned join and the profile groups on
-    (run, eta_bin) — at scale you would never rebuild the detector side
-    per run. Measured 3.2-3.9 s -> ~2.3 s warm at these ray counts vs
-    the two-pipeline formulation (the rest is ray generation, which is
-    irreducible per-run work).
-
-    Round 12: (a) eff is computed arithmetically from counting
-    aggregates — n_hit_events / n_rays_bin per (run, bin) — instead of
-    a per-ray LEFT JOIN + avg over the indicator (identical doubles:
-    avg's sum of 0.0/1.0 indicators IS n_hit exactly, over the same
-    denominator); (b) the final a/b comparison is a conditional
-    aggregation over the (run, eta_bin) profile instead of a self-join
-    whose two branches each re-planned the WHOLE pipeline (20 -> 8
-    Exchange mentions; bins missing either run are dropped exactly
-    like the old inner join via the not-null filter)."""
-    from etl_sh_design_spark import datagen
-    from etl_sh_design_spark.operators.containment import binned_containment_join
-
+    Both runs go through ONE acceptance pipeline: the rays carry a
+    `run` tag through `acceptance.hit_events` and `acceptance.profile`,
+    so the detector side and the containment join are built once. The
+    a/b comparison is a conditional aggregation over the (run, eta_bin)
+    profile instead of a self-join whose branches would each re-plan
+    the whole pipeline; bins missing either run are dropped, like the
+    oracle's inner join."""
     runs = (
         datagen.rays(spark, _N_A)
         .withColumn("run", F.lit("a"))
         .unionByName(datagen.rays(spark, _N_B).withColumn("run", F.lit("b")))
     )
-    layers = datagen.layers(spark)
-    sensors = datagen.sensors(spark)
-    proj = (
-        runs.crossJoin(F.broadcast(layers))
-        .withColumn("px", F.col("z_mm") * F.col("tanth") * F.col("cphi"))
-        .withColumn("py", F.col("z_mm") * F.col("tanth") * F.col("sphi"))
-        .select("run", "event_id", "eta", "layer", "px", "py")
-    )
-    hits = binned_containment_join(proj, sensors, cell=50.0, extra_keys=["layer"])
-    hit_events = hits.groupBy("run", "event_id").agg(F.first("eta").alias("eta"))
-    bin_of = acceptance.ETA_BINS.bin_of("eta").alias("eta_bin")
-    bin_tot = runs.groupBy("run", bin_of).agg(F.count(F.lit(1)).alias("n_rays"))
-    hit_agg = hit_events.groupBy("run", bin_of).agg(
-        F.count(F.lit(1)).alias("n_hit")
-    )
-    prof = bin_tot.join(hit_agg, ["run", "eta_bin"], "left").select(
-        "run",
-        "eta_bin",
-        F.round(
-            F.coalesce(F.col("n_hit"), F.lit(0)).cast("double")
-            / F.col("n_rays").cast("double"),
-            6,
-        ).alias("eff"),
-    )
+    hits = acceptance.hit_events(spark, runs, datagen.sensors(spark), ["run"])
+    prof = acceptance.profile(runs, hits, acceptance.ETA_BINS, ["run"])
     eff_a = F.max(F.when(F.col("run") == "a", F.col("eff")))
     eff_b = F.max(F.when(F.col("run") == "b", F.col("eff")))
     return (

@@ -349,8 +349,11 @@ def mv_per_hit(spark):
         spark,
         "mv_hits",
         N_RAYS,
-        lambda: acceptance.multi_variant_ray_hits(
-            spark, N_RAYS, _mv_variants(spark)
+        lambda: acceptance.hit_events(
+            spark,
+            acceptance.real_rays(spark, N_RAYS),
+            acceptance.variant_corners(_mv_variants(spark)),
+            ["variant"],
         ).localCheckpoint(eager=False),
     )
 
@@ -391,7 +394,7 @@ def q_acceptance_multi_variant(spark, sf_dir):
     tests/test_faces_tiling.py. The per-hit table is the session memo
     shared with acceptance_multi_variant_hist (see mv_per_hit)."""
     return acceptance.multi_variant_acceptance(
-        spark, N_RAYS, _mv_variants(spark), per_hit=mv_per_hit(spark)
+        spark, N_RAYS, _mv_variants(spark), mv_per_hit(spark)
     )
 
 
@@ -419,5 +422,5 @@ def q_acceptance_multi_variant_hist(spark, sf_dir):
     The per-hit table is the session memo shared with
     acceptance_multi_variant (see mv_per_hit)."""
     return acceptance.multi_variant_hit_histogram(
-        spark, N_RAYS, _mv_variants(spark), per_hit=mv_per_hit(spark)
+        spark, N_RAYS, _mv_variants(spark), mv_per_hit(spark)
     )

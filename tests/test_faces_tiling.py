@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import itertools
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -280,6 +281,17 @@ class TestBoards:
 # ---------------------------------------------------------------------
 # 5. multi-variant acceptance: single ray scan, no per-variant rescan
 # ---------------------------------------------------------------------
+def _variant_hits(spark, n_rays, variants):
+    from etl_sh_design_spark.plans import acceptance
+
+    return acceptance.hit_events(
+        spark,
+        acceptance.real_rays(spark, n_rays),
+        acceptance.variant_corners(variants),
+        ["variant"],
+    )
+
+
 class TestMultiVariantPlan:
     def test_single_ray_scan(self, spark):
         """The physical plan's Range-source count must not grow with
@@ -289,7 +301,9 @@ class TestMultiVariantPlan:
         from etl_sh_design_spark.plans import acceptance
 
         def ray_scans(variants):
-            df = acceptance.multi_variant_acceptance(spark, 1000, variants)
+            df = acceptance.multi_variant_acceptance(
+                spark, 1000, variants, _variant_hits(spark, 1000, variants)
+            )
             plan = df._jdf.queryExecution().executedPlan().toString()
             # the ray source is Range(0, n_rays); the corner tables are
             # also Range-backed but at other sizes — only the ray scans
@@ -314,7 +328,9 @@ class TestMultiVariantPlan:
         synth = datagen.sensors(spark).select("layer", "ax1", "ax2", "ay1", "ay2")
 
         def ray_scans(variants):
-            df = acceptance.multi_variant_hit_histogram(spark, 1000, variants)
+            df = acceptance.multi_variant_hit_histogram(
+                spark, 1000, variants, _variant_hits(spark, 1000, variants)
+            )
             plan = df._jdf.queryExecution().executedPlan().toString()
             return plan.count("Range (0, 1000")
 
@@ -322,8 +338,9 @@ class TestMultiVariantPlan:
             {"a": synth}
         )
 
+        two = {"a": synth, "b": synth}
         rows = acceptance.multi_variant_hit_histogram(
-            spark, 5000, {"a": synth, "b": synth}
+            spark, 5000, two, _variant_hits(spark, 5000, two)
         ).collect()
         n_total = (
             datagen.rays(spark, 5000)
@@ -335,19 +352,21 @@ class TestMultiVariantPlan:
             by_variant[r.variant] = by_variant.get(r.variant, 0) + r.cnt
         assert by_variant == {"a": n_total, "b": n_total}
 
-        # single-variant equivalence vs the flagship per-ray plan
-        single = {
-            r.n: r.cnt
-            for r in acceptance.ray_hits(spark, 5000)
-            .filter(F.col("eta") < acceptance.REAL_ETA_BINS.hi)
-            .groupBy(F.col("n").cast("bigint").alias("n"))
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
+        # single-variant equivalence vs the flagship per-ray oracle
+        single = dict(
+            duckdb.connect()
+            .execute(
+                acceptance._hits_cte(5000)
+                + "SELECT CAST(n AS BIGINT) AS n, count(*) AS cnt FROM per_ray"
+                + f" WHERE eta < {acceptance.REAL_ETA_BINS.hi!r} GROUP BY 1"
+            )
+            .fetchall()
+        )
+        one = {"s": synth}
         multi = {
             r.n: r.cnt
             for r in acceptance.multi_variant_hit_histogram(
-                spark, 5000, {"s": synth}
+                spark, 5000, one, _variant_hits(spark, 5000, one)
             ).collect()
         }
         assert {k: v for k, v in multi.items() if v > 0} == {
@@ -361,29 +380,32 @@ class TestMultiVariantPlan:
         from etl_sh_design_spark.plans import acceptance
 
         synth = datagen.sensors(spark).select("layer", "ax1", "ax2", "ay1", "ay2")
+        one = {"s": synth}
         multi = {
             (r.eta_bin): (r.n_rays, r.eff, r.mean_n, r.mean_t)
-            for r in acceptance.multi_variant_acceptance(spark, 5000, {"s": synth}).collect()
+            for r in acceptance.multi_variant_acceptance(
+                spark, 5000, one, _variant_hits(spark, 5000, one)
+            ).collect()
         }
-        # independent recomputation from the flagship per-ray plan,
+        # independent recomputation from the flagship per-ray oracle,
         # restricted to the same eta window and bin spec
-        per_ray = acceptance.ray_hits(spark, 5000).filter(
-            F.col("eta") < acceptance.REAL_ETA_BINS.hi
-        )
+        b = acceptance.REAL_ETA_BINS
         single = {
-            r.eta_bin: (r.n_rays, r.eff, r.mean_n, r.mean_t)
-            for r in per_ray.groupBy(
-                acceptance.REAL_ETA_BINS.bin_of("eta").alias("eta_bin")
+            r[0]: r[1:]
+            for r in duckdb.connect()
+            .execute(
+                acceptance._hits_cte(5000)
+                + f"""
+SELECT {b.bin_sql('eta')} AS eta_bin,
+       count(*) AS n_rays,
+       round(avg(CASE WHEN n > 0 THEN 1.0 ELSE 0.0 END), 6) AS eff,
+       round(avg(CAST(n AS DOUBLE)), 6) AS mean_n,
+       round(avg(CASE WHEN n > 0 THEN {acceptance.T_COEFF} / sqrt(n) END), 6) AS mean_t
+FROM per_ray WHERE eta < {b.hi!r}
+GROUP BY 1
+"""
             )
-            .agg(
-                F.count(F.lit(1)).alias("n_rays"),
-                F.round(F.avg((F.col("n") > 0).cast("double")), 6).alias("eff"),
-                F.round(F.avg(F.col("n").cast("double")), 6).alias("mean_n"),
-                F.round(
-                    F.avg(F.when(F.col("n") > 0, acceptance.T_COEFF / F.sqrt(F.col("n")))), 6
-                ).alias("mean_t"),
-            )
-            .collect()
+            .fetchall()
         }
         assert set(multi) == set(single)
         for k in multi:

@@ -40,24 +40,38 @@ def test_containment_join_uses_layer_hash_key(spark):
     """J1: the layer equi-conjunct must make the containment join a
     BroadcastHashJoin (range predicate as post-condition), NOT a
     BroadcastNestedLoopJoin over everything."""
-    from etl_sh_design_spark.plans.acceptance import ray_hits
+    from etl_sh_design_spark.plans.acceptance import acceptance_profile
 
-    plan = _plan(ray_hits(spark, 1000))
+    plan = _plan(acceptance_profile(spark, 1000))
     assert "BroadcastHashJoin" in plan
 
 
 def test_binned_containment_is_pure_hash_join(spark):
     """The scale-out strategy: spatial binning leaves NO nested-loop
     join anywhere in the plan."""
-    from etl_sh_design_spark.plans.acceptance import ray_hits
+    from etl_sh_design_spark.plans.acceptance import acceptance_profile
 
-    plan = _plan(ray_hits(spark, 1000, strategy="binned"))
+    plan = _plan(acceptance_profile(spark, 1000))
     # at most the one 4-row layers cross join; the sensors join must be
     # a hash join on (layer, cell_x, cell_y)
     assert plan.count("BroadcastNestedLoopJoin") <= 1
     assert any(
         k in plan for k in ("BroadcastHashJoin", "ShuffledHashJoin", "SortMergeJoin")
     )
+
+
+def test_acceptance_profile_never_joins_rays_back(spark):
+    """The flagship profile is arithmetic over ray totals and hit
+    events: no join is keyed on event_id (per-ray counts are never
+    joined back to the rays), and the ray generator is scanned exactly
+    twice — the projection and the per-bin totals."""
+    import re
+
+    from etl_sh_design_spark.plans.acceptance import acceptance_profile
+
+    plan = _plan(acceptance_profile(spark, 1000))
+    assert not re.search(r"Join \[[^\]]*event_id", plan), plan
+    assert plan.count("Range (0, 1000") == 2, plan
 
 
 def test_partial_aggregation_before_shuffle(spark):
@@ -73,12 +87,58 @@ def test_partial_aggregation_before_shuffle(spark):
 
 
 def test_binned_equals_broadcast_strategy(spark):
-    """Both J1 physical strategies produce identical results."""
-    from etl_sh_design_spark.plans.acceptance import ray_hits
+    """Both physical containment joins return exactly the pairs a
+    brute-force strict-`<` scan finds, on seeded random data built to
+    hit every edge: negative coordinates, points exactly on rect edges
+    and on cell boundaries, and rects spanning two cells per axis."""
+    import random
 
-    a = sorted(tuple(r) for r in ray_hits(spark, 3000).collect())
-    b = sorted(tuple(r) for r in ray_hits(spark, 3000, strategy="binned").collect())
-    assert a == b
+    from etl_sh_design_spark.operators.containment import (
+        binned_containment_join,
+        containment_join,
+    )
+
+    cell = 10.0
+    rng = random.Random(20261017)
+
+    def coord(lo, hi):
+        # quarter-mm grid: coordinates, cell boundaries and quotients are exact
+        return rng.randint(int(lo * 4), int(hi * 4)) / 4
+
+    rects = []
+    for rid in range(300):  # extent <= cell: at most 2 cells per axis
+        x1, y1 = coord(-60, 50), coord(-60, 50)
+        x2, y2 = x1 + coord(0.25, cell), y1 + coord(0.25, cell)
+        rects.append((rid, rng.randint(1, 3), x1, x2, y1, y2))
+    for k in range(-3, 3):  # rects straddling a cell boundary on both axes
+        rects.append((len(rects), 1, k * cell - 2.5, k * cell + 2.5, k * cell - 1.0, k * cell + 7.5))
+    points = []
+    for _, layer, x1, x2, y1, y2 in rects:
+        mx, my = (x1 + x2) / 2, (y1 + y2) / 2
+        for px, py in ((mx, my), (x1, my), (x2, my), (mx, y1), (mx, y2), (x1, y1)):
+            points.append((len(points), layer, px, py))
+    for k in range(-6, 6):  # exactly on cell boundaries
+        for j in (-2, 0, 1):
+            points.append((len(points), 1, k * cell, j * cell))
+            points.append((len(points), 2, k * cell, coord(-60, 60)))
+    for _ in range(1500):
+        points.append((len(points), rng.randint(1, 3), coord(-65, 65), coord(-65, 65)))
+
+    want = sorted(
+        (pid, rid)
+        for pid, pl, px, py in points
+        for rid, rl, x1, x2, y1, y2 in rects
+        if pl == rl and x1 < px < x2 and y1 < py < y2
+    )
+    pdf = spark.createDataFrame(points, "pid INT, layer INT, px DOUBLE, py DOUBLE")
+    rdf = spark.createDataFrame(
+        rects, "rid INT, layer INT, ax1 DOUBLE, ax2 DOUBLE, ay1 DOUBLE, ay2 DOUBLE"
+    )
+    binned = binned_containment_join(pdf, rdf, cell, extra_keys=["layer"])
+    broadcast = containment_join(pdf, rdf, extra_keys=["layer"])
+    assert len(want) > 500
+    for joined in (binned, broadcast):
+        assert sorted(tuple(r) for r in joined.select("pid", "rid").collect()) == want
 
 
 def test_incremental_dedup_broadcasts_key_side(spark):

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Scale-probe the flagship MC acceptance pipeline (VERDICT r8 item 6):
-run `acceptance_profile`'s plan at 1e6 / 1e7 / 1e8 rays with the
-default binned containment strategy, and report wall clock, shuffle
+run `acceptance_profile`'s plan at 1e6 / 1e7 / 1e8 rays (binned
+containment join), and report wall clock, shuffle
 bytes written, and rays/s per rung. 1e6 is the committed SCALE.md
 reference point (the reference's own study is 1e5 rays x 4 variants,
 29.7 s single-threaded).

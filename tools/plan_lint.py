@@ -61,13 +61,13 @@ WHITELIST: dict[str, dict[str, str]] = {
         "NESTED_LOOP": "4-row layers dim cross join (same sub-plan)",
     },
     "hit_count_histogram": {
-        "NESTED_LOOP": "4-row layers dim cross join (same sub-plan)",
+        "NESTED_LOOP": "4-row layers dim cross join + 1-row ray-total scalar",
     },
     "real_acceptance_profile": {
         "NESTED_LOOP": "4-row layers dim cross join (same sub-plan)",
     },
     "real_tdr_hit_histogram": {
-        "NESTED_LOOP": "4-row layers dim cross join (same sub-plan)",
+        "NESTED_LOOP": "4-row layers dim cross join + 1-row ray-total scalar",
     },
     "efficiency_returns": {
         "NESTED_LOOP": "scalar total broadcast join (1-row side)",
@@ -188,10 +188,10 @@ WHITELIST: dict[str, dict[str, str]] = {
         "NESTED_LOOP": "grid x face-dim cross joins (5 bare-annulus configs)"
     },
     "acceptance_multi_variant": {
-        "NESTED_LOOP": "4-row layers dim cross join (flagship sub-plan)"
+        "NESTED_LOOP": "4-row layers dim cross join + rays x 3-row variant dim (totals)"
     },
     "acceptance_multi_variant_hist": {
-        "NESTED_LOOP": "4-row layers dim cross join + 1-row ray-total scalar"
+        "NESTED_LOOP": "4-row layers dim cross join + rays x 3-row variant dim (totals)"
     },
     "real_module_rows": {
         "GLOBAL_WIN": "rank over the 52-row distinct-y layout dimension"
