@@ -8,9 +8,9 @@ the right shape is a LOOKUP DIMENSION TABLE (n is tiny, <= ~60) joined
 broadcast — a UDF would serialize the same computation per row for no
 reason (SURVEY.md §7.3).
 
-`partition_lookup(spark)` builds the exploded (n, ordinal, flavor,
-n_boards) table; `PARTITION_LOOKUP_SQL` is the identical literal for
-the DuckDB oracle.
+`partition_lookup(spark, flavors=...)` builds the exploded (n,
+ordinal, flavor, n_boards, covered) table; `PARTITION_LOOKUP_SQL` is
+the identical literal (default flavors) for the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -52,9 +52,11 @@ def partition_rows(max_n: int = MAX_N, flavors: tuple[int, ...] = DEFAULT_FLAVOR
     return rows
 
 
-def partition_lookup(spark: SparkSession, max_n: int = MAX_N) -> DataFrame:
+def partition_lookup(
+    spark: SparkSession, flavors: tuple[int, ...] = DEFAULT_FLAVORS
+) -> DataFrame:
     return spark.createDataFrame(
-        partition_rows(max_n),
+        partition_rows(MAX_N, flavors),
         "n INT, ordinal INT, flavor INT, n_boards INT, covered INT",
     )
 

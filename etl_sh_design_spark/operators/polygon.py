@@ -1,12 +1,14 @@
 """Polygon containment/overlap — the U1 black-box operator
 (SURVEY.md §2.10; reference wraps shapely at dee_geometry.py:60-138).
 
-shapely is NOT in this container, so the default path is a vectorized
-NumPy ray-casting point-in-polygon inside an Arrow-batched pandas UDF;
-if shapely is importable we use its (C-accelerated) predicates instead.
-Either way the polygon table is dimension-sized and broadcast — the
-UDF is the only non-codegen island in the engine, applied AFTER the
-cheap rectangular pre-filters (predicate ordering, SURVEY.md §4.1).
+The predicates are vectorized NumPy inside Arrow-batched pandas UDFs:
+an even-odd ray cast for point-in-polygon, and for rect-polygon
+overlap the one kernel `rect_polygon_hits` (corner-in-polygon +
+Liang-Barsky edge-vs-rect) that every overlap UDF here and the
+per-face blocked flag (plans/dee_faces.py) call. The polygon table is
+dimension-sized closure data; apply the UDFs AFTER the cheap
+rectangular pre-filters (Catalyst will not reorder across the UDF
+barrier — predicate ordering, SURVEY.md §4.1).
 """
 
 from __future__ import annotations
@@ -17,13 +19,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-try:
-    import shapely  # noqa: F401
-
-    HAVE_SHAPELY = True
-except ImportError:
-    HAVE_SHAPELY = False
 
 
 def _ray_cast(px: np.ndarray, py: np.ndarray, verts: list[tuple[float, float]]) -> np.ndarray:
@@ -51,22 +46,9 @@ def points_in_polygon(
     captured in the UDF closure (tiny, broadcast with the task)."""
     verts = [(float(x), float(y)) for x, y in vertices]
 
-    if HAVE_SHAPELY:
-        from shapely.geometry import Point, Polygon
-
-        poly = Polygon(verts)
-
-        @F.pandas_udf(T.BooleanType())
-        def _inside(xs: pd.Series, ys: pd.Series) -> pd.Series:
-            from shapely import contains_xy
-
-            return pd.Series(contains_xy(poly, xs.values, ys.values))
-
-    else:
-
-        @F.pandas_udf(T.BooleanType())
-        def _inside(xs: pd.Series, ys: pd.Series) -> pd.Series:
-            return pd.Series(_ray_cast(xs.values, ys.values, verts))
+    @F.pandas_udf(T.BooleanType())
+    def _inside(xs: pd.Series, ys: pd.Series) -> pd.Series:
+        return pd.Series(_ray_cast(xs.values, ys.values, verts))
 
     return points.withColumn(out, _inside(F.col(px), F.col(py)))
 
@@ -121,6 +103,27 @@ def _segment_intersects_rect(
     return ok & (t0 <= t1)
 
 
+def rect_polygon_hits(
+    rx1: np.ndarray, ry1: np.ndarray, rx2: np.ndarray, ry2: np.ndarray,
+    verts: list[tuple[float, float]],
+) -> np.ndarray:
+    """Does each axis-aligned rect INTERSECT the polygon — the
+    reference's `overlaps(x) or within(x)` predicate (ETL.py:552-553,
+    dee_geometry.py:134-138), not just center containment? True iff
+    (a) any rect corner is inside the polygon (covers
+    rect-within-polygon), or (b) any polygon edge intersects the rect
+    (covers polygon-within-rect and all boundary crossings)."""
+    hit = np.zeros(len(rx1), dtype=bool)
+    for cxs, cys in ((rx1, ry1), (rx1, ry2), (rx2, ry1), (rx2, ry2)):
+        hit |= _ray_cast(cxs, cys, verts)
+    n = len(verts)
+    for i in range(n):
+        x0, y0 = verts[i]
+        xe, ye = verts[(i + 1) % n]
+        hit |= _segment_intersects_rect(x0, y0, xe, ye, rx1, ry1, rx2, ry2)
+    return hit
+
+
 def rects_overlap_polygon(
     rects: DataFrame,
     vertices: list[tuple[float, float]],
@@ -130,43 +133,13 @@ def rects_overlap_polygon(
     y2: str = "y2",
     out: str = "overlaps",
 ) -> DataFrame:
-    """J3 polygon-polygon (rect x polygon) OVERLAP — the reference's
-    `overlaps(x) or within(x)` predicate (ETL.py:552-553,
-    dee_geometry.py:134-138), not just center containment.
-
-    rect INTERSECTS polygon iff (a) any rect corner is inside the
-    polygon (covers rect-within-polygon), or (b) any polygon edge
-    intersects the rect (Liang-Barsky; covers polygon-within-rect and
-    all boundary crossings). Both are vectorized NumPy over the Arrow
-    batch; the vertex list rides the UDF closure."""
+    """J3 rect x polygon OVERLAP flag (`rect_polygon_hits`) over the
+    Arrow batch; the vertex list rides the UDF closure."""
     verts = [(float(x), float(y)) for x, y in vertices]
 
-    if HAVE_SHAPELY:
-        from shapely.geometry import Polygon, box
-
-        poly = Polygon(verts)
-
-        @F.pandas_udf(T.BooleanType())
-        def _overlaps(ax: pd.Series, ay: pd.Series, bx: pd.Series, by: pd.Series) -> pd.Series:
-            return pd.Series(
-                [poly.intersects(box(a, b, c, d)) for a, b, c, d in zip(ax, ay, bx, by)]
-            )
-
-    else:
-
-        @F.pandas_udf(T.BooleanType())
-        def _overlaps(ax: pd.Series, ay: pd.Series, bx: pd.Series, by: pd.Series) -> pd.Series:
-            rx1, ry1 = ax.values, ay.values
-            rx2, ry2 = bx.values, by.values
-            hit = np.zeros(len(rx1), dtype=bool)
-            for cxs, cys in ((rx1, ry1), (rx1, ry2), (rx2, ry1), (rx2, ry2)):
-                hit |= _ray_cast(cxs, cys, verts)
-            n = len(verts)
-            for i in range(n):
-                vx0, vy0 = verts[i]
-                vx1, vy1 = verts[(i + 1) % n]
-                hit |= _segment_intersects_rect(vx0, vy0, vx1, vy1, rx1, ry1, rx2, ry2)
-            return pd.Series(hit)
+    @F.pandas_udf(T.BooleanType())
+    def _overlaps(ax: pd.Series, ay: pd.Series, bx: pd.Series, by: pd.Series) -> pd.Series:
+        return pd.Series(rect_polygon_hits(ax.values, ay.values, bx.values, by.values, verts))
 
     return rects.withColumn(out, _overlaps(F.col(x1), F.col(y1), F.col(x2), F.col(y2)))
 
@@ -187,48 +160,15 @@ def rects_overlap_count(
     form of the real-geometry tiling) builds a 15-deep Python-eval
     projection whose plan compile dominated the query (~6 s cold for
     594 rows); looping the shapes INSIDE one vectorized batch does the
-    identical arithmetic with one UDF node. Same kernels:
-    corner-in-polygon ray cast + Liang-Barsky edge-vs-rect."""
-    polys = {
-        name: [(float(x), float(y)) for x, y in verts]
-        for name, verts in polygons.items()
-    }
+    identical arithmetic with one UDF node."""
+    polys = [[(float(x), float(y)) for x, y in verts] for verts in polygons.values()]
 
-    if HAVE_SHAPELY:
-        from shapely.geometry import Polygon, box
-
-        shp = {name: Polygon(v) for name, v in polys.items()}
-
-        @F.pandas_udf(T.IntegerType())
-        def _count(ax: pd.Series, ay: pd.Series, bx: pd.Series, by: pd.Series) -> pd.Series:
-            return pd.Series(
-                [
-                    sum(p.intersects(box(a, b, c, d)) for p in shp.values())
-                    for a, b, c, d in zip(ax, ay, bx, by)
-                ],
-                dtype="int32",
-            )
-
-    else:
-
-        @F.pandas_udf(T.IntegerType())
-        def _count(ax: pd.Series, ay: pd.Series, bx: pd.Series, by: pd.Series) -> pd.Series:
-            rx1, ry1 = ax.values, ay.values
-            rx2, ry2 = bx.values, by.values
-            n_ovl = np.zeros(len(rx1), dtype=np.int32)
-            for verts in polys.values():
-                hit = np.zeros(len(rx1), dtype=bool)
-                for cxs, cys in ((rx1, ry1), (rx1, ry2), (rx2, ry1), (rx2, ry2)):
-                    hit |= _ray_cast(cxs, cys, verts)
-                n = len(verts)
-                for i in range(n):
-                    vx0, vy0 = verts[i]
-                    vx1, vy1 = verts[(i + 1) % n]
-                    hit |= _segment_intersects_rect(
-                        vx0, vy0, vx1, vy1, rx1, ry1, rx2, ry2
-                    )
-                n_ovl += hit
-            return pd.Series(n_ovl)
+    @F.pandas_udf(T.IntegerType())
+    def _count(ax: pd.Series, ay: pd.Series, bx: pd.Series, by: pd.Series) -> pd.Series:
+        n_ovl = np.zeros(len(ax), dtype=np.int32)
+        for verts in polys:
+            n_ovl += rect_polygon_hits(ax.values, ay.values, bx.values, by.values, verts)
+        return pd.Series(n_ovl)
 
     return rects.withColumn(out, _count(F.col(x1), F.col(y1), F.col(x2), F.col(y2)))
 

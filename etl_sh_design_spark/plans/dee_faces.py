@@ -3,8 +3,11 @@ reference's `Dee.populate` driven exactly as `dee_geometry.py.__main__`
 drives it for the 'updated' layout, module size 'S' (the flagship
 tiling whose counts the reference prints at dee_geometry.py:382-394).
 
-Differs from plans/tiling.py (the stand-in slot pipeline kept for the
-SQL-expressible §2 oracles) in three reference-fidelity respects:
+Shares its core with plans/tiling.py (the stand-in slot pipeline kept
+for the SQL-expressible §2 oracles): the blocked-geometry builders,
+the runs / two-pass fallback and the board placement window are
+tiling.py's, called here keyed by (face, iy). It differs in three
+reference-fidelity respects:
 
 1. The slot grid is the reference's: built from a 1-module SuperModule
    (module 43.10x56.50 + PB width 29.5 -> 43.10 x 86.0 slots), centered
@@ -48,8 +51,6 @@ tools/ref_tiling_golden.py docstring and tests/test_faces_tiling.py.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 
@@ -58,16 +59,20 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_sh_design_spark import memo
-from etl_sh_design_spark.operators.partition import (
-    PARTITION_LOOKUP_SQL,
-    partition_lookup,
+from etl_sh_design_spark.operators.partition import DEFAULT_FLAVORS, partition_lookup
+from etl_sh_design_spark.operators.polygon import _ray_cast, rect_polygon_hits
+from etl_sh_design_spark.plans.tiling import (
+    ETL_OUTER,
+    FEED_Y,
+    FEEDTHROUGH_X,
+    NOSE_R,
+    _runs_from,
+    circle_polygon,
+    outer_attachments,
+    place_boards,
+    runs_two_pass_from,
+    updated_inner_attachments,
 )
-from etl_sh_design_spark.operators.polygon import _ray_cast, _segment_intersects_rect
-
-ETL_OUTER = 1185.0
-NOSE_R = 302.0
-FEEDTHROUGH_X = 1120.0
-FEED_Y = math.sqrt(ETL_OUTER**2 - FEEDTHROUGH_X**2)
 
 MOD_H, MOD_W = 43.10, 56.50  # 'S' module x/y extent (dee_geometry.py:316-319)
 GAP = 0.5
@@ -102,105 +107,43 @@ def module_dy(orientation: str) -> float:
 
 
 # ---------------------------------------------------------------- geometry
-def circle_polygon(r: float, n: int = 64) -> list[tuple[float, float]]:
-    """shapely Point.buffer(r) at default resolution 16 => inscribed
-    64-gon with vertices on the axes."""
-    return [
-        (r * math.cos(2 * math.pi * i / n), r * math.sin(2 * math.pi * i / n))
-        for i in range(n)
-    ]
-
-
-def rot_cw_translate(pts, angle_deg, dist):
-    """rotate(poly, -angle, origin=(0,0)) then translate by
-    (sin(a)*dist, cos(a)*dist) — dee_geometry.py:74-75, 91-92."""
-    th = math.radians(angle_deg)
-    c, s = math.cos(th), math.sin(th)
-    dx, dy = s * dist, c * dist
-    return [(x * c + y * s + dx, -x * s + y * c + dy) for x, y in pts]
-
-
-def inner_attachment(angle: float, height: float, width: float) -> list:
-    """Taper-0 inner attachment quad (dee_geometry.py:60-77), hung from
-    r=302 on every face (dee_geometry.py:246-277 pass inner=302 even on
-    the first face whose heights use r_inner_first=322)."""
-    pts = [(-width / 2, -height), (-width / 2, 0.0), (width / 2, 0.0), (width / 2, -height)]
-    return rot_cw_translate(pts, angle, NOSE_R + height)
-
-
-def outer_attachment(angle: float, height: float = 107.5, width: float = 68.0) -> list:
-    """Rect + semicircular cap (dee_geometry.py:79-94); the cap is
-    shapely's 64-pt buffer circle, so the union outline carries the
-    lower 32 segments of that 64-gon."""
-    r = width / 2
-    pts = [(-r, 0.0), (-r, -height)]
-    for i in range(1, 32):
-        a = math.pi + math.pi * i / 32
-        pts.append((r * math.cos(a), -height + r * math.sin(a)))
-    pts += [(r, -height), (r, 0.0)]
-    return rot_cw_translate(pts, angle, ETL_OUTER)
-
-
-OUTER_ATT_ANGLES = (2.5, 68.0, 112.0, 177.5, -2.5, -68.0, -112.0, -177.5)
-
-
 def updated_layout_polygons(first: bool) -> dict[str, list]:
     """The 'updated'-layout overlap-tested polygon set for one face:
-    nose + 4 inner + 8 outer attachments (dee_geometry.py:239-277).
+    nose + 4 inner + 8 outer attachments (dee_geometry.py:239-277); the
+    first face's inner-attachment heights run from r_inner_first=322.
     The outer ring + feedthrough band are handled analytically in the
     blocked-flag UDF; the degenerate `make_inner` ring (shell r=300
     with a larger hole) blocks nothing beyond r=302 and is omitted."""
-    h02 = (796.0 / 2 - 322.0) if first else (796.0 / 2 - NOSE_R)
-    h99 = (395.0 - 322.0) if first else (395.0 - NOSE_R)
-    polys = {"nose": circle_polygon(NOSE_R)}
-    for a in (0.0, 180.0):
-        polys[f"inner_att_{int(a)}"] = inner_attachment(a, h02, 170.0)
-    for a in (90.0, 270.0):
-        polys[f"inner_att_{int(a)}"] = inner_attachment(a, h99, 110.0)
-    for a in OUTER_ATT_ANGLES:
-        key = "outer_att_" + str(a).replace("-", "m").replace(".", "_")
-        polys[key] = outer_attachment(a)
-    return polys
+    return {
+        "nose": circle_polygon(NOSE_R),
+        **updated_inner_attachments(FACE_CONFIGS["face1"][2] if first else NOSE_R),
+        **outer_attachments(),
+    }
 
 
 OUTER_64GON = circle_polygon(ETL_OUTER)
 
 
-def _blocked_flag_udf(polys: dict[str, list], outer_ring: bool = True):
+def _blocked_flag_udf(polys: dict[str, list]):
     """One Arrow-batched UDF computing the reference's overlaps(rect,
-    dee_geo) for a whole rect batch: any attachment/nose polygon hit
-    (corner-in-polygon or edge-through-rect), the outer ring (rect not
-    fully inside the r=1185 64-gon — convex-hole containment is
-    all-corners-inside), or the feedthrough band. The polygon set is
-    tiny closure data shipped with the task."""
-    poly_list = [np.asarray(v, dtype=float) for v in polys.values()]
-    gon = OUTER_64GON
+    dee_geo) for a whole rect batch: the outer ring (rect not fully
+    inside the r=1185 64-gon — convex-hole containment is
+    all-corners-inside), the feedthrough band, or any attachment/nose
+    polygon hit (`rect_polygon_hits`). The polygon set is tiny closure
+    data shipped with the task."""
+    poly_list = [[(float(x), float(y)) for x, y in v] for v in polys.values()]
 
     @F.pandas_udf(T.BooleanType())
     def _blocked(ax: pd.Series, ay: pd.Series, bx: pd.Series, by: pd.Series) -> pd.Series:
         rx1, ry1 = ax.values.astype(float), ay.values.astype(float)
         rx2, ry2 = bx.values.astype(float), by.values.astype(float)
-        if outer_ring:
-            inside_outer = np.ones(len(rx1), dtype=bool)
-            for cxs, cys in ((rx1, ry1), (rx1, ry2), (rx2, ry1), (rx2, ry2)):
-                inside_outer &= _ray_cast(cxs, cys, gon)
-            hit = ~inside_outer
-            hit |= (
-                (rx1 < ETL_OUTER) & (FEEDTHROUGH_X < rx2) & (ry1 < FEED_Y) & (-FEED_Y < ry2)
-            )
-        else:
-            hit = np.zeros(len(rx1), dtype=bool)
+        inside_outer = np.ones(len(rx1), dtype=bool)
+        for cxs, cys in ((rx1, ry1), (rx1, ry2), (rx2, ry1), (rx2, ry2)):
+            inside_outer &= _ray_cast(cxs, cys, OUTER_64GON)
+        hit = ~inside_outer
+        hit |= (rx1 < ETL_OUTER) & (FEEDTHROUGH_X < rx2) & (ry1 < FEED_Y) & (-FEED_Y < ry2)
         for verts in poly_list:
-            vlist = [tuple(v) for v in verts]
-            phit = np.zeros(len(rx1), dtype=bool)
-            for cxs, cys in ((rx1, ry1), (rx1, ry2), (rx2, ry1), (rx2, ry2)):
-                phit |= _ray_cast(cxs, cys, vlist)
-            n = len(vlist)
-            for i in range(n):
-                x0, y0 = vlist[i]
-                xe, ye = vlist[(i + 1) % n]
-                phit |= _segment_intersects_rect(x0, y0, xe, ye, rx1, ry1, rx2, ry2)
-            hit |= phit
+            hit |= rect_polygon_hits(rx1, ry1, rx2, ry2, verts)
         return pd.Series(hit)
 
     return _blocked
@@ -246,12 +189,9 @@ def _all_face_slots_build(spark: SparkSession) -> list[DataFrame]:
     registry: list[DataFrame] = []
     first = config_slots_plan(
         spark,
-        face_label="face1",
-        orientation=FACE_CONFIGS["face1"][0],
-        centering=FACE_CONFIGS["face1"][1],
+        faces=[("face1", *FACE_CONFIGS["face1"][:2])],
         r_inner=FACE_CONFIGS["face1"][2],
         polys=updated_layout_polygons(first=True),
-        outer_ring=True,
         persist_registry=registry,
     )
     rest = config_slots_plan(
@@ -259,7 +199,6 @@ def _all_face_slots_build(spark: SparkSession) -> list[DataFrame]:
         faces=[(f, ori, cen) for f, (ori, cen, _r) in FACE_CONFIGS.items() if f != "face1"],
         r_inner=FACE_CONFIGS["face2"][2],
         polys=updated_layout_polygons(first=False),
-        outer_ring=True,
         persist_registry=registry,
     )
     # persist(), NOT localCheckpoint: even a lazy (eager=False)
@@ -281,53 +220,32 @@ def face_slots(spark: SparkSession, face: str) -> DataFrame:
 def config_slots_plan(
     spark: SparkSession,
     *,
-    face_label: str | None = None,
-    orientation: str | None = None,
-    centering: str | None = None,
-    faces: list[tuple[str, str, str]] | None = None,
+    faces: list[tuple[str, str, str]],
     r_inner: float,
-    r_outer: float = ETL_OUTER,
     mod_h: float = MOD_H,
-    mod_w: float = MOD_W,
-    gap: float = GAP,
-    pb_w: float = PB_W,
-    rb_w: float = RB_W,
     edge_x: float = EDGE_X,
     polys: dict[str, list] | None = None,
-    outer_ring: bool = False,
     with_maybe: bool = True,
     persist_registry: list | None = None,
 ) -> DataFrame:
     """Dee.populate slot grids for an arbitrary configuration — the
-    generalized form behind `face_slots`. Pass either one face
-    (face_label/orientation/centering) or several at once via
-    `faces=[(label, orientation, centering), ...]`: multiple faces run
-    in ONE plan as a grid x face-dim cross join (the faces differ only
-    in their y origin and module offset), which matters because the
-    per-plan cost here is Catalyst/Janino time, not data. With
-    `polys=None` and `outer_ring=False` (the committed-notebook
-    configurations: bare annulus, no blocked geometry) the whole
-    pipeline is pure codegen — no UDF anywhere. `with_maybe=False`
-    reproduces the OLDER reference machine the committed notebook
-    outputs were generated with (tools/ref_tiling_golden.py)."""
-    if faces is None:
-        faces = [(face_label, orientation, centering)]
-    sm_w = mod_w + pb_w
-    n_rows = int(2 * r_outer / sm_w) + 2
-    n_cols = int(r_outer / (mod_h + gap)) + 2
-    col_step = mod_h + gap
+    generalized form behind `face_slots`. `faces=[(label, orientation,
+    centering), ...]` run in ONE plan as a grid x face-dim cross join
+    (the faces differ only in their y origin and module offset), which
+    matters because the per-plan cost here is Catalyst/Janino time, not
+    data. `polys` is the blocked polygon set; with it the outer ring
+    and feedthrough band block too. With `polys=None` (the
+    committed-notebook configurations: bare annulus, no blocked
+    geometry) the whole pipeline is pure codegen — no UDF anywhere.
+    `with_maybe=False` reproduces the OLDER reference machine the
+    committed notebook outputs were generated with
+    (tools/ref_tiling_golden.py)."""
+    n_cols = int(ETL_OUTER / (mod_h + GAP)) + 2
+    col_step = mod_h + GAP
     x0 = mod_h / 2 + edge_x
 
-    def _y0(ori, cen):
-        if cen == "module":
-            return sm_w / 2 - rb_w / 2 if ori == "above" else sm_w / 2 - pb_w - rb_w / 2
-        return -sm_w / 2 + pb_w / 2 if ori == "above" else sm_w / 2 - pb_w / 2
-
     face_dim = spark.createDataFrame(
-        [
-            (label, _y0(ori, cen), (-pb_w / 2 if ori == "above" else pb_w / 2))
-            for label, ori, cen in faces
-        ],
+        [(label, face_y0(ori, cen), module_dy(ori)) for label, ori, cen in faces],
         "face STRING, y0 DOUBLE, dy DOUBLE",
     )
 
@@ -336,7 +254,7 @@ def config_slots_plan(
     # billion-slot grid would drop the coalesce and let the UDF run
     # per-partition — the plan shape is unchanged.)
     grid = (
-        spark.range(n_rows * n_cols)
+        spark.range(N_ROWS * n_cols)
         .coalesce(1)
         .select(
             (F.col("id") / n_cols).cast("int").alias("iy"),
@@ -345,28 +263,27 @@ def config_slots_plan(
         .crossJoin(F.broadcast(face_dim))
         .withColumn("xc", F.lit(x0) + F.col("ix").cast("double") * col_step)
         .withColumn(
-            "yc", F.col("y0") + (F.lit(n_rows // 2) - F.col("iy")).cast("double") * sm_w
+            "yc", F.col("y0") + (F.lit(N_ROWS // 2) - F.col("iy")).cast("double") * SM_W
         )
         .withColumn("sx1", F.col("xc") - mod_h / 2)
         .withColumn("sx2", F.col("xc") + mod_h / 2)
-        .withColumn("sy1", F.col("yc") - sm_w / 2)
-        .withColumn("sy2", F.col("yc") + sm_w / 2)
-        .withColumn("my1", F.col("yc") + F.col("dy") - mod_w / 2)
-        .withColumn("my2", F.col("yc") + F.col("dy") + mod_w / 2)
+        .withColumn("sy1", F.col("yc") - SM_W / 2)
+        .withColumn("sy2", F.col("yc") + SM_W / 2)
+        .withColumn("my1", F.col("yc") + F.col("dy") - MOD_W / 2)
+        .withColumn("my2", F.col("yc") + F.col("dy") + MOD_W / 2)
     )
 
     def blocked_or_false(x1, y1, x2, y2):
-        if polys is None and not outer_ring:
+        if polys is None:
             return F.lit(False)
-        blocked = _blocked_flag_udf(polys or {}, outer_ring=outer_ring)
-        return blocked(x1, y1, x2, y2)
+        return _blocked_flag_udf(polys)(x1, y1, x2, y2)
 
     sm_ok = _annulus_ok(
-        F.col("sx1"), F.col("sy1"), F.col("sx2"), F.col("sy2"), r_inner, r_outer
+        F.col("sx1"), F.col("sy1"), F.col("sx2"), F.col("sy2"), r_inner, ETL_OUTER
     ) & ~blocked_or_false(F.col("sx1"), F.col("sy1"), F.col("sx2"), F.col("sy2"))
     if with_maybe:
         mod_ok = _annulus_ok(
-            F.col("sx1"), F.col("my1"), F.col("sx2"), F.col("my2"), r_inner, r_outer
+            F.col("sx1"), F.col("my1"), F.col("sx2"), F.col("my2"), r_inner, ETL_OUTER
         ) & ~blocked_or_false(F.col("sx1"), F.col("my1"), F.col("sx2"), F.col("my2"))
     else:
         mod_ok = F.lit(False)
@@ -435,93 +352,15 @@ def config_slots_plan(
     return out
 
 
-def _runs_from(s: DataFrame) -> DataFrame:
-    """Gaps-and-islands over available slots keyed by (face, iy),
-    keeping each run's first-slot state for the fallback rule."""
-    w = W.partitionBy("face", "iy").orderBy("ix")
-    return (
-        s.withColumn("island", F.col("ix") - F.row_number().over(w))
-        .groupBy("face", "iy", "island")
-        .agg(
-            F.min("ix").alias("start_ix"),
-            F.count(F.lit(1)).alias("n_slots"),
-            # struct-min instead of min_by: same value, avoids the
-            # slow mixed-aggregate codegen path (see face_slots chains)
-            F.min(F.struct("ix", "state")).getField("state").alias("first_state"),
-        )
-        .select("face", "iy", "start_ix", "n_slots", "first_state")
-    )
-
-
-def face_runs(
-    spark: SparkSession,
-    slots: DataFrame | None = None,
-    flavors: tuple[int, ...] = (7, 6, 3),
-) -> DataFrame:
-    """Runs with the reference's TWO-PASS fallback (ETL.py:646-668): a
-    (face, row) whose maybe-led run is not covered by a largest-flavor
-    board is re-tiled under the stricter yes-only filter. Same shape as
-    plans.tiling.runs_two_pass_from but keyed by (face, iy)."""
-    if slots is None and tuple(sorted(flavors, reverse=True)) == (7, 6, 3):
-        return memo.get(
-            spark, "dee_faces", "face_runs", lambda: _face_runs_plan(spark, None, flavors)
-        )
-    return _face_runs_plan(spark, slots, flavors)
-
-
-def _face_runs_plan(
-    spark: SparkSession,
-    slots: DataFrame | None,
-    flavors: tuple[int, ...],
-) -> DataFrame:
-    s = slots if slots is not None else all_face_slots(spark)
-    pl = _partition_lookup_for(spark, flavors)
-    pass1 = _runs_from(s.filter(F.col("available")))
-    first_flavor = pl.filter(F.col("ordinal") == 1).select(
-        "n", F.col("flavor").alias("first_flavor")
-    )
-    # DELIBERATE DEVIATION (documented, like the ETL.py:700 start=length
-    # note in this module): the reference hardcodes `partition[0] != 7`
-    # here (ETL.py populate two-pass check) — a literal spelling of
-    # "the run does not open with the LARGEST flavor" that only holds
-    # for its shipped flavor set {7,6,3}. We generalize to
-    # max(flavors), which is identical for every reference
-    # configuration; for non-default flavor sets the literal-7 form
-    # would misfire on every run (no partition can ever start with 7
-    # when 7 isn't a flavor). All committed-notebook pins run
-    # non-default flavors with with_maybe=False, where this branch is
-    # unreachable, so the deviation is unobservable against the
-    # reference's own outputs (ADVICE r7). The divergent configuration
-    # (flavors=(14,11,6), with_maybe=True) IS pinned since round 9:
-    # test_faces_tiling.py::TestCommittedPins::
-    # test_flavor_literal_divergence_pinned asserts this plan keeps
-    # 959 modules on above/module where the literal-7 reference form
-    # keeps 957 (= the no-maybe machine: the check fires on every
-    # maybe-opening run) — a silent change on either side of the
-    # deviation now fails loudly (VERDICT r8 item 2).
-    failed = (
-        pass1.join(F.broadcast(first_flavor), pass1.n_slots == first_flavor.n, "left")
-        .filter(
-            (F.col("first_state") == "maybe") & (F.col("first_flavor") != max(flavors))
-        )
-        .select("face", "iy")
-        .distinct()
-    )
-    kept = pass1.join(failed, ["face", "iy"], "left_anti")
-    redone = _runs_from(s.filter(F.col("state") == "yes")).join(
-        F.broadcast(failed), ["face", "iy"], "left_semi"
-    )
-    return kept.unionByName(redone).select("face", "iy", "start_ix", "n_slots")
-
-
-def _partition_lookup_for(spark: SparkSession, flavors: tuple[int, ...]) -> DataFrame:
-    if tuple(sorted(flavors, reverse=True)) == (7, 6, 3):
-        return partition_lookup(spark)
-    from etl_sh_design_spark.operators.partition import partition_rows
-
-    return spark.createDataFrame(
-        partition_rows(60, tuple(sorted(flavors, reverse=True))),
-        "n INT, ordinal INT, flavor INT, n_boards INT, covered INT",
+def face_runs(spark: SparkSession) -> DataFrame:
+    """Runs of the four real faces with the reference's TWO-PASS
+    fallback (ETL.py:646-668): tiling.runs_two_pass_from keyed by
+    (face, iy), session-memoized."""
+    return memo.get(
+        spark,
+        "dee_faces",
+        "face_runs",
+        lambda: runs_two_pass_from(all_face_slots(spark), partition_lookup(spark), ("face", "iy")),
     )
 
 
@@ -546,7 +385,6 @@ def multi_config_module_totals_no_maybe(
     r_inner, r_outer?, edge_x?, flavors?}. Module width / PB / RB
     widths are the shared reference constants (every committed
     notebook varies only the module x-extent and the annulus)."""
-    sm_w = MOD_W + PB_W
     flavor_sets: dict[tuple[int, ...], int] = {}
     dim_rows = []
     max_cells = 0
@@ -555,19 +393,15 @@ def multi_config_module_totals_no_maybe(
         r_in = float(c["r_inner"])
         r_out = float(c.get("r_outer", ETL_OUTER))
         edge_x = float(c.get("edge_x", EDGE_X))
-        fl = tuple(sorted(c.get("flavors", (7, 6, 3)), reverse=True))
+        fl = tuple(sorted(c.get("flavors", DEFAULT_FLAVORS), reverse=True))
         fl_id = flavor_sets.setdefault(fl, len(flavor_sets))
-        n_rows = int(2 * r_out / sm_w) + 2
+        n_rows = int(2 * r_out / SM_W) + 2
         n_cols = int(r_out / (mod_h + GAP)) + 2
         max_cells = max(max_cells, n_rows * n_cols)
         for ori, cen in c["faces"]:
-            if cen == "module":
-                y0 = sm_w / 2 - RB_W / 2 if ori == "above" else sm_w / 2 - PB_W - RB_W / 2
-            else:
-                y0 = -sm_w / 2 + PB_W / 2 if ori == "above" else sm_w / 2 - PB_W / 2
             dim_rows.append(
                 (
-                    c["label"], f"{c['label']}:{ori}:{cen}", y0,
+                    c["label"], f"{c['label']}:{ori}:{cen}", face_y0(ori, cen),
                     mod_h / 2 + edge_x, mod_h + GAP, mod_h,
                     r_in, r_out, n_rows, n_cols, n_rows // 2, fl_id,
                 )
@@ -581,7 +415,7 @@ def multi_config_module_totals_no_maybe(
     lookup = None
     for fl, fl_id in flavor_sets.items():
         lk = (
-            _partition_lookup_for(spark, fl)
+            partition_lookup(spark, fl)
             .select("n", "covered")
             .distinct()
             .withColumn("fl", F.lit(fl_id))
@@ -601,14 +435,14 @@ def multi_config_module_totals_no_maybe(
         .withColumn("xc", F.col("x0") + F.col("ix").cast("double") * F.col("col_step"))
         .withColumn(
             "yc",
-            F.col("y0") + (F.col("iy_center") - F.col("iy")).cast("double") * sm_w,
+            F.col("y0") + (F.col("iy_center") - F.col("iy")).cast("double") * SM_W,
         )
     )
     sm_ok = _annulus_ok(
         F.col("xc") - F.col("mod_h") / 2,
-        F.col("yc") - sm_w / 2,
+        F.col("yc") - SM_W / 2,
         F.col("xc") + F.col("mod_h") / 2,
-        F.col("yc") + sm_w / 2,
+        F.col("yc") + SM_W / 2,
         F.col("r_in"),
         F.col("r_out"),
     )
@@ -616,9 +450,9 @@ def multi_config_module_totals_no_maybe(
         "config", "face", "fl", "iy", "ix", F.lit("yes").alias("state")
     )
     runs = (
-        _runs_from(avail)
-        # _runs_from keys on (face, iy); face labels are config-unique
-        # here, so rejoin the per-face config/flavor ids via the dim
+        _runs_from(avail, ("face", "iy"))
+        # face labels are config-unique here, so rejoin the per-face
+        # config/flavor ids via the dim
         .join(
             F.broadcast(cfg_dim.select("face", "config", "fl").distinct()), "face"
         )
@@ -645,7 +479,7 @@ def config_module_totals(
     spark: SparkSession,
     label: str,
     faces: list[tuple[str, str]],
-    flavors: tuple[int, ...] = (7, 6, 3),
+    flavors: tuple[int, ...] = DEFAULT_FLAVORS,
     with_maybe: bool = True,
     **cfg,
 ) -> DataFrame:
@@ -660,10 +494,9 @@ def config_module_totals(
         with_maybe=with_maybe,
         **cfg,
     )
-    r = face_runs(spark, slots, flavors)
-    pl = F.broadcast(
-        _partition_lookup_for(spark, flavors).select("n", "covered").distinct()
-    )
+    pl = partition_lookup(spark, flavors)
+    r = runs_two_pass_from(slots, pl, ("face", "iy"), flavors)
+    pl = F.broadcast(pl.select("n", "covered").distinct())
     return (
         r.join(pl, r.n_slots == pl.n, "left")
         .agg(F.sum(F.coalesce("covered", F.lit(0))).cast("bigint").alias("n_modules"))
@@ -679,29 +512,11 @@ def face_supermodules(spark: SparkSession) -> DataFrame:
 
 def _face_supermodules_plan(spark: SparkSession) -> DataFrame:
     """Placed boards: (face, iy, start_ix, n_slots, ordinal, flavor,
-    sm_start). NOTE the reference's own x-placement for the 2nd+ run of
-    a multi-row is garbage (ETL.py:700 resets start=length, not 0); we
-    place each run from its own slots, which matches the reference for
-    single-run rows and is what the reference intended."""
-    r = face_runs(spark)
-    pl = F.broadcast(partition_lookup(spark))
-    j = r.join(pl, r.n_slots == pl.n, "inner")
-    w = (
-        W.partitionBy("face", "iy", "start_ix")
-        .orderBy("ordinal")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    return j.select(
-        "face",
-        "iy",
-        "start_ix",
-        "n_slots",
-        "ordinal",
-        "flavor",
-        (F.col("start_ix") + F.coalesce(F.sum("flavor").over(w), F.lit(0)))
-        .cast("int")
-        .alias("sm_start"),
-    )
+    covered, sm_start). NOTE the reference's own x-placement for the
+    2nd+ run of a multi-row is garbage (ETL.py:700 resets start=length,
+    not 0); we place each run from its own slots, which matches the
+    reference for single-run rows and is what the reference intended."""
+    return place_boards(face_runs(spark), partition_lookup(spark), ("face", "iy"))
 
 
 def face_module_totals(spark: SparkSession) -> DataFrame:

@@ -13,10 +13,15 @@ Stages (all declarative DataFrame ops — no UDFs anywhere):
        neighbor (ix+1) in the same row is fully available
 5. W5  gaps-and-islands: contiguous available runs per row, with the
        reference's TWO-PASS fallback (ETL.py:646-668): a row whose
-       maybe-led run cannot be covered by a 7-board is re-tiled under
-       the stricter yes-only filter (runs_two_pass_from)
+       maybe-led run cannot be covered by a largest-flavor board is
+       re-tiled under the stricter yes-only filter (runs_two_pass_from)
 6. U2  partition lookup join: run length -> readout-board flavors
 7.     placement: running-sum window positions each board in its run
+       (place_boards)
+
+The blocked-geometry builders, the runs / two-pass operator and the
+placement window are shared with the faithful per-face tiler
+(plans/dee_faces.py), which calls them keyed by (face, iy).
 
 Scale: every stage is a narrow transform or a bins/rows-sized shuffle;
 the blocked-geometry join is a broadcast; windows partition by row.
@@ -25,11 +30,17 @@ Tiling a billion-slot grid would shuffle only on (row) — fine.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_sh_design_spark import memo
-from etl_sh_design_spark.operators.partition import PARTITION_LOOKUP_SQL, partition_lookup
+from etl_sh_design_spark.operators.partition import (
+    DEFAULT_FLAVORS,
+    PARTITION_LOOKUP_SQL,
+    partition_lookup,
+)
 
 # slot grid: right half-dee, rows of module slots
 N_ROWS, N_COLS = 22, 27
@@ -44,11 +55,19 @@ BLOCKED = [
     ("attachment", 860.0, 960.0, -720.0, -620.0),
 ]
 
-BLOCKED_SQL = (
-    "SELECT * FROM (VALUES "
-    + ", ".join(f"('{k}', {a!r}::DOUBLE, {b!r}::DOUBLE, {c!r}::DOUBLE, {d!r}::DOUBLE)" for k, a, b, c, d in BLOCKED)
-    + ") AS blocked(kind, bx1, bx2, by1, by2)"
-)
+def _rects_values_sql(rects: list[tuple]) -> str:
+    """DuckDB VALUES table of (kind, bx1, bx2, by1, by2) rectangles."""
+    return (
+        "SELECT * FROM (VALUES "
+        + ", ".join(
+            f"('{k}', {a!r}::DOUBLE, {b!r}::DOUBLE, {c!r}::DOUBLE, {d!r}::DOUBLE)"
+            for k, a, b, c, d in rects
+        )
+        + ") AS blocked(kind, bx1, bx2, by1, by2)"
+    )
+
+
+BLOCKED_SQL = _rects_values_sql(BLOCKED)
 
 
 def _slot_grid(spark: SparkSession) -> DataFrame:
@@ -61,6 +80,28 @@ def _slot_grid(spark: SparkSession) -> DataFrame:
         .withColumn("x2", F.col("x1") + SLOT_W)
         .withColumn("y1", (F.col("iy").cast("double") - N_ROWS / 2.0) * SLOT_H)
         .withColumn("y2", F.col("y1") + SLOT_H)
+    )
+
+
+def _rect_overlap_counts(grid: DataFrame, rects: list[tuple]) -> DataFrame:
+    """J3 over axis-aligned rectangles: each slot's overlap count
+    (`n_overlaps`) against a broadcast (kind, bx1, bx2, by1, by2)
+    table."""
+    blocked = F.broadcast(
+        grid.sparkSession.createDataFrame(
+            rects, "kind STRING, bx1 DOUBLE, bx2 DOUBLE, by1 DOUBLE, by2 DOUBLE"
+        )
+    )
+    overlap = (
+        (F.col("x1") < F.col("bx2"))
+        & (F.col("bx1") < F.col("x2"))
+        & (F.col("y1") < F.col("by2"))
+        & (F.col("by1") < F.col("y2"))
+    )
+    return (
+        grid.join(blocked, overlap, "left")
+        .groupBy("iy", "ix", "x1", "x2", "y1", "y2")
+        .agg(F.count("kind").alias("n_overlaps"))
     )
 
 
@@ -107,57 +148,47 @@ def _synth_memo(spark: SparkSession, name: str, build) -> DataFrame:
 def slots(spark: SparkSession) -> DataFrame:
     """U4 + P18 + J3 + W6: the slot table with availability state
     (session-memoized; see _synth_memo)."""
-    return _synth_memo(spark, "slots", lambda: _slots_build(spark))
-
-
-def _slots_build(spark: SparkSession) -> DataFrame:
-    grid = _slot_grid(spark)
-    blocked = F.broadcast(
-        slots_blocked_table(spark)
-    )
-    overlap = (
-        (F.col("x1") < F.col("bx2"))
-        & (F.col("bx1") < F.col("x2"))
-        & (F.col("y1") < F.col("by2"))
-        & (F.col("by1") < F.col("y2"))
-    )
-    n_blocked = (
-        grid.join(blocked, overlap, "left")
-        .groupBy("iy", "ix", "x1", "x2", "y1", "y2")
-        .agg(F.count("kind").alias("n_overlaps"))
-    )
-    return _with_availability(n_blocked)
-
-
-def slots_blocked_table(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        BLOCKED, "kind STRING, bx1 DOUBLE, bx2 DOUBLE, by1 DOUBLE, by2 DOUBLE"
+    return _synth_memo(
+        spark, "slots", lambda: _with_availability(_rect_overlap_counts(_slot_grid(spark), BLOCKED))
     )
 
 
 # =====================================================================
-# REAL blocked geometry: the reference's actual 'updated'-layout
-# nose / feedthrough / attachment shapes (dee_geometry.py:60-132 and
-# the __main__ 'updated' branch, :240-260), built as driver-side
-# vertex lists with pure math — no shapely dependency. The polygon
-# path (J3/U1) runs the exact rect-polygon overlap via
-# operators/polygon.py; the bbox path is its SQL-expressible
-# axis-aligned over-approximation (every polygon-blocked slot is
-# bbox-blocked, never the reverse — golden-pinned).
+# REAL blocked geometry: the reference's actual nose / feedthrough /
+# attachment shapes (dee_geometry.py:60-132 and the __main__ layout
+# branches, :209-277), built as driver-side vertex lists with pure
+# math — no shapely dependency. These builders are the ONE geometry
+# copy of the engine: the stand-in grid's `reference_blocked_polygons`
+# and the per-face tiler's `dee_faces.updated_layout_polygons` are both
+# assembled from them. The polygon path (J3/U1) runs the exact
+# rect-polygon overlap via operators/polygon.py; the bbox path is its
+# SQL-expressible axis-aligned over-approximation (every
+# polygon-blocked slot is bbox-blocked, never the reverse —
+# golden-pinned).
 # =====================================================================
-
-import math  # noqa: E402
 
 ETL_OUTER = 1185.0  # dee_geometry.py:155
 NOSE_R = 302.0      # minimum-size nose, dee_geometry.py:209
 FEEDTHROUGH_X = 1120.0  # dee_geometry.py:158
+FEED_Y = math.sqrt(ETL_OUTER**2 - FEEDTHROUGH_X**2)
+OUTER_ATT_ANGLES = (2.5, 68.0, 112.0, 177.5, -2.5, -68.0, -112.0, -177.5)
 
 
-def _rot_cw_translate(pts, angle_deg, dist):
+def circle_polygon(r: float) -> list[tuple[float, float]]:
+    """shapely Point.buffer(r) at default resolution 16 => inscribed
+    64-gon with vertices on the axes."""
+    return [
+        (r * math.cos(2 * math.pi * i / 64), r * math.sin(2 * math.pi * i / 64))
+        for i in range(64)
+    ]
+
+
+def rot_cw_translate(pts, angle_deg, dist):
     """shapely `translate(rotate(poly, -angle, origin=(0,0)),
-    sin(a)*dist, cos(a)*dist)` in pure math: clockwise rotation by
-    `angle_deg` about the origin, then a radial shift of `dist` along
-    the angle direction (0 deg = +y, 90 deg = +x)."""
+    sin(a)*dist, cos(a)*dist)` in pure math (dee_geometry.py:74-75,
+    91-92): clockwise rotation by `angle_deg` about the origin, then a
+    radial shift of `dist` along the angle direction (0 deg = +y,
+    90 deg = +x)."""
     th = math.radians(angle_deg)
     c, s = math.cos(th), math.sin(th)
     dx, dy = s * dist, c * dist
@@ -174,37 +205,48 @@ def _make_inner_attachment(angle, height, width, taper, inner):
         (width / 2 - height * t, 0),
         (width / 2, -height),
     ]
-    return _rot_cw_translate(pts, angle, inner + height)
+    return rot_cw_translate(pts, angle, inner + height)
 
 
-def _make_outer_attachment(angle, height=107.5, width=68.0, segments=24):
+def _make_outer_attachment(angle, height=107.5, width=68.0):
     """dee_geometry.py:78-93: rect with a semicircular cap (the
-    shapely union of the rect and a buffer at its inner end),
-    discretized: top edge + sides + the inward-pointing semicircle."""
+    shapely union of the rect and a buffer at its inner end). The cap
+    is shapely's 64-pt buffer circle, so the outline carries the lower
+    32 segments of that 64-gon: top edge + sides + the inward-pointing
+    semicircle."""
     r = width / 2
     pts = [(-r, 0.0), (-r, -height)]
     # lower semicircle around (0, -height), from 180deg to 360deg
-    for i in range(1, segments):
-        a = math.pi + math.pi * i / segments
+    for i in range(1, 32):
+        a = math.pi + math.pi * i / 32
         pts.append((r * math.cos(a), -height + r * math.sin(a)))
     pts += [(r, -height), (r, 0.0)]
-    return _rot_cw_translate(pts, angle, ETL_OUTER)
+    return rot_cw_translate(pts, angle, ETL_OUTER)
 
 
-def _circle_polygon(radius, segments):
-    return [
-        (radius * math.cos(2 * math.pi * i / segments),
-         radius * math.sin(2 * math.pi * i / segments))
-        for i in range(segments)
-    ]
+def updated_inner_attachments(r_inner: float) -> dict[str, list]:
+    """The 'updated' layout's 4 taper-0 inner attachments at
+    0/90/180/270 deg (dee_geometry.py:246-277): their heights run from
+    the face's `r_inner` (322 on the first face, else 302) but every
+    face hangs them from r=302."""
+    polys = {}
+    for a, height, width in ((0, 796.0 / 2, 170.0), (180, 796.0 / 2, 170.0),
+                             (90, 395.0, 110.0), (270, 395.0, 110.0)):
+        polys[f"inner_att_{a}"] = _make_inner_attachment(
+            a, height=height - r_inner, width=width, taper=0.0, inner=NOSE_R
+        )
+    return polys
 
 
-_OUTER_ATT_ANGLES = (2.5, 68.0, 112.0, 177.5, -2.5, -68.0, -112.0, -177.5)
+def outer_attachments() -> dict[str, list]:
+    """The 8 outer attachments (rect + cap at +-2.5/68/112/177.5 deg)."""
+    return {
+        f"outer_att_{str(a).replace('-', 'm').replace('.', '_')}": _make_outer_attachment(a)
+        for a in OUTER_ATT_ANGLES
+    }
 
 
-def reference_blocked_polygons(
-    circle_segments: int = 64, layout: str = "updated"
-) -> dict[str, list]:
+def reference_blocked_polygons(layout: str = "updated") -> dict[str, list]:
     """A dee layout's blocked shapes as vertex lists (the reference's
     `--dee_layout` variants, dee_geometry.py:209-260):
 
@@ -217,35 +259,24 @@ def reference_blocked_polygons(
       outer attachments, nose circle, feedthrough band.
     - 'plain': no attachments at all (annulus + feedthrough only).
     """
-    polys: dict[str, list] = {"nose": _circle_polygon(NOSE_R, circle_segments)}
-    yft = math.sqrt(ETL_OUTER**2 - FEEDTHROUGH_X**2)
-    polys["feedthrough"] = [
-        (FEEDTHROUGH_X, yft), (ETL_OUTER, yft),
-        (ETL_OUTER, -yft), (FEEDTHROUGH_X, -yft),
-    ]
+    polys: dict[str, list] = {
+        "nose": circle_polygon(NOSE_R),
+        "feedthrough": [
+            (FEEDTHROUGH_X, FEED_Y), (ETL_OUTER, FEED_Y),
+            (ETL_OUTER, -FEED_Y), (FEEDTHROUGH_X, -FEED_Y),
+        ],
+    }
     if layout == "updated":
-        for a in (0, 180):
-            polys[f"inner_att_{a}"] = _make_inner_attachment(
-                a, height=796.0 / 2 - NOSE_R, width=170.0, taper=0.0, inner=NOSE_R
-            )
-        for a in (90, 270):
-            polys[f"inner_att_{a}"] = _make_inner_attachment(
-                a, height=395.0 - NOSE_R, width=110.0, taper=0.0, inner=NOSE_R
-            )
+        polys.update(updated_inner_attachments(NOSE_R))
     elif layout == "baseline":
         for a in (30, 90, 150, -30, -90, -150):
             polys[f"inner_att_{a}"] = _make_inner_attachment(
                 a, height=84.0, width=88.5, taper=5.4, inner=336.0
             )
-    elif layout == "plain":
-        pass
-    else:
+    elif layout != "plain":
         raise ValueError(f"unknown layout {layout!r}")
     if layout != "plain":
-        for a in _OUTER_ATT_ANGLES:
-            polys[f"outer_att_{str(a).replace('-', 'm').replace('.', '_')}"] = (
-                _make_outer_attachment(a)
-            )
+        polys.update(outer_attachments())
     return polys
 
 
@@ -268,7 +299,6 @@ def polygon_bboxes(polys: dict[str, list]) -> list[tuple]:
 def slots_real(
     spark: SparkSession,
     geometry: str = "polygon",
-    circle_segments: int = 64,
     layout: str = "updated",
 ) -> DataFrame:
     """The slot table classified against the REAL 'updated' blocked
@@ -279,43 +309,25 @@ def slots_real(
     SQL-expressible). Everything downstream (radial states, neighbor
     rule) is shared with the stand-in path.
 
-    Session-memoized per (geometry, segments, layout): for this
-    dimension-sized pipeline compile time IS the cost."""
+    Session-memoized per (geometry, layout): for this dimension-sized
+    pipeline compile time IS the cost."""
     return memo.get(
         spark,
         "tiling_real",
-        (geometry, circle_segments, layout),
-        lambda: _slots_real_build(spark, geometry, circle_segments, layout),
+        (geometry, layout),
+        lambda: _slots_real_build(spark, geometry, layout),
     )
 
 
-def _slots_real_build(
-    spark: SparkSession, geometry: str, circle_segments: int, layout: str
-) -> DataFrame:
+def _slots_real_build(spark: SparkSession, geometry: str, layout: str) -> DataFrame:
     grid = _slot_grid(spark)
-    polys = reference_blocked_polygons(circle_segments, layout)
+    polys = reference_blocked_polygons(layout)
     if geometry == "polygon":
         from etl_sh_design_spark.operators.polygon import rects_overlap_count
 
         n_blocked = rects_overlap_count(grid, polys)
     elif geometry == "bbox":
-        bb = F.broadcast(
-            spark.createDataFrame(
-                polygon_bboxes(polys),
-                "kind STRING, bx1 DOUBLE, bx2 DOUBLE, by1 DOUBLE, by2 DOUBLE",
-            )
-        )
-        overlap = (
-            (F.col("x1") < F.col("bx2"))
-            & (F.col("bx1") < F.col("x2"))
-            & (F.col("y1") < F.col("by2"))
-            & (F.col("by1") < F.col("y2"))
-        )
-        n_blocked = (
-            grid.join(bb, overlap, "left")
-            .groupBy("iy", "ix", "x1", "x2", "y1", "y2")
-            .agg(F.count("kind").alias("n_overlaps"))
-        )
+        n_blocked = _rect_overlap_counts(grid, polygon_bboxes(polys))
     else:
         raise ValueError(f"unknown geometry {geometry!r}")
     return _with_availability(n_blocked)
@@ -377,60 +389,74 @@ novl AS (
 def real_bbox_blocked_sql() -> str:
     """VALUES table of the real-geometry bounding boxes (oracle twin
     of slots_real(geometry='bbox'))."""
-    rows = polygon_bboxes(reference_blocked_polygons())
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(
-            f"('{k}', {a!r}::DOUBLE, {b!r}::DOUBLE, {c!r}::DOUBLE, {d!r}::DOUBLE)"
-            for k, a, b, c, d in rows
-        )
-        + ") AS blocked(kind, bx1, bx2, by1, by2)"
-    )
+    return _rects_values_sql(polygon_bboxes(reference_blocked_polygons()))
 
 
-def _runs_from(s: DataFrame) -> DataFrame:
-    """W5 gaps-and-islands over a pre-filtered slot table, keeping the
-    state of each run's first slot (needed by the W6 fallback rule)."""
-    w = W.partitionBy("iy").orderBy("ix")
+def _runs_from(s: DataFrame, keys: tuple[str, ...]) -> DataFrame:
+    """W5 gaps-and-islands over a pre-filtered slot table, per row key
+    `keys`, keeping the state of each run's first slot (needed by the
+    W6 fallback rule)."""
+    w = W.partitionBy(*keys).orderBy("ix")
     return (
         s.withColumn("island", F.col("ix") - F.row_number().over(w))
-        .groupBy("iy", "island")
+        .groupBy(*keys, "island")
         .agg(
             F.min("ix").alias("start_ix"),
             F.count(F.lit(1)).alias("n_slots"),
-            F.min_by("state", "ix").alias("first_state"),
+            # first-slot state via struct-min: semantically
+            # min_by(state, ix), but min_by mixed with declarative
+            # aggregates trips a multi-second codegen path (measured
+            # 4.4 s vs 0.3 s on the 841-row per-face slot table)
+            F.min(F.struct("ix", "state")).getField("state").alias("first_state"),
         )
-        .select("iy", "start_ix", "n_slots", "first_state")
+        .select(*keys, "start_ix", "n_slots", "first_state")
     )
 
 
-def runs_two_pass_from(s: DataFrame, pl: DataFrame) -> DataFrame:
+def runs_two_pass_from(
+    s: DataFrame,
+    pl: DataFrame,
+    keys: tuple[str, ...] = ("iy",),
+    flavors: tuple[int, ...] = DEFAULT_FLAVORS,
+) -> DataFrame:
     """W6 two-pass fallback over an arbitrary slot table
-    (reference ETL.py:646-668): pass 1 builds runs over all available
-    slots ('yes' + surviving 'maybe'); a ROW fails validation if any of
-    its runs starts with a 'maybe' slot whose partition leads with a
-    flavor != 7 (getPartition returns largest-first, so ordinal 1 is
-    the largest board — a maybe-led run must be covered by a 7-board).
-    Failed rows are re-tiled under the stricter yes-only filter.
+    (reference ETL.py:646-668), per row key `keys` — ("iy",) for the
+    stand-in grid, ("face", "iy") for the per-face tiler. Pass 1 builds
+    runs over all available slots ('yes' + surviving 'maybe'); a ROW
+    fails validation if any of its runs starts with a 'maybe' slot
+    whose partition (`pl`, the lookup for `flavors`) does not lead with
+    the largest flavor (getPartition returns largest-first, so ordinal
+    1 is the largest board). Failed rows are re-tiled under the
+    stricter yes-only filter.
+
+    DELIBERATE DEVIATION: the reference hardcodes `partition[0] != 7`
+    — a literal spelling of "the run does not open with the LARGEST
+    flavor" that only holds for its shipped flavor set {7,6,3}. We use
+    max(flavors), identical for every reference configuration; for a
+    flavor set without 7 the literal form would misfire on every
+    maybe-opening run. tests/test_faces_tiling.py::TestCommittedPins::
+    test_flavor_literal_divergence_pinned pins the configuration where
+    the two differ (flavors=(14,11,6) with maybe states).
 
     Everything is row-key-partitioned DataFrame ops: two
     gaps-and-islands passes, a broadcast lookup join, and an anti/semi
     row split — no collect, no global shuffle; scales with |rows|."""
-    pass1 = _runs_from(s.filter(F.col("available")))
+    keys = list(keys)
+    pass1 = _runs_from(s.filter(F.col("available")), keys)
     first_flavor = pl.filter(F.col("ordinal") == 1).select(
         "n", F.col("flavor").alias("first_flavor")
     )
     failed_rows = (
         pass1.join(F.broadcast(first_flavor), pass1.n_slots == first_flavor.n, "left")
-        .filter((F.col("first_state") == "maybe") & (F.col("first_flavor") != 7))
-        .select("iy")
+        .filter((F.col("first_state") == "maybe") & (F.col("first_flavor") != max(flavors)))
+        .select(*keys)
         .distinct()
     )
-    kept = pass1.join(failed_rows, "iy", "left_anti")
-    redone = _runs_from(s.filter(F.col("state") == "yes")).join(
-        F.broadcast(failed_rows), "iy", "left_semi"
+    kept = pass1.join(failed_rows, keys, "left_anti")
+    redone = _runs_from(s.filter(F.col("state") == "yes"), keys).join(
+        F.broadcast(failed_rows), keys, "left_semi"
     )
-    return kept.unionByName(redone).select("iy", "start_ix", "n_slots")
+    return kept.unionByName(redone).select(*keys, "start_ix", "n_slots")
 
 
 def runs(spark: SparkSession) -> DataFrame:
@@ -444,19 +470,19 @@ def runs(spark: SparkSession) -> DataFrame:
     )
 
 
-def supermodules(spark: SparkSession) -> DataFrame:
-    """U2 + placement: flavors per run with board start offsets ->
-    (iy, start_ix, n_slots, ordinal, flavor, sm_start, covered)."""
-    r = runs(spark)
-    pl = F.broadcast(partition_lookup(spark))
+def place_boards(r: DataFrame, pl: DataFrame, keys: tuple[str, ...] = ("iy",)) -> DataFrame:
+    """U2 + placement: the flavors of each run's partition (`pl`) with
+    board start offsets (a running sum over the run's boards) ->
+    (*keys, start_ix, n_slots, ordinal, flavor, covered, sm_start)."""
+    pl = F.broadcast(pl)
     j = r.join(pl, r.n_slots == pl.n, "inner")
     w = (
-        W.partitionBy("iy", "start_ix")
+        W.partitionBy(*keys, "start_ix")
         .orderBy("ordinal")
         .rowsBetween(W.unboundedPreceding, -1)
     )
     return j.select(
-        "iy",
+        *keys,
         "start_ix",
         "n_slots",
         "ordinal",
@@ -464,6 +490,12 @@ def supermodules(spark: SparkSession) -> DataFrame:
         "covered",
         (F.col("start_ix") + F.coalesce(F.sum("flavor").over(w), F.lit(0))).cast("int").alias("sm_start"),
     )
+
+
+def supermodules(spark: SparkSession) -> DataFrame:
+    """U2 + placement over the stand-in runs ->
+    (iy, start_ix, n_slots, ordinal, flavor, covered, sm_start)."""
+    return place_boards(runs(spark), partition_lookup(spark))
 
 
 def flavor_counts(spark: SparkSession) -> DataFrame:

@@ -24,8 +24,63 @@ import pytest
 from pyspark.sql import functions as F
 
 import tools.ref_tiling_golden as G
-from etl_sh_design_spark.plans import dee_faces
+from etl_sh_design_spark.plans import dee_faces, tiling
 from etl_sh_design_spark.registry_r7 import REAL_TILING_PINNED
+
+# ---------------------------------------------------------------------
+# 0. blocked geometry: the engine's shape builders vs the golden's copy
+# ---------------------------------------------------------------------
+_RIM_BBOXES = {
+    "nose": (-302.0, 302.0, -302.0, 302.0),
+    "feedthrough": (1120.0, 1185.0, -387.07234465923807, 387.07234465923807),
+}
+_UPDATED_INNER_BBOXES = {
+    "inner_att_0": (-85.0, 85.0, 302.0, 398.0),
+    "inner_att_180": (-84.99999999999997, 85.00000000000004, -398.0, -302.0),
+    "inner_att_90": (302.0, 395.0, -54.999999999999986, 55.00000000000002),
+    "inner_att_270": (-395.0, -302.0, -55.00000000000007, 54.99999999999994),
+}
+_BASELINE_INNER_BBOXES = {
+    "inner_att_30": (129.67837588253857, 241.44508985152535, 268.8595356715714, 381.8855006799344),
+    "inner_att_90": (336.0, 420.0, -44.24999999999998, 44.25000000000002),
+    "inner_att_150": (129.67837588253857, 241.44508985152535, -381.8855006799344, -268.8595356715714),
+    "inner_att_-30": (-241.44508985152535, -129.67837588253857, 268.8595356715714, 381.8855006799344),
+    "inner_att_-90": (-420.0, -336.0, -44.24999999999998, 44.25000000000002),
+    "inner_att_-150": (-241.44508985152535, -129.67837588253857, -381.8855006799344, -268.8595356715714),
+}
+_OUTER_BBOXES = {
+    "outer_att_2_5": (13.032250352366376, 85.65661356170632, 1042.5068192206686, 1185.355201744923),
+    "outer_att_68_0": (965.0418979115316, 1111.449491837784, 369.6398990214633, 475.4330642531265),
+    "outer_att_112_0": (965.0418979115316, 1111.449491837784, -475.4330642531266, -369.6398990214634),
+    "outer_att_177_5": (13.032250352366454, 85.65661356170641, -1185.355201744923, -1042.5068192206686),
+    "outer_att_m2_5": (-85.65661356170632, -13.032250352366376, 1042.5068192206686, 1185.355201744923),
+    "outer_att_m68_0": (-1111.449491837784, -965.0418979115316, 369.63989902146335, 475.4330642531265),
+    "outer_att_m112_0": (-1111.449491837784, -965.0418979115316, -475.4330642531266, -369.6398990214634),
+    "outer_att_m177_5": (-85.65661356170641, -13.032250352366454, -1185.355201744923, -1042.5068192206686),
+}
+
+
+def test_blocked_geometry_matches_golden_and_is_pinned():
+    """The per-face polygon sets equal the golden's own geometry copy
+    vertex for vertex; the stand-in layouts keep their exact bounding
+    boxes (the tile_slots_real_bbox oracle's VALUES rows, in order) and
+    their vertex counts (nose 64-gon, quads, capped outer rects whose
+    cap is the lower 32 segments of a 64-gon)."""
+    for first in (True, False):
+        got = dee_faces.updated_layout_polygons(first)
+        want = G.updated_layout_polygons(first)
+        assert list(got) == list(want)
+        for name in want:
+            assert got[name] == want[name], (first, name)
+
+    inner = {"updated": _UPDATED_INNER_BBOXES, "baseline": _BASELINE_INNER_BBOXES, "plain": {}}
+    for layout, inner_bb in inner.items():
+        polys = tiling.reference_blocked_polygons(layout=layout)
+        want = {**_RIM_BBOXES, **inner_bb, **({} if layout == "plain" else _OUTER_BBOXES)}
+        assert tiling.polygon_bboxes(polys) == [(k, *v) for k, v in want.items()], layout
+        n_verts = {"nose": 64, "feedthrough": 4, "inner_att": 4, "outer_att": 35}
+        for name, verts in polys.items():
+            assert len(verts) == next(n for k, n in n_verts.items() if name.startswith(k)), name
 
 
 # ---------------------------------------------------------------------
@@ -79,7 +134,7 @@ class TestCommittedPins:
         configuration where it is observable (ADVICE r7 / VERDICT r8
         item 2): the reference's two-pass check hardcodes
         `partition[0] != 7` (ETL.py populate); the engine generalizes
-        to `!= max(flavors)` (plans/dee_faces.py _face_runs_plan).
+        to `!= max(flavors)` (plans/tiling.py runs_two_pass_from).
         Identical for the shipped {7,6,3}; for flavors=(14,11,6) with
         with_maybe=True the literal-7 form demotes EVERY maybe-opening
         run (7 is not a flavor, so the check always fires) while the

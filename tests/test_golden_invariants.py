@@ -268,6 +268,9 @@ def test_w6_two_pass_fallback_crowded_row(spark):
     - iy=2: yes,yes,no,maybe -> available run (0..1) is yes-led ->
       passes unchanged (the trailing maybe has no 'yes' neighbor and
       was never available)
+
+    The same rows under two face labels, through the ("face", "iy")-
+    keyed form the per-face tiler uses, give each face the same runs.
     """
     from etl_sh_design_spark.operators.partition import partition_lookup
     from etl_sh_design_spark.plans.tiling import runs_two_pass_from
@@ -283,6 +286,15 @@ def test_w6_two_pass_fallback_crowded_row(spark):
         for r in runs_two_pass_from(slots_df, partition_lookup(spark)).collect()
     }
     assert got == {(0, 1, 2), (1, 0, 7), (2, 0, 2)}
+
+    faces_df = spark.createDataFrame(
+        [(face, *r) for face in ("faceA", "faceB") for r in rows],
+        "face STRING, iy INT, ix INT, state STRING, available BOOLEAN",
+    )
+    by_face = {}
+    for r in runs_two_pass_from(faces_df, partition_lookup(spark), ("face", "iy")).collect():
+        by_face.setdefault(r["face"], set()).add((r["iy"], r["start_ix"], r["n_slots"]))
+    assert by_face == {"faceA": got, "faceB": got}
 
 
 def test_tiling_flavor_counts_reference_derived_fixture(spark):

@@ -410,7 +410,7 @@ def tile(
     n_modules = 0
     n_available = 0
     supermodules = []
-    # DELIBERATE DEVIATION (mirrors plans/dee_faces.py _face_runs_plan):
+    # DELIBERATE DEVIATION (mirrors plans/tiling.py runs_two_pass_from):
     # the reference literally writes `partition[0] != 7` in its
     # two-pass check; `largest` generalizes that to any flavor set and
     # is identical for the shipped {7,6,3}. Non-default-flavor pins all
