@@ -57,13 +57,6 @@ def occupancy(r: str | Column = "r") -> Column:
     return F.lit(0.11) + 91297.0 / (rc * rc)
 
 
-def bv_limit(r_max: str | Column, a: str | Column = "a", b: str | Column = "b") -> Column:
-    """P12: minimum compatible radius for a BV group whose outermost
-    sensor sits at r_max, given curve coefficients (a, b):
-    r_min_allowed = a * ln(r_max) + b. sensors.py:4-36."""
-    return _c(a) * F.log(_c(r_max)) + _c(b)
-
-
 # SQL fragments for the DuckDB oracle (same expressions, ANSI spelling;
 # e-notation literals parse as DOUBLE in DuckDB, bare decimals would not).
 IRRADIATION_SQL = "(-9.053e0 + 7420.0e0 / {r} + 3.664e-3 * {r})"

@@ -5,22 +5,20 @@ semantics bias_voltage.py:449-493, ETL.py:423-493, dee_geometry.py:496-538
 W4, the greedy scan (open a new group when the running current budget
 would be exceeded OR the candidate's r_min falls below the breakdown
 curve of the group head's r_max), resets on a data-dependent threshold,
-which a SQL window cannot express — this is the BV family's one
-`applyInPandas` island. Contract for scale: groups are per (layer,
-vendor) partitions (small, bounded), everything heavy is pre-aggregated
-in DataFrame land BEFORE entering pandas (SURVEY.md §4.2 item 3).
+which a SQL window cannot express; it runs as one `aggregate` fold over
+each (layer, vendor) partition's sorted module array
+(`greedy_bv_groups`). Contract for scale: the partitions are small and
+bounded (one array per partition), and everything heavy is
+pre-aggregated before the fold (SURVEY.md §4.2 item 3).
 
 W7, the exact consecutive-split search per supermodule, is a zero-UDF
 mask enumeration (`best_consecutive_split`) shared by the synthetic
 config search (`find_bv_config`) and the real-layout study
-(`registry_r6.bv_min_segments`).
+(`registry_r6.bv_min_segments`). The whole family runs as Column
+expressions, with no Python worker.
 """
 
 from __future__ import annotations
-
-import math
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
@@ -28,11 +26,6 @@ from pyspark.sql import functions as F
 
 from etl_sh_design_spark import datagen
 from etl_sh_design_spark.functions import physics
-
-GROUP_SCHEMA = (
-    "layer int, vendor string, group_id bigint, n_modules bigint, "
-    "sum_current double, r_min double, r_max double"
-)
 
 # one breakdown curve per vendor (the 5 fC production rows of
 # datagen.bv_curves: fbk_w13_5fc / hpk_split4_5fc, sensors.py:15,29)
@@ -67,58 +60,74 @@ def modules_from_sensors(sensors: DataFrame) -> DataFrame:
     )
 
 
-def _scan(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Greedy run-segmentation with running-sum reset (per layer+vendor
-    group, executed in pandas — inherently sequential)."""
-    layer = int(pdf["layer"].iloc[0])
-    vendor = str(pdf["vendor"].iloc[0])
-    a, b = CURVES[vendor]
-    pdf = pdf.sort_values(["r_max", "module_id"], ascending=[False, True])
-
-    rows = []
-    gid = -1
-    run_current = 0.0
-    head_rmax = None
-    limit = None
-    n = 0
-    g_rmin = g_rmax = None
-
-    def flush():
-        if n > 0:
-            rows.append((layer, vendor, gid, n, run_current, g_rmin, g_rmax))
-
-    for r_min, r_max, cur in zip(pdf["r_min"], pdf["r_max"], pdf["current"]):
-        new_group = (
-            head_rmax is None
-            or run_current + cur > 20.0
-            or r_min <= limit
-        )
-        if new_group:
-            flush()
-            gid += 1
-            run_current = 0.0
-            head_rmax = r_max
-            limit = a * math.log(head_rmax) + b
-            n = 0
-            g_rmin, g_rmax = r_min, r_max
-        run_current += cur
-        n += 1
-        g_rmin = min(g_rmin, r_min)
-        g_rmax = max(g_rmax, r_max)
-    flush()
-    return pd.DataFrame(
-        rows,
-        columns=["layer", "vendor", "group_id", "n_modules", "sum_current", "r_min", "r_max"],
-    )
-
-
 def greedy_bv_groups(modules: DataFrame) -> DataFrame:
     """W4: per (layer, vendor) greedy BV grouping. Returns one row per
-    BV group; invariant (golden test): sum_current <= 20 mA."""
+    BV group, (layer, vendor, group_id, n_modules, sum_current, r_min,
+    r_max); invariant (golden test): sum_current <= 20 mA.
+
+    Modules are scanned in (r_max desc, module_id) order; a module
+    opens a new group when the running current would pass 20 mA OR its
+    r_min falls on or below the breakdown curve a*ln(r_max)+b of the
+    group head's r_max. The scan is a left fold over each partition's
+    sorted module array whose state is the open group, the head's
+    curve limit and the closed groups, so each group's sum_current is
+    the same sequential double sum as the scan order."""
+    (fa, fb), (ha, hb) = CURVES["FBK"], CURVES["HPK"]
+    fbk = F.col("vendor") == "FBK"
+    a, b = F.when(fbk, fa).otherwise(ha), F.when(fbk, fb).otherwise(hb)
+    group = "struct<group_id:bigint,n_modules:bigint,sum_current:double,r_min:double,r_max:double>"
+
+    def step(acc: Column, m: Column) -> Column:
+        g = acc["open"]
+        new_group = (
+            g.isNull()
+            | (g["sum_current"] + m["current"] > 20.0)
+            | (m["r_min"] <= acc["limit"])
+        )
+        opened = F.struct(
+            F.coalesce(g["group_id"] + 1, F.lit(0).cast("bigint")).alias("group_id"),
+            F.lit(1).cast("bigint").alias("n_modules"),
+            m["current"].alias("sum_current"),
+            m["r_min"].alias("r_min"),
+            m["r_max"].alias("r_max"),
+        )
+        grown = F.struct(
+            g["group_id"].alias("group_id"),
+            (g["n_modules"] + 1).alias("n_modules"),
+            (g["sum_current"] + m["current"]).alias("sum_current"),
+            F.least(g["r_min"], m["r_min"]).alias("r_min"),
+            F.greatest(g["r_max"], m["r_max"]).alias("r_max"),
+        )
+        return F.struct(
+            F.when(new_group, opened).otherwise(grown).alias("open"),
+            F.when(new_group, a * F.log(m["r_max"]) + b).otherwise(acc["limit"]).alias("limit"),
+            F.when(new_group & g.isNotNull(), F.array_append(acc["closed"], g))
+            .otherwise(acc["closed"])
+            .alias("closed"),
+        )
+
+    init = F.struct(
+        F.lit(None).cast(group).alias("open"),
+        F.lit(None).cast("double").alias("limit"),
+        F.array().cast(f"array<{group}>").alias("closed"),
+    )
+    items = F.array_sort(
+        F.collect_list(
+            F.struct((-F.col("r_max")).alias("key"), "module_id", "r_min", "r_max", "current")
+        )
+    )
     return (
-        modules.select("layer", "vendor", "module_id", "r_min", "r_max", "current")
-        .groupBy("layer", "vendor")
-        .applyInPandas(_scan, GROUP_SCHEMA)
+        modules.groupBy("layer", "vendor")
+        .agg(items.alias("items"))
+        .select(
+            "layer",
+            "vendor",
+            F.inline(
+                F.aggregate(
+                    "items", init, step, lambda acc: F.array_append(acc["closed"], acc["open"])
+                )
+            ),
+        )
     )
 
 
@@ -250,9 +259,9 @@ def bv_totals(groups: DataFrame) -> DataFrame:
     (bias_voltage.py:142-159 semantics).
 
     Cross-engine determinism: the RAW per-group double sums differ in
-    last ULPs between engines (pandas sequential add vs the oracle's
-    recursive-CTE add), so any quantization of the raw value can land
-    on either side of a .5 boundary. The 6dp-rounded group currents,
+    last ULPs between engines (the fold's sequential add vs the
+    oracle's recursive-CTE add), so any quantization of the raw value
+    can land on either side of a .5 boundary. The 6dp-rounded group currents,
     however, are proven bit-equal across engines (``bv_greedy_groups``
     hash-matches). So every output here is a function of that rounded
     value only: scale it to integer micro-amps (exact — a 6dp value

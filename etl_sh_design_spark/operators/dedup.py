@@ -192,24 +192,6 @@ def ngram_jaccard_pairs(
 
 
 # ------------------------------------------------------------- MinHash/LSH
-def minhash_signatures(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 16, n: int = 3
-) -> DataFrame:
-    """k MinHash values per doc -> (id, seed, minh). minh(seed) =
-    min over shingles of md5_int64(seed || ':' || shingle).
-
-    md5 is computed on DISTINCT shingles x seeds, then broadcast-joined
-    back to the doc-shingle table — the distinct-shingle vocabulary is
-    orders of magnitude smaller than the doc-shingle incidence, so this
-    cuts the (relatively expensive) md5 calls by that factor with
-    bit-identical results."""
-    wide = minhash_signatures_wide(df, id_col, text_col, k, n)
-    return wide.select(
-        F.col(id_col),
-        F.posexplode("sig").alias("seed", "minh"),
-    )
-
-
 def minhash_signatures_wide(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -58,28 +58,7 @@ def extract_features(binary_df: DataFrame) -> DataFrame:
     return binary_df.mapInPandas(fn, FEATURE_SCHEMA)
 
 
-RESIZE_SCHEMA = "doc_id bigint, width int, height int, mean_px double"
 FRAME_SCHEMA = "doc_id bigint, frame_idx int, frame_bytes bigint, frame_md5 string"
-
-
-def resize_stub(decoded_df: DataFrame, width: int = 64, height: int = 64) -> DataFrame:
-    """Resize stage stub: consumes the decode-stub output schema and
-    emits fixed-dimension pseudo-images (real impl would wrap
-    PIL.Image.resize in the same mapInPandas shape). Keeps mean_px —
-    resizing preserves the mean under area averaging."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": [width] * len(pdf),
-                    "height": [height] * len(pdf),
-                    "mean_px": pdf["mean_px"],
-                }
-            )
-
-    return decoded_df.mapInPandas(fn, RESIZE_SCHEMA)
 
 
 def frame_sample(binary_df: DataFrame, frame_size: int = 64, every_k: int = 4) -> DataFrame:

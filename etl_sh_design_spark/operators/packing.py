@@ -6,7 +6,9 @@ groups consecutive documents into chunks whose token total stays under
 a budget, opening a new chunk when the next document would overflow.
 The greedy reset makes it a stateful scan (same operator class as the
 W4 BV grouping, `operators/bv_grouping.py`): a SQL window cannot
-express a running sum that resets on a data-dependent threshold.
+express a running sum that resets on a data-dependent threshold. The
+W4 scan folds each small (layer, vendor) group as one array; a packing
+shard is unbounded, so it streams through pandas instead.
 
 Execution contract for 100 TB:
 - Packing is embarrassingly parallel across SHARDS: global order is
@@ -24,12 +26,36 @@ Execution contract for 100 TB:
 
 from __future__ import annotations
 
+from functools import partial
+
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 PACK_SCHEMA = "shard int, chunk_id bigint, n_docs bigint, sum_tokens bigint"
+
+
+def _pack(pdf: pd.DataFrame, budget: int, id_col: str, tokens_col: str) -> pd.DataFrame:
+    """One shard's greedy scan in `id_col` order. Module-level, so it
+    pickles by reference: workers import this module, which is why the
+    session puts the package root on their path."""
+    shard = int(pdf["shard"].iloc[0])
+    pdf = pdf.sort_values(id_col)
+    rows = []
+    chunk, run, n = -1, 0, 0
+    for tok in pdf[tokens_col]:
+        tok = int(tok)
+        if chunk < 0 or run + tok > budget:
+            if n > 0:
+                rows.append((shard, chunk, n, run))
+            chunk += 1
+            run, n = 0, 0
+        run += tok
+        n += 1
+    if n > 0:
+        rows.append((shard, chunk, n, run))
+    return pd.DataFrame(rows, columns=["shard", "chunk_id", "n_docs", "sum_tokens"])
 
 
 def greedy_pack(
@@ -45,31 +71,13 @@ def greedy_pack(
 
     Returns one row per chunk: (shard, chunk_id, n_docs, sum_tokens).
     """
-
-    def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
-        pdf = pdf.sort_values(id_col)
-        rows = []
-        chunk, run, n = -1, 0, 0
-        for tok in pdf[tokens_col]:
-            tok = int(tok)
-            if chunk < 0 or run + tok > budget:
-                if n > 0:
-                    rows.append((shard, chunk, n, run))
-                chunk += 1
-                run, n = 0, 0
-            run += tok
-            n += 1
-        if n > 0:
-            rows.append((shard, chunk, n, run))
-        return pd.DataFrame(rows, columns=["shard", "chunk_id", "n_docs", "sum_tokens"])
-
     sharded = docs_with_tokens.select(
         (F.col(id_col) % n_shards).cast("int").alias("shard"),
         F.col(id_col),
         F.col(tokens_col),
     )
-    return sharded.groupBy("shard").applyInPandas(_pack, PACK_SCHEMA)
+    scan = partial(_pack, budget=budget, id_col=id_col, tokens_col=tokens_col)
+    return sharded.groupBy("shard").applyInPandas(scan, PACK_SCHEMA)
 
 
 def pack_oracle_sql(

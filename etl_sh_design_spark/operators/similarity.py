@@ -55,23 +55,14 @@ def _dot(a: str | Column, b: str | Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
 
 
+# Hoisting a norm into its own projection so that scoring becomes a
+# pure dot product was tried: CollapseProject re-inlines it into the
+# transform lambda, so the physical plan is identical to the inline
+# form. The per-row aggregate is shared by codegen subexpression
+# elimination, not by source-level hoisting.
 def _norm(a: str | Column) -> Column:
     a = F.col(a) if isinstance(a, str) else a
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-
-
-def with_unit_vec(df: DataFrame, vec_col: str = "embedding", out: str = "uvec") -> DataFrame:
-    """Normalize once upstream so scoring is a pure dot product.
-
-    (round-13 note: hoisting the norm into its own projection was
-    tried — CollapseProject re-inlines it into the transform lambda,
-    so the physical plan is IDENTICAL to this form; the per-row
-    aggregate is shared by codegen subexpression elimination, not by
-    source-level hoisting. Left as is.)"""
-    d = df.withColumn("_dv", _dvec(vec_col))
-    return d.withColumn(
-        out, F.transform(F.col("_dv"), lambda x: x / _norm(F.col("_dv")))
-    ).drop("_dv")
 
 
 def cosine_topk(

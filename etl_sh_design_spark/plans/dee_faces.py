@@ -36,9 +36,10 @@ golden (tools/ref_tiling_golden.py):
   * every other module-only slot is 'no'.
 
 Plan shape / scale: grid generation and the annulus conditions are
-whole-stage codegen; the polygon overlap flags are ONE Arrow-batched
-pandas UDF per face (the polygon set is dimension-sized closure data);
-the chain logic is two row-key windows + one broadcast-sized join —
+whole-stage codegen; the blocked flags are one Column expression per
+rect (operators/polygon.py: higher-order functions over the
+dimension-sized polygon set as a literal, no Python worker); the chain
+logic is two row-key windows + one broadcast-sized join —
 everything shuffles on (face, iy) only, so a 1000x finer grid still
 shuffles only row keys. Counting is a partition-lookup broadcast join
 + map-side combine aggregation.
@@ -51,16 +52,14 @@ tools/ref_tiling_golden.py docstring and tests/test_faces_tiling.py.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from etl_sh_design_spark import memo
 from etl_sh_design_spark.operators.partition import DEFAULT_FLAVORS, partition_lookup
-from etl_sh_design_spark.operators.polygon import _ray_cast, rect_polygon_hits
+from etl_sh_design_spark.operators.polygon import point_in_polygon, rect_overlap_count
 from etl_sh_design_spark.plans.tiling import (
     ETL_OUTER,
     FEED_Y,
@@ -111,8 +110,8 @@ def updated_layout_polygons(first: bool) -> dict[str, list]:
     """The 'updated'-layout overlap-tested polygon set for one face:
     nose + 4 inner + 8 outer attachments (dee_geometry.py:239-277); the
     first face's inner-attachment heights run from r_inner_first=322.
-    The outer ring + feedthrough band are handled analytically in the
-    blocked-flag UDF; the degenerate `make_inner` ring (shell r=300
+    The outer ring + feedthrough band are handled analytically in
+    `_blocked`; the degenerate `make_inner` ring (shell r=300
     with a larger hole) blocks nothing beyond r=302 and is omitted."""
     return {
         "nose": circle_polygon(NOSE_R),
@@ -124,29 +123,20 @@ def updated_layout_polygons(first: bool) -> dict[str, list]:
 OUTER_64GON = circle_polygon(ETL_OUTER)
 
 
-def _blocked_flag_udf(polys: dict[str, list]):
-    """One Arrow-batched UDF computing the reference's overlaps(rect,
-    dee_geo) for a whole rect batch: the outer ring (rect not fully
-    inside the r=1185 64-gon — convex-hole containment is
+def _blocked(x1: str, y1: str, x2: str, y2: str, polys: dict[str, list]):
+    """The reference's overlaps(rect, dee_geo) for the rect in columns
+    (x1, y1)-(x2, y2), as one Column expression: the outer ring (rect
+    not fully inside the r=1185 64-gon — convex-hole containment is
     all-corners-inside), the feedthrough band, or any attachment/nose
-    polygon hit (`rect_polygon_hits`). The polygon set is tiny closure
-    data shipped with the task."""
-    poly_list = [[(float(x), float(y)) for x, y in v] for v in polys.values()]
-
-    @F.pandas_udf(T.BooleanType())
-    def _blocked(ax: pd.Series, ay: pd.Series, bx: pd.Series, by: pd.Series) -> pd.Series:
-        rx1, ry1 = ax.values.astype(float), ay.values.astype(float)
-        rx2, ry2 = bx.values.astype(float), by.values.astype(float)
-        inside_outer = np.ones(len(rx1), dtype=bool)
-        for cxs, cys in ((rx1, ry1), (rx1, ry2), (rx2, ry1), (rx2, ry2)):
-            inside_outer &= _ray_cast(cxs, cys, OUTER_64GON)
-        hit = ~inside_outer
-        hit |= (rx1 < ETL_OUTER) & (FEEDTHROUGH_X < rx2) & (ry1 < FEED_Y) & (-FEED_Y < ry2)
-        for verts in poly_list:
-            hit |= rect_polygon_hits(rx1, ry1, rx2, ry2, verts)
-        return pd.Series(hit)
-
-    return _blocked
+    polygon hit."""
+    corners = ((x1, y1), (x1, y2), (x2, y1), (x2, y2))
+    inside_outer = reduce(
+        lambda a, b: a & b, [point_in_polygon(cx, cy, OUTER_64GON) for cx, cy in corners]
+    )
+    c1, d1, c2, d2 = (F.col(c) for c in (x1, y1, x2, y2))
+    feedthrough = (c1 < ETL_OUTER) & (FEEDTHROUGH_X < c2) & (d1 < FEED_Y) & (-FEED_Y < d2)
+    hits = rect_overlap_count(x1, y1, x2, y2, list(polys.values())) > 0
+    return ~inside_outer | feedthrough | hits
 
 
 def _annulus_ok(x1, y1, x2, y2, r_in: float, r_out: float):
@@ -161,9 +151,10 @@ def _annulus_ok(x1, y1, x2, y2, r_in: float, r_out: float):
 
 # The slot pipeline feeds MANY downstream branches (chain windows, the
 # two-pass runs split, totals/flavors/boards) — without materialization
-# the Arrow polygon-flag stage re-executes once per branch per query
-# (measured 15-29 s/query); memoized behind one lazy persist it runs
-# once per session (~1 s) and every consumer reads the 841-row result.
+# the polygon-flag stage (interpreted higher-order functions) would
+# re-execute once per branch per query; memoized behind one lazy
+# persist it runs once per session and every consumer reads the
+# 841-row-per-face result.
 # The face plans below are memoized too: re-building them per call
 # would mint fresh expression IDs, which changes the generated code
 # TEXT and defeats the Janino compile cache.
@@ -236,7 +227,7 @@ def config_slots_plan(
     data. `polys` is the blocked polygon set; with it the outer ring
     and feedthrough band block too. With `polys=None` (the
     committed-notebook configurations: bare annulus, no blocked
-    geometry) the whole pipeline is pure codegen — no UDF anywhere.
+    geometry) the whole pipeline is whole-stage codegen.
     `with_maybe=False` reproduces the OLDER reference machine the
     committed notebook outputs were generated with
     (tools/ref_tiling_golden.py)."""
@@ -249,10 +240,10 @@ def config_slots_plan(
         "face STRING, y0 DOUBLE, dy DOUBLE",
     )
 
-    # dimension-sized grid: ONE partition => one Arrow batch per rect
-    # set for the flag UDF and no multi-task scheduling overhead. (A
-    # billion-slot grid would drop the coalesce and let the UDF run
-    # per-partition — the plan shape is unchanged.)
+    # dimension-sized grid: ONE partition => no multi-task scheduling
+    # overhead (spreading the flag kernel over 4 tasks measured no
+    # faster). A billion-slot grid would drop the coalesce and run the
+    # kernel per partition — the plan shape is unchanged.
     grid = (
         spark.range(N_ROWS * n_cols)
         .coalesce(1)
@@ -274,17 +265,15 @@ def config_slots_plan(
     )
 
     def blocked_or_false(x1, y1, x2, y2):
-        if polys is None:
-            return F.lit(False)
-        return _blocked_flag_udf(polys)(x1, y1, x2, y2)
+        return F.lit(False) if polys is None else _blocked(x1, y1, x2, y2, polys)
 
     sm_ok = _annulus_ok(
         F.col("sx1"), F.col("sy1"), F.col("sx2"), F.col("sy2"), r_inner, ETL_OUTER
-    ) & ~blocked_or_false(F.col("sx1"), F.col("sy1"), F.col("sx2"), F.col("sy2"))
+    ) & ~blocked_or_false("sx1", "sy1", "sx2", "sy2")
     if with_maybe:
         mod_ok = _annulus_ok(
             F.col("sx1"), F.col("my1"), F.col("sx2"), F.col("my2"), r_inner, ETL_OUTER
-        ) & ~blocked_or_false(F.col("sx1"), F.col("my1"), F.col("sx2"), F.col("my2"))
+        ) & ~blocked_or_false("sx1", "my1", "sx2", "my2")
     else:
         mod_ok = F.lit(False)
     flags = grid.select(
@@ -296,12 +285,12 @@ def config_slots_plan(
         sm_ok.alias("sm_ok"),
         mod_ok.alias("mod_ok"),
     ).withColumn("mod_only", F.col("mod_ok") & ~F.col("sm_ok"))
-    # cut the plan at the UDF boundary: the inlined corner-condition
-    # expression trees + the polygon UDF closure otherwise replicate
-    # into every downstream branch (chains, winners, the output join),
-    # and each branch's generated code balloons to a multi-second
-    # Janino compile (measured ~9 s PER count on 841 rows; 1.4 MB task
-    # binaries). persist(), not localCheckpoint — see all_face_slots.
+    # cut the plan after the flags: the inlined corner-condition and
+    # polygon-kernel expressions otherwise replicate into every
+    # downstream branch (chains, winners, the output join), each
+    # re-evaluating the interpreted kernel and compiling its own copy
+    # of the flag stage. persist(), not localCheckpoint — see
+    # all_face_slots.
     flags = flags.persist()
     if persist_registry is not None:
         persist_registry.append(flags)
@@ -562,8 +551,8 @@ def _face_flavor_counts_plan(spark: SparkSession) -> DataFrame:
 # SuperModule board geometry: RB / PB / VTRX rectangles per placed
 # board (reference ETL.py:163-204, 312-357, 364-381, 506-533). Pure
 # column arithmetic + explode over the supermodule table — fully
-# declarative, no UDF; the real-geometry variant inherits the polygon
-# UDF only through its upstream slot table.
+# declarative; the real-geometry variant reads its polygon flags only
+# through the upstream (persisted) slot table.
 # =====================================================================
 
 PB_H3 = 3 * MOD_H + 2 * GAP  # every PB is 3-module high: split_PB makes

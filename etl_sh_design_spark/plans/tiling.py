@@ -41,6 +41,7 @@ from etl_sh_design_spark.operators.partition import (
     PARTITION_LOOKUP_SQL,
     partition_lookup,
 )
+from etl_sh_design_spark.operators.polygon import rect_overlap_count
 
 # slot grid: right half-dee, rows of module slots
 N_ROWS, N_COLS = 22, 27
@@ -302,10 +303,10 @@ def slots_real(
     layout: str = "updated",
 ) -> DataFrame:
     """The slot table classified against the REAL 'updated' blocked
-    geometry. geometry='polygon' runs the exact vectorized
-    rect-polygon overlap (ONE Arrow-batched UDF over all shapes,
-    map-only — no shuffle before the neighbor window); geometry='bbox'
-    uses the bounding-box over-approximation (pure codegen,
+    geometry. geometry='polygon' runs the exact rect-polygon overlap
+    (`polygon.rect_overlap_count`, one Column expression over all
+    shapes, map-only — no shuffle before the neighbor window);
+    geometry='bbox' uses the bounding-box over-approximation (pure codegen,
     SQL-expressible). Everything downstream (radial states, neighbor
     rule) is shared with the stand-in path.
 
@@ -323,9 +324,9 @@ def _slots_real_build(spark: SparkSession, geometry: str, layout: str) -> DataFr
     grid = _slot_grid(spark)
     polys = reference_blocked_polygons(layout)
     if geometry == "polygon":
-        from etl_sh_design_spark.operators.polygon import rects_overlap_count
-
-        n_blocked = rects_overlap_count(grid, polys)
+        n_blocked = grid.withColumn(
+            "n_overlaps", rect_overlap_count("x1", "y1", "x2", "y2", list(polys.values()))
+        )
     elif geometry == "bbox":
         n_blocked = _rect_overlap_counts(grid, polygon_bboxes(polys))
     else:
@@ -346,7 +347,7 @@ def _slots_real_build(spark: SparkSession, geometry: str, layout: str) -> DataFr
 # (a) tests/test_polygon_tiling.py re-derives this full 28-slot set
 #     with the sequential golden's own scalar rect-overlap
 #     implementation (tools/ref_tiling_golden.rect_overlaps_polygon —
-#     different code path than the Arrow UDF),
+#     different code path than the Column kernel),
 # (b) dense point-grid sampling proves each state-visible slot is
 #     outside every exact polygon, and
 # (c) the strict-subset property is asserted over all 594 slots.

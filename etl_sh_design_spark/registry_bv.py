@@ -130,9 +130,10 @@ FROM bv_groups
 """,
 )
 def q_bv_greedy(spark, sf_dir):
-    """W4 greedy BV grouping (applyInPandas stateful scan) — one row
-    per BV group per (layer, vendor). Oracle: recursive-CTE walk of
-    the same ordered scan (bias_voltage.py:449-493 semantics)."""
+    """W4 greedy BV grouping (one `aggregate` fold per (layer,
+    vendor)) — one row per BV group per (layer, vendor). Oracle:
+    recursive-CTE walk of the same ordered scan (bias_voltage.py:449-493
+    semantics)."""
     groups = greedy_bv_groups(modules_from_sensors(datagen.sensors(spark)))
     return groups.select(
         "layer",

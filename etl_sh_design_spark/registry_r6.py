@@ -100,8 +100,8 @@ def q_tile_slots_real_bbox(spark, sf_dir):
 )
 def q_tile_slots_polygon(spark, sf_dir):
     """Slot availability against the EXACT real blocked polygons via
-    the vectorized rect-polygon overlap (Liang-Barsky + ray cast, ONE
-    Arrow-batched UDF over all 15 shapes, map-only).
+    the rect-polygon overlap (Liang-Barsky + ray cast, one Column
+    expression over all 15 shapes, map-only).
 
     Round-8 upgrade (VERDICT r7 item 2): full VALUES-corrected oracle
     instead of rows-only. The polygon predicate itself is not SQL, but

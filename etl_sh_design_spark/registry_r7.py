@@ -3,8 +3,8 @@
 1. The faithful REAL dee tiling (plans/dee_faces.py): per-face module
    totals, flavor counts, and board (RB/PB/VTRX) rollups of the
    'updated'/'S' tiling the reference prints at dee_geometry.py:382-394.
-   The Spark pipeline's only non-SQL island is the polygon-overlap UDF,
-   so these queries pin against VALUES oracles carrying the counts
+   The polygon overlap has no DuckDB twin (it is a higher-order-function
+   kernel over literal polygon edges), so these queries pin against VALUES oracles carrying the counts
    INDEPENDENTLY re-derived by the sequential reference-algorithm
    golden (tools/ref_tiling_golden.py) — which itself reproduces five
    committed reference notebook outputs exactly (see its docstring) and
@@ -76,7 +76,7 @@ def q_tile_real_face_modules(spark, sf_dir):
     reference algorithm (see module docstring for the oracle
     provenance).
 
-    Plan: codegen grid -> one Arrow-batched polygon-flag UDF per face
+    Plan: codegen grid -> Column polygon-flag kernel per face
     -> (face,iy)-keyed windows -> broadcast partition lookup -> 4-row
     agg. Shuffles only on row keys; a 1000x finer grid scales."""
     return dee_faces.face_module_totals(spark)

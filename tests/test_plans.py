@@ -213,6 +213,40 @@ def test_bv_config_search_is_zero_udf_single_exchange(spark):
     assert above_cache.count("Exchange") == 1, above_cache
 
 
+def test_layout_loop_runs_no_python_worker(spark):
+    """The interactive layout loop never leaves the JVM: no Python-UDF
+    or pandas node in the executed plans of the seven layout ops (every
+    output of the two studies) nor of the polygon-tiling and greedy-BV
+    queries. The dee_faces / tiling_real memos are cleared first, so
+    the persisted sub-plans inspected (printed under their
+    InMemoryRelation) are the ones built here."""
+    from etl_sh_design_spark import memo, registry
+    from etl_sh_design_spark.operators import partition
+    from etl_sh_design_spark.plans import dee_faces, studies, tiling
+
+    for family in ("dee_faces", "tiling_real"):
+        memo.clear(family)
+    qs = registry.queries()
+    frames = {
+        "tiling.flavor_counts": tiling.flavor_counts(spark),
+        "tiling.supermodules": tiling.supermodules(spark),
+        "dee_faces.face_boards": dee_faces.face_boards(spark),
+        "dee_faces.face_flavor_counts": dee_faces.face_flavor_counts(spark),
+        **{f"bias_voltage.{k}": df for k, df in studies.bias_voltage_study(spark).items()},
+        **{f"occupancy.{k}": df for k, df in studies.occupancy_study(spark).items()},
+        "partition.lookup": partition.partition_lookup(spark),
+        **{
+            q: qs[q](spark, SF_SMOKE)
+            for q in ("tile_slots_polygon", "tile_real_boards", "bv_greedy_groups", "bv_totals")
+        },
+    }
+    python_nodes = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "FlatMapGroupsInPandas")
+    found = {
+        name: [n for n in python_nodes if n in _plan(df)] for name, df in frames.items()
+    }
+    assert not any(found.values()), {k: v for k, v in found.items() if v}
+
+
 def test_q13_outer_join_keeps_on_clause_filter(spark):
     """Q13: the o_orderpriority predicate must appear as a pushed scan
     filter on the orders side (it is an ON-clause filter of a left

@@ -98,7 +98,7 @@ def test_gap_set_matches_independent_sequential_overlap():
     """The 26-slot approximation gap (the constant that makes the
     tile_slots_polygon oracle exact) re-derived from scratch with the
     sequential golden's OWN scalar rect-overlap implementation
-    (tools/ref_tiling_golden — different code path from the Arrow UDF)
+    (tools/ref_tiling_golden — different code path from the Column kernel)
     against the same stand-in grid + real polygons. Covers all 594
     slots, both directions."""
     from tools.ref_tiling_golden import rect_overlaps_polygon
@@ -130,6 +130,69 @@ def test_gap_set_matches_independent_sequential_overlap():
             if bbox_hit and not poly_hit:
                 gap.add((iy, ix))
     assert gap == tiling.POLY_FREE_BBOX_BLOCKED
+
+
+def test_column_kernel_matches_scalar_golden(spark):
+    """The Column kernel (operators/polygon.py) against the golden's
+    scalar predicates, rect by rect and point by point, on seeded
+    quarter-grid rects (exact arithmetic, so touching is frequent)
+    plus the pinned edge cases: horizontal and vertical polygon edges
+    (p == 0 slabs), a rect touching a bbox side, a rect touching a
+    vertex at one point (t0 == t1), a rect inside a polygon, a polygon
+    inside a rect, and a rect in a concave notch whose edges run
+    parallel to it."""
+    import random
+
+    from etl_sh_design_spark.operators.polygon import point_in_polygon, rect_overlap_count
+    from tools.ref_tiling_golden import point_in_polygon as golden_point
+    from tools.ref_tiling_golden import rect_overlaps_polygon as golden_rect
+
+    polys = [
+        [(0.0, 0.0), (10.0, 0.0), (10.0, 6.0), (0.0, 6.0)],  # axis-aligned box
+        [(0.0, 0.0), (10.0, 0.0), (0.0, 10.0)],  # triangle
+        [(0.0, 0.0), (10.0, 0.0), (10.0, 4.0), (4.0, 4.0), (4.0, 10.0), (0.0, 10.0)],  # L
+        [(5 + x / 60, 5 + y / 60) for x, y in tiling.circle_polygon(300.0)],
+    ]
+    pinned = [
+        (10.0, 2.0, 12.0, 4.0),  # touches the box's and L's right bbox side
+        (10.0, 0.0, 12.0, 2.0),  # meets the triangle at its vertex (10, 0) only
+        (2.0, 2.0, 3.0, 3.0),  # inside the box, the triangle and the L
+        (-5.0, -5.0, 20.0, 20.0),  # every polygon inside it
+        (6.0, 6.0, 8.0, 8.0),  # in the L's notch, inside its bbox
+        (4.0, 4.0, 6.0, 6.0),  # the L's reflex vertex on a corner
+    ]
+    rng = random.Random(20261018)
+
+    def q(lo, hi):
+        return rng.randint(int(lo * 4), int(hi * 4)) / 4
+
+    rects = list(pinned)
+    for _ in range(400):
+        x1, y1 = q(-4, 14), q(-4, 14)
+        rects.append((x1, y1, x1 + q(0, 6), y1 + q(0, 6)))
+    df = spark.createDataFrame(
+        [(i, *r) for i, r in enumerate(rects)],
+        "rid INT, x1 DOUBLE, y1 DOUBLE, x2 DOUBLE, y2 DOUBLE",
+    )
+    got = df.select(
+        "rid",
+        rect_overlap_count("x1", "y1", "x2", "y2", polys).alias("n"),
+        *[(rect_overlap_count("x1", "y1", "x2", "y2", [v]) > 0).alias(f"r{k}") for k, v in enumerate(polys)],
+        *[point_in_polygon("x1", "y1", v).alias(f"p{k}") for k, v in enumerate(polys)],
+    ).collect()
+    assert len(got) == len(rects)
+    for row in got:
+        x1, y1, x2, y2 = rects[row["rid"]]
+        hits = [golden_rect(x1, y1, x2, y2, v) for v in polys]
+        assert row["n"] == sum(hits), rects[row["rid"]]
+        for k, v in enumerate(polys):
+            assert row[f"r{k}"] == hits[k], (k, rects[row["rid"]])
+            assert row[f"p{k}"] == golden_point(x1, y1, v), (k, rects[row["rid"]])
+    # the pinned cases carry their expected verdicts, not just parity
+    by_rid = {r["rid"]: r for r in got}
+    assert [by_rid[i]["r0"] for i in range(4)] == [True, True, True, True]
+    assert [by_rid[i]["r1"] for i in range(4)] == [False, True, True, True]
+    assert [by_rid[i]["r2"] for i in range(6)] == [True, True, True, True, False, True]
 
 
 def test_polygon_oracle_states_match_spark(spark):

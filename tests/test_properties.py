@@ -1,5 +1,5 @@
-"""Hypothesis property tests for the pure-Python operator kernels (no
-SparkSession needed — these run fast)."""
+"""Hypothesis property tests for the operator kernels: the pure-Python
+ones need no SparkSession; the polygon ray cast runs on the session."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from etl_sh_design_spark.operators.partition import best_partition
-from etl_sh_design_spark.operators.polygon import _ray_cast
+from etl_sh_design_spark.operators.polygon import point_in_polygon
 
 
 @given(st.integers(min_value=0, max_value=200))
@@ -41,16 +41,16 @@ def test_binspec_properties(nbins, lo, width):
         assert 0 <= b < nbins or math.isclose(x, hi)
 
 
-@settings(max_examples=50)
+# one Spark job per example: far over hypothesis' default 200 ms deadline
+@settings(max_examples=50, deadline=None)
 @given(
     st.floats(min_value=-2, max_value=2, allow_nan=False),
     st.floats(min_value=-2, max_value=2, allow_nan=False),
 )
-def test_ray_cast_unit_square(px, py):
-    import numpy as np
-
+def test_ray_cast_unit_square(spark, px, py):
     square = [(0.0, 0.0), (1.0, 0.0), (1.0, 1.0), (0.0, 1.0)]
-    got = bool(_ray_cast(np.array([px]), np.array([py]), square)[0])
+    pt = spark.createDataFrame([(px, py)], "px DOUBLE, py DOUBLE")
+    got = pt.select(point_in_polygon("px", "py", square)).first()[0]
     on_edge = px in (0.0, 1.0) or py in (0.0, 1.0)
     if not on_edge:
         assert got == (0.0 < px < 1.0 and 0.0 < py < 1.0)

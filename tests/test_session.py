@@ -1,5 +1,5 @@
-"""session.get_spark deploys where it runs: its pandas UDF workers
-import the engine from any working directory, with the package on the
+"""session.get_spark deploys where it runs: its pandas workers import
+the engine from any working directory, with the package on the
 driver's sys.path only."""
 
 from __future__ import annotations
@@ -15,13 +15,14 @@ _PROBE = """
 import sys
 sys.path.insert(0, {repo!r})
 from pyspark.sql import functions as F
-from etl_sh_design_spark import datagen
-from etl_sh_design_spark.operators.bv_grouping import greedy_bv_groups, modules_from_sensors
+from etl_sh_design_spark.operators.packing import greedy_pack
 from etl_sh_design_spark.session import get_spark
 
 spark = get_spark(app_name="cwd-probe", cpus=2)
-mods = modules_from_sensors(datagen.sensors(spark).filter(F.col("layer") == 1))
-print("groups", greedy_bv_groups(mods).count())
+docs = spark.range(200).select(
+    F.col("id").alias("doc_id"), (F.col("id") % 50 + 1).alias("n_tokens")
+)
+print("chunks", greedy_pack(docs, budget=128, n_shards=4).count())
 spark.stop()
 """
 
@@ -38,6 +39,6 @@ def test_pandas_workers_import_engine_from_any_cwd(tmp_path):
         timeout=600,
     )
     assert out.returncode == 0, out.stderr[-4000:]
-    n = int(out.stdout.split("groups", 1)[1].split()[0])
+    n = int(out.stdout.split("chunks", 1)[1].split()[0])
     assert n > 0
 

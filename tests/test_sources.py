@@ -1,6 +1,6 @@
 """Sources/sinks layer tests (SURVEY.md §2.1): S1 TSV scan with
 corrupt-record quarantine, S3/S4 YAML roundtrip, S5 mirrored CSV sink,
-S6 Parquet run cache with partition pruning, U1 polygon UDF."""
+S6 Parquet run cache with partition pruning, U1 polygon predicates."""
 
 from __future__ import annotations
 
@@ -66,26 +66,27 @@ def test_parquet_run_cache(spark, tmp_path):
 
 
 def test_polygon_point_in_polygon(spark):
-    from etl_sh_design_spark.operators.polygon import points_in_polygon
+    from etl_sh_design_spark.operators.polygon import point_in_polygon
 
     pts = spark.createDataFrame(
         [(0.5, 0.5), (2.0, 2.0), (0.99, 0.01)], "px DOUBLE, py DOUBLE"
     )
     unit_square = [(0.0, 0.0), (1.0, 0.0), (1.0, 1.0), (0.0, 1.0)]
-    out = {(r["px"], r["py"]): r["inside"] for r in points_in_polygon(pts, unit_square).collect()}
+    inside = pts.withColumn("inside", point_in_polygon("px", "py", unit_square))
+    out = {(r["px"], r["py"]): r["inside"] for r in inside.collect()}
     assert out[(0.5, 0.5)] is True
     assert out[(2.0, 2.0)] is False
     assert out[(0.99, 0.01)] is True
 
 
 def test_filter_blocked_polygons(spark):
-    from etl_sh_design_spark.operators.polygon import filter_blocked_polygons
+    from etl_sh_design_spark.operators.polygon import point_in_polygon
 
     slots = spark.createDataFrame(
         [(0, 50.0, 0.0), (1, 500.0, 500.0)], "slot_id INT, cx DOUBLE, cy DOUBLE"
     )
-    nose = {"nose": [(-130.0, -70.0), (130.0, -70.0), (130.0, 70.0), (-130.0, 70.0)]}
-    kept = filter_blocked_polygons(slots, nose).collect()
+    nose = [(-130.0, -70.0), (130.0, -70.0), (130.0, 70.0), (-130.0, 70.0)]
+    kept = slots.filter(~point_in_polygon("cx", "cy", nose)).collect()
     assert [r["slot_id"] for r in kept] == [1]
 
 
@@ -118,7 +119,7 @@ def test_jsonl_scan_permissive(spark, tmp_path):
 def test_rects_overlap_polygon_cases(spark):
     """J3 polygon-polygon overlap (reference ETL.py:552-553): every
     geometric relationship class, against a triangle (0,0)(10,0)(0,10)."""
-    from etl_sh_design_spark.operators.polygon import rects_overlap_polygon
+    from etl_sh_design_spark.operators.polygon import rect_overlap_count
 
     tri = [(0.0, 0.0), (10.0, 0.0), (0.0, 10.0)]
     rects = spark.createDataFrame(
@@ -132,7 +133,8 @@ def test_rects_overlap_polygon_cases(spark):
         ],
         "rid INT, x1 DOUBLE, y1 DOUBLE, x2 DOUBLE, y2 DOUBLE",
     )
-    got = {r["rid"]: r["overlaps"] for r in rects_overlap_polygon(rects, tri).collect()}
+    flagged = rects.withColumn("overlaps", rect_overlap_count("x1", "y1", "x2", "y2", [tri]) > 0)
+    got = {r["rid"]: r["overlaps"] for r in flagged.collect()}
     assert got == {0: True, 1: True, 2: True, 3: False, 4: False}
 
 
@@ -140,19 +142,19 @@ def test_overlap_excludes_what_center_test_keeps(spark):
     """The reference exclusion is overlap-based: a slot OVERLAPPING the
     blocked polygon without containing its center must be dropped by
     the strict filter even though the center-point filter keeps it."""
-    from etl_sh_design_spark.operators.polygon import (
-        filter_blocked_polygons,
-        filter_blocked_polygons_overlap,
-    )
+    from etl_sh_design_spark.operators.polygon import point_in_polygon, rect_overlap_count
 
-    tri = {"nose": [(0.0, 0.0), (10.0, 0.0), (0.0, 10.0)]}
+    tri = [(0.0, 0.0), (10.0, 0.0), (0.0, 10.0)]
     # slot 0: rect (4,4)-(9,9) — overlaps the triangle, center outside it
     # slot 1: far away — kept by both
     slots = spark.createDataFrame(
         [(0, 4.0, 4.0, 9.0, 9.0, 6.5, 6.5), (1, 50.0, 50.0, 60.0, 60.0, 55.0, 55.0)],
         "slot_id INT, x1 DOUBLE, y1 DOUBLE, x2 DOUBLE, y2 DOUBLE, cx DOUBLE, cy DOUBLE",
     )
-    by_center = {r["slot_id"] for r in filter_blocked_polygons(slots, tri).collect()}
-    by_overlap = {r["slot_id"] for r in filter_blocked_polygons_overlap(slots, tri).collect()}
+    by_center = {r["slot_id"] for r in slots.filter(~point_in_polygon("cx", "cy", tri)).collect()}
+    by_overlap = {
+        r["slot_id"]
+        for r in slots.filter(rect_overlap_count("x1", "y1", "x2", "y2", [tri]) == 0).collect()
+    }
     assert by_center == {0, 1}   # center test wrongly keeps slot 0
     assert by_overlap == {1}     # overlap test excludes it

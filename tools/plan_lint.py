@@ -226,16 +226,6 @@ WHITELIST: dict[str, dict[str, str]] = {
     },
 }
 
-_ARROW_OK = (
-    "ArrowEvalPython",
-    "MapInPandas",
-    "FlatMapGroupsInPandas",
-    "WindowInPandas",
-    "FlatMapGroupsInPandasWithState",
-    "TransformWithStateInPandas",
-)
-
-
 def lint_plan(df) -> list[tuple[str, str]]:
     """Return [(rule, evidence_line)] for one DataFrame's executed plan."""
     plan = df._jdf.queryExecution().executedPlan().toString()
