@@ -3,30 +3,34 @@ reference dee_geometry.py:570-700) and its variants: the real YAML
 layouts, several detector variants per ray, and the run comparison
 (registry_more.q_run_comparison).
 
-Every Spark query of the family is a composition of three pieces:
+Every Spark query of the family is a composition of two pieces, over
+one scan of the rays:
 
-    rays ──crossJoin── broadcast(layers)          # `project`: P14
-        │ (tags…, event_id, eta, layer, px, py)
+    rays (tags…, event_id, eta, tanth, cphi, sphi)
+        │ per layer L: P14 point p_L, its grid cell floor(p_L / CELL_MM)
+        │ hit_L = EXISTS broadcast(cell-exploded rects)
+        │         WHERE layer = L AND cell = cell(p_L)
+        │           [AND rect tag = ray tag] AND containment
         ▼
-    binned join sensors ON layer, cell + containment   # `hit_events`: J1
+    `per_ray_hits`: (tags…, event_id, eta, n = Σ hit_L), every ray,
+    misses included (n = 0)                                  # J1 + J2
         ▼
-    groupBy tags…, event_id -> n = countDistinct(layer)   # J2, hit events only
-        ▼
-    `profile` / `hit_histogram`: per (tags…, eta_bin) or (tags…, n),
-    ray totals from the rays, numerators from the hit events   # A10-A12, J7, P13
+    `profile` / `hit_histogram`: one groupBy per (tags…, eta_bin) or
+    (tags…, n)                                       # A10-A12, J7, P13
 
-Zero-hit rays never materialize: eff, mean_n and the n = 0 bin are
-arithmetic over the two aggregates, so per-ray counts are never joined
-back to the rays. One ray generator (`spark.range`) is
-range-partitioned on event_id, so the per-event aggregation over it
-needs no shuffle; the exchanges left are the bins-sized aggregates. The DuckDB `*_sql` builders are the
-reference implementation (per-ray LEFT JOIN + avg); both shapes round
-to the same values.
+Spark plans each EXISTS as a BroadcastHashJoin ExistenceJoin on the
+cell keys inside the ray stage, so no candidate row, per-event
+aggregate or join back to the rays exists, and the only exchange is
+the bins-sized aggregation. The DuckDB `*_sql` builders are the
+reference implementation (layers cross join, containment join,
+count(DISTINCT layer), per-ray LEFT JOIN); both shapes round to the
+same values.
 """
 
 from __future__ import annotations
 
 from functools import reduce
+from operator import add
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -34,8 +38,9 @@ from pyspark.sql import functions as F
 from etl_sh_design_spark import datagen
 from etl_sh_design_spark.functions.transforms import project_to_layer, time_resolution
 from etl_sh_design_spark.operators.containment import (
-    binned_containment_join,
+    cell_rects,
     containment_join,
+    contains_point,
 )
 from etl_sh_design_spark.operators.histogram import BinSpec
 
@@ -47,86 +52,73 @@ T_COEFF = 45.0  # ps; dee_geometry.py:608
 CELL_MM = 50.0
 
 
-def project(spark: SparkSession, rays: DataFrame, tags=()) -> DataFrame:
+def project(spark: SparkSession, rays: DataFrame) -> DataFrame:
     """P14: every ray onto every layer plane ->
-    (tags…, event_id, eta, layer, px, py)."""
+    (event_id, eta, layer, px, py)."""
     px, py = project_to_layer()
     return rays.crossJoin(F.broadcast(datagen.layers(spark))).select(
-        *tags, "event_id", "eta", "layer", px.alias("px"), py.alias("py")
+        "event_id", "eta", "layer", px.alias("px"), py.alias("py")
     )
 
 
-def hit_events(
-    spark: SparkSession, rays: DataFrame, sensors: DataFrame, tags=()
-) -> DataFrame:
-    """(tags…, event_id, eta, n) for every event that hits at least one
-    layer; n = #layers whose sensor active area contains the projected
-    ray point (1..4).
+def per_ray_hits(rays: DataFrame, rects: DataFrame, tags=()) -> DataFrame:
+    """(tags…, event_id, eta, n) for EVERY ray; n = #layers whose
+    sensor active area contains the ray's P14 point (0..4).
 
-    A tag is a column of `rays` (e.g. `run`), carried through the
-    projection, or of `sensors` (e.g. `variant` of a tagged corner
-    union), carried through the join. Every acceptance rect side is
-    dimension-sized by contract, so it is pinned broadcast: the 4x-rays
-    projection never shuffles."""
-    proj = project(spark, rays, [t for t in tags if t in rays.columns])
-    hits = binned_containment_join(
-        proj, sensors, CELL_MM, extra_keys=["layer"], broadcast_rects=True
+    A tag is a column of `rays` (e.g. `run`). A tag that `rects` also
+    carries (e.g. `variant` of a tagged corner union) correlates the
+    lookup: a ray only sees the rects of its own tag value. `rays`
+    must not end in a Union — Spark 4.1's PushProjectionThroughUnion
+    fails on the EXISTS projection — so look up each branch and union
+    the results."""
+    ray = rays.alias("ray")
+    shared = [t for t in tags if t in rects.columns]
+    cells = cell_rects(
+        rects.select(
+            *[F.col(t).alias(f"rect_{t}") for t in shared], "layer", "ax1", "ax2", "ay1", "ay2"
+        ),
+        CELL_MM,
     )
-    return hits.groupBy(*tags, "event_id").agg(
-        F.first("eta").alias("eta"), F.countDistinct("layer").alias("n")
-    )
+    on = {f"rect_{t}": F.col(f"ray.{t}") for t in shared}
+    hits = [
+        contains_point(
+            cells.filter(F.col("layer") == layer), CELL_MM, *project_to_layer(F.lit(z)), on
+        ).cast("int")
+        for layer, z in enumerate(datagen.LAYER_Z_MM, 1)
+    ]
+    return ray.select(*tags, "event_id", "eta", reduce(add, hits).alias("n"))
 
 
-def profile(rays: DataFrame, hits: DataFrame, bins: BinSpec, tags=()) -> DataFrame:
-    """(tags…, eta_bin, n_rays, eff, mean_n, mean_t) from the rays
-    (which carry every tag) and their `hit_events`:
+def profile(per_ray: DataFrame, bins: BinSpec, tags=()) -> DataFrame:
+    """(tags…, eta_bin, n_rays, eff, mean_n, mean_t) over a
+    `per_ray_hits` table:
 
-        eff    = n_hit / n_rays
-        mean_n = sum(n) / n_rays          (misses contribute 0)
-        mean_t = sum(45/sqrt(n)) / n_hit  (misses excluded)
+        eff    = mean of [n > 0]
+        mean_n = mean of n                (misses contribute 0)
+        mean_t = mean of 45/sqrt(n)       (misses excluded)
 
-    The sums are exact integers except sum_t, which is rounded with the
-    rest to absorb float-order drift."""
-    eta_bin = bins.bin_of("eta").alias("eta_bin")
-    keys = [*tags, "eta_bin"]
-    totals = rays.groupBy(*tags, eta_bin).agg(F.count(F.lit(1)).alias("n_rays"))
-    hit_agg = hits.groupBy(*tags, eta_bin).agg(
-        F.count(F.lit(1)).alias("n_hit"),
-        F.sum("n").alias("sum_n"),
-        F.sum(time_resolution("n", T_COEFF)).alias("sum_t"),
-    )
-    return totals.join(hit_agg, keys, "left").select(
-        *keys,
-        "n_rays",
-        F.round(F.coalesce("n_hit", F.lit(0)) / F.col("n_rays"), 6).alias("eff"),
-        F.round(F.coalesce("sum_n", F.lit(0)) / F.col("n_rays"), 6).alias("mean_n"),
-        F.round(F.col("sum_t") / F.col("n_hit"), 6).alias("mean_t"),
+    Rounded to 6 digits to absorb float-order drift in the sums."""
+    n = F.col("n")
+    return per_ray.groupBy(*tags, bins.bin_of("eta").alias("eta_bin")).agg(
+        F.count(F.lit(1)).alias("n_rays"),
+        F.round(F.avg((n > 0).cast("double")), 6).alias("eff"),
+        F.round(F.avg(n), 6).alias("mean_n"),
+        F.round(F.avg(time_resolution(n, T_COEFF)), 6).alias("mean_t"),
     )
 
 
-def hit_histogram(rays: DataFrame, hits: DataFrame, tags=()) -> DataFrame:
-    """(tags…, n, cnt): Hist1D(nHits, "5,-0.5,4.5") from the rays
-    (which carry every tag) and their `hit_events`. The n = 0 bin is
-    the ray total minus the hit events, so it is always present."""
-    pos = hits.groupBy(*tags, F.col("n").cast("bigint").alias("n")).agg(
+def hit_histogram(per_ray: DataFrame, tags=()) -> DataFrame:
+    """(tags…, n, cnt): Hist1D(nHits, "5,-0.5,4.5") over a
+    `per_ray_hits` table; a per-ray GROUP BY n, so no empty bins."""
+    return per_ray.groupBy(*tags, F.col("n").cast("bigint").alias("n")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    totals = rays.groupBy(*tags).agg(F.count(F.lit(1)).alias("n_rays"))
-    n_hit = pos.groupBy(*tags).agg(F.sum("cnt").alias("n_hit"))
-    # with no tags both sides are 1-row totals: a keyless left join
-    zero = totals.join(n_hit, list(tags) or None, "left").select(
-        *tags,
-        F.lit(0).cast("bigint").alias("n"),
-        (F.col("n_rays") - F.coalesce("n_hit", F.lit(0))).alias("cnt"),
-    )
-    return pos.unionByName(zero)
 
 
 def acceptance_profile(spark: SparkSession, n_rays: int) -> DataFrame:
     """Flagship result: efficiency + mean hit count + mean time
     resolution per eta bin."""
-    rays = datagen.rays(spark, n_rays)
-    return profile(rays, hit_events(spark, rays, datagen.sensors(spark)), ETA_BINS)
+    return profile(per_ray_hits(datagen.rays(spark, n_rays), datagen.sensors(spark)), ETA_BINS)
 
 
 def mc_sanity_probe(spark: SparkSession, n_rays: int, min_hits: int = 3) -> DataFrame:
@@ -139,12 +131,12 @@ def mc_sanity_probe(spark: SparkSession, n_rays: int, min_hits: int = 3) -> Data
 
     One row per layer: (event_id, layer, px, py, n_sensors, hit).
     The probe id is a 1-row broadcast; the re-count is the broadcast
-    predicate join over the SAME containment predicate as the binned
-    flagship join, so a bookkeeping bug would show as hit=true on a
+    predicate join over the SAME containment predicate as the flagship
+    per-ray lookup, so a bookkeeping bug would show as hit=true on a
     layer with n_sensors=0 (or vice versa)."""
     rays = datagen.rays(spark, n_rays)
     probe_id = (
-        hit_events(spark, rays, datagen.sensors(spark))
+        per_ray_hits(rays, datagen.sensors(spark))
         .filter(F.col("n") >= min_hits)
         .agg(F.min("event_id").alias("event_id"))
     )
@@ -190,17 +182,15 @@ GROUP BY 1, 2, pp.px, pp.py
 def hit_count_histogram(spark: SparkSession, n_rays: int) -> DataFrame:
     """A10 on the MC result: histogram of n (0..4) — the reference's
     `Hist1D(nHits, "5,-0.5,4.5")` (example.ipynb cell 19)."""
-    rays = datagen.rays(spark, n_rays)
-    hist = hit_histogram(rays, hit_events(spark, rays, datagen.sensors(spark)))
-    return hist.filter(F.col("cnt") > 0)  # per-ray GROUP BY n: no empty bins
+    return hit_histogram(per_ray_hits(datagen.rays(spark, n_rays), datagen.sensors(spark)))
 
 
 # =====================================================================
 # Real-layout acceptance: the reference's signature study run over its
 # OWN exported YAML layout database (geometric_acceptance.ipynb cells
 # 43-72), not the synthetic sensor grid. Same MC rays, same P14
-# projection, same binned J1/J2 containment plan — only the sensor
-# corner table comes from the real data.
+# projection, same per-ray lookup — only the sensor corner table comes
+# from the real data.
 # =====================================================================
 
 # Sensor(42.5, 22) with deadspace 0.5 is the sensor every fromCenters
@@ -267,10 +257,8 @@ def real_hit_count_histogram(
     """Hist1D(nHits) over a REAL layout — the stored-output twin of
     geometric_acceptance.ipynb cell 62 (`Hist1D(nHits['TDR'],
     "5,-0.5,4.5")`)."""
-    rays = real_rays(spark, n_rays)
     sensors = real_layout_sensors(spark, yaml_path, layout)
-    hist = hit_histogram(rays, hit_events(spark, rays, sensors))
-    return hist.filter(F.col("cnt") > 0)  # per-ray GROUP BY n: no empty bins
+    return hit_histogram(per_ray_hits(real_rays(spark, n_rays), sensors))
 
 
 def real_acceptance_profile(
@@ -279,9 +267,8 @@ def real_acceptance_profile(
     """Efficiency + mean hit count + mean time resolution per eta bin
     over the REAL exported layout: the flagship plan with the real
     corner table, the study's eta window and its bin spec."""
-    rays = real_rays(spark, n_rays)
     sensors = real_layout_sensors(spark, yaml_path, layout)
-    return profile(rays, hit_events(spark, rays, sensors), REAL_ETA_BINS)
+    return profile(per_ray_hits(real_rays(spark, n_rays), sensors), REAL_ETA_BINS)
 
 
 def _real_hits_cte(n_rays: int, yaml_path: str, layout: str) -> str:
@@ -351,11 +338,11 @@ def real_hit_count_histogram_sql(
 
 # =====================================================================
 # ONE-PASS multi-variant acceptance: geometric_acceptance.ipynb cell 60
-# probes 4 detector variants PER RAY in a single pass. The ray side is
-# projected once against a variant-TAGGED union of corner tables
-# (`variant_corners` -> `hit_events(..., tags=["variant"])`); only the
-# dimension-sized corner union grows with the variant count. The
-# registry memoizes that hit table once per session for both queries
+# probes 4 detector variants PER RAY in a single pass. The rays are
+# crossed with the variant dimension and looked up in a variant-TAGGED
+# union of corner tables, correlated on the variant (`variant_per_ray`),
+# so the ray generator is still scanned once. The registry memoizes
+# that per-ray table once per session for both queries
 # (registry_r7.mv_per_hit).
 # =====================================================================
 
@@ -372,20 +359,20 @@ def variant_corners(variants: dict[str, DataFrame]) -> DataFrame:
     )
 
 
-def _variant_rays(spark: SparkSession, n_rays: int, variants) -> DataFrame:
-    """The study rays once per variant: the ray-total side of the
-    multi-variant aggregates (the projection never reads it)."""
-    vdim = spark.createDataFrame([(v,) for v in variants], "variant STRING")
-    return real_rays(spark, n_rays).crossJoin(F.broadcast(vdim))
-
-
-def multi_variant_acceptance(
-    spark: SparkSession, n_rays: int, variants: dict[str, DataFrame], hits: DataFrame
+def variant_per_ray(
+    spark: SparkSession, n_rays: int, variants: dict[str, DataFrame]
 ) -> DataFrame:
+    """(variant, event_id, eta, n): the study rays once per variant,
+    each counted against its own variant's corner table."""
+    vdim = spark.createDataFrame([(v,) for v in variants], "variant STRING")
+    rays = real_rays(spark, n_rays).crossJoin(F.broadcast(vdim))
+    return per_ray_hits(rays, variant_corners(variants), ["variant"])
+
+
+def multi_variant_acceptance(per_ray: DataFrame) -> DataFrame:
     """(variant, eta_bin, n_rays, eff, mean_n, mean_t) for every
-    variant; `hits` is the variant-tagged `hit_events` table of
-    `variant_corners(variants)`."""
-    return profile(_variant_rays(spark, n_rays, variants), hits, REAL_ETA_BINS, ["variant"])
+    variant of a `variant_per_ray` table."""
+    return profile(per_ray, REAL_ETA_BINS, ["variant"])
 
 
 def multi_variant_acceptance_sql(
@@ -438,14 +425,12 @@ LEFT JOIN hit_agg h ON h.variant = v.variant AND h.eta_bin = t.eta_bin
 """
 
 
-def multi_variant_hit_histogram(
-    spark: SparkSession, n_rays: int, variants: dict[str, DataFrame], hits: DataFrame
-) -> DataFrame:
+def multi_variant_hit_histogram(per_ray: DataFrame) -> DataFrame:
     """Per-(variant, n) hit-count histogram + per-variant mean from
-    the same hit table as `multi_variant_acceptance`
+    the same `variant_per_ray` table as `multi_variant_acceptance`
     (geometric_acceptance.ipynb cells 62-66: `Hist1D(nHits[v],
     "5,-0.5,4.5")` per variant and the printed histogram means)."""
-    hist = hit_histogram(_variant_rays(spark, n_rays, variants), hits, ["variant"])
+    hist = hit_histogram(per_ray, ["variant"])
     w = Window.partitionBy("variant")
     mean_n = F.sum(F.col("n") * F.col("cnt")).over(w) / F.sum("cnt").over(w)
     return hist.select("variant", "n", "cnt", F.round(mean_n, 6).alias("mean_n"))
@@ -455,7 +440,7 @@ def multi_variant_hit_histogram_sql(
     n_rays: int, variant_corner_sql: dict[str, str]
 ) -> str:
     """DuckDB twin of `multi_variant_hit_histogram` — same tagged
-    corner union, same arithmetic zero-bin reconstruction."""
+    corner union; it rebuilds the n = 0 bin from the ray total."""
     union = " UNION ALL ".join(
         f"SELECT '{name}' AS variant, * FROM ({sql})"
         for name, sql in variant_corner_sql.items()

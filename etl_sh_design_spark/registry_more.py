@@ -193,20 +193,22 @@ def q_run_comparison(spark, sf_dir):
     profile bin. (The S6 Parquet run-cache sink/scan is exercised in
     tests/test_sources.py; the comparison join itself is this query.)
 
-    Both runs go through ONE acceptance pipeline: the rays carry a
-    `run` tag through `acceptance.hit_events` and `acceptance.profile`,
-    so the detector side and the containment join are built once. The
-    a/b comparison is a conditional aggregation over the (run, eta_bin)
-    profile instead of a self-join whose branches would each re-plan
-    the whole pipeline; bins missing either run are dropped, like the
-    oracle's inner join."""
-    runs = (
-        datagen.rays(spark, _N_A)
-        .withColumn("run", F.lit("a"))
-        .unionByName(datagen.rays(spark, _N_B).withColumn("run", F.lit("b")))
-    )
-    hits = acceptance.hit_events(spark, runs, datagen.sensors(spark), ["run"])
-    prof = acceptance.profile(runs, hits, acceptance.ETA_BINS, ["run"])
+    Both runs go through ONE acceptance pipeline: each run's rays carry
+    a `run` tag through `acceptance.per_ray_hits` (per run, below the
+    union, as that function requires), and one `acceptance.profile`
+    aggregates their union; the second run reuses the first's rect
+    broadcasts. The a/b comparison is a conditional aggregation over
+    the (run, eta_bin) profile instead of a self-join whose branches
+    would each re-plan the whole pipeline; bins missing either run are
+    dropped, like the oracle's inner join."""
+    sensors = datagen.sensors(spark)
+
+    def run_per_ray(run: str, n: int):
+        rays = datagen.rays(spark, n).withColumn("run", F.lit(run))
+        return acceptance.per_ray_hits(rays, sensors, ["run"])
+
+    per_ray = run_per_ray("a", _N_A).unionByName(run_per_ray("b", _N_B))
+    prof = acceptance.profile(per_ray, acceptance.ETA_BINS, ["run"])
     eff_a = F.max(F.when(F.col("run") == "a", F.col("eff")))
     eff_b = F.max(F.when(F.col("run") == "b", F.col("eff")))
     return (

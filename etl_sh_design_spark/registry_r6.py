@@ -2,8 +2,8 @@
 real data.
 
 `real_acceptance_profile` runs the flagship MC geometric-acceptance
-plan (rays -> P14 projection -> binned J1 containment -> J2 hit count
--> eta-binned efficiency/mean-n/mean-t profile) over the reference's
+plan (rays -> P14 projection -> per-ray J1 containment lookup -> J2 hit
+count -> eta-binned efficiency/mean-n/mean-t profile) over the reference's
 OWN exported layout database `layouts/database_new.yaml` (7180 sensor
 centers, parity-tested in tests/test_reference_parity.py) instead of
 the synthetic sensor grid — the strongest parity statement the engine

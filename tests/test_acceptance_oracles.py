@@ -86,12 +86,7 @@ def _variants(spark, yaml_path):
 
 
 def _variant_hits(spark, variants):
-    return acceptance.hit_events(
-        spark,
-        acceptance.real_rays(spark, N_RAYS),
-        acceptance.variant_corners(variants),
-        ["variant"],
-    )
+    return acceptance.variant_per_ray(spark, N_RAYS, variants)
 
 
 def _variant_sql(yaml_path):
@@ -105,7 +100,7 @@ def _variant_sql(yaml_path):
 def test_multi_variant_acceptance_matches_oracle(spark, yaml_path):
     variants = _variants(spark, yaml_path)
     _assert_matches(
-        acceptance.multi_variant_acceptance(spark, N_RAYS, variants, _variant_hits(spark, variants)),
+        acceptance.multi_variant_acceptance(_variant_hits(spark, variants)),
         acceptance.multi_variant_acceptance_sql(N_RAYS, _variant_sql(yaml_path)),
     )
 
@@ -113,6 +108,17 @@ def test_multi_variant_acceptance_matches_oracle(spark, yaml_path):
 def test_multi_variant_hit_histogram_matches_oracle(spark, yaml_path):
     variants = _variants(spark, yaml_path)
     _assert_matches(
-        acceptance.multi_variant_hit_histogram(spark, N_RAYS, variants, _variant_hits(spark, variants)),
+        acceptance.multi_variant_hit_histogram(_variant_hits(spark, variants)),
         acceptance.multi_variant_hit_histogram_sql(N_RAYS, _variant_sql(yaml_path)),
     )
+
+
+def test_real_acceptance_profile_pins_broadcast(spark, yaml_path):
+    """The real corner table comes from createDataFrame, which has no
+    Catalyst stats: unpinned, each layer's lookup would plan a
+    sort-merge join that shuffles the rays. Pinned broadcast, the
+    eta-bin aggregation is the only exchange."""
+    df = acceptance.real_acceptance_profile(spark, N_RAYS, yaml_path, "new")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" not in plan, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan

@@ -339,26 +339,20 @@ class TestBoards:
 def _variant_hits(spark, n_rays, variants):
     from etl_sh_design_spark.plans import acceptance
 
-    return acceptance.hit_events(
-        spark,
-        acceptance.real_rays(spark, n_rays),
-        acceptance.variant_corners(variants),
-        ["variant"],
-    )
+    return acceptance.variant_per_ray(spark, n_rays, variants)
 
 
 class TestMultiVariantPlan:
     def test_single_ray_scan(self, spark):
         """The physical plan's Range-source count must not grow with
-        the variant count: rays are scanned once for the projection and
-        once for the per-bin totals, regardless of 1 or 3 variants."""
+        the variant count: rays are scanned once, and the per-bin
+        totals come from the same per-ray table, regardless of 1 or 3
+        variants."""
         from etl_sh_design_spark import datagen
         from etl_sh_design_spark.plans import acceptance
 
         def ray_scans(variants):
-            df = acceptance.multi_variant_acceptance(
-                spark, 1000, variants, _variant_hits(spark, 1000, variants)
-            )
+            df = acceptance.multi_variant_acceptance(_variant_hits(spark, 1000, variants))
             plan = df._jdf.queryExecution().executedPlan().toString()
             # the ray source is Range(0, n_rays); the corner tables are
             # also Range-backed but at other sizes — only the ray scans
@@ -368,14 +362,14 @@ class TestMultiVariantPlan:
         synth = datagen.sensors(spark).select("layer", "ax1", "ax2", "ay1", "ay2")
         one = ray_scans({"a": synth})
         three = ray_scans({"a": synth, "b": synth, "c": synth})
-        assert one == 2  # projection side + per-bin totals side
+        assert one == 1  # one scan: the per-ray lookup feeds the totals
         assert three == one, f"ray scan multiplied by variants: {one} -> {three}"
 
     def test_hist_single_ray_scan_and_mass_conservation(self, spark):
         """The cells-62-66 histogram twin: (a) its ray-scan count is
         also variant-independent, (b) per variant the bins sum to the
-        total ray count (the arithmetic n=0 reconstruction conserves
-        events), and (c) with one variant it reproduces the flagship
+        total ray count (every ray, misses included, lands in one
+        bin), and (c) with one variant it reproduces the flagship
         per-ray histogram restricted to the same eta window."""
         from etl_sh_design_spark import datagen
         from etl_sh_design_spark.plans import acceptance
@@ -383,9 +377,7 @@ class TestMultiVariantPlan:
         synth = datagen.sensors(spark).select("layer", "ax1", "ax2", "ay1", "ay2")
 
         def ray_scans(variants):
-            df = acceptance.multi_variant_hit_histogram(
-                spark, 1000, variants, _variant_hits(spark, 1000, variants)
-            )
+            df = acceptance.multi_variant_hit_histogram(_variant_hits(spark, 1000, variants))
             plan = df._jdf.queryExecution().executedPlan().toString()
             return plan.count("Range (0, 1000")
 
@@ -394,9 +386,7 @@ class TestMultiVariantPlan:
         )
 
         two = {"a": synth, "b": synth}
-        rows = acceptance.multi_variant_hit_histogram(
-            spark, 5000, two, _variant_hits(spark, 5000, two)
-        ).collect()
+        rows = acceptance.multi_variant_hit_histogram(_variant_hits(spark, 5000, two)).collect()
         n_total = (
             datagen.rays(spark, 5000)
             .filter(F.col("eta") < acceptance.REAL_ETA_BINS.hi)
@@ -421,7 +411,7 @@ class TestMultiVariantPlan:
         multi = {
             r.n: r.cnt
             for r in acceptance.multi_variant_hit_histogram(
-                spark, 5000, one, _variant_hits(spark, 5000, one)
+                _variant_hits(spark, 5000, one)
             ).collect()
         }
         assert {k: v for k, v in multi.items() if v > 0} == {
@@ -438,9 +428,7 @@ class TestMultiVariantPlan:
         one = {"s": synth}
         multi = {
             (r.eta_bin): (r.n_rays, r.eff, r.mean_n, r.mean_t)
-            for r in acceptance.multi_variant_acceptance(
-                spark, 5000, one, _variant_hits(spark, 5000, one)
-            ).collect()
+            for r in acceptance.multi_variant_acceptance(_variant_hits(spark, 5000, one)).collect()
         }
         # independent recomputation from the flagship per-ray oracle,
         # restricted to the same eta window and bin spec

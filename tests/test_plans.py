@@ -47,31 +47,34 @@ def test_containment_join_uses_layer_hash_key(spark):
 
 
 def test_binned_containment_is_pure_hash_join(spark):
-    """The scale-out strategy: spatial binning leaves NO nested-loop
-    join anywhere in the plan."""
+    """Spatial binning leaves NO nested-loop join anywhere in the
+    flagship plan: each layer's lookup is a hash join on the point's
+    (cell_x, cell_y), and no layers cross join is left."""
     from etl_sh_design_spark.plans.acceptance import acceptance_profile
 
     plan = _plan(acceptance_profile(spark, 1000))
-    # at most the one 4-row layers cross join; the sensors join must be
-    # a hash join on (layer, cell_x, cell_y)
-    assert plan.count("BroadcastNestedLoopJoin") <= 1
+    assert "BroadcastNestedLoopJoin" not in plan, plan
     assert any(
         k in plan for k in ("BroadcastHashJoin", "ShuffledHashJoin", "SortMergeJoin")
     )
 
 
 def test_acceptance_profile_never_joins_rays_back(spark):
-    """The flagship profile is arithmetic over ray totals and hit
-    events: no join is keyed on event_id (per-ray counts are never
-    joined back to the rays), and the ray generator is scanned exactly
-    twice — the projection and the per-bin totals."""
+    """The flagship profile is one pass over the rays: the ray
+    generator is scanned exactly once, each layer is one broadcast
+    ExistenceJoin in the ray stage, nothing is aggregated or joined
+    per event_id (per-ray counts are never joined back to the rays),
+    and the eta-bin aggregation is the only shuffle."""
     import re
 
     from etl_sh_design_spark.plans.acceptance import acceptance_profile
 
     plan = _plan(acceptance_profile(spark, 1000))
     assert not re.search(r"Join \[[^\]]*event_id", plan), plan
-    assert plan.count("Range (0, 1000") == 2, plan
+    assert not re.search(r"HashAggregate\(keys=\[[^\]]*event_id", plan), plan
+    assert plan.count("Range (0, 1000") == 1, plan
+    assert plan.count("ExistenceJoin") == 4, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
 def test_partial_aggregation_before_shuffle(spark):
@@ -139,6 +142,96 @@ def test_binned_equals_broadcast_strategy(spark):
     assert len(want) > 500
     for joined in (binned, broadcast):
         assert sorted(tuple(r) for r in joined.select("pid", "rid").collect()) == want
+
+
+def test_per_ray_lookup_matches_brute_force(spark):
+    """`acceptance.per_ray_hits` counts, per ray and variant, exactly
+    the layers a brute-force strict-`<` scan finds, on seeded rays and
+    rects built to hit every edge: negative coordinates, points exactly
+    on rect edges and on cell boundaries, rects spanning two cells, two
+    overlapping rects around one point in one layer (a join form would
+    count or duplicate that ray twice), and two variants whose rects
+    differ (a dropped correlation would mix them)."""
+    import math
+    import random
+
+    from etl_sh_design_spark.datagen import LAYER_Z_MM
+    from etl_sh_design_spark.plans.acceptance import CELL_MM, per_ray_hits
+
+    rng = random.Random(20261018)
+    variants = ("a", "b")
+
+    def coord(lo, hi):
+        # quarter-mm grid: rect corners and cell boundaries are exact
+        return rng.randint(int(lo * 4), int(hi * 4)) / 4
+
+    def exact_tanth(z, m):
+        # the tan(theta) whose P14 product z * tanth is exactly m, so a
+        # point lands on a chosen coordinate in that layer
+        t = m / z
+        while z * t != m:
+            t = math.nextafter(t, math.inf if z * t < m else -math.inf)
+        return t
+
+    rays = [(rng.uniform(0.005, 0.05), rng.uniform(-1, 1), rng.uniform(-1, 1)) for _ in range(400)]
+    for z in LAYER_Z_MM:  # on cell boundaries: p = 32 * (50 k / 32) = 50 k
+        t = exact_tanth(z, 32.0)
+        for k in range(-3, 3):
+            for j in (-2, 0, 1, k):
+                rays.append((t, k * CELL_MM / 32, j * CELL_MM / 32))
+    rects = []
+    for v in variants:
+        for layer in range(1, 5):
+            for _ in range(40):  # extent <= cell: at most 2 cells per axis
+                x1, y1 = coord(-150, 140), coord(-150, 140)
+                rects.append((v, layer, x1, x1 + coord(0.25, CELL_MM), y1, y1 + coord(0.25, CELL_MM)))
+    for i, (t, c, s) in enumerate(rays[::5]):
+        layer, v, other = 1 + i % 4, variants[i % 2], variants[1 - i % 2]
+        px, py = LAYER_Z_MM[layer - 1] * t * c, LAYER_Z_MM[layer - 1] * t * s
+        rects += [  # the point on each edge of a rect in one variant ...
+            (v, layer, px, px + 10.0, py - 5.0, py + 5.0),
+            (v, layer, px - 10.0, px, py - 5.0, py + 5.0),
+            (v, layer, px - 5.0, px + 5.0, py, py + 10.0),
+            (v, layer, px - 5.0, px + 5.0, py - 10.0, py),
+            # ... and inside two overlapping rects of the other
+            (other, layer, px - 3.0, px + 3.0, py - 2.0, py + 2.0),
+            (other, layer, px - 4.0, px + 1.0, py - 1.0, py + 6.0),
+        ]
+    for layer in range(1, 5):
+        for k in range(-3, 3):  # straddling a cell boundary on both axes
+            b = k * CELL_MM
+            rects += [
+                ("a", layer, b - 2.5, b + 2.5, b - 1.0, b + 7.5),
+                ("b", layer, b - 10.0, b, b, b + 10.0),  # (b, b) is its corner
+            ]
+
+    want = []
+    for eid, (t, c, s) in enumerate(rays):
+        for v in variants:
+            n = 0
+            for layer, z in enumerate(LAYER_Z_MM, 1):
+                px, py = z * t * c, z * t * s
+                n += any(
+                    rv == v and rl == layer and x1 < px < x2 and y1 < py < y2
+                    for rv, rl, x1, x2, y1, y2 in rects
+                )
+            want.append((v, eid, n))
+    ray_df = spark.createDataFrame(
+        [(eid, v, 2.0, t, c, s) for eid, (t, c, s) in enumerate(rays) for v in variants],
+        "event_id BIGINT, variant STRING, eta DOUBLE, tanth DOUBLE, cphi DOUBLE, sphi DOUBLE",
+    )
+    rect_df = spark.createDataFrame(
+        rects, "variant STRING, layer INT, ax1 DOUBLE, ax2 DOUBLE, ay1 DOUBLE, ay2 DOUBLE"
+    )
+    got = per_ray_hits(ray_df, rect_df, ["variant"]).select("variant", "event_id", "n")
+    assert sorted(tuple(r) for r in got.collect()) == sorted(want)
+    # the data is not degenerate: every multiplicity occurs, and the
+    # variants disagree on many rays
+    assert {n for _, _, n in want} == {0, 1, 2, 3, 4}
+    by_ray = {}
+    for v, eid, n in want:
+        by_ray.setdefault(eid, set()).add(n)
+    assert sum(len(ns) > 1 for ns in by_ray.values()) > 50
 
 
 def test_incremental_dedup_broadcasts_key_side(spark):

@@ -1,14 +1,14 @@
 #!/usr/bin/env python
 """Scale-probe the flagship MC acceptance pipeline (VERDICT r8 item 6):
-run `acceptance_profile`'s plan at 1e6 / 1e7 / 1e8 rays (binned
-containment join), and report wall clock, shuffle
+run `acceptance_profile`'s plan at 1e6 / 1e7 / 1e8 rays (per-ray
+EXISTS lookup), and report wall clock, shuffle
 bytes written, and rays/s per rung. 1e6 is the committed SCALE.md
 reference point (the reference's own study is 1e5 rays x 4 variants,
 29.7 s single-threaded).
 
 The rays side is generated (spark.range + hash uniforms), so the probe
-measures the PLAN — projection cross join, binned equi-join, per-event
-countDistinct, bins-sized final agg — not parquet scan speed.
+measures the PLAN — per-layer projection, four broadcast EXISTS
+lookups in the ray stage, bins-sized final agg — not parquet scan speed.
 
 Usage: python tools/mc_scale_probe.py [max_exponent]   (default 8)
 """

@@ -52,22 +52,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # query -> set of rule codes that are accepted there, with the reason
 # kept next to the entry so the whitelist IS the documentation.
 WHITELIST: dict[str, dict[str, str]] = {
-    # binned containment keeps one 4-row layers cross join
-    # (test_binned_containment_is_pure_hash_join pins <= 1)
-    "acceptance_profile": {
-        "NESTED_LOOP": "4-row layers dim cross join (plan-tested bound)",
-    },
+    # the 1-event re-probe crosses its one ray with the 4-row layers dim
     "mc_sanity_probe": {
-        "NESTED_LOOP": "4-row layers dim cross join (same sub-plan)",
-    },
-    "hit_count_histogram": {
-        "NESTED_LOOP": "4-row layers dim cross join + 1-row ray-total scalar",
-    },
-    "real_acceptance_profile": {
-        "NESTED_LOOP": "4-row layers dim cross join (same sub-plan)",
-    },
-    "real_tdr_hit_histogram": {
-        "NESTED_LOOP": "4-row layers dim cross join + 1-row ray-total scalar",
+        "NESTED_LOOP": "1 probe ray x 4-row layers dim cross join",
     },
     "efficiency_returns": {
         "NESTED_LOOP": "scalar total broadcast join (1-row side)",
@@ -187,12 +174,8 @@ WHITELIST: dict[str, dict[str, str]] = {
     "tile_notebook_pins": {
         "NESTED_LOOP": "grid x face-dim cross joins (5 bare-annulus configs)"
     },
-    "acceptance_multi_variant": {
-        "NESTED_LOOP": "4-row layers dim cross join + rays x 3-row variant dim (totals)"
-    },
-    "acceptance_multi_variant_hist": {
-        "NESTED_LOOP": "4-row layers dim cross join + rays x 3-row variant dim (totals)"
-    },
+    "acceptance_multi_variant": {"NESTED_LOOP": "rays x 3-row variant dim cross join"},
+    "acceptance_multi_variant_hist": {"NESTED_LOOP": "rays x 3-row variant dim cross join"},
     "real_module_rows": {
         "GLOBAL_WIN": "rank over the 52-row distinct-y layout dimension"
     },
@@ -206,8 +189,6 @@ WHITELIST: dict[str, dict[str, str]] = {
     "tile_flavor_counts": {"NESTED_LOOP": "slot x blocked-rect overlap (layout-bounded)"},
     # J8: zones dim table is O(10) rows
     "bv_zone_counts": {"NESTED_LOOP": "zone range-lookup dim (O(10) rows)"},
-    # shared detector scan carries the 4-row layers cross join
-    "j9_run_comparison": {"NESTED_LOOP": "4-row layers dim cross join"},
     # 1-row scalar sides
     "tfidf_cosine_topk": {"NESTED_LOOP": "1-row doc-count/norm scalar"},
     "bm25_topk": {
