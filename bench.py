@@ -474,15 +474,15 @@ def main() -> None:
         invalidate=lambda: memo.clear("tiling"),
     )
     # Round 12: the two multi-variant acceptance queries share ONE
-    # memoized per-(variant, event) hit table (registry_r7.mv_per_hit
+    # memoized per-(variant, event) hit table (registry_detector.mv_per_hit
     # — the 1e6-ray scan + binned containment join was ~95% of BOTH
     # plans). The build is owned by its own timed entry so each query
     # reports only its tail; the total still pays the build once.
-    from etl_sh_design_spark import registry_r7 as _r7
+    from etl_sh_design_spark import registry_detector
 
     _family_entry(
         "acceptance_family_shared",
-        lambda: _r7.mv_per_hit(spark).count(),
+        lambda: registry_detector.mv_per_hit(spark).count(),
         # clear only the per-hit table; the static variant corner set
         # ("mv_variants") is dimension metadata, not timed work
         invalidate=lambda: memo.clear("mv_hits"),

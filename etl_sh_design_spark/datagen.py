@@ -70,39 +70,27 @@ def sensors(spark: SparkSession) -> DataFrame:
     outline inset by DEADSPACE (P3/P4, ETL.py:90-120). ~2.4k rows/layer —
     always broadcast in containment joins.
     """
-    grid = (
-        spark.range(4 * NX * NY)
-        .withColumn("layer", (F.col("id") / (NX * NY)).cast("int") + 1)
-        .withColumn("rem", F.col("id") % (NX * NY))
-        .withColumn("ix", (F.col("rem") / NY).cast("bigint"))
-        .withColumn("iy", (F.col("rem") % NY).cast("bigint"))
-        .withColumn("sensor_id", F.col("id"))
-        .withColumn("x", (F.col("ix") - (NX - 1) / 2.0) * PITCH_X)
-        .withColumn("y", (F.col("iy") - (NY - 1) / 2.0) * PITCH_Y)
-        .withColumn("x1", F.col("x") - HALF_H)
-        .withColumn("x2", F.col("x") + HALF_H)
-        .withColumn("y1", F.col("y") - HALF_W)
-        .withColumn("y2", F.col("y") + HALF_W)
-    )
-    rmax = F.sqrt(
-        F.greatest(F.col("x1") * F.col("x1"), F.col("x2") * F.col("x2"))
-        + F.greatest(F.col("y1") * F.col("y1"), F.col("y2") * F.col("y2"))
-    )
-    rmin = F.sqrt(
-        F.least(F.col("x1") * F.col("x1"), F.col("x2") * F.col("x2"))
-        + F.least(F.col("y1") * F.col("y1"), F.col("y2") * F.col("y2"))
-    )
+    # One filter and one projection over the id: a withColumn chain
+    # re-analyzes the plan at every step, and every acceptance query
+    # builds this table.
+    rem = F.col("id") % (NX * NY)
+    x = ((rem / NY).cast("bigint") - (NX - 1) / 2.0) * PITCH_X
+    y = ((rem % NY).cast("bigint") - (NY - 1) / 2.0) * PITCH_Y
+    x1, x2, y1, y2 = x - HALF_H, x + HALF_H, y - HALF_W, y + HALF_W
+    rmax = F.sqrt(F.greatest(x1 * x1, x2 * x2) + F.greatest(y1 * y1, y2 * y2))
+    rmin = F.sqrt(F.least(x1 * x1, x2 * x2) + F.least(y1 * y1, y2 * y2))
     return (
-        grid.filter((rmax < R_OUTER) & (rmin > R_INNER))
+        spark.range(4 * NX * NY)
+        .filter((rmax < R_OUTER) & (rmin > R_INNER))
         .select(
-            "layer",
-            "sensor_id",
-            "x",
-            "y",
-            (F.col("x1") + DEADSPACE).alias("ax1"),
-            (F.col("x2") - DEADSPACE).alias("ax2"),
-            (F.col("y1") + DEADSPACE).alias("ay1"),
-            (F.col("y2") - DEADSPACE).alias("ay2"),
+            ((F.col("id") / (NX * NY)).cast("int") + 1).alias("layer"),
+            F.col("id").alias("sensor_id"),
+            x.alias("x"),
+            y.alias("y"),
+            (x1 + DEADSPACE).alias("ax1"),
+            (x2 - DEADSPACE).alias("ax2"),
+            (y1 + DEADSPACE).alias("ay1"),
+            (y2 - DEADSPACE).alias("ay2"),
         )
     )
 

@@ -14,7 +14,7 @@ pre-aggregated before the fold (SURVEY.md §4.2 item 3).
 W7, the exact consecutive-split search per supermodule, is a zero-UDF
 mask enumeration (`best_consecutive_split`) shared by the synthetic
 config search (`find_bv_config`) and the real-layout study
-(`registry_r6.bv_min_segments`). The whole family runs as Column
+(`registry_layout.bv_min_segments`). The whole family runs as Column
 expressions, with no Python worker.
 """
 

@@ -1,7 +1,7 @@
 """Monte-Carlo geometric acceptance (SURVEY.md §3.1 stages 8-9;
 reference dee_geometry.py:570-700) and its variants: the real YAML
 layouts, several detector variants per ray, and the run comparison
-(registry_more.q_run_comparison).
+(registry_detector.q_run_comparison).
 
 Every Spark query of the family is a composition of two pieces, over
 one scan of the rays:
@@ -343,7 +343,7 @@ def real_hit_count_histogram_sql(
 # union of corner tables, correlated on the variant (`variant_per_ray`),
 # so the ray generator is still scanned once. The registry memoizes
 # that per-ray table once per session for both queries
-# (registry_r7.mv_per_hit).
+# (registry_detector.mv_per_hit).
 # =====================================================================
 
 

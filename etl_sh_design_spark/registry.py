@@ -13,25 +13,29 @@ order is rounded (6 dp) on BOTH sides; pure integer-derived doubles
 Registered oracle views: region nation customer supplier part orders
 lineitem events documents embeddings. Detector-domain queries inline
 their fixture CTEs from `datagen` (deterministic cross-engine).
+
+This module holds the registry itself, the reference-data gate, the
+relational core and the public API. The paper's two jobs register from
+`registry_detector` (MC acceptance, the sensor grid) and
+`registry_layout` (tiling, BV, boards, occupancy); the other
+`registry_*` modules carry the relational and curation families.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from etl_sh_design_spark import datagen
-from etl_sh_design_spark.functions import physics, text, transforms
 from etl_sh_design_spark.operators.histogram import (
     BinSpec,
     efficiency,
     histogram1d,
     histogram2d,
 )
-from etl_sh_design_spark.plans import acceptance
+from etl_sh_design_spark.sources.io import reference_dir
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -61,60 +65,40 @@ def query(name: str, sql: str | None = None):
 
 
 # =====================================================================
-# Detector-domain queries (reference semantics, oracle via fixture CTEs)
+# Reference-data gate
 # =====================================================================
+# The real-data queries read files of the reference checkout
+# (SPARK_GRAFT_REF_DIR). Paths are relative to it.
+NEW_YAML = "layouts/database_new.yaml"
+TDR_YAML = "layouts/database_TDR.yaml"
+FACE_TSVS = {i: f"data/Face {i}.txt" for i in (1, 2, 3, 4)}  # face -> TSV
 
-@query("acceptance_profile", acceptance.acceptance_profile_sql(N_RAYS))
-def q_acceptance_profile(spark, sf_dir):
-    """Flagship: MC geometric-acceptance efficiency profile (SURVEY §3.1
-    stages 8-9; J1+J2+A10-A12+J7+P13)."""
-    return acceptance.acceptance_profile(spark, N_RAYS)
-
-
-@query("hit_count_histogram", acceptance.hit_count_histogram_sql(N_RAYS))
-def q_hit_histogram(spark, sf_dir):
-    """A10 on MC hits: Hist1D(nHits) (example.ipynb cell 19)."""
-    return acceptance.hit_count_histogram(spark, N_RAYS)
+_WITHHELD: list[str] = []
 
 
-@query("mc_sanity_probe", acceptance.mc_sanity_probe_sql(N_RAYS))
-def q_mc_sanity_probe(spark, sf_dir):
-    """MC sanity re-probe (dee_geometry.py:712-810): first n>=3 ray
-    re-projected per layer with a per-layer containment re-count."""
-    return acceptance.mc_sanity_probe(spark, N_RAYS)
+def ref_path(rel: str) -> str:
+    """Absolute path of a reference-checkout file."""
+    return os.path.join(reference_dir(), rel)
 
 
-@query(
-    "sensor_corners",
-    f"SELECT layer, sensor_id, x, y, ax1, ax2, ay1, ay2 FROM ({datagen.SENSORS_SQL})",
-)
-def q_sensor_corners(spark, sf_dir):
-    """P3/P4/P18: the flattened corner table (ETL.py:752-770) — grid
-    gen, outline, active-area inset, annulus containment filter."""
-    return datagen.sensors(spark)
+def reference_query(name: str, needs: Iterable[str], oracle: Callable[[], str]):
+    """Decorator: register `name` like `query` when every
+    reference-relative file in `needs` exists. `oracle` builds the
+    oracle SQL from those files, so it is called only then. Otherwise
+    the function stays unregistered and `name` is recorded as withheld,
+    so the driver window and the plan-lint whitelist can tell it from a
+    stale entry."""
+    if all(os.path.isfile(ref_path(rel)) for rel in needs):
+        return query(name, oracle())
+    _WITHHELD.append(name)
+    return lambda fn: fn
 
 
-@query(
-    "sensor_physics",
-    f"""
-SELECT sensor_id, round(r, 6) AS r,
-       round({physics.IRRADIATION_SQL.format(r='r')}, 6) AS fluence,
-       round({physics.CURRENT_SQL.format(r='r')}, 6) AS current_ma,
-       round({physics.OCCUPANCY_SQL.format(r='r')}, 6) AS occupancy_pct
-FROM (SELECT sensor_id, sqrt(x*x + y*y) AS r FROM ({datagen.SENSORS_SQL}))
-""",
-)
-def q_sensor_physics(spark, sf_dir):
-    """P8-P11: per-sensor radius -> fluence, leakage current, occupancy
-    (sensors.py:38-57, ETL.py:148-161)."""
-    s = datagen.sensors(spark).withColumn("r", F.sqrt(F.col("x") ** 2 + F.col("y") ** 2))
-    return s.select(
-        "sensor_id",
-        F.round("r", 6).alias("r"),
-        F.round(physics.irradiation("r"), 6).alias("fluence"),
-        F.round(physics.sensor_current(physics.irradiation("r")), 6).alias("current_ma"),
-        F.round(physics.occupancy("r"), 6).alias("occupancy_pct"),
-    )
+def withheld() -> list[str]:
+    """Names the gate did not register because reference files are
+    missing on this host."""
+    _load_extensions()
+    return list(_WITHHELD)
 
 
 # =====================================================================
@@ -226,23 +210,23 @@ def q5(spark, sf_dir):
     )
 
 
-_PRICE_BINS = BinSpec(20, 0.0, 100000.0)
+PRICE_BINS = BinSpec(20, 0.0, 100000.0)
 
 
 @query(
     "histogram_price",
     f"""
-SELECT {_PRICE_BINS.bin_sql('l_extendedprice')} AS bin,
-       {_PRICE_BINS.center_sql(_PRICE_BINS.bin_sql('l_extendedprice'))} AS bin_center,
+SELECT {PRICE_BINS.bin_sql('l_extendedprice')} AS bin,
+       {PRICE_BINS.center_sql(PRICE_BINS.bin_sql('l_extendedprice'))} AS bin_center,
        count(*) AS cnt
 FROM lineitem
-WHERE {_PRICE_BINS.range_sql('l_extendedprice')}
+WHERE {PRICE_BINS.range_sql('l_extendedprice')}
 GROUP BY 1, 2
 """,
 )
 def q_hist_price(spark, sf_dir):
     """A10: histogram1d operator on lineitem.l_extendedprice."""
-    return histogram1d(_t(spark, sf_dir, "lineitem"), "l_extendedprice", _PRICE_BINS)
+    return histogram1d(_t(spark, sf_dir, "lineitem"), "l_extendedprice", PRICE_BINS)
 
 
 _QTY_BINS = BinSpec(10, 0.0, 50.0)
@@ -518,22 +502,6 @@ def q_semi_anti(spark, sf_dir):
     return w.unionByName(wo).groupBy("kind").agg(F.count(F.lit(1)).alias("n"))
 
 
-@query(
-    "setops_mirror_union",
-    """
-WITH s AS (SELECT x, y FROM ({SENSORS}) WHERE layer = 1)
-SELECT x, y FROM s
-UNION
-SELECT -x AS x, y FROM s
-""".replace("{SENSORS}", datagen.SENSORS_SQL),
-)
-def q_mirror_union(spark, sf_dir):
-    """SO4 mirror union (x,y) U (-x,y) with distinct (dee_geometry.py:457-461)."""
-    s = datagen.sensors(spark).filter(F.col("layer") == 1).select("x", "y")
-    mirrored = s.select((-F.col("x")).alias("x"), "y")
-    return s.unionByName(mirrored).distinct()
-
-
 # =====================================================================
 # public API consumed by __spark_entry__.py
 # =====================================================================
@@ -651,17 +619,15 @@ def _load_extensions() -> None:
     """Import side-registering query modules (deferred to avoid a
     circular import at module load)."""
     from etl_sh_design_spark import (  # noqa: F401
-        registry_bv,
+        registry_detector,
+        registry_layout,
         registry_ext,
         registry_extra,
-        registry_more,
         registry_pipeline,
         registry_r2,
         registry_r5,
         registry_r5b,
         registry_r5c,
-        registry_r6,
-        registry_r7,
         registry_r8,
         registry_r8b,
         registry_r8c,
@@ -669,6 +635,5 @@ def _load_extensions() -> None:
         registry_r10,
         registry_r11,
         registry_r12,
-        registry_tiling,
         registry_wide,
     )

@@ -1,6 +1,5 @@
 """Extension-layer query registry: dedup, similarity search, text
-analysis, multimodal plumbing, streaming-equivalent windows, plus the
-detector BV-zone / partition-lookup queries.
+analysis, multimodal plumbing, streaming-equivalent windows.
 
 These are NOT reference operators (the reference has none of this —
 SURVEY.md §2.8/§2.9); they are the training-data-pipeline layer the
@@ -15,11 +14,10 @@ oracle-checkable.
 
 from __future__ import annotations
 
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from etl_sh_design_spark import datagen, memo
-from etl_sh_design_spark.functions import physics, text
+from etl_sh_design_spark import memo
+from etl_sh_design_spark.functions import text
 from etl_sh_design_spark.operators import multimodal
 from etl_sh_design_spark.operators.dedup import (
     MD5_INT64_SQL,
@@ -30,7 +28,6 @@ from etl_sh_design_spark.operators.dedup import (
     simhash_pairs,
     word_shingles_sql,
 )
-from etl_sh_design_spark.operators.partition import PARTITION_LOOKUP_SQL, partition_lookup
 from etl_sh_design_spark.operators.similarity import (
     cosine_topk,
     embedding_near_dup_pairs,
@@ -622,9 +619,7 @@ def q_ann_multiprobe_recall(spark, sf_dir):
     )
 
 
-@query(
-    "embedding_neardup",
-    f"""
+_EMBEDDING_NEARDUP_SQL = f"""
 WITH ve AS ({_VE}),
 aug AS (
   SELECT vec_id, d, v FROM ve
@@ -642,11 +637,12 @@ scored AS (
   FROM dots JOIN norms na ON na.vec_id = id_a JOIN norms nb ON nb.vec_id = id_b
 )
 SELECT id_a, id_b, cos FROM scored WHERE cos >= 0.99
-""",
-)
-def q_embedding_neardup(spark, sf_dir):
-    """Embedding-cosine near-dup pairs (cos >= 0.99) on the augmented
-    embedding set (each vector U a deterministic ±1% perturbation)."""
+"""
+
+
+def _augmented_embeddings(spark, sf_dir):
+    """The embedding set, each vector U a deterministic ±1% perturbation
+    of it at vec_id + 1e6, double-widened."""
     e = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
     )
@@ -656,7 +652,30 @@ def q_embedding_neardup(spark, sf_dir):
             "embedding", lambda x, i: x * (1 + 0.01 * ((i % 2) * 2 - 1))
         ).alias("embedding"),
     )
-    return embedding_near_dup_pairs(e.unionByName(pert), threshold=0.99)
+    return e.unionByName(pert)
+
+
+@query("embedding_neardup", _EMBEDDING_NEARDUP_SQL)
+def q_embedding_neardup(spark, sf_dir):
+    """Embedding-cosine near-dup pairs (cos >= 0.99) on the augmented
+    embedding set (each vector U a deterministic ±1% perturbation)."""
+    return embedding_near_dup_pairs(_augmented_embeddings(spark, sf_dir), threshold=0.99)
+
+
+@query("embedding_neardup_blocked", _EMBEDDING_NEARDUP_SQL)
+def q_embedding_neardup_blocked(spark, sf_dir):
+    """`embedding_neardup` with the EXACT distributed blocked-GEMM
+    path forced (max_broadcast_rows below the corpus size): same
+    oracle, same rows — the driver-checked proof that the cogrouped
+    block-pair decomposition is bit-identical to the broadcast path,
+    on top of the local golden. Dispatch normally picks this path
+    automatically past 1e6 rows (operators/similarity.py)."""
+    return embedding_near_dup_pairs(
+        _augmented_embeddings(spark, sf_dir),
+        threshold=0.99,
+        max_broadcast_rows=100,
+        target_block_rows=400,
+    )
 
 
 # ------------------------------------------------------------ text analysis
@@ -909,89 +928,6 @@ def q_tumbling(spark, sf_dir):
             "event_type",
             "n",
             "sum_value",
-        )
-    )
-
-
-# ------------------------------------------- detector: zones + partitions
-_ZONES_SQL = (
-    "SELECT * FROM (VALUES (1, 0.0e0, 400.0e0), (2, 400.0e0, 520.0e0), "
-    "(3, 520.0e0, 700.0e0), (4, 700.0e0, 900.0e0), (5, 900.0e0, 1300.0e0)) "
-    "AS zones(zone, lo, hi)"
-)
-
-
-@query(
-    "bv_zone_counts",
-    f"""
-WITH sensors AS ({datagen.SENSORS_SQL}),
-zones AS ({_ZONES_SQL}),
-s AS (SELECT sqrt(x*x + y*y) AS r FROM sensors)
-SELECT z.zone AS zone, count(*) AS n_sensors,
-       round(avg({physics.CURRENT_SQL.format(r='s.r')}), 6) AS mean_current
-FROM s JOIN zones z ON s.r >= z.lo AND s.r < z.hi
-GROUP BY 1
-""",
-)
-def q_bv_zones(spark, sf_dir):
-    """J8 range-join: sensor radius -> first enclosing BV zone, with
-    per-zone current stats (bias_voltage.ipynb get_n_BV semantics)."""
-    zones = spark.createDataFrame(
-        [(1, 0.0, 400.0), (2, 400.0, 520.0), (3, 520.0, 700.0), (4, 700.0, 900.0), (5, 900.0, 1300.0)],
-        "zone INT, lo DOUBLE, hi DOUBLE",
-    )
-    s = datagen.sensors(spark).select(
-        F.sqrt(F.col("x") ** 2 + F.col("y") ** 2).alias("r")
-    )
-    joined = s.join(
-        F.broadcast(zones), (F.col("r") >= F.col("lo")) & (F.col("r") < F.col("hi"))
-    )
-    return joined.groupBy("zone").agg(
-        F.count(F.lit(1)).alias("n_sensors"),
-        F.round(F.avg(physics.sensor_current(physics.irradiation("r"))), 6).alias(
-            "mean_current"
-        ),
-    )
-
-
-@query(
-    "partition_flavors",
-    f"""
-WITH ns AS (SELECT DISTINCT p_size AS n FROM part),
-pl AS ({PARTITION_LOOKUP_SQL})
-SELECT n, ordinal, flavor, n_boards, covered
-FROM ns JOIN pl USING (n)
-""",
-)
-def q_partition_flavors(spark, sf_dir):
-    """U2 integer-partition DP as a broadcast lookup join: decompose
-    each distinct p_size into readout-board flavors {7,6,3}
-    (partition.py:26-67 semantics, lookup-table strategy)."""
-    ns = _t(spark, sf_dir, "part").select(F.col("p_size").alias("n")).distinct()
-    return ns.join(F.broadcast(partition_lookup(spark)), "n").select(
-        "n", "ordinal", "flavor", "n_boards", "covered"
-    )
-
-
-@query(
-    "mod_partition_totals",
-    f"""
-WITH mp AS ({datagen.MOD_PARTITIONS_SQL})
-SELECT flavor, count(*) AS n_boards, count(DISTINCT row_ordinal) AS n_rows
-FROM (SELECT row_ordinal, unnest(flavors) AS flavor FROM mp)
-GROUP BY 1
-""",
-)
-def q_mod_partition_totals(spark, sf_dir):
-    """S7 pinned-partition seed table exploded to per-flavor board
-    counts (A6 flavor-count aggregation)."""
-    mp = datagen.mod_partitions(spark)
-    return (
-        mp.select("row_ordinal", F.explode("flavors").alias("flavor"))
-        .groupBy("flavor")
-        .agg(
-            F.count(F.lit(1)).alias("n_boards"),
-            F.countDistinct("row_ordinal").alias("n_rows"),
         )
     )
 

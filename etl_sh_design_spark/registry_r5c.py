@@ -1153,105 +1153,107 @@ def q_skew_report_events(spark, sf_dir):
 
 
 # --------------------------------------------------------------------
-# physics rollup over the reference's REAL shipped module centers
+# hash-stratified kNN panel (closes the r5 verdict's "watch" note)
 # --------------------------------------------------------------------
-import os  # noqa: E402
+from etl_sh_design_spark.operators.dedup import md5_int64  # noqa: E402
 
-from etl_sh_design_spark.functions import physics  # noqa: E402
-from etl_sh_design_spark.sources.io import reference_dir  # noqa: E402
-
-_REF_DIR = reference_dir()
-
-_FACE_READ_DUCK = f"""
-  SELECT {{face}} AS face,
-         try_cast(m AS BIGINT) AS module,
-         try_cast(x AS DOUBLE) AS x, try_cast(y AS DOUBLE) AS y
-  FROM read_csv('{_REF_DIR}/data/Face {{face}}.txt', delim='\t',
-    header=false, skip=1,
-    columns={{{{'m':'VARCHAR','x':'VARCHAR','y':'VARCHAR','z':'VARCHAR',
-              'p1':'VARCHAR','p2':'VARCHAR','p3':'VARCHAR'}}}})
-  WHERE try_cast(m AS BIGINT) IS NOT NULL AND try_cast(x AS DOUBLE) IS NOT NULL
-    AND try_cast(y AS DOUBLE) IS NOT NULL AND try_cast(z AS DOUBLE) IS NOT NULL
-"""
-
-# The reference-artifact parity queries only register when the
-# reference checkout is actually present (env SPARK_GRAFT_REF_DIR,
-# default /root/reference) — mirroring the pytest skipif, so the
-# registry imports and replays cleanly in any environment.
-_HAVE_REF_FACES = all(
-    os.path.isfile(os.path.join(_REF_DIR, "data", f"Face {i}.txt"))
-    for i in (1, 2, 3, 4)
-)
+_PANEL = 500
 
 
-def _query_if(cond, name, sql):
-    """Register under @query only when `cond`; otherwise leave the
-    function unregistered (rows-only absent, per VERDICT r5 item 1).
-    `sql` may be a zero-arg callable so reference-derived oracle
-    strings (which read reference files) are only built when the
-    checkout is actually present."""
-    if cond:
-        if callable(sql):
-            sql = sql()
-        return query(name, sql)
-    return lambda fn: fn
-
-
-@_query_if(
-    _HAVE_REF_FACES,
-    "real_face_physics",
+@query(
+    "knn_label_accuracy_stratified",
     f"""
-WITH faces AS (
-  {" UNION ALL ".join(_FACE_READ_DUCK.format(face=i) for i in (1, 2, 3, 4))}
+WITH panel AS (
+  SELECT vec_id FROM (
+    SELECT vec_id, {MD5_INT64_SQL.format(x="CAST(vec_id AS VARCHAR)")} AS h
+    FROM embeddings
+  ) ORDER BY h, vec_id LIMIT {_PANEL}
 ),
-rr AS (SELECT face, module, sqrt(x * x + y * y) AS r FROM faces),
-cur AS (
-  SELECT face, r,
-         round({physics.CURRENT_SQL.format(r='r')}, 6) AS cur_ma
-  FROM rr
+ve AS ({_VE}),
+norms AS (SELECT vec_id, sqrt(sum(v * v)) AS nrm FROM ve GROUP BY 1),
+dots AS (
+  SELECT q.vec_id AS qid, c.vec_id AS cid, sum(q.v * c.v) AS dot
+  FROM ve q JOIN panel p ON p.vec_id = q.vec_id
+  JOIN ve c ON q.d = c.d AND q.vec_id <> c.vec_id
+  GROUP BY 1, 2
+),
+scored AS (
+  SELECT qid, cid, round(dot / (nq.nrm * nc.nrm), 6) AS cos
+  FROM dots JOIN norms nq ON nq.vec_id = qid JOIN norms nc ON nc.vec_id = cid
+),
+topk AS (
+  SELECT qid, cid FROM (
+    SELECT qid, cid,
+           row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid ASC) AS rk
+    FROM scored) WHERE rk <= 3
+),
+lab AS (SELECT vec_id, label FROM embeddings),
+votes AS (
+  SELECT t.qid, ql.label AS qlabel, cl.label AS clabel, count(*) AS n
+  FROM topk t
+  JOIN lab ql ON ql.vec_id = t.qid
+  JOIN lab cl ON cl.vec_id = t.cid
+  GROUP BY 1, 2, 3
+),
+pred AS (
+  SELECT qid, qlabel, clabel AS plabel FROM (
+    SELECT qid, qlabel, clabel,
+           row_number() OVER (PARTITION BY qid ORDER BY n DESC, clabel ASC) AS vr
+    FROM votes) WHERE vr = 1
 )
-SELECT face, CAST(count(*) AS BIGINT) AS n_modules,
-       round(min(r), 6) AS r_min, round(max(r), 6) AS r_max,
-       round(sum(CAST(round(cur_ma * 1e6) AS BIGINT)) / 1e6, 6)
-         AS total_current_ma
-FROM cur GROUP BY 1
+SELECT qlabel AS label, count(*) AS n_probes,
+       CAST(sum(CASE WHEN plabel = qlabel THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
+       round(sum(CASE WHEN plabel = qlabel THEN 1 ELSE 0 END) * 1.0e0 / count(*), 6)
+         AS accuracy
+FROM pred GROUP BY 1
 """,
 )
-def q_real_face_physics(spark, sf_dir):
-    """The P8-P10 physics chain over the reference repo's OWN shipped
-    module-center files (`data/Face 1-4.txt`), quarantining the real
-    `#REF!` spreadsheet-error row via the S1 PERMISSIVE scan: per
-    face, module count, radius envelope, and the summed leakage
-    current (exact integer micro-mA sum, order-independent). This is
-    the parity query that runs the engine's operators on the
-    reference's actual data, not a synthetic twin of it.
-
-    Scale shape: layout files are dimension-sized; the whole query is
-    one scan + a 4-group aggregate. (The oracle reads the same files
-    through DuckDB's CSV reader with try_cast quarantine semantics —
-    identical clean sets, proven in tests/test_reference_parity.py.)"""
-    from etl_sh_design_spark.sources.io import read_face_tsv, split_corrupt
-
-    parts = []
-    for i in (1, 2, 3, 4):
-        clean, _ = split_corrupt(
-            read_face_tsv(spark, os.path.join(_REF_DIR, "data", f"Face {i}.txt"))
-        )
-        parts.append(clean.select(F.lit(i).alias("face"), "module", "x", "y"))
-    faces = parts[0]
-    for p in parts[1:]:
-        faces = faces.unionByName(p)
-    r = F.sqrt(F.col("x") ** 2 + F.col("y") ** 2)
-    cur = faces.select(
-        "face",
-        r.alias("r"),
-        F.round(physics.sensor_current(physics.irradiation(r)), 6).alias("cur_ma"),
+def q_knn_label_accuracy_stratified(spark, sf_dir):
+    """`knn_label_accuracy` with the HASH-STRATIFIED probe panel the
+    r5 verdict's watch note asked for: the 500 vectors with the
+    SMALLEST md5(vec_id) values — an unbiased deterministic sample of
+    the whole corpus (no id-prefix bias), still hard-capped at 500
+    probes at ANY corpus size (the exact-scoring work stays linear in
+    N; the panel is an order-statistic of a uniform hash, selected by
+    TakeOrderedAndProject — no global sort exchange). md5 is
+    bit-identical across engines, so the panel — and hence the hash —
+    is oracle-stable."""
+    e = _t(spark, sf_dir, "embeddings")
+    panel = (
+        e.select("vec_id", md5_int64(F.col("vec_id").cast("string")).alias("h"))
+        .orderBy("h", "vec_id")
+        .limit(_PANEL)
+        .select("vec_id")
     )
-    return cur.groupBy("face").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_modules"),
-        F.round(F.min("r"), 6).alias("r_min"),
-        F.round(F.max("r"), 6).alias("r_max"),
+    probes = e.join(F.broadcast(panel), "vec_id")
+    topk = cosine_topk(probes, e, k=3).select("qid", "cid")
+    lab = e.select("vec_id", "label")
+    votes = (
+        topk.join(
+            lab.select(F.col("vec_id").alias("qid"), F.col("label").alias("qlabel")),
+            "qid",
+        )
+        .join(
+            lab.select(F.col("vec_id").alias("cid"), F.col("label").alias("clabel")),
+            "cid",
+        )
+        .groupBy("qid", "qlabel", "clabel")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    w = W.partitionBy("qid").orderBy(F.col("n").desc(), F.col("clabel").asc())
+    pred = (
+        votes.withColumn("vr", F.row_number().over(w))
+        .filter(F.col("vr") == 1)
+        .select("qid", "qlabel", F.col("clabel").alias("plabel"))
+    )
+    return pred.groupBy(F.col("qlabel").alias("label")).agg(
+        F.count(F.lit(1)).alias("n_probes"),
+        F.sum(F.when(F.col("plabel") == F.col("qlabel"), 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_correct"),
         F.round(
-            F.sum(F.round(F.col("cur_ma") * 1e6, 0).cast("bigint")) / 1e6, 6
-        ).alias("total_current_ma"),
+            F.sum(F.when(F.col("plabel") == F.col("qlabel"), 1).otherwise(0))
+            / F.count(F.lit(1)),
+            6,
+        ).alias("accuracy"),
     )

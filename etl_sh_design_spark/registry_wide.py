@@ -14,7 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from etl_sh_design_spark.registry import _t, query
+from etl_sh_design_spark.operators.histogram import histogram1d, histogram_mean
+from etl_sh_design_spark.registry import PRICE_BINS, _t, query
 
 
 @query(
@@ -726,4 +727,57 @@ def q21_waiting_suppliers(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("numwait"))
         .orderBy(F.desc("numwait"), F.asc("s_name"))
         .limit(20)
+    )
+
+
+
+@query(
+    "a16_histogram_mean",
+    f"""
+WITH h AS (
+  SELECT {PRICE_BINS.bin_sql('l_extendedprice')} AS bin,
+         {PRICE_BINS.center_sql(PRICE_BINS.bin_sql('l_extendedprice'))} AS bin_center,
+         count(*) AS cnt
+  FROM lineitem WHERE {PRICE_BINS.range_sql('l_extendedprice')}
+  GROUP BY 1, 2
+)
+SELECT round(sum(bin_center * cnt) / sum(cnt), 6) AS hist_mean FROM h
+""",
+)
+def q_histogram_mean(spark, sf_dir):
+    """A16: mean recovered from binned data (h0.mean() semantics)."""
+    h = histogram1d(_t(spark, sf_dir, "lineitem"), "l_extendedprice", PRICE_BINS)
+    return histogram_mean(h).select(F.round("hist_mean", 6).alias("hist_mean"))
+
+
+@query(
+    "string_date_revenue",
+    """
+SELECT year(l_shipdate) AS ship_year,
+       substr(p_type, 1, 6) AS type_prefix,
+       count(*) AS n_items,
+       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+FROM lineitem JOIN part ON l_partkey = p_partkey
+WHERE p_name LIKE '%a%' AND l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
+GROUP BY 1, 2
+""",
+)
+def q_string_date(spark, sf_dir):
+    """§2.8 string/date built-in surface: LIKE, substring, year
+    extraction, timestamp comparison (driver TPC-H-style checks)."""
+    li = _t(spark, sf_dir, "lineitem")
+    p = _t(spark, sf_dir, "part")
+    return (
+        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        .filter(F.col("p_name").like("%a%") & (F.col("l_shipdate") >= "1995-01-01"))
+        .groupBy(
+            F.year("l_shipdate").alias("ship_year"),
+            F.substring("p_type", 1, 6).alias("type_prefix"),
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_items"),
+            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
+                "revenue"
+            ),
+        )
     )

@@ -80,6 +80,23 @@ def read_face_tsv(spark: SparkSession, path: str) -> DataFrame:
     return df.drop(*[f"_pad{i}" for i in range(n_extra)])
 
 
+def read_face_tsv_sql(path: str, face: int) -> str:
+    """DuckDB twin of `read_face_tsv` + `split_corrupt`: the clean
+    (face, module, x, y) rows, the padded columns read as text and
+    unparseable rows dropped by try_cast."""
+    return f"""
+  SELECT {face} AS face,
+         try_cast(m AS BIGINT) AS module,
+         try_cast(x AS DOUBLE) AS x, try_cast(y AS DOUBLE) AS y
+  FROM read_csv('{path}', delim='\t',
+    header=false, skip=1,
+    columns={{'m':'VARCHAR','x':'VARCHAR','y':'VARCHAR','z':'VARCHAR',
+              'p1':'VARCHAR','p2':'VARCHAR','p3':'VARCHAR'}})
+  WHERE try_cast(m AS BIGINT) IS NOT NULL AND try_cast(x AS DOUBLE) IS NOT NULL
+    AND try_cast(y AS DOUBLE) IS NOT NULL AND try_cast(z AS DOUBLE) IS NOT NULL
+"""
+
+
 def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Clean rows vs quarantined rows (the skip-and-report pattern).
 

@@ -14,7 +14,7 @@ import pytest
 
 from etl_sh_design_spark import datagen
 from etl_sh_design_spark.plans import acceptance
-from etl_sh_design_spark.registry_r7 import _variant_corner_sql
+from etl_sh_design_spark.registry_detector import variant_corner_sql
 from etl_sh_design_spark.sources.io import write_yaml_layout
 from tests.test_driver_contract import _normalize
 
@@ -91,8 +91,8 @@ def _variant_hits(spark, variants):
 
 def _variant_sql(yaml_path):
     return {
-        "new": _variant_corner_sql(yaml_path, "new"),
-        "TDR": _variant_corner_sql(yaml_path, "TDR"),
+        "new": variant_corner_sql(yaml_path, "new"),
+        "TDR": variant_corner_sql(yaml_path, "TDR"),
         "synthetic": f"SELECT layer, ax1, ax2, ay1, ay2 FROM ({datagen.SENSORS_SQL})",
     }
 

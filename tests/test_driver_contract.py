@@ -170,9 +170,13 @@ def test_entry_smoke(spark):
 def test_driver_window_is_priority_list():
     """Regression guard: the external driver verifies the FIRST 50
     entries of queries() — that prefix must stay exactly the curated
-    rotation list (a silent reorder would quietly un-verify queries)."""
-    from etl_sh_design_spark.registry import _DRIVER_WINDOW_PRIORITY
+    rotation list (a silent reorder would quietly un-verify queries).
+    Names the reference-data gate withheld on this host drop out; the
+    rest keep their order."""
+    from etl_sh_design_spark.registry import _DRIVER_WINDOW_PRIORITY, withheld
 
     names = list(entrymod.queries())
-    assert names[: len(_DRIVER_WINDOW_PRIORITY)] == _DRIVER_WINDOW_PRIORITY
+    gone = set(withheld())
+    expected = [n for n in _DRIVER_WINDOW_PRIORITY if n not in gone]
+    assert names[: len(expected)] == expected
     assert len(_DRIVER_WINDOW_PRIORITY) == 50

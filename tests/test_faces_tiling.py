@@ -1,7 +1,7 @@
 """Faithful per-face real tiling: golden pins, machine equivalence,
 Spark==golden cross-checks, board arithmetic, multi-variant plan shape.
 
-The evidence chain for the tile_real_* oracles (registry_r7.py):
+The evidence chain for the tile_real_* oracles (registry_layout.py):
 
 1. COMMITTED reference outputs pin the shared algorithm (grid, corner
    conditions, runs, partition, counting): five numbers from
@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 import tools.ref_tiling_golden as G
 from etl_sh_design_spark.plans import dee_faces, tiling
-from etl_sh_design_spark.registry_r7 import REAL_TILING_PINNED
+from etl_sh_design_spark.registry_layout import REAL_TILING_PINNED
 
 # ---------------------------------------------------------------------
 # 0. blocked geometry: the engine's shape builders vs the golden's copy

@@ -365,7 +365,9 @@ def test_partition_matches_reference_algorithm():
     import importlib.util
     import os
 
-    ref_path = "/root/reference/partition.py"
+    from etl_sh_design_spark.sources.io import reference_dir
+
+    ref_path = os.path.join(reference_dir(), "partition.py")
     if not os.path.exists(ref_path):
         pytest.skip("reference checkout not available")
     spec = importlib.util.spec_from_file_location("ref_partition", ref_path)
@@ -390,8 +392,9 @@ def test_real_tdr_hit_histogram_matches_notebook_stored_output(spark):
     import os
 
     from etl_sh_design_spark.plans import acceptance
+    from etl_sh_design_spark.sources.io import reference_dir
 
-    yml = "/root/reference/layouts/database_TDR.yaml"
+    yml = os.path.join(reference_dir(), "layouts/database_TDR.yaml")
     if not os.path.exists(yml):
         pytest.skip("reference checkout not available")
     out = {

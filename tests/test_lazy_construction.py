@@ -119,7 +119,7 @@ EAGER_BUILDERS = {
     "audited probed-cells ADC set",
     # round-12 additions
     "acceptance_multi_variant": "may pay the shared memoized "
-    "multi-variant per-hit build (registry_r7.mv_per_hit): whichever "
+    "multi-variant per-hit build (registry_detector.mv_per_hit): whichever "
     "of the two multi-variant queries is constructed FIRST in a "
     "session absorbs the one-time checkpoint jobs (AQE materializes "
     "query stages on toRdd at checkpoint creation) — the "

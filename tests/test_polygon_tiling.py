@@ -264,7 +264,9 @@ def test_real_bv_study_matches_reference_chain_search(spark):
 
     import pytest as _pytest
 
-    if not os.path.exists("/root/reference/layouts/database_new.yaml"):
+    from etl_sh_design_spark.sources.io import reference_dir
+
+    if not os.path.exists(os.path.join(reference_dir(), "layouts/database_new.yaml")):
         _pytest.skip("reference checkout not available")
     from etl_sh_design_spark.registry import queries
 
@@ -362,7 +364,7 @@ def test_bv_min_segments_property_random_modules(spark):
                 best = min(best, len(segs))
         return best
 
-    from etl_sh_design_spark.registry_r6 import bv_min_segments
+    from etl_sh_design_spark.registry_layout import bv_min_segments
 
     smm = spark.createDataFrame(
         rows, "row_ord INT, sm_idx INT, n_mod INT, p INT, r_min DOUBLE, r_max DOUBLE"
@@ -459,7 +461,7 @@ def test_split_search_rejects_oversized_supermodule(spark):
     """An SM with more than SM_SIZE positions would need more split
     masks than the search enumerates; it fails inside the job instead
     of reporting a minimum over a truncated mask set."""
-    from etl_sh_design_spark.registry_r6 import bv_min_segments
+    from etl_sh_design_spark.registry_layout import bv_min_segments
 
     smm = spark.createDataFrame(
         [(0, 0, 8, p, 600.0 + p, 610.0 + p) for p in range(8)],
@@ -480,20 +482,22 @@ def test_modify_partitions_toggle_changes_bv_channels(spark):
 
     import pytest as _pytest
 
-    if not os.path.exists("/root/reference/layouts/database_new.yaml"):
+    from etl_sh_design_spark.sources.io import reference_dir
+
+    if not os.path.exists(os.path.join(reference_dir(), "layouts/database_new.yaml")):
         _pytest.skip("reference checkout not available")
     from pyspark.sql import functions as F
 
-    from etl_sh_design_spark import registry_r6
+    from etl_sh_design_spark import registry_layout
 
     cfg = spark.createDataFrame(
         [("FBK_w13_5fC", 435.93, -2251.2)], "config STRING, a DOUBLE, b DOUBLE"
     )
     out = {}
     for mp in (False, True):
-        smm = registry_r6.real_sm_modules(spark, modify_partitions=mp)
+        smm = registry_layout.real_sm_modules(spark, modify_partitions=mp)
         r = (
-            registry_r6.bv_min_segments(smm, cfg)
+            registry_layout.bv_min_segments(smm, cfg)
             .agg(F.sum("n_segs").alias("ch"), F.count(F.lit(1)).alias("sms"))
             .first()
         )

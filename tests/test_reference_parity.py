@@ -15,11 +15,12 @@ from pyspark.sql import functions as F
 from etl_sh_design_spark.sources.io import (
     read_face_tsv,
     read_yaml_layout,
+    reference_dir,
     split_corrupt,
     write_yaml_layout,
 )
 
-_REF = "/root/reference"
+_REF = reference_dir()
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(f"{_REF}/data"), reason="reference repo not mounted"

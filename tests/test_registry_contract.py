@@ -1,0 +1,160 @@
+"""The registry's driver contract, pinned: the registered query names,
+the 50-entry driver window, and a digest of every `oracle_sql()` text.
+
+Ten queries register only when their reference-checkout files exist
+(SPARK_GRAFT_REF_DIR). To reach them on any host, the test writes a
+small synthetic reference tree of the same shape — `layouts/database_
+{new,TDR}.yaml` through `write_yaml_layout` and four `data/Face N.txt`
+TSVs — and snapshots the registry in a subprocess pointed at it. The
+tree's directory is replaced by a placeholder before hashing, so the
+digests do not depend on where the tree was written.
+
+A refactor keeps `tests/registry_contract.json` as it is. A change that
+means to alter a name or an oracle regenerates it:
+
+    python -m tests.test_registry_contract --pin
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PIN_PATH = os.path.join(ROOT, "tests", "registry_contract.json")
+PLACEHOLDER = "<REF_DIR>"
+
+_FACES = [("disk1", "front"), ("disk1", "back"), ("disk2", "front"), ("disk2", "back")]
+_SENSOR_DY = 11.25  # sensor centers sit at module y -/+ (gap + sensor_y / 2)
+
+_SNAPSHOT = f"""
+import hashlib, json, os
+from etl_sh_design_spark import registry
+ref = os.environ["SPARK_GRAFT_REF_DIR"]
+names = list(registry.queries())
+osql = registry.oracle_sql()
+print(json.dumps({{
+    "names": names,
+    "oracle_sha256": {{
+        n: hashlib.sha256(s.replace(ref, {PLACEHOLDER!r}).encode()).hexdigest()
+        for n, s in osql.items()
+    }},
+}}))
+"""
+
+
+def _module_centers(face: int) -> list[tuple[float, float]]:
+    """26 module rows of 24 modules on the x > 0 half (the study's D2
+    row count), shifted a little per face so the faces differ."""
+    return [
+        (30.0 + 43.6 * k + 1.5 * face, 1039.65 - 85.7 * r - 2.0 * face)
+        for r in range(26)
+        for k in range(24)
+    ]
+
+
+def write_reference_tree(spark, root: str) -> None:
+    """The synthetic reference checkout: Face 1-4 module-center TSVs
+    (header padded with trailing tabs and one `#REF!` row, like the
+    shipped files) and the `new` / `TDR` layout databases. `new` holds
+    the sensor centers the export pipeline derives from the TSVs; `TDR`
+    is `new` shifted by 5 mm in y."""
+    from etl_sh_design_spark.sources.io import write_yaml_layout
+
+    os.makedirs(os.path.join(root, "data"), exist_ok=True)
+    rows = []
+    for face, (disk, side) in enumerate(_FACES, start=1):
+        lines = ["Module\tX\tY\tZ\t\t\t"]
+        for m, (x, y) in enumerate(_module_centers(face), start=1):
+            lines.append(f"{m}\t{x!r}\t{y!r}\t{3000.0 + face!r}\t\t\t")
+            for cy in (y + _SENSOR_DY, y - _SENSOR_DY):
+                rows.append(("new", disk, side, x, cy))
+                rows.append(("TDR", disk, side, x, cy + 5.0))
+        lines.append("#REF!\t#REF!\t#REF!\t#REF!\t\t\t")
+        with open(os.path.join(root, "data", f"Face {face}.txt"), "w") as fh:
+            fh.write("\n".join(lines) + "\n")
+    centers = spark.createDataFrame(
+        rows, "layout STRING, disk STRING, face STRING, x DOUBLE, y DOUBLE"
+    )
+    for layout in ("new", "TDR"):
+        write_yaml_layout(
+            centers.filter(centers.layout == layout),
+            os.path.join(root, "layouts", f"database_{layout}.yaml"),
+        )
+
+
+def snapshot(ref_dir: str) -> dict:
+    """Registered names (in `queries()` order) and oracle digests of a
+    fresh interpreter whose reference checkout is `ref_dir`."""
+    env = dict(os.environ, SPARK_GRAFT_REF_DIR=ref_dir)
+    out = subprocess.run(
+        [sys.executable, "-c", _SNAPSHOT],
+        env=env, cwd=ROOT, check=True, capture_output=True, text=True,
+    ).stdout
+    return json.loads(out.strip().splitlines()[-1])
+
+
+def _pin(with_ref: dict, without_ref: dict) -> dict:
+    return {
+        "names": sorted(with_ref["names"]),
+        "names_without_reference": sorted(without_ref["names"]),
+        "window": with_ref["names"][:50],
+        "oracle_sha256": dict(sorted(with_ref["oracle_sha256"].items())),
+    }
+
+
+def test_registry_contract(spark, tmp_path):
+    with open(PIN_PATH) as fh:
+        pin = json.load(fh)
+    tree = str(tmp_path / "reference")
+    write_reference_tree(spark, tree)
+    with_ref = snapshot(tree)
+    without_ref = snapshot(str(tmp_path / "absent"))
+    got = _pin(with_ref, without_ref)
+
+    assert got["names"] == pin["names"]
+    assert got["names_without_reference"] == pin["names_without_reference"]
+    assert got["window"] == pin["window"]
+    changed = sorted(
+        n
+        for n in set(got["oracle_sha256"]) | set(pin["oracle_sha256"])
+        if got["oracle_sha256"].get(n) != pin["oracle_sha256"].get(n)
+    )
+    assert not changed, f"oracle SQL changed: {changed}"
+    # reference-independent oracles render the same without the tree
+    for n, digest in without_ref["oracle_sha256"].items():
+        assert digest == pin["oracle_sha256"][n], n
+    # without the reference, the window is the pinned one minus the
+    # withheld names, in the same order
+    present = set(without_ref["names"])
+    kept = [n for n in pin["window"] if n in present]
+    assert without_ref["names"][: len(kept)] == kept
+
+
+if __name__ == "__main__":
+    # Writes the synthetic reference tree to DIR (for replaying the
+    # gated queries: SPARK_GRAFT_REF_DIR=DIR tools/verify_all.py), or
+    # with --pin re-pins the contract from a tree in a temporary dir.
+    import tempfile
+
+    from etl_sh_design_spark.session import get_spark
+
+    args = sys.argv[1:]
+    session = get_spark(app_name="registry_contract", cpus=1)
+    if args and args[0] == "--pin":
+        with tempfile.TemporaryDirectory() as tmp:
+            write_reference_tree(session, os.path.join(tmp, "reference"))
+            pin = _pin(
+                snapshot(os.path.join(tmp, "reference")),
+                snapshot(os.path.join(tmp, "absent")),
+            )
+        with open(PIN_PATH, "w") as fh:
+            json.dump(pin, fh, indent=1)
+            fh.write("\n")
+        print(f"pinned {len(pin['names'])} names to {PIN_PATH}")
+    else:
+        write_reference_tree(session, args[0])
+        print(f"wrote the synthetic reference tree to {args[0]}")
+    session.stop()

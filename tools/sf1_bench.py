@@ -77,6 +77,7 @@ def main() -> None:
     from etl_sh_design_spark import registry, registry_ext
     from etl_sh_design_spark.plans import acceptance
     from etl_sh_design_spark.session import get_spark
+    from etl_sh_design_spark.sources.io import reference_dir
 
     spark = get_spark(app_name="sf1_bench", ui=True)
     spark.sparkContext.setLogLevel("ERROR")
@@ -124,14 +125,13 @@ def main() -> None:
     # MC acceptance scales with rays, not sf — probe at 1e6 rays on
     # both the synthetic grid and the REAL layout (the 100 TB-shaped
     # workload: map-only projection + broadcast containment)
+    new_yaml = os.path.join(reference_dir(), "layouts", "database_new.yaml")
     for label, runner in (
         ("acceptance_1e6_rays", lambda: acceptance.acceptance_profile(spark, 1_000_000)),
         (
             "real_acceptance_1e6_rays",
-            lambda: acceptance.real_acceptance_profile(
-                spark, 1_000_000, "/root/reference/layouts/database_new.yaml"
-            )
-            if os.path.exists("/root/reference/layouts/database_new.yaml")
+            lambda: acceptance.real_acceptance_profile(spark, 1_000_000, new_yaml)
+            if os.path.exists(new_yaml)
             else None,
         ),
     ):
