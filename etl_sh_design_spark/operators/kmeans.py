@@ -28,6 +28,10 @@ _SQDIST = (
     "round(aggregate(zip_with(v, c, (a, b) -> (a - b) * (a - b)), "
     "cast(0.0 as double), (acc, x) -> acc + x), 6)"
 )
+# the DuckDB oracles' spelling of the same distance, and the explode of
+# a vector into (idx, x) rows for the per-dimension centroid mean
+_KM_DIST = "round(list_sum(list_transform(range(1, len(v) + 1), i -> (v[i] - c[i]) * (v[i] - c[i]))), 6)"
+_KM_EXPL = "unnest(list_transform(range(1, len(v) + 1), i -> {'idx': i, 'x': v[i]}))"
 
 
 def _as_double(col: str) -> F.Column:

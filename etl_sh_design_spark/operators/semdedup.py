@@ -34,6 +34,8 @@ from pyspark.sql import functions as F
 
 from etl_sh_design_spark.operators.kmeans import (
     GEMM_ASSIGN_MIN_ROWS_X_CELLS,
+    _KM_DIST,
+    _KM_EXPL,
     _as_double,
     _assign,
     _assign_gemm,
@@ -459,8 +461,6 @@ def semantic_dedup_profile(
 
 
 # --------------------------------------------------------------- oracle
-_KM_DIST = "round(list_sum(list_transform(range(1, len(v) + 1), i -> (v[i] - c[i]) * (v[i] - c[i]))), 6)"
-_KM_EXPL = "unnest(list_transform(range(1, len(v) + 1), i -> {'idx': i, 'x': v[i]}))"
 
 
 def _semdedup_assign_ctes(vectors_cte: str, k: int) -> str:

@@ -39,10 +39,10 @@ Plan shape / scale: grid generation and the annulus conditions are
 whole-stage codegen; the blocked flags are one Column expression per
 rect (operators/polygon.py: higher-order functions over the
 dimension-sized polygon set as a literal, no Python worker); the chain
-logic is two row-key windows + one broadcast-sized join —
-everything shuffles on (face, iy) only, so a 1000x finer grid still
-shuffles only row keys. Counting is a partition-lookup broadcast join
-+ map-side combine aggregation.
+rule is one pass of two (face, iy) windows over the flags, read once —
+no join, so the slot table is one pipeline that shuffles on row keys
+only, and a 1000x finer grid still shuffles only row keys. Counting is
+a partition-lookup broadcast join + map-side combine aggregation.
 
 Committed-output validation: the shared algorithm (grid + corner
 conditions + partition + counting, no polygons) reproduces FIVE
@@ -149,57 +149,55 @@ def _annulus_ok(x1, y1, x2, y2, r_in: float, r_out: float):
     return cond
 
 
-# The slot pipeline feeds MANY downstream branches (chain windows, the
-# two-pass runs split, totals/flavors/boards) — without materialization
-# the polygon-flag stage (interpreted higher-order functions) would
-# re-execute once per branch per query; memoized behind one lazy
-# persist it runs once per session and every consumer reads the
-# 841-row-per-face result.
+# The slot table feeds MANY downstream branches (the two-pass runs
+# split, totals/flavors/boards); memoized behind one lazy persist, the
+# polygon-flag stage (interpreted higher-order functions) runs once per
+# session and every consumer reads the 841-row-per-face result.
+# persist(), NOT localCheckpoint: even a lazy (eager=False) checkpoint
+# calls queryExecution.toRdd at build time, which pre-submits the
+# plan's broadcast-exchange jobs — breaking the no-jobs-at-construction
+# contract (tests/test_lazy_construction.py).
 # The face plans below are memoized too: re-building them per call
 # would mint fresh expression IDs, which changes the generated code
 # TEXT and defeats the Janino compile cache.
 def all_face_slots(spark: SparkSession) -> DataFrame:
-    """All four faces' slot tables, memoized per session behind lazy
-    persists. Two plans only: face1 (special r_inner=322 +
-    shorter attachments) and faces 2-4 together via the face-dim cross
-    join — the per-plan cost here is Catalyst/Janino time, not data."""
+    """All four faces' slot tables in one cached DataFrame. Two plans
+    only: face1 (special r_inner=322 + shorter attachments) and faces
+    2-4 together via the face-dim cross join — the per-plan cost here
+    is Catalyst/Janino time, not data."""
     from pyspark import StorageLevel
 
-    registry = memo.get(spark, "dee_faces", "slots", lambda: _all_face_slots_build(spark))
+    slots = memo.get(spark, "dee_faces", "slots", lambda: _all_face_slots_plan(spark))
     # a catalog.clearCache() (bench hygiene between queries) drops the
-    # persist registrations; re-mark every memoized segment lazily so
-    # consumers keep planning against the small cached sub-plans
-    # (persist() runs no job — the next action re-materializes once)
-    for df in registry:
-        if df.storageLevel == StorageLevel.NONE:
-            df.persist()
-    return registry[-1]
+    # registration; re-mark it (persist() runs no job — the next
+    # action materializes it once)
+    if slots.storageLevel == StorageLevel.NONE:
+        slots.persist()
+    return slots
 
 
-def _all_face_slots_build(spark: SparkSession) -> list[DataFrame]:
-    registry: list[DataFrame] = []
+def _all_face_slots_plan(spark: SparkSession) -> DataFrame:
     first = config_slots_plan(
         spark,
         faces=[("face1", *FACE_CONFIGS["face1"][:2])],
         r_inner=FACE_CONFIGS["face1"][2],
         polys=updated_layout_polygons(first=True),
-        persist_registry=registry,
     )
     rest = config_slots_plan(
         spark,
         faces=[(f, ori, cen) for f, (ori, cen, _r) in FACE_CONFIGS.items() if f != "face1"],
         r_inner=FACE_CONFIGS["face2"][2],
         polys=updated_layout_polygons(first=False),
-        persist_registry=registry,
     )
-    # persist(), NOT localCheckpoint: even a lazy (eager=False)
-    # checkpoint calls queryExecution.toRdd at build time, which
-    # prepares the physical plan and pre-submits its broadcast-exchange
-    # jobs — breaking the no-jobs-at-construction contract
-    # (tests/test_lazy_construction.py). persist is fully lazy and
-    # Catalyst substitutes the cached segment into every consumer.
-    registry.append(first.unionByName(rest).persist())
-    return registry
+    return first.unionByName(rest)
+
+
+def _face_plan(spark: SparkSession, key: str, build) -> DataFrame:
+    """A memoized plan over the slot table. The slot cache is re-marked
+    first, so a plan reused after a clearCache reads it again instead
+    of recomputing the slots in every branch."""
+    all_face_slots(spark)
+    return memo.get(spark, "dee_faces", key, build)
 
 
 def face_slots(spark: SparkSession, face: str) -> DataFrame:
@@ -217,7 +215,6 @@ def config_slots_plan(
     edge_x: float = EDGE_X,
     polys: dict[str, list] | None = None,
     with_maybe: bool = True,
-    persist_registry: list | None = None,
 ) -> DataFrame:
     """Dee.populate slot grids for an arbitrary configuration — the
     generalized form behind `face_slots`. `faces=[(label, orientation,
@@ -276,78 +273,42 @@ def config_slots_plan(
         ) & ~blocked_or_false("sx1", "my1", "sx2", "my2")
     else:
         mod_ok = F.lit(False)
-    flags = grid.select(
-        "face",
-        "iy",
-        "ix",
-        "xc",
-        "yc",
-        sm_ok.alias("sm_ok"),
-        mod_ok.alias("mod_ok"),
-    ).withColumn("mod_only", F.col("mod_ok") & ~F.col("sm_ok"))
-    # cut the plan after the flags: the inlined corner-condition and
-    # polygon-kernel expressions otherwise replicate into every
-    # downstream branch (chains, winners, the output join), each
-    # re-evaluating the interpreted kernel and compiling its own copy
-    # of the flag stage. persist(), not localCheckpoint — see
-    # all_face_slots.
-    flags = flags.persist()
-    if persist_registry is not None:
-        persist_registry.append(flags)
+    return slot_states(
+        grid.select(
+            "face", "iy", "ix", "xc", "yc", sm_ok.alias("sm_ok"), (mod_ok & ~sm_ok).alias("mod_only")
+        )
+    )
 
-    w = W.partitionBy("face", "iy").orderBy("ix")
-    flags = flags.withColumn("prev_yes", F.coalesce(F.lag("sm_ok").over(w), F.lit(False)))
 
-    # maximal chains of consecutive module-only slots
-    chains = (
-        flags.filter(F.col("mod_only"))
-        .withColumn("chain", F.col("ix") - F.row_number().over(w))
-        .groupBy("face", "iy", "chain")
-        .agg(
-            F.min("ix").alias("start_ix"),
-            F.max("ix").alias("end_ix"),
-            F.count(F.lit(1)).alias("length"),
-            # first-slot prev_yes via struct-min: semantically min_by
-            # (prev_yes, ix), but min_by mixed with declarative
-            # aggregates trips a multi-second codegen path (measured
-            # 4.4 s vs 0.3 s on this 841-row table)
-            F.min(F.struct("ix", "prev_yes"))
-            .getField("prev_yes")
-            .alias("prev_yes_start"),
-        )
-        .withColumn("qualifies", ~(F.col("prev_yes_start") & (F.col("length") == 1)))
+def slot_states(flags: DataFrame) -> DataFrame:
+    """The chain rule above, per slot, in one pass over the flags
+    (face, iy, ix, xc, yc, sm_ok, mod_only). A module-only slot ENDS a
+    chain when the next slot is not module-only; the chain is one slot
+    long when the previous slot is not module-only either, and then it
+    qualifies only if that slot is not 'yes'. Chains are disjoint, so
+    the first qualifying chain is the one whose end is leftmost: the
+    row's maybe sits on the least qualifying chain end."""
+    row = W.partitionBy("face", "iy")
+    w = row.orderBy("ix")
+    ends = flags.withColumn(
+        "qualifying_end",
+        F.col("mod_only")
+        & ~F.lead("mod_only", 1, False).over(w)
+        & (F.lag("mod_only", 1, False).over(w) | ~F.lag("sm_ok", 1, False).over(w)),
     )
-    winners = (
-        chains.filter(F.col("qualifies"))
-        .groupBy("face", "iy")
-        .agg(F.min("start_ix").alias("win_start"))
-        .join(
-            chains.select("face", "iy", F.col("start_ix").alias("win_start"), "end_ix"),
-            ["face", "iy", "win_start"],
-        )
-        .select("face", "iy", F.col("end_ix").alias("maybe_ix"))
+    maybe_ix = F.min(F.when(F.col("qualifying_end"), F.col("ix"))).over(row)
+    state = F.when(F.col("sm_ok"), "yes").when(F.col("ix") == maybe_ix, "maybe").otherwise("no")
+    return ends.select("face", "iy", "ix", "xc", "yc", state.alias("state")).withColumn(
+        "available", F.col("state") != "no"
     )
-    out = (
-        flags.join(F.broadcast(winners), ["face", "iy"], "left")
-        .withColumn(
-            "state",
-            F.when(F.col("sm_ok"), "yes")
-            .when(F.col("mod_only") & (F.col("ix") == F.col("maybe_ix")), "maybe")
-            .otherwise("no"),
-        )
-        .withColumn("available", F.col("state") != "no")
-        .select("face", "iy", "ix", "xc", "yc", "state", "available")
-    )
-    return out
 
 
 def face_runs(spark: SparkSession) -> DataFrame:
     """Runs of the four real faces with the reference's TWO-PASS
     fallback (ETL.py:646-668): tiling.runs_two_pass_from keyed by
     (face, iy), session-memoized."""
-    return memo.get(
+    return _face_plan(
         spark,
-        "dee_faces",
         "face_runs",
         lambda: runs_two_pass_from(all_face_slots(spark), partition_lookup(spark), ("face", "iy")),
     )
@@ -473,10 +434,12 @@ def config_module_totals(
     **cfg,
 ) -> DataFrame:
     """Module total for an arbitrary configuration summed over the
-    given (orientation, centering) faces — 1 row (config, n_modules).
-    Used by the committed-notebook-pin query: the whole plan is pure
-    codegen (no polygons in those configs), and all faces of a config
-    run in ONE plan via the face-dim cross join."""
+    given (orientation, centering) faces — 1 row (config, n_modules),
+    with the maybe machine and the two-pass fallback. All faces of a
+    config run in ONE plan via the face-dim cross join. No registered
+    query uses it: the notebook-pin query runs its no-maybe configs
+    through multi_config_module_totals_no_maybe; the flavor-literal pin
+    in tests/test_faces_tiling.py checks its maybe config here."""
     slots = config_slots_plan(
         spark,
         faces=[(f"{label}:{i}", ori, cen) for i, (ori, cen) in enumerate(faces)],
@@ -494,9 +457,7 @@ def config_module_totals(
 
 
 def face_supermodules(spark: SparkSession) -> DataFrame:
-    return memo.get(
-        spark, "dee_faces", "face_supermodules", lambda: _face_supermodules_plan(spark)
-    )
+    return _face_plan(spark, "face_supermodules", lambda: _face_supermodules_plan(spark))
 
 
 def _face_supermodules_plan(spark: SparkSession) -> DataFrame:
@@ -509,9 +470,7 @@ def _face_supermodules_plan(spark: SparkSession) -> DataFrame:
 
 
 def face_module_totals(spark: SparkSession) -> DataFrame:
-    return memo.get(
-        spark, "dee_faces", "face_module_totals", lambda: _face_module_totals_plan(spark)
-    )
+    return _face_plan(spark, "face_module_totals", lambda: _face_module_totals_plan(spark))
 
 
 def _face_module_totals_plan(spark: SparkSession) -> DataFrame:
@@ -531,9 +490,7 @@ def _face_module_totals_plan(spark: SparkSession) -> DataFrame:
 
 
 def face_flavor_counts(spark: SparkSession) -> DataFrame:
-    return memo.get(
-        spark, "dee_faces", "face_flavor_counts", lambda: _face_flavor_counts_plan(spark)
-    )
+    return _face_plan(spark, "face_flavor_counts", lambda: _face_flavor_counts_plan(spark))
 
 
 def _face_flavor_counts_plan(spark: SparkSession) -> DataFrame:
@@ -630,7 +587,7 @@ def boards_from_supermodules(sm: DataFrame, face_dim: DataFrame) -> DataFrame:
 
 
 def face_boards(spark: SparkSession) -> DataFrame:
-    return memo.get(spark, "dee_faces", "face_boards", lambda: _face_boards_plan(spark))
+    return _face_plan(spark, "face_boards", lambda: _face_boards_plan(spark))
 
 
 def _face_boards_plan(spark: SparkSession) -> DataFrame:

@@ -22,9 +22,10 @@ from pyspark.sql import functions as F
 
 from etl_sh_design_spark.functions import text
 from etl_sh_design_spark.operators.dedup import MD5_INT64_SQL, md5_int64, word_shingles_sql
+from etl_sh_design_spark.operators.kmeans import _KM_DIST, _KM_EXPL
 from etl_sh_design_spark.operators.packing import greedy_pack, pack_oracle_sql
 from etl_sh_design_spark.registry import _t, query
-from etl_sh_design_spark.registry_ext import _repartitioned
+from etl_sh_design_spark.registry_ext import _H_SEED_SHINGLE, _repartitioned
 
 _TOKS = "filter(split(text, '\\\\s+'), t -> t != '')"
 _TOKS_DUCK = r"list_filter(string_split_regex(text, '\s+'), t -> t != '')"
@@ -432,8 +433,6 @@ def q_quality_filter_chain(spark, sf_dir):
 
 
 # ------------------------------------------------- k-means (iterative)
-_KM_DIST = "round(list_sum(list_transform(range(1, len(v) + 1), i -> (v[i] - c[i]) * (v[i] - c[i]))), 6)"
-_KM_EXPL = "unnest(list_transform(range(1, len(v) + 1), i -> {'idx': i, 'x': v[i]}))"
 
 
 @query(
@@ -1220,7 +1219,7 @@ WITH corpus AS (
 sh AS ({word_shingles_sql("corpus")}),
 sig AS (
   SELECT doc_id, seed,
-         min({MD5_INT64_SQL.format(x="CAST(seed AS VARCHAR) || ':' || shingle")}) AS minh
+         min({_H_SEED_SHINGLE}) AS minh
   FROM sh CROSS JOIN (SELECT CAST(range AS INT) AS seed FROM range(0, 16))
   GROUP BY 1, 2
 ),

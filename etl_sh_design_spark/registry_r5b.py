@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from etl_sh_design_spark.functions import text
 from etl_sh_design_spark.registry import _t, query
+from etl_sh_design_spark.registry_ext import _STOP
 from etl_sh_design_spark.registry_r5 import (
     _bpe_apply_merge,
     _bpe_pair_counts,
@@ -44,8 +45,6 @@ from etl_sh_design_spark.registry_r5 import (
 # --------------------------------------------------------------------
 # shared oracle fragments
 # --------------------------------------------------------------------
-
-_STOP = "['the','a','an','and','or','of','to','in','is','it']"
 
 # Per-doc (n_tok, quality score, content hash) — the same composite
 # score (and the same DuckDB spelling) as registry_ext.q_text_quality's

@@ -38,14 +38,7 @@ from pyspark.sql import functions as F
 
 from etl_sh_design_spark.operators.similarity import _dot, _dvec, _norm, cosine_topk
 from etl_sh_design_spark.registry import _t, query
-
-# Exploded (vec_id, d, v) view of embeddings, double-widened — same
-# spelling as registry_ext._VE, kept local so the two modules stay
-# independently readable.
-_VE = (
-    "SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d, "
-    "CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings"
-)
+from etl_sh_design_spark.registry_ext import _VE
 
 
 @query(
@@ -461,11 +454,10 @@ from etl_sh_design_spark.operators.dedup import word_shingles, word_shingles_sql
 from etl_sh_design_spark.operators.dedup import MD5_INT64_SQL  # noqa: E402
 from etl_sh_design_spark.registry_ext import (  # noqa: E402
     CORPUS_MUTATED_SQL,
+    _H_SEED_SHINGLE,
     _corpus_mutated,
     dedup_lsh_pairs,
 )
-
-_H_SEED_SHINGLE = MD5_INT64_SQL.format(x="CAST(seed AS VARCHAR) || ':' || shingle")
 
 
 @query(
@@ -700,7 +692,7 @@ corpus AS (
 sh AS ({word_shingles_sql("corpus", id_col="sig_id")}),
 sig AS (
   SELECT sig_id, seed,
-         min({MD5_INT64_SQL.format(x="CAST(seed AS VARCHAR) || ':' || shingle")}) AS minh
+         min({_H_SEED_SHINGLE}) AS minh
   FROM sh CROSS JOIN (SELECT CAST(range AS INT) AS seed FROM range(0, 16))
   GROUP BY 1, 2
 ),

@@ -1247,17 +1247,17 @@ def q_dedup_soft_weights(spark, sf_dir):
 from etl_sh_design_spark.operators.dedup import word_shingles_sql  # noqa: E402
 from etl_sh_design_spark.registry_ext import (  # noqa: E402
     CORPUS_MUTATED_SQL,
+    _H_SEED_SHINGLE,
     dedup_signatures,
 )
 
 _LBT_CONFIGS = [(8, 2), (4, 4), (2, 8)]  # (n_bands, band_rows), b*r = 16
-_H_SEED_SH = MD5_INT64_SQL.format(x="CAST(seed AS VARCHAR) || ':' || shingle")
 
 _LBT_SQL = f"""
 WITH corpus AS ({CORPUS_MUTATED_SQL}),
 sh AS ({word_shingles_sql("corpus")}),
 sig AS (
-  SELECT doc_id, seed, min({_H_SEED_SH}) AS minh
+  SELECT doc_id, seed, min({_H_SEED_SHINGLE}) AS minh
   FROM sh CROSS JOIN (SELECT CAST(range AS INT) AS seed FROM range(0, 16))
   GROUP BY 1, 2
 ),

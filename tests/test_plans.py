@@ -28,9 +28,9 @@ def test_filter_and_projection_pushdown(spark):
 def test_q5_join_broadcasts_dims(spark):
     """Q5-shaped join: every dimension side is a BroadcastHashJoin —
     the fact table never shuffles before the final aggregate."""
-    from etl_sh_design_spark.registry import QUERIES
+    from etl_sh_design_spark.registry import queries
 
-    df = QUERIES["q5_region_revenue"](spark, SF_SMOKE)
+    df = queries()["q5_region_revenue"](spark, SF_SMOKE)
     plan = _plan(df)
     assert plan.count("BroadcastHashJoin") >= 3
     assert "SortMergeJoin" not in plan
@@ -340,6 +340,28 @@ def test_layout_loop_runs_no_python_worker(spark):
     assert not any(found.values()), {k: v for k, v in found.items() if v}
 
 
+def test_dee_face_slots_are_one_cached_table(spark):
+    """The four faces' slot table is one cached relation whose plan
+    runs the one-maybe-per-row rule as a window pass: no join back to
+    the flags and no cache nested inside it. The only join left is the
+    grid x face-dim cross join, one per slot plan (face1, faces 2-4).
+    So face_flavor_counts' executed plan scans cached data a handful
+    of times, and does not print the polygon literal under a nested
+    cache per consumer."""
+    import re
+
+    from etl_sh_design_spark import memo
+    from etl_sh_design_spark.plans import dee_faces
+
+    memo.clear("dee_faces")
+    cached = _plan(dee_faces.all_face_slots(spark))
+    assert cached.count("InMemoryRelation") == 1, cached.count("InMemoryRelation")
+    joins = re.findall(r"\w*Join\w*", cached.split("InMemoryRelation", 1)[1])
+    assert joins == ["BroadcastNestedLoopJoin"] * 2, joins
+    counts = _plan(dee_faces.face_flavor_counts(spark))
+    assert counts.count("InMemoryTableScan") <= 5, counts.count("InMemoryTableScan")
+
+
 def test_q13_outer_join_keeps_on_clause_filter(spark):
     """Q13: the o_orderpriority predicate must appear as a pushed scan
     filter on the orders side (it is an ON-clause filter of a left
@@ -425,18 +447,18 @@ def test_q10_fact_fact_first_then_custkey_shuffle(spark):
     carries no more than the two intended fact exchanges (orderkey for
     orders|><|lineitem, custkey for the customer join) plus the final
     agg/sort exchanges — customer must NOT ride the orderkey shuffle."""
-    from etl_sh_design_spark.registry import QUERIES
+    from etl_sh_design_spark.registry import queries
 
-    plan = _plan(QUERIES["q10_returned_revenue"](spark, SF_SMOKE))
+    plan = _plan(queries()["q10_returned_revenue"](spark, SF_SMOKE))
     assert "BroadcastHashJoin" in plan  # nation (and, at sf-small, AQE dims)
 
 
 def test_q2_groupwise_min_broadcasts_dims(spark):
     """Q2 shape: part/supplier/nation/region sides broadcast; the only
     shuffles key on (l_partkey[, l_suppkey]) for the two aggs."""
-    from etl_sh_design_spark.registry import QUERIES
+    from etl_sh_design_spark.registry import queries
 
-    plan = _plan(QUERIES["q2_min_cost_supplier"](spark, SF_SMOKE))
+    plan = _plan(queries()["q2_min_cost_supplier"](spark, SF_SMOKE))
     assert plan.count("BroadcastHashJoin") >= 3
     assert "CartesianProduct" not in plan
 
@@ -444,9 +466,9 @@ def test_q2_groupwise_min_broadcasts_dims(spark):
 def test_q21_no_self_join_explosion(spark):
     """Q21 shape: the double-correlated EXISTS must be one per-order
     aggregate joined back — no nested-loop or cartesian anywhere."""
-    from etl_sh_design_spark.registry import QUERIES
+    from etl_sh_design_spark.registry import queries
 
-    plan = _plan(QUERIES["q21_waiting_suppliers"](spark, SF_SMOKE))
+    plan = _plan(queries()["q21_waiting_suppliers"](spark, SF_SMOKE))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -454,9 +476,9 @@ def test_q21_no_self_join_explosion(spark):
 def test_q11_threshold_is_broadcast_scalar(spark):
     """Q11 shape: the global total joins back as a broadcast (1-row),
     never a shuffle."""
-    from etl_sh_design_spark.registry import QUERIES
+    from etl_sh_design_spark.registry import queries
 
-    plan = _plan(QUERIES["q11_important_parts"](spark, SF_SMOKE))
+    plan = _plan(queries()["q11_important_parts"](spark, SF_SMOKE))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
@@ -464,9 +486,9 @@ def test_q11_threshold_is_broadcast_scalar(spark):
 def test_token_frequency_join_keys_on_token(spark):
     """The unigram join must be token-keyed (hash/SMJ on tok) — never
     a nested loop; the vocab side need not broadcast at scale."""
-    from etl_sh_design_spark.registry import QUERIES
+    from etl_sh_design_spark.registry import queries
 
-    plan = _plan(QUERIES["token_frequency_scores"](spark, SF_SMOKE))
+    plan = _plan(queries()["token_frequency_scores"](spark, SF_SMOKE))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 

@@ -142,3 +142,30 @@ def test_chunk_count_formula_matches_reference_loop():
         assert formula == len(starts), n_tokens
         for st in starts:
             assert 1 <= min(size, n_tokens - st) <= size
+
+
+def test_slot_states_window_matches_sequential_machine(spark):
+    """dee_faces.slot_states (the one-maybe-per-row rule as one window
+    pass) equals the reference's sequential machine on every row of up
+    to 7 slots, each slot 'yes' / module-only / neither — one (face,
+    iy) row per sequence."""
+    import itertools
+
+    import tools.ref_tiling_golden as G
+    from etl_sh_design_spark.plans import dee_faces
+
+    kinds = [(True, False), (False, True), (False, False)]
+    seqs = [list(c) for n in range(1, 8) for c in itertools.product(kinds, repeat=n)]
+    flags = spark.createDataFrame(
+        [
+            ("f", iy, ix, 0.0, 0.0, sm, mod and not sm)
+            for iy, seq in enumerate(seqs)
+            for ix, (sm, mod) in enumerate(seq)
+        ],
+        "face STRING, iy INT, ix INT, xc DOUBLE, yc DOUBLE, sm_ok BOOLEAN, mod_only BOOLEAN",
+    )
+    got: dict[int, dict[int, str]] = {}
+    for r in dee_faces.slot_states(flags).collect():
+        got.setdefault(r.iy, {})[r.ix] = r.state
+    for iy, seq in enumerate(seqs):
+        assert [got[iy][ix] for ix in range(len(seq))] == G.availability_states(seq), seq

@@ -4,10 +4,15 @@ could share a bug; these pin the SEMANTICS)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from etl_sh_design_spark.registry import queries
+
+# the checkout under test: its subprocesses import the package from here
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _write_docs(spark, tmp_path, rows):
@@ -221,7 +226,6 @@ def test_registry_skips_reference_queries_when_ref_dir_absent(tmp_path):
     """With SPARK_GRAFT_REF_DIR pointing nowhere, the registry must
     import cleanly and simply not register the reference-artifact
     parity queries (VERDICT r5 'what's wrong' #1)."""
-    import os
     import subprocess
     import sys
 
@@ -232,14 +236,13 @@ def test_registry_skips_reference_queries_when_ref_dir_absent(tmp_path):
         "assert 'real_face_physics' not in q and 'real_face_physics' not in o;"
         "assert len(q) > 100"
     )
-    subprocess.run([sys.executable, "-c", code], env=env, check=True, cwd="/root/repo")
+    subprocess.run([sys.executable, "-c", code], env=env, check=True, cwd=ROOT)
 
 
 def test_registry_honors_relocated_reference_dir(tmp_path):
     """SPARK_GRAFT_REF_DIR pointing at a COPY of the reference (not
     the checkout itself) must register all reference-gated queries with
     paths under the override — the positive twin of the skip test."""
-    import os
     import shutil
     import subprocess
     import sys
@@ -261,7 +264,7 @@ def test_registry_honors_relocated_reference_dir(tmp_path):
         f"assert '{dst}' in o['real_face_physics'], o['real_face_physics'][:200];"
         f"assert '{src}' not in o['real_face_physics']"
     )
-    subprocess.run([sys.executable, "-c", code], env=env, check=True, cwd="/root/repo")
+    subprocess.run([sys.executable, "-c", code], env=env, check=True, cwd=ROOT)
 
 
 def test_only_the_gate_locates_the_reference():
