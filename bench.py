@@ -69,7 +69,7 @@ HEADLINE = [
     "pq_recall_audit",
     "phash_image_neardup",
     # owns the preference family's memoized comparison sub-plan
-    # (registry_r11.battery_comparisons): first battery entry in sweep
+    # (registry_selection.battery_comparisons): first battery entry in sweep
     # order pays the one user-keyed exchange, the audits below reuse it
     # (same attribution discipline as dedup_family_shared_subplan)
     "bradley_terry_strengths",
@@ -350,7 +350,7 @@ def main() -> None:
     # Materialize it up front as its own timed entry instead: the total
     # still pays the cost exactly once, and each member then measures
     # only its own tail.
-    from etl_sh_design_spark import memo, registry_ext
+    from etl_sh_design_spark import memo, registry_dedup
 
     # dev-only subset (set below for the sweep too): when iterating on
     # named queries, skip the composite and sf1 sections unless asked
@@ -416,7 +416,7 @@ def main() -> None:
 
     _family_entry(
         "dedup_family_shared_subplan",
-        lambda: registry_ext.dedup_components(spark, SF_DIR).count(),
+        lambda: registry_dedup.dedup_components(spark, SF_DIR).count(),
         invalidate=_clear("dedup"),
     )
 
@@ -616,7 +616,7 @@ def main() -> None:
     try:
         if only_set is not None:
             raise RuntimeError("dev-subset run: sf1 section skipped")
-        from etl_sh_design_spark import registry_ext as _rext
+        from etl_sh_design_spark import registry_dedup as _rdedup
         from tools.scale_probe import SF10X, build_10x, build_10x_embeddings
         from tools.sf1_bench import build_10x_tpch
 
@@ -759,7 +759,7 @@ def main() -> None:
         # downstream family tails, same as a single run did
         _sf1_entry(
             "dedup_family_shared_subplan",
-            lambda: _rext.dedup_components(spark, SF10X).count(),
+            lambda: _rdedup.dedup_components(spark, SF10X).count(),
             pre_repeat=lambda: memo.clear("dedup"),
         )
         for name in SF1_HEADLINE:

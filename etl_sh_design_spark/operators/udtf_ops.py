@@ -8,7 +8,7 @@ the query built on it is DuckDB-oracle-checkable like everything else.
 Scale note: UDTFs evaluate row-at-a-time in a Python worker — this is
 the SLOW path, kept for API parity and for logic that genuinely needs
 per-row generators. The engine's production equivalents are
-expression-level chunking (registry_r2 passages: pure codegen) and
+expression-level chunking (registry_dedup passages: pure codegen) and
 Arrow-batched `mapInPandas` (multimodal.frame_sample). The plan shape
 (scan -> Generate-like lateral -> downstream) is identical either way,
 so swapping implementations doesn't change the pipeline.

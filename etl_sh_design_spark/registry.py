@@ -14,11 +14,16 @@ Registered oracle views: region nation customer supplier part orders
 lineitem events documents embeddings. Detector-domain queries inline
 their fixture CTEs from `datagen` (deterministic cross-engine).
 
-This module holds the registry itself, the reference-data gate, the
-relational core and the public API. The paper's two jobs register from
-`registry_detector` (MC acceptance, the sensor grid) and
-`registry_layout` (tiling, BV, boards, occupancy); the other
-`registry_*` modules carry the relational and curation families.
+This module holds the registry itself, the fixtures the domain
+modules share, the reference-data gate, the relational core and the
+public API. The paper's two jobs register from `registry_detector`
+(MC acceptance, the sensor grid) and `registry_layout` (tiling, BV,
+boards, occupancy). The engine's generalizations register from
+`registry_relational` (TPC-H shapes, event windows, sketches),
+`registry_dedup`, `registry_vectors` (similarity, ANN, PQ),
+`registry_quality` (document scores and statistics) and
+`registry_selection` (building a training set). A domain module
+imports shared fixtures from here, never from another domain module.
 """
 
 from __future__ import annotations
@@ -62,6 +67,202 @@ def query(name: str, sql: str | None = None):
         return fn
 
     return deco
+
+
+# =====================================================================
+# Fixtures shared by the domain modules
+# =====================================================================
+# Whitespace tokenizers as Spark SQL and DuckDB expressions over
+# `text`: split on any whitespace, on any whitespace after lower(), or
+# on single spaces.
+_TOKS = "filter(split(text, '\\\\s+'), t -> t != '')"
+_TOKS_DUCK = r"list_filter(string_split_regex(text, '\s+'), t -> t != '')"
+_LOWER_TOKS = "filter(split(lower(text), '\\\\s+'), t -> t != '')"
+_LOWER_TOKS_DUCK = "list_filter(string_split_regex(lower(text), '\\s+'), t -> t != '')"
+_SPACE_TOKS = "filter(split(text, ' '), t -> t != '')"
+_SPACE_TOKS_DUCK = "list_filter(string_split(text, ' '), t -> t != '')"
+_STOP = "['the','a','an','and','or','of','to','in','is','it']"
+
+# Mutated copies take doc_id + MUTATED_ID_OFFSET, so every source
+# doc_id must stay below it or a copy would collide with an original.
+MUTATED_ID_OFFSET = 1000000
+
+CORPUS_EXACT_SQL = (
+    "SELECT doc_id, text FROM documents "
+    f"UNION ALL SELECT doc_id + {MUTATED_ID_OFFSET} AS doc_id, text FROM documents"
+)
+
+CORPUS_MUTATED_SQL = rf"""
+SELECT doc_id, text FROM documents
+UNION ALL
+SELECT doc_id + {MUTATED_ID_OFFSET} AS doc_id,
+       array_to_string(list_slice(toks, 1, len(toks) - 1), ' ') AS text
+FROM (SELECT doc_id,
+             list_filter(string_split_regex(lower(text), '\s+'), t -> t != '') AS toks
+      FROM documents)
+"""
+
+
+def _repartitioned(spark, df):
+    """Spread a small-file scan across all cores. The test corpus is a
+    single parquet file (2 input splits); the tokenize/shingle maps
+    downstream are CPU-bound, so without this 30 of 32 cores idle. At
+    real scale the scan has thousands of splits and this is a no-op
+    cost-wise (one extra round-robin shuffle of the raw text)."""
+    return df.repartition(spark.sparkContext.defaultParallelism)
+
+
+def _guarded_doc_id():
+    """documents.doc_id for a fixture that adds MUTATED_ID_OFFSET (or a
+    multiple) to it. A doc_id at or above the offset fails the query
+    inside the plan (no eager check, so construction stays job-free)
+    instead of silently colliding with a shifted copy."""
+    doc_id = F.col("doc_id")
+    too_big = F.raise_error(
+        F.concat(
+            F.lit("documents.doc_id "),
+            doc_id.cast("string"),
+            F.lit(f" >= MUTATED_ID_OFFSET ({MUTATED_ID_OFFSET})"),
+        )
+    )
+    return F.when(doc_id >= MUTATED_ID_OFFSET, too_big).otherwise(doc_id).alias("doc_id")
+
+
+def _documents(spark, sf_dir):
+    """(doc_id, text) of the documents table, doc_id guarded."""
+    return _t(spark, sf_dir, "documents").select(_guarded_doc_id(), "text")
+
+
+def _corpus_exact(spark, sf_dir):
+    d = _documents(spark, sf_dir)
+    return _repartitioned(
+        spark,
+        d.unionByName(d.select((F.col("doc_id") + MUTATED_ID_OFFSET).alias("doc_id"), "text")),
+    )
+
+
+def _corpus_mutated(spark, sf_dir):
+    d = _documents(spark, sf_dir)
+    mut = d.select(
+        (F.col("doc_id") + MUTATED_ID_OFFSET).alias("doc_id"),
+        F.expr(
+            f"array_join(slice({_LOWER_TOKS}, 1, greatest(size({_LOWER_TOKS}) - 1, 0)), ' ')"
+        ).alias("text"),
+    )
+    return _repartitioned(spark, d.unionByName(mut))
+
+
+# The second corpus snapshot of the churn queries (corpus_snapshot_diff,
+# quality_psi_drift, incremental_refresh_pipeline): delete doc_id%17==3,
+# edit %11==5, add %13==7 clones, so the drift number describes the
+# same churn the snapshot diff counts. The selection module keeps its
+# own SQL twin (`<>` where this one has `!=`).
+_V2_SRC_SQL = f"""
+  SELECT doc_id, source,
+         CASE WHEN doc_id % 11 = 5 THEN text || ' edited' ELSE text END AS text
+  FROM documents WHERE doc_id % 17 != 3
+  UNION ALL
+  SELECT doc_id + {MUTATED_ID_OFFSET}, source, text || ' new'
+  FROM documents WHERE doc_id % 13 = 7
+"""
+
+
+def _v2_corpus(spark, sf_dir):
+    """(doc_id, source, text) of the second snapshot (`_V2_SRC_SQL`)."""
+    d = _t(spark, sf_dir, "documents").select(_guarded_doc_id(), "source", "text")
+    return (
+        d.filter(F.col("doc_id") % 17 != 3)
+        .select(
+            "doc_id",
+            "source",
+            F.when(
+                F.col("doc_id") % 11 == 5, F.concat("text", F.lit(" edited"))
+            ).otherwise(F.col("text")).alias("text"),
+        )
+        .unionByName(
+            d.filter(F.col("doc_id") % 13 == 7).select(
+                (F.col("doc_id") + MUTATED_ID_OFFSET).alias("doc_id"),
+                "source",
+                F.concat("text", F.lit(" new")).alias("text"),
+            )
+        )
+    )
+
+
+# Per-doc (n_tok, quality score, content hash) — the same composite
+# score (and the same DuckDB spelling) as registry_quality.q_text_quality's
+# oracle, parameterized by source relation so the e2e pipeline can
+# score an augmented corpus CTE.
+def _scored_docs_sql(src: str = "documents") -> str:
+    return f"""
+  SELECT doc_id, source, CAST(n_tok AS BIGINT) AS n_tok,
+         round((least(n_tok / 100.0e0, 1.0e0)
+                + greatest(0.0e0, 1.0e0 - 4.0e0 * punct_ratio)
+                + least(1.0e0, 4.0e0 * stop_ratio)) / 3.0e0, 6) AS score,
+         md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS h
+  FROM (
+    SELECT doc_id, source, text, len(toks) AS n_tok,
+           CASE WHEN len(toks) > 0
+                THEN CAST(len(list_filter(toks, t -> list_contains({_STOP}, t))) AS DOUBLE) / len(toks)
+                ELSE 0.0e0 END AS stop_ratio,
+           CASE WHEN length(text) > 0
+                THEN CAST(length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS DOUBLE) / length(text)
+                ELSE 0.0e0 END AS punct_ratio
+    FROM (SELECT doc_id, source, text,
+                 list_filter(string_split_regex(lower(text), '\\s+'), t -> t != '') AS toks
+          FROM {src})
+  )
+"""
+
+
+_SCORED_DOCS_SQL = _scored_docs_sql()
+
+
+# The C4/CCNet normalized dedup key: lowercase, strip punctuation, collapse
+# whitespace. The whitespace class is EXPLICIT instead of \s because
+# the engines' \s disagree on one character: Java's includes U+000B
+# (vertical tab) while RE2's does not (ADVICE r8) — a document
+# containing \x0B would normalize differently cross-engine. The
+# explicit class is Java's definition, spelled identically in both.
+# Java \s: [ \t\n\x0B\f\r]. Spark SQL string literals eat one level
+# of backslash, so the Spark spelling doubles them; DuckDB's regexp
+# functions get the regex verbatim.
+_WS_SPARK = r"\\t\\n\\f\\r\\x0B "
+_WS_DUCK = r"\t\n\f\r\x0B "
+_NORM_SPARK = (
+    f"trim(regexp_replace(regexp_replace(lower(text), '[^\\\\w{_WS_SPARK}]', ''), "
+    f"'[{_WS_SPARK}]+', ' '))"
+)
+_NORM_DUCK = (
+    rf"trim(regexp_replace(regexp_replace(lower(text), '[^\w{_WS_DUCK}]', '', 'g'), "
+    rf"'[{_WS_DUCK}]+', ' ', 'g'))"
+)
+
+
+# Line fixture: the synthetic documents are single-line, so the line
+# queries synthesize lines identically on both engines.
+# toks -> lines: consecutive 8-token groups; '.' planted on
+# (doc_id + j) % 3 == 0. Spark arrays are 1-based via slice(); DuckDB
+# lists are 1-based via list_slice(). sequence(0, -1) in Spark counts
+# DOWN, so the empty-doc case is guarded explicitly.
+_LINE_W = 8
+
+_LINES_SPARK = f"""
+CASE WHEN size(toks) = 0 THEN array()
+ELSE transform(
+  sequence(0, CAST(ceil(size(toks) / {_LINE_W}.0) AS INT) - 1),
+  j -> concat(
+    concat_ws(' ', slice(toks, j * {_LINE_W} + 1, {_LINE_W})),
+    CASE WHEN pmod(doc_id + j, 3) = 0 THEN '.' ELSE '' END))
+END
+"""
+
+_LINES_DUCK = f"""
+list_transform(
+  range(CAST(ceil(len(toks) / {_LINE_W}.0) AS INT)),
+  j -> array_to_string(list_slice(toks, j * {_LINE_W} + 1, j * {_LINE_W} + {_LINE_W}), ' ')
+       || CASE WHEN (doc_id + j) % 3 = 0 THEN '.' ELSE '' END)
+"""
 
 
 # =====================================================================
@@ -585,7 +786,7 @@ _DRIVER_WINDOW_PRIORITY = [
 ]
 # Round-12 window rationale (invariant: a query whose CODE changed
 # this round is always in-window — zero rotation debt): the NEW r12
-# queries (registry_r12, 11 with lsh_band_occupancy_audit and the
+# queries (11 with lsh_band_occupancy_audit and the
 # late generation-selection pair best_of_n_curve /
 # dpo_pair_construction) and the 16 code-touched queries front the
 # window — the MinHash/ngram family is 12 of those because the
@@ -621,19 +822,9 @@ def _load_extensions() -> None:
     from etl_sh_design_spark import (  # noqa: F401
         registry_detector,
         registry_layout,
-        registry_ext,
-        registry_extra,
-        registry_pipeline,
-        registry_r2,
-        registry_r5,
-        registry_r5b,
-        registry_r5c,
-        registry_r8,
-        registry_r8b,
-        registry_r8c,
-        registry_r9,
-        registry_r10,
-        registry_r11,
-        registry_r12,
-        registry_wide,
+        registry_relational,
+        registry_dedup,
+        registry_vectors,
+        registry_quality,
+        registry_selection,
     )

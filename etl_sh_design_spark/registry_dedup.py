@@ -1,0 +1,2003 @@
+"""Deduplication queries: exact, normalized, n-gram, MinHash/LSH,
+SimHash, span, line, passage, semantic, perceptual-hash and
+incremental dedup, with the audits that size and check them (LSH band
+tuning and recall, MinHash estimate error, SemDeDup horizon, soft
+weights, leakage-safe splits).
+
+The driver's synthetic corpus has no natural duplicates, so near-dup
+queries run on a deterministically augmented corpus: `documents` plus
+mutated copies at doc_id + MUTATED_ID_OFFSET (`registry._corpus_exact`
+/ `_corpus_mutated`). The augmentation is spelled identically in Spark
+and SQL, so the results stay oracle-checkable.
+
+The MinHash family shares one memoized session sub-plan:
+`dedup_signatures` (map-side signatures of the mutated corpus),
+`dedup_lsh_pairs` and `dedup_components` (connected components over
+the candidate pairs); `docs_signatures` is the documents half the
+incremental probes read. `bench.py` times the sub-plan once as its own
+entry.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import Window as W
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from etl_sh_design_spark import memo
+from etl_sh_design_spark.functions import text
+from etl_sh_design_spark.operators.dedup import (
+    MD5_INT64_SQL,
+    exact_duplicates,
+    md5_int64,
+    minhash_lsh_pairs,
+    minhash_signatures_mapside,
+    minhash_signatures_mapside_sql,
+    ngram_jaccard_pairs,
+    simhash,
+    simhash_pairs,
+    word_shingles,
+    word_shingles_sql,
+)
+from etl_sh_design_spark.operators.graph import connected_components
+from etl_sh_design_spark.operators.multimodal import (
+    AHASH_BAND_W,
+    AHASH_BITS,
+    ahash56_duck,
+    phash_pairs,
+)
+from etl_sh_design_spark.operators.semdedup import (
+    semantic_dedup_profile,
+    semdedup_horizon_audit,
+    semdedup_horizon_audit_oracle_sql,
+    semdedup_oracle_sql,
+)
+from etl_sh_design_spark.operators.span_dedup import trim_audit, trim_audit_oracle_sql
+from etl_sh_design_spark.registry import (
+    CORPUS_EXACT_SQL,
+    CORPUS_MUTATED_SQL,
+    MUTATED_ID_OFFSET,
+    _LINES_DUCK,
+    _LINES_SPARK,
+    _LOWER_TOKS,
+    _NORM_DUCK,
+    _NORM_SPARK,
+    _SPACE_TOKS,
+    _SPACE_TOKS_DUCK,
+    _TOKS,
+    _TOKS_DUCK,
+    _V2_SRC_SQL,
+    _corpus_exact,
+    _corpus_mutated,
+    _documents,
+    _guarded_doc_id,
+    _repartitioned,
+    _scored_docs_sql,
+    _t,
+    _v2_corpus,
+    query,
+)
+from etl_sh_design_spark.streaming.dedup import with_signature_key
+
+
+# ------------------------------------------------------------ exact dedup
+@query(
+    "dedup_exact",
+    f"""
+WITH corpus AS ({CORPUS_EXACT_SQL})
+SELECT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS content_key,
+       min(doc_id) AS canonical_id,
+       count(*) AS n_dups
+FROM corpus
+GROUP BY 1
+""",
+)
+def q_dedup_exact(spark, sf_dir):
+    """Exact dedup by normalized content hash (hash-groupBy; one
+    |groups|-sized shuffle at any scale)."""
+    return exact_duplicates(_corpus_exact(spark, sf_dir))
+
+
+# -------------------------------------------------------- n-gram Jaccard
+_SH = word_shingles_sql("corpus")
+
+
+@query(
+    "ngram_jaccard_neardup",
+    f"""
+WITH corpus AS ({CORPUS_MUTATED_SQL}),
+sh0 AS ({_SH}),
+sh AS (SELECT doc_id, {MD5_INT64_SQL.format(x='shingle')} AS shingle FROM sh0),
+sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
+freq AS (SELECT shingle, count(*) AS freq FROM sh GROUP BY 1),
+cold AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN freq USING (shingle) WHERE freq <= 1000),
+inter AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
+  FROM cold a JOIN cold b USING (shingle)
+  WHERE a.doc_id < b.doc_id
+  GROUP BY 1, 2
+)
+SELECT id_a, id_b, n_common,
+       round(CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common), 6) AS jaccard
+FROM inter
+JOIN sizes sa ON sa.doc_id = id_a
+JOIN sizes sb ON sb.doc_id = id_b
+WHERE CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common) >= 0.5
+""",
+)
+def q_ngram_jaccard(spark, sf_dir):
+    """Word-3-gram Jaccard near-dup pairs (threshold 0.5) with the
+    hot-shingle skew cap."""
+    return ngram_jaccard_pairs(_corpus_mutated(spark, sf_dir), threshold=0.5)
+
+
+# ------------------------------------------------------------- MinHash LSH
+_H_SEED_SHINGLE = MD5_INT64_SQL.format(x="CAST(seed AS VARCHAR) || ':' || shingle")
+
+
+@query(
+    "minhash_lsh_neardup",
+    f"""
+WITH corpus AS ({CORPUS_MUTATED_SQL}),
+sh AS ({_SH}),
+sig AS (
+  SELECT doc_id, seed, min({_H_SEED_SHINGLE}) AS minh
+  FROM sh CROSS JOIN (SELECT CAST(range AS INT) AS seed FROM range(0, 16))
+  GROUP BY 1, 2
+),
+bands AS (
+  SELECT doc_id, CAST(floor(seed / 4) AS BIGINT) AS band,
+         string_agg(CAST(minh AS VARCHAR), ',' ORDER BY seed) AS band_key
+  FROM sig GROUP BY 1, 2
+),
+cand AS (
+  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+  FROM bands a JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
+  WHERE a.doc_id < b.doc_id
+)
+SELECT id_a, id_b,
+       CAST(sum(CASE WHEN sa.minh = sb.minh THEN 1 ELSE 0 END) AS DOUBLE) / 16.0 AS est_jaccard
+FROM cand
+JOIN sig sa ON sa.doc_id = id_a
+JOIN sig sb ON sb.doc_id = id_b AND sb.seed = sa.seed
+GROUP BY 1, 2
+HAVING CAST(sum(CASE WHEN sa.minh = sb.minh THEN 1 ELSE 0 END) AS DOUBLE) / 16.0 >= 0.5
+""",
+)
+def q_minhash_lsh(spark, sf_dir):
+    """MinHash(16) + LSH(4 bands x 4 rows) near-dup candidates with
+    estimated Jaccard >= 0.5. Shares the memoized pair sub-plan with
+    the cluster-level queries (dedup_lsh_pairs)."""
+    return dedup_lsh_pairs(spark, sf_dir)
+
+
+# ----------------------------------------------------------------- SimHash
+_SIMHASH_SQL_BODY = f"""
+tok AS (
+  SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\\s+'), t -> t != '')) AS token
+  FROM corpus
+),
+th AS (SELECT doc_id, {MD5_INT64_SQL.format(x='token')} AS h FROM tok),
+bitsum AS (
+  SELECT doc_id, b, sum(((h >> b) & 1) * 2 - 1) AS tot
+  FROM th CROSS JOIN (SELECT CAST(range AS INT) AS b FROM range(0, 32))
+  GROUP BY 1, 2
+),
+sims AS (
+  SELECT doc_id, CAST(sum(CASE WHEN tot > 0 THEN CAST(1 AS BIGINT) << b ELSE 0 END) AS BIGINT) AS simhash
+  FROM bitsum GROUP BY 1
+)
+"""
+
+
+@query(
+    "simhash_docs",
+    f"""
+WITH corpus AS (SELECT doc_id, text FROM documents),
+{_SIMHASH_SQL_BODY}
+SELECT doc_id, simhash FROM sims
+""",
+)
+def q_simhash_docs(spark, sf_dir):
+    """Per-document 32-bit SimHash fingerprint."""
+    return simhash(_t(spark, sf_dir, "documents"), bits=32)
+
+
+@query(
+    "simhash_neardup",
+    f"""
+WITH corpus AS ({CORPUS_MUTATED_SQL}),
+{_SIMHASH_SQL_BODY}
+SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
+FROM sims a JOIN sims b ON a.doc_id < b.doc_id
+WHERE bit_count(xor(a.simhash, b.simhash)) <= 4
+""",
+)
+def q_simhash_neardup(spark, sf_dir):
+    """SimHash near-dup pairs (hamming <= 4 over 32 bits). Spark side
+    uses pigeonhole banding (5 bands) so no cross join happens; the
+    oracle's brute-force cross join proves the banded result exact."""
+    return simhash_pairs(_corpus_mutated(spark, sf_dir), bits=32, max_hamming=4)
+
+
+@query(
+    "fingerprint_docs",
+    """
+SELECT doc_id,
+       md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS content_key,
+       n_chars
+FROM documents
+""",
+)
+def q_fingerprint(spark, sf_dir):
+    """Stable per-doc content fingerprint (md5 of normalized text)."""
+    d = _t(spark, sf_dir, "documents")
+    return d.select("doc_id", text.content_hash("text").alias("content_key"), "n_chars")
+
+
+# ------------------------------------------------- duplicate clusters
+# The expensive sub-plans (MinHash signatures -> LSH pairs, and pairs
+# -> connected components) are shared by minhash_lsh_neardup,
+# dedup_clusters, dedup_keep_best, and dedup_size_histogram: both
+# intermediate DataFrames are session-memoized per sf_dir (the memo
+# module's "dedup" family) so later queries reuse the materialized
+# result instead of recomputing the pipeline. connected_components is
+# eager (it counts/collects internally), so the cached frames'
+# remaining lineage is only the cheap tail.
+def dedup_signatures(spark, sf_dir):
+    """MinHash signatures (doc_id, sig[16]) over the mutated corpus —
+    memoized, so the whole dedup + sketch-eval family pays ONE
+    signature pass per session.
+
+    Round 12: built with the MAP-SIDE form (zero-shuffle projection;
+    bit-identical to the wide form — min over per-occurrence hashes ==
+    min over the distinct vocabulary, asserted by
+    tests/test_streaming_dedup.test_mapside_signatures_equal_wide).
+    The wide form's distinct-vocabulary Exchange + size-dispatched
+    hash-join-back + driver-side vocab count all disappear; the only
+    exchange left in the family build is the banded pair join.
+    Interleaved A/B minima (full components build): sf0.1 4.24 ->
+    3.49 s, 10x corpus 13.9 -> 12.8 s; at 100 TB the signature pass
+    becomes scan-bound instead of carrying a corpus-sized
+    vocabulary shuffle (the wide form's vocab broadcast was the piece
+    that aborted at the --ngram-100x probe and needed the
+    shuffle-hash dispatch)."""
+    return memo.get(
+        spark, "dedup", ("sigs", sf_dir), lambda: _dedup_signatures_build(spark, sf_dir)
+    )
+
+
+def _dedup_signatures_build(spark, sf_dir):
+    # Round 13 (guide §2.4 across queries): the signature map is
+    # PER-ROW, so sig(docs UNION mutated) == sig(docs) UNION
+    # sig(mutated) exactly, and the plain-documents rows are exactly
+    # the fused table's doc_id < MUTATED_ID_OFFSET half. The family
+    # build signs the fused corpus ONCE (one codegen pass for the 16-seed
+    # projection — an A/B of signing the two halves separately
+    # measured the build ~1.1 s SLOWER from the doubled
+    # construction/codegen) and registers the documents half as a
+    # filter over the SAME checkpoint, which the two incremental
+    # pipelines then probe as their "stored LSH index". Row sets are
+    # bit-identical; only WHO pays what changes — the timed
+    # dedup_family_shared_subplan entry owns the fused build, exactly
+    # as before, and the incrementals' docs side becomes a checkpoint
+    # read.
+    sigs = minhash_signatures_mapside(
+        _corpus_mutated(spark, sf_dir), k=16, n=3
+    ).localCheckpoint(eager=False)
+    memo.get(
+        spark,
+        "dedup",
+        ("docs_sigs", sf_dir),
+        lambda: sigs.filter(F.col("doc_id") < MUTATED_ID_OFFSET),
+    )
+    return sigs
+
+
+def docs_signatures(spark, sf_dir):
+    """Map-side MinHash signatures (doc_id, sig[16]) over the PLAIN
+    documents corpus — memoized per (session, sf_dir).
+
+    Round 13: this is the "stored LSH index" both incremental
+    pipelines' docstrings already promise ("at 100 TB the existing
+    side's banded signature index is a stored table ... per batch you
+    only sign the incoming docs"). Signing is a per-row map, so the
+    documents half of every sig(documents UNION delta) plan factors
+    out exactly. When the dedup family build has already signed the
+    fused mutated corpus this session, the docs half IS that
+    checkpoint filtered to doc_id < MUTATED_ID_OFFSET (registered by
+    dedup_signatures above — the bench's family entry runs first and
+    owns the build); standalone consumers (the oracle runs each query
+    alone) build the docs-only table here instead."""
+    return memo.get(
+        spark,
+        "dedup",
+        ("docs_sigs", sf_dir),
+        lambda: minhash_signatures_mapside(
+            _repartitioned(spark, _documents(spark, sf_dir)), k=16, n=3
+        ).localCheckpoint(eager=False),
+    )
+
+
+def dedup_lsh_pairs(spark, sf_dir):
+    """(id_a, id_b, est_jaccard) MinHash-LSH pairs over the mutated
+    corpus — memoized."""
+    return memo.get(
+        spark,
+        "dedup",
+        ("pairs", sf_dir),
+        lambda: minhash_lsh_pairs(
+            _corpus_mutated(spark, sf_dir), sig=dedup_signatures(spark, sf_dir)
+        ).localCheckpoint(eager=False),
+    )
+
+
+def dedup_components(spark, sf_dir):
+    """(node, component) for the mutated corpus — memoized."""
+    def build():
+        pairs = dedup_lsh_pairs(spark, sf_dir)
+        return connected_components(
+            _corpus_mutated(spark, sf_dir).select(F.col("doc_id").alias("node")),
+            pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+        ).localCheckpoint(eager=False)
+
+    return memo.get(spark, "dedup", ("components", sf_dir), build)
+
+
+# shared recursive-CTE closure (corpus -> MinHash sigs -> LSH candidates
+# -> threshold pairs -> transitive closure -> per-doc component) used by
+# every cluster-level oracle below
+_DEDUP_CLOSURE_CTE = f"""
+WITH RECURSIVE corpus AS ({CORPUS_MUTATED_SQL}),
+sh AS ({_SH}),
+sig AS (
+  SELECT doc_id, seed, min({_H_SEED_SHINGLE}) AS minh
+  FROM sh CROSS JOIN (SELECT CAST(range AS INT) AS seed FROM range(0, 16))
+  GROUP BY 1, 2
+),
+bands AS (
+  SELECT doc_id, CAST(floor(seed / 4) AS BIGINT) AS band,
+         string_agg(CAST(minh AS VARCHAR), ',' ORDER BY seed) AS band_key
+  FROM sig GROUP BY 1, 2
+),
+cand AS (
+  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+  FROM bands a JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
+  WHERE a.doc_id < b.doc_id
+),
+pairs AS (
+  SELECT id_a, id_b
+  FROM cand
+  JOIN sig sa ON sa.doc_id = id_a
+  JOIN sig sb ON sb.doc_id = id_b AND sb.seed = sa.seed
+  GROUP BY 1, 2
+  HAVING CAST(sum(CASE WHEN sa.minh = sb.minh THEN 1 ELSE 0 END) AS DOUBLE) / 16.0 >= 0.5
+),
+edges AS (
+  SELECT id_a AS src, id_b AS dst FROM pairs
+  UNION
+  SELECT id_b, id_a FROM pairs
+),
+reach(src, dst) AS (
+  SELECT src, dst FROM edges
+  UNION
+  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
+),
+comp AS (
+  SELECT c.doc_id,
+         least(c.doc_id, coalesce(min(r.dst), c.doc_id)) AS component
+  FROM corpus c LEFT JOIN reach r ON r.src = c.doc_id
+  GROUP BY c.doc_id
+)
+"""
+
+
+@query(
+    "dedup_clusters",
+    _DEDUP_CLOSURE_CTE
+    + """
+SELECT component AS canonical_id, count(*) AS n_docs
+FROM comp GROUP BY 1
+""",
+)
+def q_dedup_clusters(spark, sf_dir):
+    """Duplicate-CLUSTER resolution: MinHash-LSH near-dup pairs closed
+    into connected components (iterative min-label propagation,
+    operators/graph.py), one row per cluster with its canonical
+    (min) doc_id — the step that turns pairwise near-dup output into
+    a keep/drop decision. Oracle: recursive-CTE transitive closure."""
+    comp = dedup_components(spark, sf_dir)
+    return comp.groupBy(F.col("component").alias("canonical_id")).agg(
+        F.count(F.lit(1)).alias("n_docs")
+    )
+
+
+@query(
+    "dedup_size_histogram",
+    _DEDUP_CLOSURE_CTE
+    + """
+, clusters AS (SELECT component, count(*) AS cluster_size FROM comp GROUP BY 1)
+SELECT cluster_size, count(*) AS n_clusters,
+       CAST(cluster_size * count(*) AS BIGINT) AS n_docs
+FROM clusters GROUP BY 1
+""",
+)
+def q_dedup_size_histogram(spark, sf_dir):
+    """Dedup audit report: the duplicate-cluster SIZE distribution —
+    how many singletons, pairs, triples... and how many raw docs each
+    size class holds (effective unique count = sum of n_clusters).
+    Third consumer of the memoized components sub-plan
+    (dedup_components): two |clusters|-sized aggregations on top, all
+    integer-exact (no float sums, nothing to knife-edge)."""
+    comp = dedup_components(spark, sf_dir)
+    clusters = comp.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
+    return clusters.groupBy("cluster_size").agg(
+        F.count(F.lit(1)).alias("n_clusters"),
+        (F.col("cluster_size") * F.count(F.lit(1))).cast("bigint").alias("n_docs"),
+    )
+
+
+# ------------------------------------------------------ passage dedup
+_PASS_N = 8  # tokens per passage (non-overlapping stride)
+
+
+_PASSAGES = (
+    f"CASE WHEN size(toks) >= {_PASS_N} THEN "
+    f"transform(sequence(0, cast(floor(size(toks) / {_PASS_N}) as int) - 1), "
+    f"i -> concat_ws(' ', slice(toks, i * {_PASS_N} + 1, {_PASS_N}))) "
+    f"ELSE array() END"
+)
+
+
+@query(
+    "passage_dedup",
+    f"""
+WITH corpus AS ({CORPUS_MUTATED_SQL}),
+t AS (
+  SELECT doc_id,
+         list_filter(string_split_regex(lower(text), '\\s+'), t -> t != '') AS toks
+  FROM corpus
+),
+p AS (
+  SELECT doc_id,
+         unnest(CASE WHEN len(toks) >= {_PASS_N}
+                THEN list_transform(range(0, CAST(floor(len(toks) / {_PASS_N}) AS INT)),
+                       i -> array_to_string(toks[i * {_PASS_N} + 1 : i * {_PASS_N} + {_PASS_N}], ' '))
+                ELSE [] END) AS passage
+  FROM t
+)
+SELECT md5(passage) AS passage_key,
+       count(DISTINCT doc_id) AS n_docs,
+       count(*) AS n_occ,
+       min(doc_id) AS canonical_id
+FROM p GROUP BY 1
+HAVING count(DISTINCT doc_id) > 1
+""",
+)
+def q_passage_dedup(spark, sf_dir):
+    """Sub-document dedup: split each doc into consecutive 8-token
+    passages and report passages shared across documents (boilerplate /
+    quotation detection — finer-grained than whole-doc dedup). Hash
+    groupBy on the passage key: |passages| map-side rows, |groups|
+    shuffle rows, same plan shape as exact dedup at any scale."""
+    corpus = _corpus_mutated(spark, sf_dir)
+    p = corpus.select("doc_id", F.expr(_LOWER_TOKS).alias("toks")).select(
+        "doc_id", F.explode(F.expr(_PASSAGES)).alias("passage")
+    )
+    return (
+        p.groupBy(F.md5("passage").alias("passage_key"))
+        .agg(
+            F.countDistinct("doc_id").alias("n_docs"),
+            F.count(F.lit(1)).alias("n_occ"),
+            F.min("doc_id").alias("canonical_id"),
+        )
+        .filter(F.col("n_docs") > 1)
+    )
+
+
+# ------------------------------------- dedup: representative selection
+@query(
+    "dedup_keep_best",
+    _DEDUP_CLOSURE_CTE
+    + """
+, ranked AS (
+  SELECT comp.component, comp.doc_id, length(c2.text) AS n_chars,
+         row_number() OVER (PARTITION BY comp.component
+                            ORDER BY length(c2.text) DESC, comp.doc_id ASC) AS rk
+  FROM comp JOIN corpus c2 ON c2.doc_id = comp.doc_id
+)
+SELECT component AS cluster_id,
+       max(CASE WHEN rk = 1 THEN doc_id END) AS keep_id,
+       max(CASE WHEN rk = 1 THEN n_chars END) AS keep_chars,
+       count(*) - 1 AS n_dropped
+FROM ranked GROUP BY 1
+""",
+)
+def q_dedup_keep_best(spark, sf_dir):
+    """The decision step after near-dup clustering: per duplicate
+    cluster, KEEP the longest member (ties -> min doc_id) and report
+    what was dropped — the rule production dedup uses so truncated /
+    mutated variants lose to their fuller original. Pipeline:
+    MinHash-LSH pairs -> connected components -> join text lengths ->
+    per-cluster row_number pick. The component sub-plan is shared with
+    dedup_clusters (registry_dedup.dedup_components memoizes it per
+    session), so the extra work over dedup_clusters is one
+    broadcast-sized join and a window over clusters (cluster size is
+    bounded, so the window partition never skews). Oracle: the same
+    recursive-CTE closure extended with a ranked representative."""
+    corpus = _corpus_mutated(spark, sf_dir)
+    comp = dedup_components(spark, sf_dir)
+    lengths = corpus.select("doc_id", F.length("text").alias("n_chars"))
+    sized = comp.join(lengths, comp["node"] == lengths["doc_id"]).select(
+        "component", "doc_id", "n_chars"
+    )
+    w = W.partitionBy("component").orderBy(F.desc("n_chars"), F.asc("doc_id"))
+    ranked = sized.withColumn("rk", F.row_number().over(w))
+    return (
+        ranked.groupBy(F.col("component").alias("cluster_id"))
+        .agg(
+            F.max(F.when(F.col("rk") == 1, F.col("doc_id"))).alias("keep_id"),
+            F.max(F.when(F.col("rk") == 1, F.col("n_chars"))).alias("keep_chars"),
+            (F.count(F.lit(1)) - 1).alias("n_dropped"),
+        )
+    )
+
+
+# ------------------------------- duplicated-span trim audit (Lee 2022)
+# Fixture: every 7th doc gets the same 12-token phrase appended, so
+# its stride-1 8-grams repeat across ~1/7 of the corpus (plus any
+# natural repeats in the synthetic text). Injected identically on
+# both engines; winner = lowest (doc_id, pos).
+_SPAN_PHRASE = (
+    "shared boilerplate footer tokens repeat across many documents"
+    " in this corpus exactly"
+)
+_SPAN_DOCS_DUCK = f"""
+SELECT doc_id, source,
+       CASE WHEN doc_id % 7 = 0 THEN text || ' ' || '{_SPAN_PHRASE}'
+            ELSE text END AS text
+FROM documents
+"""
+
+
+@query("span_trim_audit", trim_audit_oracle_sql(_SPAN_DOCS_DUCK, _TOKS_DUCK))
+def q_span_trim_audit(spark, sf_dir):
+    """Substring-level exact dedup audit (Lee et al. 2022): find every
+    duplicated 8-token span corpus-wide, keep the first occurrence,
+    report per-source how many tokens a trim pass would remove. One
+    |tokens|-keyed gram shuffle + per-doc bounded interval-union
+    windows; see operators/span_dedup.py for the 100 TB contract
+    (hot-gram cap == the n-gram-Jaccard skew cap)."""
+    d = _t(spark, sf_dir, "documents").select(
+        "doc_id",
+        "source",
+        F.when(
+            F.col("doc_id") % 7 == 0,
+            F.concat(F.col("text"), F.lit(" " + _SPAN_PHRASE)),
+        )
+        .otherwise(F.col("text"))
+        .alias("text"),
+    )
+    return trim_audit(d, _TOKS)
+
+
+# ------------------------------------- SemDeDup (semantic near-dedup)
+# Fixture: every 10th embedding is duplicated verbatim under
+# vec_id + 100000 (injected identically on both engines, like the
+# span_trim_audit boilerplate phrase) so the synthetic corpus —
+# random vectors, no natural semantic dups — contains controlled
+# duplicate relations for the cosine pruning to find. Cluster init
+# uses vec_id < k, which only ever selects originals.
+_SEMD_TAU = 0.999
+_SEMD_VECS_DUCK = """
+SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+FROM embeddings
+UNION ALL
+SELECT vec_id + 100000, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+FROM embeddings WHERE vec_id % 10 = 0
+"""
+
+
+@query("semantic_dedup", semdedup_oracle_sql(_SEMD_VECS_DUCK, k=8, tau=_SEMD_TAU))
+def q_semantic_dedup(spark, sf_dir):
+    """SemDeDup (Abbas et al. 2023): k-means cells over the
+    embeddings, then within-cell cosine pruning at tau=0.999,
+    keeping the member FARTHEST from its centroid (the paper's
+    keep-most-atypical rule). Per-cell audit: members / removed /
+    kept. The quadratic stage never crosses a cell boundary, and
+    k=8 here is a FLOOR: semantic_dedup_profile's size-measured
+    dispatch (SEMDEDUP_MAX_MEAN_CELL_ROWS, operators/semdedup.py)
+    grows k as ceil(N/1000) above N=8000 — capped at SEMDEDUP_MAX_K
+    since round 11, where the vectorized per-cell kernel takes the
+    pairwise stage — keeping both stages linear in N. The oracle
+    bakes k=8 in, which matches because the sf0.01 corpus (550
+    vecs) sits below the switch point (and far below the cap)."""
+    e = _t(spark, sf_dir, "embeddings")
+    dup = e.filter(F.col("vec_id") % 10 == 0).select(
+        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
+    )
+    inj = e.select("vec_id", "embedding").unionByName(dup)
+    return semantic_dedup_profile(inj, k=8, iterations=2, tau=_SEMD_TAU)
+
+
+# --------------------------------------------------------------------
+# MinHash sketch-quality evaluation (est vs exact Jaccard)
+# --------------------------------------------------------------------
+
+@query(
+    "minhash_estimate_error",
+    f"""
+WITH corpus AS ({CORPUS_MUTATED_SQL}),
+sh AS ({word_shingles_sql("corpus")}),
+sig AS (
+  SELECT doc_id, seed, min({_H_SEED_SHINGLE}) AS minh
+  FROM sh CROSS JOIN (SELECT CAST(range AS INT) AS seed FROM range(0, 16))
+  GROUP BY 1, 2
+),
+bands AS (
+  SELECT doc_id, CAST(floor(seed / 4) AS BIGINT) AS band,
+         string_agg(CAST(minh AS VARCHAR), ',' ORDER BY seed) AS band_key
+  FROM sig GROUP BY 1, 2
+),
+cand AS (
+  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+  FROM bands a JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
+  WHERE a.doc_id < b.doc_id
+),
+est AS (
+  SELECT id_a, id_b,
+         CAST(sum(CASE WHEN sa.minh = sb.minh THEN 1 ELSE 0 END) AS DOUBLE) / 16.0
+           AS est_j
+  FROM cand
+  JOIN sig sa ON sa.doc_id = id_a
+  JOIN sig sb ON sb.doc_id = id_b AND sb.seed = sa.seed
+  GROUP BY 1, 2
+  HAVING CAST(sum(CASE WHEN sa.minh = sb.minh THEN 1 ELSE 0 END) AS DOUBLE) / 16.0
+         >= 0.5
+),
+sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
+inter AS (
+  SELECT e.id_a, e.id_b, count(*) AS n_common
+  FROM est e
+  JOIN sh a ON a.doc_id = e.id_a
+  JOIN sh b ON b.doc_id = e.id_b AND b.shingle = a.shingle
+  GROUP BY 1, 2
+)
+SELECT e.id_a, e.id_b, round(e.est_j, 6) AS est_jaccard,
+       round(CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common), 6)
+         AS exact_jaccard,
+       round(abs(e.est_j
+                 - CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common)), 6)
+         AS abs_err
+FROM est e
+JOIN inter USING (id_a, id_b)
+JOIN sizes sa ON sa.doc_id = e.id_a
+JOIN sizes sb ON sb.doc_id = e.id_b
+""",
+)
+def q_minhash_estimate_error(spark, sf_dir):
+    """Sketch-quality audit for the dedup family: for every MinHash-LSH
+    candidate pair (the SHARED memoized sub-plan — this query adds no
+    signature recompute), the exact shingle-set Jaccard and the
+    |estimate − exact| error. The dedup analog of `ann_recall_at_k`:
+    run it before trusting 16 hashes to gate a 100 TB dedup pass.
+
+    Scale shape: the exact side is computed ONLY for candidate pairs —
+    the pair list (already ~0.1% of docs) joins each member's distinct
+    shingles through two hash joins, so the quadratic exact-Jaccard
+    cost is bounded by the candidate set the sketch itself produced,
+    never by the corpus."""
+    pairs = dedup_lsh_pairs(spark, sf_dir).select("id_a", "id_b", "est_jaccard")
+    sh = word_shingles(_corpus_mutated(spark, sf_dir))
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    inter = (
+        pairs.select("id_a", "id_b")
+        .join(sh.select(F.col("doc_id").alias("id_a"), "shingle"), "id_a")
+        .join(sh.select(F.col("doc_id").alias("id_b"), "shingle"), ["id_b", "shingle"])
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    j = (
+        pairs.join(inter, ["id_a", "id_b"])
+        .join(sizes.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("na")), "id_a")
+        .join(sizes.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("nb")), "id_b")
+    )
+    exact = F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
+    return j.select(
+        "id_a",
+        "id_b",
+        F.round("est_jaccard", 6).alias("est_jaccard"),
+        F.round(exact, 6).alias("exact_jaccard"),
+        F.round(F.abs(F.col("est_jaccard") - exact), 6).alias("abs_err"),
+    )
+
+
+# --------------------------------------------------------------------
+# LSH recall evaluation (completes the sketch-quality pair)
+# --------------------------------------------------------------------
+
+@query(
+    "lsh_recall_eval",
+    f"""
+WITH corpus AS ({CORPUS_MUTATED_SQL}),
+-- exact truth: the hot-capped hashed-shingle Jaccard pairs (same CTE
+-- chain as ngram_jaccard_neardup)
+sh0 AS ({word_shingles_sql("corpus")}),
+shx AS (SELECT doc_id, {MD5_INT64_SQL.format(x='shingle')} AS shingle FROM sh0),
+sizes AS (SELECT doc_id, count(*) AS n_sh FROM shx GROUP BY 1),
+freq AS (SELECT shingle, count(*) AS freq FROM shx GROUP BY 1),
+cold AS (SELECT shx.doc_id, shx.shingle FROM shx JOIN freq USING (shingle)
+         WHERE freq <= 1000),
+inter AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
+  FROM cold a JOIN cold b USING (shingle)
+  WHERE a.doc_id < b.doc_id
+  GROUP BY 1, 2
+),
+truth AS (
+  SELECT id_a, id_b
+  FROM inter
+  JOIN sizes sa ON sa.doc_id = id_a
+  JOIN sizes sb ON sb.doc_id = id_b
+  WHERE CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common) >= 0.5
+),
+-- LSH candidates (same CTE chain as minhash_lsh_neardup, WITHOUT the
+-- est>=0.5 cut: recall measures what the BANDING surfaces)
+sig AS (
+  SELECT doc_id, seed, min({_H_SEED_SHINGLE}) AS minh
+  FROM sh0 CROSS JOIN (SELECT CAST(range AS INT) AS seed FROM range(0, 16))
+  GROUP BY 1, 2
+),
+bands AS (
+  SELECT doc_id, CAST(floor(seed / 4) AS BIGINT) AS band,
+         string_agg(CAST(minh AS VARCHAR), ',' ORDER BY seed) AS band_key
+  FROM sig GROUP BY 1, 2
+),
+cand AS (
+  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+  FROM bands a JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
+  WHERE a.doc_id < b.doc_id
+),
+hit AS (
+  SELECT t.id_a, t.id_b, CASE WHEN c.id_a IS NULL THEN 0 ELSE 1 END AS caught
+  FROM truth t LEFT JOIN cand c ON c.id_a = t.id_a AND c.id_b = t.id_b
+),
+nc AS (SELECT count(*) AS n_candidates FROM cand)
+SELECT CAST(count(*) AS BIGINT) AS n_true_pairs,
+       CAST(sum(caught) AS BIGINT) AS n_caught,
+       CASE WHEN count(*) = 0 THEN NULL
+            ELSE round(sum(caught) * 1.0e0 / count(*), 6) END AS recall,
+       (SELECT CAST(n_candidates AS BIGINT) FROM nc) AS n_candidates
+FROM hit
+""",
+)
+def q_lsh_recall_eval(spark, sf_dir):
+    """Recall of the 4x4 MinHash-LSH banding against the hot-capped
+    exact-Jaccard truth pairs (threshold 0.5) — the companion to
+    `minhash_estimate_error`'s precision view: together they are the
+    accept/reject dashboard for the sketch parameters (k, bands, rows)
+    before a 100 TB dedup pass. Candidates here are the raw BANDED
+    pairs (no est cut): recall isolates what the banding itself loses.
+
+    Scale shape: both pair sets reuse existing bounded machinery (the
+    hot-shingle-capped equi-join and the banded signature join); the
+    comparison itself is a left join between two pair lists — each
+    ~0.1% of docs — plus a 1-row summary."""
+    exact = ngram_jaccard_pairs(_corpus_mutated(spark, sf_dir), threshold=0.5).select(
+        "id_a", "id_b"
+    )
+    # raw banded candidates, no est cut (dedup_lsh_pairs applies >=0.5);
+    # signatures come from the family's memoized table — no recompute
+    sig = dedup_signatures(spark, sf_dir)
+    band_structs = [
+        F.struct(
+            F.lit(j).alias("band"),
+            F.concat_ws(
+                ",", *[F.col("sig")[i].cast("string") for i in range(j * 4, j * 4 + 4)]
+            ).alias("band_key"),
+        )
+        for j in range(4)
+    ]
+    banded = sig.select("doc_id", F.explode(F.array(*band_structs)).alias("bk")).select(
+        "doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
+    )
+    a = banded.select(F.col("doc_id").alias("id_a"), "band", "band_key")
+    b = banded.select(F.col("doc_id").alias("id_b"), "band", "band_key")
+    cand = (
+        a.join(b, ["band", "band_key"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
+    hit = exact.join(cand.withColumn("_c", F.lit(1)), ["id_a", "id_b"], "left")
+    summary = hit.agg(
+        F.count(F.lit(1)).alias("n_true_pairs"),
+        F.count("_c").alias("n_caught"),
+        # try_divide: empty truth set -> NULL recall, not an ANSI error
+        F.round(F.try_divide(F.count("_c"), F.count(F.lit(1))), 6).alias("recall"),
+    )
+    return summary.crossJoin(
+        F.broadcast(cand.agg(F.count(F.lit(1)).alias("n_candidates")))
+    )
+
+
+# --------------------------------------------------------------------
+# incremental refresh pipeline (churn -> gate -> index probe, e2e)
+# --------------------------------------------------------------------
+
+@query(
+    "incremental_refresh_pipeline",
+    f"""
+WITH v2src AS ({_V2_SRC_SQL}),
+v1h AS (SELECT doc_id, md5(text) AS h1 FROM documents),
+v2h AS (SELECT doc_id, source, text, md5(text) AS h2 FROM v2src),
+requeue AS (
+  SELECT v.doc_id, v.source, v.text
+  FROM v2h v LEFT JOIN v1h ON v1h.doc_id = v.doc_id
+  WHERE v1h.h1 IS NULL OR v1h.h1 <> v.h2
+),
+sreq AS ({_scored_docs_sql("requeue")}),
+gated AS (SELECT doc_id FROM sreq WHERE score >= 0.5 AND n_tok >= 20),
+ginc AS (
+  SELECT r.doc_id + 5000000 AS sig_id, r.doc_id AS orig_id, r.text
+  FROM requeue r JOIN gated g ON g.doc_id = r.doc_id
+),
+corpus AS (
+  SELECT doc_id AS sig_id, text FROM documents
+  UNION ALL
+  SELECT sig_id, text FROM ginc
+),
+sh AS ({word_shingles_sql("corpus", id_col="sig_id")}),
+sig AS (
+  SELECT sig_id, seed,
+         min({_H_SEED_SHINGLE}) AS minh
+  FROM sh CROSS JOIN (SELECT CAST(range AS INT) AS seed FROM range(0, 16))
+  GROUP BY 1, 2
+),
+bands AS (
+  SELECT sig_id, CAST(floor(seed / 4) AS BIGINT) AS band,
+         string_agg(CAST(minh AS VARCHAR), ',' ORDER BY seed) AS band_key
+  FROM sig GROUP BY 1, 2
+),
+cand AS (
+  SELECT DISTINCT a.sig_id AS inc_sig, b.sig_id AS ex_id
+  FROM bands a JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
+  WHERE a.sig_id >= 5000000 AND b.sig_id < 5000000
+),
+candx AS (
+  SELECT c.inc_sig, c.ex_id
+  FROM cand c JOIN ginc g ON g.sig_id = c.inc_sig
+  WHERE g.orig_id <> c.ex_id
+),
+agree AS (
+  SELECT c.inc_sig,
+         sum(CASE WHEN sa.minh = sb.minh THEN 1 ELSE 0 END) AS n_agree
+  FROM candx c
+  JOIN sig sa ON sa.sig_id = c.inc_sig
+  JOIN sig sb ON sb.sig_id = c.ex_id AND sb.seed = sa.seed
+  GROUP BY c.inc_sig, c.ex_id
+),
+dup AS (SELECT DISTINCT inc_sig FROM agree WHERE n_agree >= 8),
+lab AS (
+  SELECT r.doc_id, r.source,
+         CASE WHEN g.sig_id IS NULL THEN 0 ELSE 1 END AS gated,
+         CASE WHEN d.inc_sig IS NULL THEN 0 ELSE 1 END AS neardup
+  FROM requeue r
+  LEFT JOIN ginc g ON g.orig_id = r.doc_id
+  LEFT JOIN dup d ON d.inc_sig = g.sig_id
+)
+SELECT source,
+       CAST(count(*) AS BIGINT) AS n_requeued,
+       CAST(sum(gated) AS BIGINT) AS n_gated,
+       CAST(sum(neardup) AS BIGINT) AS n_near_dup,
+       CAST(sum(gated) - sum(neardup) AS BIGINT) AS n_accepted
+FROM lab GROUP BY 1
+""",
+)
+def q_incremental_refresh_pipeline(spark, sf_dir):
+    """The incremental half of the curation story, composed end-to-end:
+    snapshot diff (content-hash manifests, same churn fixture as
+    corpus_snapshot_diff) selects ONLY added+changed docs for
+    re-processing; the quality gate scores just that requeue set; the
+    survivors are MinHash-banded and probed against the EXISTING
+    corpus index, with self-matches exempted (an edited doc is
+    trivially a near-dup of its own previous version — the probe must
+    flag collisions with OTHER documents only). Output per source:
+    requeued / gate-passed / near-dup-rejected / accepted.
+
+    Scale shape: the diff runs on manifests (id, hash), never full
+    text; scoring and signatures are computed ONLY for the requeue set
+    (the churn fraction — at 100 TB this is the whole point); the
+    existing side's signatures are the stored LSH index a production
+    deployment keeps between runs (recomputed here because the test
+    corpus is synthetic; the banded probe join is identical either
+    way). Every stage is an already-audited sub-plan: manifest
+    equi-join, map-side gate, banded signature join."""
+    v2 = _v2_corpus(spark, sf_dir)
+    v1h = _t(spark, sf_dir, "documents").select("doc_id", F.md5("text").alias("h1"))
+    requeue = (
+        v2.withColumn("h2", F.md5("text"))
+        .join(v1h, "doc_id", "left")
+        .filter(F.col("h1").isNull() | (F.col("h1") != F.col("h2")))
+        .select("doc_id", "source", "text")
+        .localCheckpoint(eager=False)  # 3 consumers: gate, sigs, rollup
+    )
+    gated = requeue.select(
+        "doc_id",
+        text.token_count("text").cast("bigint").alias("n_tok"),
+        text.quality_score("text").alias("score"),
+    ).filter((F.col("score") >= 0.5) & (F.col("n_tok") >= 20)).select("doc_id")
+    ginc = requeue.join(gated, "doc_id").select(
+        (F.col("doc_id") + 5000000).alias("sig_id"),
+        F.col("doc_id").alias("orig_id"),
+        "text",
+    )
+    # Round 13 (VERDICT r12 #5, guide §2.4 across queries): the
+    # signature map is per-row, so sig(docs UNION ginc) == sig(docs)
+    # UNION sig(ginc) exactly — probe the session's memoized
+    # documents-side signature table (the "stored LSH index" this
+    # docstring already promises) and sign ONLY the gated requeue set
+    # here. The docs build is owned by the timed
+    # dedup_family_shared_subplan bench entry. The requeue side is
+    # checkpointed (two band sides + agree legs would otherwise
+    # re-sign it); the repartition spreads its CPU-bound signing
+    # across all cores (no-op relative cost at real scale).
+    ginc_rep = ginc.select("sig_id", "text").repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    sig_inc = minhash_signatures_mapside(
+        ginc_rep, id_col="sig_id", k=16, n=3
+    ).localCheckpoint(eager=False)
+    sig = (
+        docs_signatures(spark, sf_dir)
+        .select(F.col("doc_id").alias("sig_id"), "sig")
+        .unionByName(sig_inc)
+    )
+    band_structs = [
+        F.struct(
+            F.lit(j).alias("band"),
+            F.concat_ws(
+                ",", *[F.col("sig")[i].cast("string") for i in range(j * 4, j * 4 + 4)]
+            ).alias("band_key"),
+        )
+        for j in range(4)
+    ]
+    banded = sig.select(
+        "sig_id", "sig", F.explode(F.array(*band_structs)).alias("bk")
+    ).select(
+        "sig_id", "sig", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
+    )
+    inc_b = banded.filter(F.col("sig_id") >= 5000000).select(
+        F.col("sig_id").alias("inc_sig"), F.col("sig").alias("sig_i"), "band", "band_key"
+    )
+    ex_b = banded.filter(F.col("sig_id") < 5000000).select(
+        F.col("sig_id").alias("ex_id"), F.col("sig").alias("sig_e"), "band", "band_key"
+    )
+    orig_map = ginc.select("sig_id", "orig_id")
+    agree = F.aggregate(
+        F.zip_with("sig_i", "sig_e", lambda x, y: (x == y).cast("int")),
+        F.lit(0),
+        lambda acc, v: acc + v,
+    )
+    dup = (
+        inc_b.join(ex_b, ["band", "band_key"])
+        .join(
+            F.broadcast(orig_map.withColumnRenamed("sig_id", "inc_sig")), "inc_sig"
+        )
+        .filter(F.col("orig_id") != F.col("ex_id"))
+        .withColumn("n_agree", agree)
+        .filter(F.col("n_agree") >= 8)
+        .select("inc_sig")
+        .distinct()
+    )
+    lab = (
+        requeue.join(
+            ginc.select(F.col("orig_id").alias("doc_id"), "sig_id"), "doc_id", "left"
+        )
+        .join(
+            dup.select(F.col("inc_sig").alias("sig_id"), F.lit(1).alias("_d")),
+            "sig_id",
+            "left",
+        )
+        .select(
+            "source",
+            F.when(F.col("sig_id").isNotNull(), 1).otherwise(0).alias("gated"),
+            F.when(F.col("_d").isNotNull(), 1).otherwise(0).alias("neardup"),
+        )
+    )
+    return lab.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_requeued"),
+        F.sum("gated").cast("bigint").alias("n_gated"),
+        F.sum("neardup").cast("bigint").alias("n_near_dup"),
+        (F.sum("gated") - F.sum("neardup")).cast("bigint").alias("n_accepted"),
+    )
+
+
+_K = 8  # signature width for the streaming-dedup family (k md5s/row)
+
+_SIG_KEY_SQL = f"""
+WITH sig AS ({minhash_signatures_mapside_sql('documents', k=_K)})
+SELECT doc_id,
+       array_to_string(list_transform(sig, x -> CAST(x AS VARCHAR)), ',') AS sig_key
+FROM sig
+"""
+
+
+@query("minhash_mapside_signatures", _SIG_KEY_SQL)
+def q_minhash_mapside_signatures(spark, sf_dir):
+    """Per-doc map-side MinHash signature key (zero-shuffle plan: the
+    physical plan is scan -> project -> filter, no exchange —
+    asserted by tests/test_plans.py)."""
+    docs = _t(spark, sf_dir, "documents")
+    return with_signature_key(docs, k=_K).select("doc_id", "sig_key")
+
+
+_GROUPS_SQL = f"""
+WITH sig AS ({minhash_signatures_mapside_sql('documents', k=_K)}),
+keyed AS (
+  SELECT doc_id,
+         array_to_string(list_transform(sig, x -> CAST(x AS VARCHAR)), ',') AS sig_key
+  FROM sig
+)
+SELECT sig_key,
+       MIN(doc_id) AS canonical_id,
+       COUNT(*) AS n_docs
+FROM keyed
+GROUP BY sig_key
+HAVING COUNT(*) >= 2
+"""
+
+
+@query("signature_dedup_groups", _GROUPS_SQL)
+def q_signature_dedup_groups(spark, sf_dir):
+    """Near-exact duplicate groups by identical MinHash signature —
+    the batch twin of streaming/dedup.streaming_signature_dedup's
+    output contract. One |groups|-sized shuffle after the map-side
+    signature projection."""
+    docs = _t(spark, sf_dir, "documents")
+    return (
+        with_signature_key(docs, k=_K)
+        .groupBy("sig_key")
+        .agg(
+            F.min("doc_id").alias("canonical_id"),
+            F.count(F.lit(1)).alias("n_docs"),
+        )
+        .filter(F.col("n_docs") >= 2)
+    )
+
+
+# ------------------------------------------------ normalized dedup
+# Planted fixture (the registry's standard deterministic-variant
+# idiom, cf. semantic_decontamination's panel): every doc_id % 10 == 0
+# document gets a re-cased, whitespace-padded twin — invisible to raw
+# exact dedup, collapsed by the normalized key.
+_NORM_PLANT_DUCK = f"""
+SELECT doc_id, source, text FROM documents
+UNION ALL
+SELECT doc_id + {MUTATED_ID_OFFSET} AS doc_id, source,
+       upper(text) || '  ' AS text
+FROM documents WHERE doc_id % 10 = 0
+"""
+
+
+def _norm_plant_corpus(spark, sf_dir):
+    """(doc_id, source, text) of `_NORM_PLANT_DUCK`."""
+    d = _t(spark, sf_dir, "documents").select(_guarded_doc_id(), "source", "text")
+    planted = d.filter(F.col("doc_id") % 10 == 0).select(
+        (F.col("doc_id") + MUTATED_ID_OFFSET).alias("doc_id"),
+        "source",
+        F.concat(F.upper("text"), F.lit("  ")).alias("text"),
+    )
+    return d.unionByName(planted)
+
+_ND_SQL = f"""
+WITH corpus AS ({_NORM_PLANT_DUCK}),
+h AS (
+  SELECT source, md5(text) AS h_raw, md5({_NORM_DUCK}) AS h_norm
+  FROM corpus
+),
+c AS (
+  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+         CAST(count(DISTINCT h_raw) AS BIGINT) AS n_exact,
+         CAST(count(DISTINCT h_norm) AS BIGINT) AS n_norm
+  FROM h GROUP BY 1
+)
+SELECT source, n_docs, n_exact, n_norm,
+       round(1.0e0 - CAST(n_norm AS DOUBLE) / n_docs, 6) AS norm_dup_ratio
+FROM c
+"""
+
+
+@query("normalized_dedup", _ND_SQL)
+def q_normalized_dedup(spark, sf_dir):
+    """Exact dedup after aggressive text normalization — the C4/CCNet
+    dedup key (lowercase -> strip punctuation -> collapse whitespace),
+    audited per source against RAW exact dedup. The corpus is the
+    documents table plus a planted re-cased/whitespace-padded twin of
+    every doc_id % 10 == 0 document (the registry's deterministic
+    near-dup fixture idiom), so the gap n_exact - n_norm is the
+    measured catch of the normalization layer: raw hashing misses all
+    planted twins, the normalized key collapses every one.
+
+    Scale shape: normalization and both md5 keys are map-side codegen
+    expressions; the per-source distinct counts shuffle on
+    (source, hash) with partial aggregation (Spark plans the two
+    COUNT(DISTINCT) via expand + two-stage agg — no value buffering);
+    nothing is corpus-sized on any single node. At 100 TB this is the
+    same plan as `dedup_exact` with a cheaper key-side expression."""
+    h = _norm_plant_corpus(spark, sf_dir).select(
+        "source",
+        F.md5("text").alias("h_raw"),
+        F.md5(F.expr(_NORM_SPARK)).alias("h_norm"),
+    )
+    c = h.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.countDistinct("h_raw").alias("n_exact"),
+        F.countDistinct("h_norm").alias("n_norm"),
+    )
+    return c.select(
+        "source",
+        "n_docs",
+        "n_exact",
+        "n_norm",
+        F.round(
+            F.lit(1.0) - F.col("n_norm").cast("double") / F.col("n_docs"), 6
+        ).alias("norm_dup_ratio"),
+    )
+
+
+# ---------------------------------------------- leakage-safe split
+
+_H_COMP = MD5_INT64_SQL.format(x="'split:' || CAST(component AS VARCHAR)")
+_H_DOC = MD5_INT64_SQL.format(x="'split:' || CAST(doc_id AS VARCHAR)")
+
+_LSS_SQL = (
+    _DEDUP_CLOSURE_CTE
+    + f"""
+, assign AS (
+  SELECT doc_id, component,
+         CASE WHEN {_H_COMP} % 100 < 90 THEN 'train'
+              WHEN {_H_COMP} % 100 < 95 THEN 'val'
+              ELSE 'test' END AS split,
+         CASE WHEN {_H_DOC} % 100 < 90 THEN 'train'
+              WHEN {_H_DOC} % 100 < 95 THEN 'val'
+              ELSE 'test' END AS naive_split
+  FROM comp
+),
+cl AS (
+  SELECT component, any_value(split) AS split,
+         count(*) AS n,
+         count(DISTINCT naive_split) AS n_naive_splits
+  FROM assign GROUP BY 1
+)
+SELECT split, CAST(sum(n) AS BIGINT) AS n_docs,
+       CAST(count(*) AS BIGINT) AS n_clusters,
+       CAST(sum(CASE WHEN n_naive_splits > 1 THEN 1 ELSE 0 END) AS BIGINT)
+         AS naive_straddled_clusters
+FROM cl GROUP BY 1
+"""
+)
+
+
+@query("leakage_safe_split", _LSS_SQL)
+def q_leakage_safe_split(spark, sf_dir):
+    """Cluster-aware (leakage-safe) train/val/test splitting: assign
+    the split by hashing the near-dup CLUSTER's canonical id, so a
+    document and its near-duplicates always co-travel — the splitting
+    discipline that stops eval leakage through paraphrases the plain
+    per-doc hash split (`dataset_split`) cannot see. The output also
+    MEASURES the hazard: `naive_straddled_clusters` counts, per
+    split, the multi-doc clusters the naive doc-hash assignment
+    would have torn across split boundaries (each one a train/test
+    leak).
+
+    Scale shape: reuses the dedup family's memoized component
+    sub-plan (MinHash -> LSH bands -> threshold pairs -> min-label
+    components; every stage bucketed, operators/graph.py); the split
+    assignment is a map-side hash of the component id; the rollup
+    groups on 3 splits with map-side partials. Determinism: the
+    split hash is the registry's salted md5-int64 idiom — a pure
+    function of ids, stable across engines, runs, and incremental
+    re-processing."""
+    comp = dedup_components(spark, sf_dir).select(
+        F.col("node").alias("doc_id"), "component"
+    )
+
+    def _split(col):
+        h = md5_int64(F.concat(F.lit("split:"), col.cast("string"))) % 100
+        return F.when(h < 90, "train").when(h < 95, "val").otherwise("test")
+
+    assign = comp.select(
+        "doc_id",
+        "component",
+        _split(F.col("component")).alias("split"),
+        _split(F.col("doc_id")).alias("naive_split"),
+    )
+    # `split` is a pure function of `component`, so grouping BY it is
+    # row-identical to any_value()-ing it — and keeps the aggregate
+    # hash-based (a string agg BUFFER forces SortAggregate).
+    cl = assign.groupBy("component", "split").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.countDistinct("naive_split").alias("n_naive_splits"),
+    )
+    return cl.groupBy("split").agg(
+        F.sum("n").cast("bigint").alias("n_docs"),
+        F.count(F.lit(1)).alias("n_clusters"),
+        F.sum((F.col("n_naive_splits") > 1).cast("bigint")).alias(
+            "naive_straddled_clusters"
+        ),
+    )
+
+
+# ---------------------------------------------- soft-dedup weights
+_SDW_SQL = (
+    _DEDUP_CLOSURE_CTE
+    + f"""
+, toks AS (
+  SELECT doc_id, len(list_filter(string_split_regex(text, '\\s+'),
+                    t -> t != '')) AS n_tok
+  FROM corpus
+),
+sized AS (
+  SELECT c.component, count(*) OVER (PARTITION BY c.component) AS size,
+         t.n_tok
+  FROM comp c JOIN toks t USING (doc_id)
+)
+SELECT size AS cluster_size,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(count(*) / size AS BIGINT) AS n_clusters,
+       CAST(sum(n_tok) AS BIGINT) AS raw_tokens,
+       round(sum(CAST(n_tok AS DOUBLE) / size), 4) AS effective_tokens
+FROM sized GROUP BY 1
+"""
+)
+
+
+@query("dedup_soft_weights", _SDW_SQL)
+def q_dedup_soft_weights(spark, sf_dir):
+    """Soft deduplication accounting — the down-weight-don't-drop
+    alternative to hard dedup: every document in a near-dup cluster
+    of size s trains with weight 1/s, so a cluster contributes one
+    document's worth of gradient regardless of how many copies were
+    crawled. Per cluster size: docs, clusters, raw token mass, and
+    the EFFECTIVE token mass under 1/s weighting — the table that
+    prices how much of the corpus hard dedup would have deleted vs
+    how much signal soft dedup retains.
+
+    Scale shape: reuses the dedup family's memoized component
+    sub-plan; the size is a component-keyed window (cluster-bounded
+    partitions), the token count is map-side, and the rollup groups
+    on cluster size (a small integer domain) with map-side partials.
+    Exact integer arithmetic until the one weighted sum, rounded
+    4 dp on both engines."""
+    comp = dedup_components(spark, sf_dir).select(
+        F.col("node").alias("doc_id"), "component"
+    )
+    toks = _corpus_mutated(spark, sf_dir).select(
+        "doc_id", F.size(F.expr(_TOKS)).alias("n_tok")
+    )
+    wsz = W.partitionBy("component")
+    sized = comp.join(toks, "doc_id").withColumn(
+        "size", F.count(F.lit(1)).over(wsz)
+    )
+    return sized.groupBy(F.col("size").alias("cluster_size")).agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        (F.count(F.lit(1)) / F.first("size")).cast("bigint").alias("n_clusters"),
+        F.sum("n_tok").cast("bigint").alias("raw_tokens"),
+        F.round(
+            F.sum(F.col("n_tok").cast("double") / F.col("size")), 4
+        ).alias("effective_tokens"),
+    )
+
+
+# ---------------------------------------------- LSH band tuning
+
+_LBT_CONFIGS = [(8, 2), (4, 4), (2, 8)]  # (n_bands, band_rows), b*r = 16
+
+_LBT_SQL = f"""
+WITH corpus AS ({CORPUS_MUTATED_SQL}),
+sh AS ({word_shingles_sql("corpus")}),
+sig AS (
+  SELECT doc_id, seed, min({_H_SEED_SHINGLE}) AS minh
+  FROM sh CROSS JOIN (SELECT CAST(range AS INT) AS seed FROM range(0, 16))
+  GROUP BY 1, 2
+),
+configs AS (SELECT * FROM (VALUES (8, 2), (4, 4), (2, 8)) c(b, r)),
+bands AS (
+  SELECT c.b, c.r, s.doc_id, CAST(floor(s.seed / c.r) AS BIGINT) AS band,
+         string_agg(CAST(s.minh AS VARCHAR), ',' ORDER BY s.seed) AS band_key
+  FROM sig s CROSS JOIN configs c
+  GROUP BY 1, 2, 3, 4
+),
+cand AS (
+  SELECT DISTINCT x.b, x.r, x.doc_id AS id_a, y.doc_id AS id_b
+  FROM bands x JOIN bands y
+    ON x.b = y.b AND x.r = y.r AND x.band = y.band AND x.band_key = y.band_key
+  WHERE x.doc_id < y.doc_id
+)
+SELECT c.b AS n_bands, c.r AS band_rows,
+       round(1 - power(1 - power(0.5, c.r), c.b), 6) AS p_at_05,
+       round(1 - power(1 - power(0.7, c.r), c.b), 6) AS p_at_07,
+       round(1 - power(1 - power(0.9, c.r), c.b), 6) AS p_at_09,
+       CAST(count(cand.id_a) AS BIGINT) AS n_candidates
+FROM configs c LEFT JOIN cand ON cand.b = c.b AND cand.r = c.r
+GROUP BY 1, 2
+"""
+
+
+@query("lsh_band_tuning", _LBT_SQL)
+def q_lsh_band_tuning(spark, sf_dir):
+    """The LSH banding design table — the tuning artifact every
+    MinHash-LSH deployment derives before fixing (bands, rows): for
+    each (b, r) split of the same 16 hashes, the THEORETICAL S-curve
+    collision probability 1-(1-J^r)^b at J in {0.5, 0.7, 0.9} next to
+    the MEASURED candidate-pair count on the corpus. Read beside
+    `minhash_estimate_error` (est-vs-exact) and `lsh_recall_eval`
+    (banding recall): together they close the sketch-quality
+    dashboard — (8,2) recalls weak pairs at the cost of candidates,
+    (2,8) prunes hard, (4,4) is the engine's shipped default.
+
+    Scale shape: ONE signature pass (the dedup family's memoized
+    table) feeds all three configurations; band keys are in-row array
+    slices, the per-config bucket self-joins shuffle band keys (hash
+    equi-joins on (band, band_key) — the same candidate generation
+    contract as minhash_lsh_pairs, x3), and each config collapses to
+    one count row. The theory columns are pure double arithmetic
+    computed identically by both engines (round 6 dp)."""
+    sig = dedup_signatures(spark, sf_dir)  # (doc_id, sig[16]) memoized
+    parts = []
+    for b, r in _LBT_CONFIGS:
+        band_structs = [
+            F.struct(
+                F.lit(j).alias("band"),
+                F.concat_ws(
+                    ",",
+                    *[
+                        F.col("sig")[i].cast("string")
+                        for i in range(j * r, (j + 1) * r)
+                    ],
+                ).alias("band_key"),
+            )
+            for j in range(b)
+        ]
+        banded = sig.select(
+            "doc_id", F.explode(F.array(*band_structs)).alias("bk")
+        ).select(
+            "doc_id",
+            F.col("bk.band").alias("band"),
+            F.col("bk.band_key").alias("band_key"),
+        )
+        a = banded.select(
+            F.col("doc_id").alias("id_a"), "band", "band_key"
+        )
+        bb = banded.select(
+            F.col("doc_id").alias("id_b"), "band", "band_key"
+        )
+        pairs = (
+            a.join(bb, ["band", "band_key"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+            .distinct()
+        )
+        parts.append(
+            pairs.agg(F.count(F.lit(1)).alias("n_candidates")).select(
+                F.lit(b).alias("n_bands"),
+                F.lit(r).alias("band_rows"),
+                F.col("n_candidates").cast("bigint").alias("n_candidates"),
+            )
+        )
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    theory = lambda j: F.round(  # noqa: E731
+        1
+        - F.pow(
+            1 - F.pow(F.lit(j), F.col("band_rows")), F.col("n_bands")
+        ),
+        6,
+    )
+    return out.select(
+        "n_bands",
+        "band_rows",
+        theory(0.5).alias("p_at_05"),
+        theory(0.7).alias("p_at_07"),
+        theory(0.9).alias("p_at_09"),
+        "n_candidates",
+    )
+
+
+# ---------------------------------------------------- C4 line dedup
+_BOILER = "please subscribe to our newsletter for updates today"
+_C4_K = 3  # C4's global repetition threshold
+
+# Boiler-set dispatch bound: the >= k repeated-line set may be
+# broadcast for the anti-join only up to this many rows (int64 keys:
+# 5M x 8 B ~= 40 MB serialized — same class as graph.py's 5M-edge
+# union-find bound). On vocabulary-sized corpora Zipf keeps the set
+# tiny and the broadcast wins; but C4 itself discarded BILLIONS of
+# repeated lines from a ~750 GB corpus, so at 100 TB the set is
+# data-sized and the anti-join MUST plan as a shuffle. One count() at
+# build time picks the strategy — the same size-measured-dispatch
+# contract as similarity.EMBED_BROADCAST_MAX_ROWS and
+# semdedup.SEMDEDUP_MAX_MEAN_CELL_ROWS — and the count is not an
+# extra pass: it materializes the localCheckpoint the anti-join then
+# reads, so the explode -> map-combined count runs once either way.
+# Both paths are result-identical (left_anti on the same key set);
+# pinned by tests/test_r9.py::test_c4_line_dedup_forced_shuffle_parity.
+LINE_DEDUP_BROADCAST_MAX_ROWS = 5_000_000
+
+_C4LD_SQL = f"""
+WITH t AS (
+  SELECT doc_id, source, {_SPACE_TOKS_DUCK} AS toks FROM documents
+),
+l AS (
+  SELECT doc_id, source,
+         CASE WHEN doc_id % 5 = 0
+              THEN list_append({_LINES_DUCK}, '{_BOILER}')
+              ELSE {_LINES_DUCK} END AS lines
+  FROM t
+),
+e AS (
+  SELECT doc_id, source, u.j AS pos, u.line,
+         {MD5_INT64_SQL.format(x="u.line")} AS line_key
+  FROM l, unnest(list_transform(range(len(lines)),
+                                j -> {{'j': j, 'line': lines[j + 1]}})) AS s(u)
+),
+cnt AS (
+  SELECT line_key, count(*) AS c FROM e GROUP BY 1
+),
+kept AS (
+  SELECT e.doc_id, e.source, e.pos, e.line
+  FROM e JOIN cnt USING (line_key)
+  WHERE cnt.c < {_C4_K}
+),
+rebuilt AS (
+  SELECT l.doc_id, l.source,
+         len(l.lines) AS n_lines,
+         coalesce(k.n_kept, 0) AS n_kept,
+         coalesce(k.text2, '') AS text2
+  FROM l LEFT JOIN (
+    SELECT doc_id, count(*) AS n_kept,
+           string_agg(line, chr(10) ORDER BY pos) AS text2
+    FROM kept GROUP BY 1
+  ) k USING (doc_id)
+)
+SELECT source,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(sum(n_lines) AS BIGINT) AS n_lines,
+       CAST(sum(n_lines - n_kept) AS BIGINT) AS n_lines_removed,
+       CAST(sum(CASE WHEN n_kept < n_lines THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_docs_changed,
+       CAST(sum({MD5_INT64_SQL.format(x="text2")} % 1000000007) AS BIGINT)
+         AS rebuilt_checksum
+FROM rebuilt GROUP BY 1
+"""
+
+
+@query("c4_line_dedup", _C4LD_SQL)
+def q_c4_line_dedup(
+    spark, sf_dir, broadcast_max_rows: int = LINE_DEDUP_BROADCAST_MAX_ROWS
+):
+    """C4 global line dedup (module docstring): any line occurring
+    >= 3 times corpus-wide is removed from EVERY document; documents
+    are reassembled in line order and checksummed. The planted
+    boilerplate line (every doc_id % 5 == 0) is the guaranteed
+    removal; content lines are punctuation-salted per doc so natural
+    cross-doc collisions stay accidental. Plan: explode ->
+    map-combined count on the line hash -> size-dispatched anti-join
+    of the >= 3 set (broadcast up to LINE_DEDUP_BROADCAST_MAX_ROWS,
+    shuffle above — both paths result-identical) -> one doc-keyed
+    regroup. Pass broadcast_max_rows=0 to force the shuffle path
+    (the forced-path golden's configuration)."""
+    d = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    docs = d.select(
+        "doc_id", "source", F.expr(_SPACE_TOKS).alias("toks")
+    ).select(
+        "doc_id",
+        "source",
+        F.expr(
+            f"CASE WHEN doc_id % 5 = 0 THEN "
+            f"array_append(({_LINES_SPARK}), '{_BOILER}') "
+            f"ELSE ({_LINES_SPARK}) END"
+        ).alias("lines"),
+    )
+    exploded = docs.select(
+        "doc_id", F.posexplode("lines").alias("pos", "line")
+    ).withColumn("line_key", md5_int64(F.col("line")))
+    boiler = (
+        exploded.groupBy("line_key")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .filter(F.col("c") >= _C4_K)
+        .select("line_key")
+        .localCheckpoint(eager=False)
+    )
+    # the dispatch count() also materializes the checkpoint the
+    # anti-join reads — the probe is not an extra pass over the lines.
+    # Above the bound the shuffle_hash hint makes the no-broadcast
+    # contract deterministic (merely dropping the broadcast hint would
+    # let autoBroadcastJoinThreshold re-pick broadcast on a small-
+    # stats side — the exact failure mode the dispatch exists to rule
+    # out at scale).
+    n_boiler = boiler.count()
+    anti_side = (
+        F.broadcast(boiler)
+        if n_boiler <= broadcast_max_rows
+        else boiler.hint("shuffle_hash")
+    )
+    kept = exploded.join(anti_side, "line_key", "left_anti")
+    rebuilt_tail = kept.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_kept"),
+        F.concat_ws(
+            "\n",
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "line"))),
+                lambda s: s["line"],
+            ),
+        ).alias("text2"),
+    )
+    rebuilt = (
+        docs.select("doc_id", "source", F.size("lines").alias("n_lines"))
+        .join(rebuilt_tail, "doc_id", "left")
+        .fillna({"n_kept": 0, "text2": ""})
+    )
+    return rebuilt.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_lines").cast("bigint").alias("n_lines"),
+        (F.sum("n_lines") - F.sum("n_kept")).cast("bigint").alias("n_lines_removed"),
+        F.sum((F.col("n_kept") < F.col("n_lines")).cast("int"))
+        .cast("bigint")
+        .alias("n_docs_changed"),
+        F.sum(F.pmod(md5_int64(F.col("text2")), F.lit(1000000007)))
+        .cast("bigint")
+        .alias("rebuilt_checksum"),
+    )
+
+
+# ------------------------------------------- NFC-normalized dedup
+# Unicode NFC normalization is the preprocessing step CCNet/C4 run
+# before any text hashing (composed vs decomposed accents hash
+# differently but render identically). Spark has NO built-in unicode
+# normalizer, so this is one of the engine's few justified Python
+# islands: an Arrow-batched pandas UDF around unicodedata.normalize
+# (vectorized batch transfer, no per-row Python), mirrored by
+# DuckDB's native nfc_normalize() in the oracle — both implement
+# UAX #15, pinned byte-identical by the planted NFD/NFC twins.
+#
+# Plant: every doc_id % 11 == 0 document gets TWO twins that differ
+# ONLY in normalization form — +2e6 appends the COMPOSED marker
+# (char(233) = U+00E9), +3e6 appends the DECOMPOSED one
+# ('e' + char(769) = e + U+0301). Raw hashing sees two distinct
+# texts; NFC hashing collapses them. The markers are built from
+# escape-free primitives so no raw unicode sits in the source:
+# DuckDB chr() takes a CODEPOINT, but Spark's char() wraps at 256
+# (latin-1 semantics — char(769) is \\x01!), so the Spark side
+# decodes the UTF-8 BYTES instead (U+00E9 = C3A9, U+0301 = CC81).
+_NFC_MARK_SPARK_C = "concat(text, ' caf', decode(unhex('C3A9'), 'UTF-8'))"
+_NFC_MARK_SPARK_D = "concat(text, ' cafe', decode(unhex('CC81'), 'UTF-8'))"
+_NFC_MARK_DUCK_C = "text || ' caf' || chr(233)"
+_NFC_MARK_DUCK_D = "text || ' cafe' || chr(769)"
+
+_NFC_SQL = f"""
+WITH corpus AS (
+  SELECT doc_id, source, text FROM documents
+  UNION ALL
+  SELECT doc_id + 2000000, source, {_NFC_MARK_DUCK_C} FROM documents
+  WHERE doc_id % 11 = 0
+  UNION ALL
+  SELECT doc_id + 3000000, source, {_NFC_MARK_DUCK_D} FROM documents
+  WHERE doc_id % 11 = 0
+),
+h AS (
+  SELECT source, md5(text) AS h_raw, md5(nfc_normalize(text)) AS h_nfc
+  FROM corpus
+)
+SELECT source,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(count(DISTINCT h_raw) AS BIGINT) AS n_raw_distinct,
+       CAST(count(DISTINCT h_nfc) AS BIGINT) AS n_nfc_distinct,
+       round(1.0e0 - CAST(count(DISTINCT h_nfc) AS DOUBLE)
+             / count(DISTINCT h_raw), 6) AS nfc_dup_ratio
+FROM h GROUP BY 1
+"""
+
+
+@query("nfc_dedup_audit", _NFC_SQL)
+def q_nfc_dedup_audit(spark, sf_dir):
+    """Unicode-NFC dedup audit per source (see block comment): raw
+    vs NFC-normalized distinct counts over a corpus with planted
+    composed/decomposed twins. The normalizer is the engine's one
+    justified text UDF (Arrow-batched unicodedata.normalize — Spark
+    has no built-in); everything around it is codegen."""
+    @F.pandas_udf(T.StringType())
+    def nfc(s):
+        # pandas' vectorized normalizer == unicodedata.normalize("NFC")
+        # element-wise (parity asserted in tests); no per-row lambda.
+        return s.str.normalize("NFC")
+
+    d = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    plants = d.filter(F.col("doc_id") % 11 == 0)
+    corpus = (
+        d.unionByName(
+            plants.select(
+                (F.col("doc_id") + 2000000).alias("doc_id"),
+                "source",
+                F.expr(_NFC_MARK_SPARK_C).alias("text"),
+            )
+        )
+        .unionByName(
+            plants.select(
+                (F.col("doc_id") + 3000000).alias("doc_id"),
+                "source",
+                F.expr(_NFC_MARK_SPARK_D).alias("text"),
+            )
+        )
+    )
+    # NFC is the identity on pure-ASCII text (UAX #15: ASCII is
+    # NFC-invariant), and `octet_length == char_length` holds iff the
+    # UTF-8 string is all single-byte chars, i.e. pure ASCII. Rows
+    # that pass the codegen'd test are nulled BEFORE the UDF — the
+    # Arrow boundary ships only the (rare) non-ASCII texts instead of
+    # the whole corpus, bit-identically (guide §4: pass only what the
+    # function needs). On this corpus that is the 2/11 planted twins.
+    is_ascii = F.octet_length("text") == F.length("text")
+    h = corpus.select(
+        "source",
+        F.md5("text").alias("h_raw"),
+        F.md5(
+            F.coalesce(nfc(F.when(~is_ascii, F.col("text"))), F.col("text"))
+        ).alias("h_nfc"),
+    )
+    return h.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.countDistinct("h_raw").alias("n_raw_distinct"),
+        F.countDistinct("h_nfc").alias("n_nfc_distinct"),
+        F.round(
+            1.0 - F.countDistinct("h_nfc").cast("double") / F.countDistinct("h_raw"),
+            6,
+        ).alias("nfc_dup_ratio"),
+    )
+
+
+# ------------------------------------------- incremental snapshot dedup
+_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
+
+_INCOMING_DUCK = f"""
+SELECT doc_id + {MUTATED_ID_OFFSET} AS doc_id, text FROM documents WHERE doc_id % 2 = 0
+UNION ALL
+SELECT doc_id + {2 * MUTATED_ID_OFFSET} AS doc_id,
+       array_to_string(({_TOKS_DUCK})[1 : len({_TOKS_DUCK}) - 1], ' ') AS text
+FROM documents WHERE doc_id % 3 = 0
+"""
+
+
+def _incoming_batch(spark, sf_dir):
+    """(doc_id, text) of `_INCOMING_DUCK`."""
+    d = _documents(spark, sf_dir)
+    return (
+        d.filter(F.col("doc_id") % 2 == 0)
+        .select((F.col("doc_id") + MUTATED_ID_OFFSET).alias("doc_id"), "text")
+        .unionByName(
+            d.filter(F.col("doc_id") % 3 == 0).select(
+                (F.col("doc_id") + 2 * MUTATED_ID_OFFSET).alias("doc_id"),
+                F.expr(
+                    f"array_join(slice({_TOKS}, 1, greatest(size({_TOKS}) - 1, 0)), ' ')"
+                ).alias("text"),
+            )
+        )
+    )
+
+
+@query(
+    "incremental_dedup",
+    f"""
+WITH existing AS (SELECT DISTINCT md5({_NORM}) AS content_key FROM documents),
+incoming AS ({_INCOMING_DUCK}),
+keyed AS (
+  SELECT doc_id, md5({_NORM}) AS content_key FROM incoming
+),
+labeled AS (
+  SELECT k.doc_id,
+         CASE WHEN e.content_key IS NOT NULL THEN 'dup_of_existing'
+              WHEN k.doc_id > min(k.doc_id) OVER (PARTITION BY k.content_key)
+                   THEN 'dup_within_batch'
+              ELSE 'new' END AS status
+  FROM keyed k LEFT JOIN existing e USING (content_key)
+)
+SELECT status, count(*) AS n_docs FROM labeled GROUP BY 1
+""",
+)
+def q_incremental_dedup(spark, sf_dir):
+    """Incremental (snapshot) dedup — the production shape: a new
+    crawl batch is deduped against the EXISTING corpus (anti-join on
+    content hash) and within itself (min-id per key), without ever
+    re-scanning existing text: only the key column of the existing
+    side is read (column pruning) and at 100 TB that side lives as a
+    bucketed key table so the join is shuffle-free on re-runs. Batch
+    fixture: even doc_ids re-arrive verbatim (dup_of_existing), every
+    third doc arrives with its last token dropped (genuinely new)."""
+    d = _t(spark, sf_dir, "documents")
+    existing = d.select(text.content_hash("text").alias("content_key")).distinct()
+    keyed = _incoming_batch(spark, sf_dir).select("doc_id", text.content_hash("text").alias("content_key"))
+    first_id = F.min("doc_id").over(W.partitionBy("content_key"))
+    labeled = (
+        keyed.join(
+            F.broadcast(existing.withColumn("_hit", F.lit(1))), "content_key", "left"
+        )
+        .withColumn(
+            "status",
+            F.when(F.col("_hit").isNotNull(), "dup_of_existing")
+            .when(F.col("doc_id") > first_id, "dup_within_batch")
+            .otherwise("new"),
+        )
+    )
+    return labeled.groupBy("status").agg(F.count(F.lit(1)).alias("n_docs"))
+
+
+# ------------------------------------------ incremental NEAR-dup probe
+# Batch fixture: every 3rd doc re-arrives with its last token dropped
+# (a near-dup the exact hash misses); every 5th arrives with its
+# tokens REVERSED — same vocabulary, near-disjoint 3-gram shingles, so
+# the probe must call it new.
+_INC_NEAR_DUCK = f"""
+SELECT doc_id + {MUTATED_ID_OFFSET} AS doc_id,
+       array_to_string(({_TOKS_DUCK})[1 : len({_TOKS_DUCK}) - 1], ' ') AS text
+FROM documents WHERE doc_id % 3 = 0
+UNION ALL
+SELECT doc_id + {3 * MUTATED_ID_OFFSET} AS doc_id,
+       array_to_string(list_reverse({_TOKS_DUCK}), ' ') AS text
+FROM documents WHERE doc_id % 5 = 0
+"""
+
+
+def _incoming_near_batch(spark, sf_dir):
+    """(doc_id, text) of `_INC_NEAR_DUCK`."""
+    d = _documents(spark, sf_dir)
+    return d.filter(F.col("doc_id") % 3 == 0).select(
+        (F.col("doc_id") + MUTATED_ID_OFFSET).alias("doc_id"),
+        F.expr(
+            f"array_join(slice({_TOKS}, 1, greatest(size({_TOKS}) - 1, 0)), ' ')"
+        ).alias("text"),
+    ).unionByName(
+        d.filter(F.col("doc_id") % 5 == 0).select(
+            (F.col("doc_id") + 3 * MUTATED_ID_OFFSET).alias("doc_id"),
+            F.expr(f"array_join(reverse({_TOKS}), ' ')").alias("text"),
+        )
+    )
+
+
+@query(
+    "incremental_neardup",
+    f"""
+WITH corpus AS (
+  SELECT doc_id, text FROM documents
+  UNION ALL
+  {_INC_NEAR_DUCK}
+),
+sh AS ({word_shingles_sql("corpus")}),
+sig AS (
+  SELECT doc_id, seed,
+         min({_H_SEED_SHINGLE}) AS minh
+  FROM sh CROSS JOIN (SELECT CAST(range AS INT) AS seed FROM range(0, 16))
+  GROUP BY 1, 2
+),
+bands AS (
+  SELECT doc_id, CAST(floor(seed / 4) AS BIGINT) AS band,
+         string_agg(CAST(minh AS VARCHAR), ',' ORDER BY seed) AS band_key
+  FROM sig GROUP BY 1, 2
+),
+cand AS (
+  SELECT DISTINCT a.doc_id AS inc_id, b.doc_id AS ex_id
+  FROM bands a JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
+  WHERE a.doc_id >= {MUTATED_ID_OFFSET} AND b.doc_id < {MUTATED_ID_OFFSET}
+),
+agree AS (
+  SELECT c.inc_id, c.ex_id,
+         sum(CASE WHEN sa.minh = sb.minh THEN 1 ELSE 0 END) AS n_agree
+  FROM cand c
+  JOIN sig sa ON sa.doc_id = c.inc_id
+  JOIN sig sb ON sb.doc_id = c.ex_id AND sb.seed = sa.seed
+  GROUP BY 1, 2
+),
+matched AS (SELECT DISTINCT inc_id FROM agree WHERE n_agree >= 8),
+incoming AS ({_INC_NEAR_DUCK})
+SELECT CASE WHEN m.inc_id IS NOT NULL THEN 'near_dup_of_existing'
+            ELSE 'new' END AS status,
+       count(*) AS n_docs
+FROM incoming i LEFT JOIN matched m ON i.doc_id = m.inc_id
+GROUP BY 1
+""",
+)
+def q_incremental_neardup(spark, sf_dir):
+    """Incremental NEAR-dup — the production companion to
+    incremental_dedup: a new crawl batch (every 3rd doc re-arriving
+    with its last token dropped, so exact hashing calls it 'new') is
+    probed against the EXISTING corpus through MinHash LSH bands.
+    An incoming doc sharing any band bucket with an existing doc at
+    >= 8/16 agreeing minhashes is flagged near_dup_of_existing.
+
+    Scale shape: at 100 TB the existing side's banded signature index
+    is a stored table (computed once, bucketed on (band, band_key));
+    per batch you only sign the incoming docs and hash-join the
+    buckets — no all-pairs, no re-scan of existing text. The agree
+    threshold compares exact integers (>= 8 of 16), nothing to
+    knife-edge. Spark side signs both sets in one MAP-SIDE zero-shuffle
+    pass (bit-identical to the wide form; see
+    registry_dedup.dedup_signatures)."""
+    incoming = _incoming_near_batch(spark, sf_dir)
+    # Round 13 (VERDICT r12 #5, guide §2.4 across queries): the
+    # signature map is per-row, so sig(docs UNION incoming) ==
+    # sig(docs) UNION sig(incoming) exactly — probe the session's
+    # memoized documents-side signature table (the "stored LSH index"
+    # this docstring already promises) and sign ONLY the incoming
+    # batch here. The docs build is owned by the timed
+    # dedup_family_shared_subplan bench entry. The repartition spreads
+    # the CPU-bound signing of the incoming half across all cores
+    # (small-file scan arrives as 2 splits; no-op cost at real scale).
+    inc_rep = incoming.repartition(spark.sparkContext.defaultParallelism)
+    sig_inc = minhash_signatures_mapside(inc_rep, k=16, n=3).localCheckpoint(
+        eager=False
+    )
+    sig = docs_signatures(spark, sf_dir).unionByName(sig_inc)
+    band_structs = [
+        F.struct(
+            F.lit(j).alias("band"),
+            F.concat_ws(
+                ",", *[F.col("sig")[i].cast("string") for i in range(j * 4, j * 4 + 4)]
+            ).alias("band_key"),
+        )
+        for j in range(4)
+    ]
+    banded = sig.select(
+        "doc_id", "sig", F.explode(F.array(*band_structs)).alias("bk")
+    ).select(
+        "doc_id", "sig", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
+    )
+    inc_b = banded.filter(F.col("doc_id") >= MUTATED_ID_OFFSET).select(
+        F.col("doc_id").alias("inc_id"), F.col("sig").alias("sig_i"), "band", "band_key"
+    )
+    ex_b = banded.filter(F.col("doc_id") < MUTATED_ID_OFFSET).select(
+        F.col("doc_id").alias("ex_id"), F.col("sig").alias("sig_e"), "band", "band_key"
+    )
+    agree = F.aggregate(
+        F.zip_with("sig_i", "sig_e", lambda x, y: (x == y).cast("int")),
+        F.lit(0),
+        lambda acc, v: acc + v,
+    )
+    matched = (
+        inc_b.join(ex_b, ["band", "band_key"])
+        .withColumn("n_agree", agree)
+        .filter(F.col("n_agree") >= 8)
+        .select("inc_id")
+        .distinct()
+    )
+    labeled = incoming.join(
+        matched.withColumnRenamed("inc_id", "doc_id").withColumn("_hit", F.lit(1)),
+        "doc_id",
+        "left",
+    ).withColumn(
+        "status",
+        F.when(F.col("_hit").isNotNull(), "near_dup_of_existing").otherwise("new"),
+    )
+    return labeled.groupBy("status").agg(F.count(F.lit(1)).alias("n_docs"))
+
+
+# -------------------------------------------- perceptual-hash near-dup
+
+_PH_H = 6  # max hamming; n_bands = 56/8 = 7 > H (pigeonhole exact)
+
+_PHASH_SQL = f"""
+WITH ph AS (
+  SELECT doc_id, {ahash56_duck('text')} AS phash FROM documents
+),
+banded AS (
+  SELECT doc_id, phash, CAST(b.band AS INT) AS band,
+         (phash >> (b.band * {AHASH_BAND_W})) & {(1 << AHASH_BAND_W) - 1} AS key
+  FROM ph CROSS JOIN (SELECT unnest(range({AHASH_BITS // AHASH_BAND_W})) AS band) b
+)
+SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b,
+       CAST(bit_count(xor(a.phash, c.phash)) AS INT) AS hamming
+FROM banded a JOIN banded c ON a.band = c.band AND a.key = c.key
+WHERE a.doc_id < c.doc_id
+  AND bit_count(xor(a.phash, c.phash)) <= {_PH_H}
+"""
+
+
+@query("phash_image_neardup", _PHASH_SQL)
+def q_phash_image_neardup(spark, sf_dir):
+    """Perceptual-hash image near-dup over the documents-as-payloads
+    table (operator docstring: the payload chunks onto a fixed 56-cell
+    grid — the resize analog — each cell thresholds an md5-derived
+    stub pixel, and a 7x8-bit banded Hamming join finds pairs within
+    hamming 6, exactly). Signature is one codegen'd map-side
+    expression; the join is equi-key — never a cross product."""
+    return phash_pairs(
+        _t(spark, sf_dir, "documents").select("doc_id", "text"),
+        max_hamming=_PH_H,
+    )
+
+
+# --------------------------------------- semdedup horizon audit
+
+@query(
+    "semdedup_horizon_audit",
+    semdedup_horizon_audit_oracle_sql(_SEMD_VECS_DUCK, k=8),
+)
+def q_semdedup_horizon_audit(spark, sf_dir):
+    """Per-cell candidate-horizon saturation for the SAME injected
+    corpus semantic_dedup runs on (operator docstring): n_members /
+    n_in_horizon / horizon_saturated / the capped regime marker, so a
+    user sizes SEMDEDUP_CANDIDATE_CAP from data, not the shipped
+    curve. Assignment-only — never runs the pairwise stage."""
+    e = _t(spark, sf_dir, "embeddings")
+    dup = e.filter(F.col("vec_id") % 10 == 0).select(
+        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
+    )
+    inj = e.select("vec_id", "embedding").unionByName(dup)
+    return semdedup_horizon_audit(inj, k=8, iterations=2)
+
+
+# ------------------------------------ LSH band-occupancy audit
+
+_LSH_OCC_SQL = f"""
+WITH corpus AS ({CORPUS_MUTATED_SQL}),
+sh AS ({_SH}),
+sig AS (
+  SELECT doc_id, seed, min({_H_SEED_SHINGLE}) AS minh
+  FROM sh CROSS JOIN (SELECT CAST(range AS INT) AS seed FROM range(0, 16))
+  GROUP BY 1, 2
+),
+bands AS (
+  SELECT doc_id, CAST(floor(seed / 4) AS INT) AS band,
+         string_agg(CAST(minh AS VARCHAR), ',' ORDER BY seed) AS band_key
+  FROM sig GROUP BY 1, 2
+),
+occ AS (
+  SELECT band, band_key, count(*) AS occ FROM bands GROUP BY 1, 2
+)
+SELECT band,
+       count(*) AS n_buckets,
+       CAST(sum(CASE WHEN occ > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_buckets_multi,
+       CAST(max(occ) AS BIGINT) AS max_occupancy,
+       CAST(sum(occ * (occ - 1) / 2) AS BIGINT) AS candidate_pairs,
+       CAST(max(occ * (occ - 1) / 2) AS BIGINT) AS top_bucket_pairs
+FROM occ GROUP BY 1
+"""
+
+
+@query("lsh_band_occupancy_audit", _LSH_OCC_SQL)
+def q_lsh_band_occupancy_audit(spark, sf_dir):
+    """Per-band LSH bucket-occupancy audit — the in-registry
+    observable for the quantity the round-12 `--ngram-100x` probe
+    measured offline: banded candidate volume is sum over buckets of
+    C(occ, 2), and it explodes exactly when duplicate-cluster depth
+    grows with the corpus (max_occupancy tracks cluster depth; it
+    stayed FLAT at 8 across three decades in the entities-growth
+    regime — SCALE.md round 12). A user watching candidate_pairs and
+    top_bucket_pairs drift apart knows hot buckets are forming BEFORE
+    the bucket self-join becomes the wall, and sizes band width /
+    shingle caps from data. Runs off the session-memoized signature
+    table (one signature pass for the whole dedup family); the
+    aggregate output is 4 rows (one per band)."""
+    sig = dedup_signatures(spark, sf_dir)
+    band_structs = [
+        F.struct(
+            F.lit(j).alias("band"),
+            F.concat_ws(
+                ",", *[F.col("sig")[i].cast("string") for i in range(j * 4, (j + 1) * 4)]
+            ).alias("band_key"),
+        )
+        for j in range(4)
+    ]
+    banded = sig.select(
+        F.explode(F.array(*band_structs)).alias("bk")
+    ).select(F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
+    occ = banded.groupBy("band", "band_key").agg(F.count(F.lit(1)).alias("occ"))
+    pairs = (F.col("occ") * (F.col("occ") - 1) / 2).cast("bigint")
+    return occ.groupBy("band").agg(
+        F.count(F.lit(1)).alias("n_buckets"),
+        F.sum((F.col("occ") > 1).cast("int")).cast("bigint").alias("n_buckets_multi"),
+        F.max("occ").cast("bigint").alias("max_occupancy"),
+        F.sum(pairs).cast("bigint").alias("candidate_pairs"),
+        F.max(pairs).cast("bigint").alias("top_bucket_pairs"),
+    )

@@ -17,7 +17,7 @@ one projection (no explode/groupBy), so the ONLY stateful operator in
 the stream is `dropDuplicatesWithinWatermark` itself — state is one
 (sig_key -> expiry) entry per distinct signature inside the watermark
 horizon, dropped as event time passes. The batch twin of the stream
-output is registry_r8.signature_dedup_groups (full DuckDB oracle);
+output is registry_dedup.signature_dedup_groups (full DuckDB oracle);
 stream == batch is asserted by tests/test_streaming_dedup.py.
 
 Event time: the driver's documents table carries no timestamp, so
@@ -75,7 +75,7 @@ def streaming_signature_dedup(
     Which PHYSICAL row survives a within-micro-batch tie is
     arbitrary (partition order), so cross-engine/golden comparisons
     key on the emitted sig_key SET — deterministic — not survivor
-    doc_ids; the batch twin (registry_r8.signature_dedup_groups)
+    doc_ids; the batch twin (registry_dedup.signature_dedup_groups)
     accordingly pins group membership, not survivor choice."""
     docs = read_documents_stream(spark, sf_dir).withColumn(
         "ingest_ts", F.timestamp_seconds(F.col("doc_id"))

@@ -6,7 +6,7 @@ watermarked streams, the join condition pairs the user_id equi-key
 with an event-time range, and Spark bounds the join state by the
 watermark + range (clicks are droppable once no future purchase can
 land inside their window). The batch twin with the DuckDB oracle is
-`registry_pipeline.funnel_interval_join`.
+`registry_relational.funnel_interval_join`.
 
 At scale the equi-key shuffles both streams on user_id once; state per
 key is the in-range buffer, which the 10-minute bound keeps finite —

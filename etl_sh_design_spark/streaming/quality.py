@@ -12,8 +12,8 @@ at ingest time rather than at the next batch audit.
 
 Reference scope note: the reference engine is batch-only (SURVEY.md
 §2.9); this module is the engine's labeled streaming extension of its
-own batch text-quality family (registry_ext.text_quality,
-registry_pipeline.quality_filter_chain).
+own batch text-quality family (registry_quality.text_quality,
+registry_quality.quality_filter_chain).
 
 Streaming-safety shape: `quality_score` is a pure higher-order
 `F.*` expression chain — map-only, no explode/groupBy — so the gate
@@ -23,7 +23,7 @@ scoreboard aggregation, keyed by (lang, source): a BOUNDED key space
 regardless of corpus size. Batch and streaming share ONE
 transformation (`gate_summary`), and stream == batch is asserted by
 tests/test_streaming_quality.py; the batch twin carries a full DuckDB
-oracle (registry_r8.quality_gate_admissions).
+oracle (registry_quality.quality_gate_admissions).
 """
 
 from __future__ import annotations

@@ -46,7 +46,7 @@ def sliding_agg(events: DataFrame, window: str = "10 minutes", slide: str = "5 m
     """Shared batch/stream transformation: sliding-window counts and
     value sums (each event replicated into window/slide windows
     map-side; shuffle is |windows|-sized). Batch twin with a DuckDB
-    oracle: registry_r2.sliding_window_events."""
+    oracle: registry_relational.sliding_window_events."""
     return (
         events.groupBy(F.window("ts", window, slide).alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 6).alias("sum_value"))
@@ -137,7 +137,7 @@ def session_agg(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Shared batch/stream transformation: per-user session windows
     (events merge while consecutive gaps stay under `gap`). The
     streaming-native counterpart of the batch gaps-and-islands
-    sessionization (registry_extra.sessionization_events): Spark's
+    sessionization (registry_relational.sessionization_events): Spark's
     session_window merges as long as the next event starts before
     prev_ts + gap, i.e. a gap strictly greater than `gap` splits —
     identical boundaries to the lag-based batch twin."""

@@ -10,7 +10,7 @@ import math
 from pyspark.sql import functions as F
 
 from etl_sh_design_spark.functions import text
-from etl_sh_design_spark.registry_r8 import q_char_entropy_quality
+from etl_sh_design_spark.registry_quality import q_char_entropy_quality
 from tests.conftest import SF_SMOKE
 
 

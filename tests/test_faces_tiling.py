@@ -8,8 +8,11 @@ The evidence chain for the tile_real_* oracles (registry_layout.py):
    example.ipynb / geometric_acceptance.ipynb reproduce exactly under
    the no-maybe machine those notebooks ran (test_committed_pins).
 2. Today's maybe machine (ETL.py:601-629) is re-derived sequentially in
-   the golden; the declarative closed form used by the Spark plan is
-   proven equivalent by exhaustive enumeration (test_chain_rule_*).
+   the golden. The closed form it reduces to, the Python
+   `chain_rule_states`, is proven equivalent by exhaustive enumeration
+   (TestChainRuleEquivalence); the Spark window form of the same rule
+   is checked against the sequential machine by
+   tests/test_properties.py::test_slot_states_window_matches_sequential_machine.
 3. The Spark pipeline matches the golden slot-for-slot on all four
    real faces, and its totals match the pinned oracle constants
    (test_spark_matches_golden*, test_pinned_constants_*).

@@ -9,8 +9,8 @@ Covered paths:
 - operators/similarity.cosine_topk (consumers: similarity_topk,
   knn_label_accuracy + _stratified, ann_multiprobe_recall,
   lsh_recall_eval's brute side)
-- registry_r8c.hnm_result (hard_negative_mining)
-- registry_r8b.semantic_decontamination_result
+- registry_vectors.hnm_result (hard_negative_mining)
+- registry_vectors.semantic_decontamination_result
   (semantic_decontamination)
 """
 
@@ -45,7 +45,7 @@ def test_cosine_topk_gemm_matches_hof(spark):
 
 
 def test_hard_negative_mining_gemm_matches_hof(spark):
-    from etl_sh_design_spark.registry_r8c import hnm_result
+    from etl_sh_design_spark.registry_vectors import hnm_result
 
     for sf in SFS:
         a = _rows(hnm_result(spark, sf, use_gemm=True))
@@ -55,9 +55,7 @@ def test_hard_negative_mining_gemm_matches_hof(spark):
 
 
 def test_semantic_decontamination_gemm_matches_hof(spark):
-    from etl_sh_design_spark.registry_r8b import (
-        semantic_decontamination_result,
-    )
+    from etl_sh_design_spark.registry_vectors import semantic_decontamination_result
 
     for sf in SFS:
         a = _rows(semantic_decontamination_result(spark, sf, use_gemm=True))

@@ -138,7 +138,7 @@ def test_histogram_totals(spark):
 
 def test_streaming_equals_batch(spark):
     """Structured Streaming tumbling agg == batch tumbling agg."""
-    from etl_sh_design_spark.registry_ext import q_tumbling
+    from etl_sh_design_spark.registry_relational import q_tumbling
     from etl_sh_design_spark.streaming.windows import streaming_tumbling_counts
 
     stream_rows = {

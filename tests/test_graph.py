@@ -63,7 +63,7 @@ def test_cc_unconverged_warns(spark):
 
 def test_cc_on_neardup_pairs(spark):
     from etl_sh_design_spark.operators.dedup import minhash_lsh_pairs
-    from etl_sh_design_spark.registry_ext import _corpus_mutated
+    from etl_sh_design_spark.registry import _corpus_mutated
     from tests.conftest import SF_SMOKE
 
     corpus = _corpus_mutated(spark, SF_SMOKE)

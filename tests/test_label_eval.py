@@ -1,4 +1,4 @@
-"""Golden tests for the registry_r5c label-eval pair on crafted
+"""Golden tests for the kNN label-eval pair (registry_vectors) on crafted
 geometry: the oracle replay (test_driver_contract) cross-checks the
 engines against each other; these pin the SEMANTICS — vote tie-break,
 probe-panel membership, cohesion/margin arithmetic — against values

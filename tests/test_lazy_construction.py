@@ -144,7 +144,7 @@ EAGER_BUILDERS = {
     "preference_label_noise": "builds the BT strengths it audits "
     "against (same checkpointed MM rounds as bradley_terry_strengths)",
     "position_bias_audit": "may pay the preference battery's shared "
-    "memoized comparison sub-plan (registry_r11.battery_comparisons): "
+    "memoized comparison sub-plan (registry_selection.battery_comparisons): "
     "whichever battery member is constructed FIRST in a session "
     "absorbs the one-time checkpoint jobs (AQE materializes query "
     "stages on toRdd at checkpoint creation), and in registry dict "

@@ -137,15 +137,25 @@ def test_failing_panel_build_leaves_no_entry_and_no_broadcast(spark, monkeypatch
 
 def test_mutated_id_offset_collision_fails_loudly(spark, tmp_path):
     """A documents table whose doc_ids reach MUTATED_ID_OFFSET would
-    make the mutated copies collide with originals; the corpus plans
-    raise inside the job instead of returning silently wrong pairs."""
-    from etl_sh_design_spark import registry_ext
+    make the shifted copies collide with originals; every fixture that
+    shifts doc_ids raises inside the job instead of returning silently
+    wrong pairs."""
+    from etl_sh_design_spark import registry, registry_dedup
 
-    n = registry_ext.MUTATED_ID_OFFSET + 1
+    n = registry.MUTATED_ID_OFFSET + 1
     spark.range(n).select(
-        F.col("id").alias("doc_id"), F.lit("a b c").alias("text")
+        F.col("id").alias("doc_id"),
+        F.lit("a b c").alias("text"),
+        F.lit("web").alias("source"),
     ).write.parquet(str(tmp_path / "documents.parquet"))
-    for corpus in (registry_ext._corpus_exact, registry_ext._corpus_mutated):
+    for corpus in (
+        registry._corpus_exact,
+        registry._corpus_mutated,
+        registry._v2_corpus,
+        registry_dedup._norm_plant_corpus,
+        registry_dedup._incoming_batch,
+        registry_dedup._incoming_near_batch,
+    ):
         with pytest.raises(Exception, match="MUTATED_ID_OFFSET"):
             corpus(spark, str(tmp_path)).agg(F.max("doc_id")).collect()
 

@@ -1,4 +1,4 @@
-"""Golden tests for the registry_r5c monitoring pair: identity and
+"""Golden tests for the monitoring pair (registry_quality): identity and
 planted-shift behavior the oracle replay can't distinguish from
 "both engines share the same bug"."""
 

@@ -9,7 +9,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from etl_sh_design_spark import registry_r5
+from etl_sh_design_spark import registry_quality, registry_relational, registry_selection
 from etl_sh_design_spark.operators.pagerank import pagerank
 from tests.conftest import SF_SMOKE
 
@@ -43,7 +43,7 @@ def test_pagerank_star_hand_computed(spark):
 def test_pagerank_hub_outranks_leaves_on_events(spark):
     """On the derived event graph the max-in-degree node must outrank
     the min-in-degree node (sanity: iteration actually moved mass)."""
-    df = registry_r5.q_pagerank_hubs(spark, SF_SMOKE)
+    df = registry_relational.q_pagerank_hubs(spark, SF_SMOKE)
     rows = df.collect()
     top = max(rows, key=lambda r: r.in_deg)
     bottom = min(rows, key=lambda r: r.in_deg)
@@ -53,7 +53,7 @@ def test_pagerank_hub_outranks_leaves_on_events(spark):
 def test_wrs_plan_is_partial_topk(spark):
     """The A-Res sample must compile to TakeOrderedAndProject (per-
     partition top-k + driver k-merge), NOT a global sort exchange."""
-    df = registry_r5.q_weighted_sample_docs(spark, SF_SMOKE)
+    df = registry_selection.q_weighted_sample_docs(spark, SF_SMOKE)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
     assert "rangepartitioning" not in plan
@@ -62,7 +62,7 @@ def test_wrs_plan_is_partial_topk(spark):
 def test_wrs_prefers_heavy_docs(spark):
     """Weighted sampling with w = n_chars must over-represent long
     docs: the sample's mean n_chars exceeds the corpus mean."""
-    sample = registry_r5.q_weighted_sample_docs(spark, SF_SMOKE)
+    sample = registry_selection.q_weighted_sample_docs(spark, SF_SMOKE)
     s_mean = sample.agg(F.avg("n_chars")).first()[0]
     c_mean = (
         spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
@@ -75,7 +75,7 @@ def test_wrs_prefers_heavy_docs(spark):
 def test_source_kl_nonnegative_and_entropy_bounded(spark):
     """Gibbs' inequality: KL >= 0 for every source; entropy is within
     (0, ln(vocab)]."""
-    rows = registry_r5.q_source_token_kl(spark, SF_SMOKE).collect()
+    rows = registry_quality.q_source_token_kl(spark, SF_SMOKE).collect()
     assert rows
     for r in rows:
         assert r.kl_vs_corpus >= -1e-9
@@ -134,7 +134,7 @@ def test_hll_merged_equals_direct_and_near_exact(spark):
     """Sketch mergeability: union of 32 shard sketches must give the
     SAME estimate as one direct sketch (DataSketches HLL union is
     lossless at equal lgK), and land within 5% of exact."""
-    rows = registry_r5.q_hll_distinct_sketch(spark, SF_SMOKE).collect()
+    rows = registry_relational.q_hll_distinct_sketch(spark, SF_SMOKE).collect()
     assert rows
     for r in rows:
         assert r.est_merged == r.est_direct

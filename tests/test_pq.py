@@ -127,7 +127,7 @@ def test_blocked_gemm_equals_broadcast_path(spark):
         "vec_id", "embedding"
     )
     # plant near-dups: slightly-perturbed copies under shifted ids
-    # (the registry_ext.embedding_neardup recipe)
+    # (the registry_vectors.embedding_neardup recipe)
     pert = e.select(
         (F.col("vec_id") + 100000).alias("vec_id"),
         F.transform("embedding", lambda v: v * F.lit(1.001)).alias("embedding"),

@@ -1,4 +1,4 @@
-"""Goldens for the round-10 additions (registry_r10): the hashed
+"""Goldens for the round-10 additions (registry_quality, registry_vectors): the hashed
 linear quality margin and the PQ recall audit — invariants the hash
 oracle can't express (independent recomputation, bounds, cross-query
 consistency)."""
@@ -7,15 +7,8 @@ from __future__ import annotations
 
 import hashlib
 
-from etl_sh_design_spark.registry_r10 import (
-    _PQR_K,
-    _PQR_NQ,
-    _QB,
-    _QC,
-    _QM,
-    q_hashed_quality_margin,
-    q_pq_recall_audit,
-)
+from etl_sh_design_spark.registry_quality import _QB, _QC, _QM, q_hashed_quality_margin
+from etl_sh_design_spark.registry_vectors import _PQR_K, _PQR_NQ, q_pq_recall_audit
 from tests.conftest import SF_SMOKE
 
 
@@ -145,9 +138,9 @@ def test_hashed_quality_margin_weight_swap_path(spark):
     aggregation unchanged)."""
     from pyspark.sql import functions as F
 
-    from etl_sh_design_spark.registry_r10 import (
+    from etl_sh_design_spark.registry_quality import (
+        _HQM_TOKS as _TOKS,
         _MD5_SPARK,
-        _TOKS,
         q_hashed_quality_margin,
     )
 

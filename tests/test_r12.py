@@ -758,7 +758,7 @@ def test_bradley_terry_matches_python_mm(spark):
 
 
 def test_battery_shared_subplan_parity(spark):
-    """The memoized shared comparison sub-plan (registry_r11.
+    """The memoized shared comparison sub-plan (registry_selection.
     battery_comparisons) must be result-identical to each operator's
     standalone window on the real sf0.001 stream, for every battery
     query — and the second registry call must hand back the SAME
@@ -772,7 +772,7 @@ def test_battery_shared_subplan_parity(spark):
         rater_agreement_kappa,
     )
     from etl_sh_design_spark.registry import _t
-    from etl_sh_design_spark.registry_r11 import battery_comparisons
+    from etl_sh_design_spark.registry_selection import battery_comparisons
 
     ev = _t(spark, SF_SMOKE, "events")
     comps = battery_comparisons(spark, SF_SMOKE)

@@ -94,11 +94,11 @@ def test_signature_union_split_equals_fused(spark):
 
 
 def test_docs_signatures_memoized(spark):
-    from etl_sh_design_spark import registry_ext
+    from etl_sh_design_spark import registry_dedup
 
     memo.clear("dedup")
-    a = registry_ext.docs_signatures(spark, SF_SMOKE)
-    b = registry_ext.docs_signatures(spark, SF_SMOKE)
+    a = registry_dedup.docs_signatures(spark, SF_SMOKE)
+    b = registry_dedup.docs_signatures(spark, SF_SMOKE)
     assert a is b  # one documents-side signature build per session
     memo.clear("dedup")
 
@@ -107,18 +107,18 @@ def test_docs_signatures_family_registered_half_identical(spark):
     """When the dedup family build runs first, docs_signatures is the
     fused checkpoint filtered to doc_id < 1000000 — its rows must be
     identical to the standalone docs-only build (the oracle path)."""
-    from etl_sh_design_spark import registry_ext
+    from etl_sh_design_spark import registry_dedup
 
     memo.clear("dedup")
-    registry_ext.dedup_signatures(spark, SF_SMOKE)  # registers the half
+    registry_dedup.dedup_signatures(spark, SF_SMOKE)  # registers the half
     via_family = sorted(
         (r["doc_id"], tuple(r["sig"]))
-        for r in registry_ext.docs_signatures(spark, SF_SMOKE).collect()
+        for r in registry_dedup.docs_signatures(spark, SF_SMOKE).collect()
     )
     memo.clear("dedup")
     standalone = sorted(
         (r["doc_id"], tuple(r["sig"]))
-        for r in registry_ext.docs_signatures(spark, SF_SMOKE).collect()
+        for r in registry_dedup.docs_signatures(spark, SF_SMOKE).collect()
     )
     assert via_family == standalone
     memo.clear("dedup")

@@ -1,4 +1,5 @@
-"""Golden invariants for the late-round-5 operators (registry_r5b):
+"""Golden invariants for the late-round-5 operators (registry_selection,
+registry_relational, registry_quality):
 token-budget selection, MAD outliers, BPE compression curve, and
 boilerplate-prefix clusters. Cross-engine value equality is covered by
 test_driver_contract's full oracle replay; these pin the *semantic*
@@ -8,12 +9,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_sh_design_spark.registry_r5b import (
+from etl_sh_design_spark.registry_quality import (
     q_boilerplate_prefix_clusters,
     q_bpe_compression_curve,
-    q_mad_outliers_events,
-    q_token_budget_selection,
 )
+from etl_sh_design_spark.registry_relational import q_mad_outliers_events
+from etl_sh_design_spark.registry_selection import q_token_budget_selection
 from tests.conftest import SF_SMOKE
 
 
@@ -32,7 +33,7 @@ def test_token_budget_respected_and_greedy_maximal(spark, duck):
     # rank-order maximality: the selection is exactly the longest
     # (score DESC, doc_id) prefix fitting the budget, so its token sum
     # must equal the largest prefix-cumsum <= budget
-    from etl_sh_design_spark.registry_r5b import _SCORED_DOCS_SQL
+    from etl_sh_design_spark.registry import _SCORED_DOCS_SQL
 
     max_fit, = duck.execute(
         f"""WITH scored AS ({_SCORED_DOCS_SQL}),
@@ -105,7 +106,7 @@ def test_snapshot_diff_partitions_the_union_of_versions(spark):
     status counts reconcile with the deterministic v2 derivation:
     removed = docs with id%17==3, added = docs with id%13==7,
     changed = docs with id%11==5 surviving the delete."""
-    from etl_sh_design_spark.registry_r5b import q_corpus_snapshot_diff
+    from etl_sh_design_spark.registry_selection import q_corpus_snapshot_diff
     from etl_sh_design_spark.registry import _t
     from pyspark.sql import functions as F
 
@@ -131,7 +132,7 @@ def test_curation_pipeline_stage_monotonicity(spark):
     per source, and the dedup stage removes at least every planted
     clone whose original passed the quality gate (clones hash-collide
     with their originals by construction)."""
-    from etl_sh_design_spark.registry_r5b import q_curation_pipeline_e2e
+    from etl_sh_design_spark.registry_selection import q_curation_pipeline_e2e
     from etl_sh_design_spark.registry import _t
     from etl_sh_design_spark.functions import text as T
     from pyspark.sql import functions as F
@@ -161,7 +162,7 @@ def test_quality_calibration_invariants(spark):
     is bounded by ~10% of the source (interpolated percentiles clip
     AT MOST the outer tails, ties can only reduce it), and the
     calibrated mean lies in [0, 1]."""
-    from etl_sh_design_spark.registry_r5b import q_quality_calibration_sources
+    from etl_sh_design_spark.registry_quality import q_quality_calibration_sources
 
     out = q_quality_calibration_sources(spark, SF_SMOKE).collect()
     assert out

@@ -1,7 +1,7 @@
 """PII scrub goldens (functions/text.redact_pii / pii_counts):
 residual-free redaction, count consistency, and the map-only plan
 shape. The cross-engine value pin lives in the driver oracle
-(registry_r8.pii_redaction_sources); these tests pin the semantics
+(registry_quality.pii_redaction_sources); these tests pin the semantics
 the oracle's rollup can't see per-row."""
 
 from __future__ import annotations

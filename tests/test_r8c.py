@@ -1,5 +1,6 @@
 """Semantic invariants for the round-8c curation shapes
-(registry_r8c): perplexity bucketing, the quality retention curve,
+(registry_quality, registry_dedup, registry_selection,
+registry_vectors): perplexity bucketing, the quality retention curve,
 normalized dedup, embedding dimension stats, and the per-source cap.
 Cross-engine value equality is covered by test_driver_contract's full
 oracle replay; these pin the invariants a hash match alone would not
@@ -7,14 +8,13 @@ explain."""
 
 from __future__ import annotations
 
-from etl_sh_design_spark.registry_r8c import (
-    _CAP_K,
-    q_embedding_dim_stats,
-    q_normalized_dedup,
+from etl_sh_design_spark.registry_dedup import q_normalized_dedup
+from etl_sh_design_spark.registry_quality import (
     q_perplexity_buckets,
     q_quality_retention_curve,
-    q_source_cap_sample,
 )
+from etl_sh_design_spark.registry_selection import _CAP_K, q_source_cap_sample
+from etl_sh_design_spark.registry_vectors import q_embedding_dim_stats
 from tests.conftest import SF_SMOKE
 
 
@@ -79,7 +79,7 @@ def test_normalization_key_cross_engine_whitespace_edges(spark, duck):
     r8): pin byte-identical normalization on both engines for every
     ASCII whitespace char, ESPECIALLY \\x0B, plus punctuation and
     collapsing runs."""
-    from etl_sh_design_spark.registry_r8c import _NORM_DUCK, _NORM_SPARK
+    from etl_sh_design_spark.registry import _NORM_DUCK, _NORM_SPARK
 
     texts = [
         "Hello,  World!",
@@ -130,7 +130,7 @@ def test_source_cap_sample_caps_every_source(spark):
 
 
 def test_dup_ngram_fraction_shape_and_bounds(spark, duck):
-    from etl_sh_design_spark.registry_r8c import q_dup_ngram_fraction
+    from etl_sh_design_spark.registry_quality import q_dup_ngram_fraction
 
     rows = q_dup_ngram_fraction(spark, SF_SMOKE).collect()
     assert rows
@@ -156,7 +156,7 @@ def test_dup_ngram_fraction_shape_and_bounds(spark, duck):
 
 
 def test_context_window_fit_monotone(spark, duck):
-    from etl_sh_design_spark.registry_r8c import q_context_window_fit
+    from etl_sh_design_spark.registry_selection import q_context_window_fit
 
     rows = sorted(
         q_context_window_fit(spark, SF_SMOKE).collect(),
@@ -175,7 +175,7 @@ def test_context_window_fit_monotone(spark, duck):
 
 
 def test_cross_source_leakage_traces_to_plants(spark, duck):
-    from etl_sh_design_spark.registry_r8c import q_cross_source_leakage
+    from etl_sh_design_spark.registry_selection import q_cross_source_leakage
 
     rows = q_cross_source_leakage(spark, SF_SMOKE).collect()
     # expected pairs: for every doc_id%10==0 doc with a successor doc,
@@ -201,7 +201,7 @@ def test_cross_source_leakage_traces_to_plants(spark, duck):
 
 
 def test_hard_negative_mining_invariants(spark, duck):
-    from etl_sh_design_spark.registry_r8c import q_hard_negative_mining
+    from etl_sh_design_spark.registry_vectors import q_hard_negative_mining
 
     rows = q_hard_negative_mining(spark, SF_SMOKE).collect()
     # mirror the query's FULL panel predicate (vec_id % 9 = 0 AND
@@ -230,7 +230,7 @@ def test_hard_negative_mining_invariants(spark, duck):
 
 
 def test_vision_token_budget_reconciles(spark, duck):
-    from etl_sh_design_spark.registry_r8c import q_vision_token_budget
+    from etl_sh_design_spark.registry_selection import q_vision_token_budget
 
     rows = q_vision_token_budget(spark, SF_SMOKE).collect()
     assert rows
@@ -252,7 +252,7 @@ def test_ivf_mining_is_cell_consistent_with_exact(spark):
     """The IVF-mined positive/negative can only score <= the exact-
     mined ones (cell restriction never invents a better candidate),
     and every anchor still appears."""
-    from etl_sh_design_spark.registry_r8c import (
+    from etl_sh_design_spark.registry_vectors import (
         q_hard_negative_mining,
         q_hard_negative_mining_ivf,
     )
@@ -278,8 +278,8 @@ def test_leakage_safe_split_invariants(spark):
     naive-straddle audit must count >= 1 straddled cluster whenever a
     multi-doc cluster's members hash apart (exercised by the planted
     near-dup fixture), and split sizes reconcile."""
-    from etl_sh_design_spark.registry_ext import dedup_components
-    from etl_sh_design_spark.registry_r8c import q_leakage_safe_split
+    from etl_sh_design_spark.registry_dedup import dedup_components
+    from etl_sh_design_spark.registry_dedup import q_leakage_safe_split
 
     rows = q_leakage_safe_split(spark, SF_SMOKE).collect()
     comp = dedup_components(spark, SF_SMOKE)
@@ -297,8 +297,8 @@ def test_soft_dedup_weights_reconcile(spark):
     """1/s weighting: effective tokens of a size-s bucket must equal
     raw/s, singletons are untouched, and doc counts reconcile with the
     component table."""
-    from etl_sh_design_spark.registry_ext import dedup_components
-    from etl_sh_design_spark.registry_r8c import q_dedup_soft_weights
+    from etl_sh_design_spark.registry_dedup import dedup_components
+    from etl_sh_design_spark.registry_dedup import q_dedup_soft_weights
 
     rows = q_dedup_soft_weights(spark, SF_SMOKE).collect()
     assert rows
@@ -317,8 +317,8 @@ def test_lsh_band_tuning_scurve_and_ordering(spark):
     probability at every J; measured candidates must follow the same
     ordering, and the (4,4) row must reproduce the shipped default's
     candidate count."""
-    from etl_sh_design_spark.registry_ext import dedup_lsh_pairs
-    from etl_sh_design_spark.registry_r8c import q_lsh_band_tuning
+    from etl_sh_design_spark.registry_dedup import dedup_lsh_pairs
+    from etl_sh_design_spark.registry_dedup import q_lsh_band_tuning
 
     rows = {
         (r["n_bands"], r["band_rows"]): r

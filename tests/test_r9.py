@@ -1,5 +1,5 @@
 """Goldens for the round-9 line-level curation additions
-(registry_r9): the FineWeb line-signal battery and C4 global line
+(registry_quality, registry_dedup): the FineWeb line-signal battery and C4 global line
 dedup — invariants the hash oracle can't express (plant arithmetic,
 cross-query consistency)."""
 
@@ -7,12 +7,9 @@ from __future__ import annotations
 
 import math
 
-from etl_sh_design_spark.registry_r9 import (
-    _C4_K,
-    _LINE_W,
-    q_c4_line_dedup,
-    q_line_quality_rules,
-)
+from etl_sh_design_spark.registry import _LINE_W
+from etl_sh_design_spark.registry_dedup import _C4_K, q_c4_line_dedup
+from etl_sh_design_spark.registry_quality import q_line_quality_rules
 from tests.conftest import SF_SMOKE
 
 
@@ -84,7 +81,7 @@ def test_nfc_dedup_collapses_exactly_the_planted_twins(spark, duck):
     source: n_docs = base + 2*planted, raw distinct = n_docs (every
     plant differs bytewise), nfc distinct = n_docs - planted (each
     plant PAIR collapses to one)."""
-    from etl_sh_design_spark.registry_r9 import q_nfc_dedup_audit
+    from etl_sh_design_spark.registry_dedup import q_nfc_dedup_audit
 
     rows = {r["source"]: r for r in q_nfc_dedup_audit(spark, SF_SMOKE).collect()}
     base = dict(
@@ -147,7 +144,7 @@ def test_c4_line_dedup_untouched_docs_keep_their_text(spark):
     whose lines are all unique corpus-wide."""
     from pyspark.sql import functions as F
 
-    from etl_sh_design_spark.registry_r9 import _LINES_SPARK, _TOKS_SPARK
+    from etl_sh_design_spark.registry import _LINES_SPARK, _SPACE_TOKS as _TOKS_SPARK
 
     d = (
         spark.read.parquet(SF_SMOKE + "/documents.parquet")

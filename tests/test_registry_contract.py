@@ -9,6 +9,10 @@ TSVs — and snapshots the registry in a subprocess pointed at it. The
 tree's directory is replaced by a placeholder before hashing, so the
 digests do not depend on where the tree was written.
 
+The reference gate itself is checked in subprocesses (names skipped
+without the checkout, paths followed to a relocated one), and a static
+test keeps the registry modules independent of each other.
+
 A refactor keeps `tests/registry_contract.json` as it is. A change that
 means to alter a name or an oracle regenerates it:
 
@@ -21,6 +25,8 @@ import json
 import os
 import subprocess
 import sys
+
+import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PIN_PATH = os.path.join(ROOT, "tests", "registry_contract.json")
@@ -131,6 +137,97 @@ def test_registry_contract(spark, tmp_path):
     present = set(without_ref["names"])
     kept = [n for n in pin["window"] if n in present]
     assert without_ref["names"][: len(kept)] == kept
+
+
+def test_registry_skips_reference_queries_when_ref_dir_absent(tmp_path):
+    """With SPARK_GRAFT_REF_DIR pointing nowhere, the registry must
+    import cleanly and simply not register the reference-artifact
+    parity queries (VERDICT r5 'what's wrong' #1)."""
+    env = dict(os.environ, SPARK_GRAFT_REF_DIR=str(tmp_path / "nope"))
+    code = (
+        "from etl_sh_design_spark import registry;"
+        "q = registry.queries(); o = registry.oracle_sql();"
+        "assert 'real_face_physics' not in q and 'real_face_physics' not in o;"
+        "assert len(q) > 100"
+    )
+    subprocess.run([sys.executable, "-c", code], env=env, check=True, cwd=ROOT)
+
+
+def test_registry_honors_relocated_reference_dir(tmp_path):
+    """SPARK_GRAFT_REF_DIR pointing at a COPY of the reference (not
+    the checkout itself) must register all reference-gated queries with
+    paths under the override — the positive twin of the skip test."""
+    import shutil
+
+    from etl_sh_design_spark.sources.io import reference_dir
+
+    src = reference_dir()
+    if not os.path.isdir(os.path.join(src, "layouts")):
+        pytest.skip("reference checkout not available")
+    dst = tmp_path / "refcopy"
+    dst.mkdir()
+    shutil.copytree(os.path.join(src, "layouts"), dst / "layouts")
+    shutil.copytree(os.path.join(src, "data"), dst / "data")
+    env = dict(os.environ, SPARK_GRAFT_REF_DIR=str(dst))
+    code = (
+        "from etl_sh_design_spark import registry;"
+        "q = registry.queries(); o = registry.oracle_sql();"
+        "assert 'real_face_physics' in q and 'real_acceptance_profile' in q;"
+        f"assert '{dst}' in o['real_face_physics'], o['real_face_physics'][:200];"
+        f"assert '{src}' not in o['real_face_physics']"
+    )
+    subprocess.run([sys.executable, "-c", code], env=env, check=True, cwd=ROOT)
+
+
+def _registry_modules() -> list[str]:
+    pkg = os.path.join(ROOT, "etl_sh_design_spark")
+    return sorted(f for f in os.listdir(pkg) if f.startswith("registry") and f.endswith(".py"))
+
+
+def test_registry_modules_stand_alone():
+    """Each domain module imports shared fixtures from `registry` only,
+    never from another `registry_*` module; every module-level import
+    sits above the first definition; and `registry._load_extensions`
+    imports exactly the `registry_*` modules on disk."""
+    import ast
+
+    def registry_imports(root):
+        for node in ast.walk(root):
+            if not isinstance(node, ast.ImportFrom):
+                continue
+            if node.module == "etl_sh_design_spark":
+                targets = [a.name for a in node.names if a.name.startswith("registry_")]
+            elif (node.module or "").startswith("etl_sh_design_spark.registry_"):
+                targets = [node.module.rsplit(".", 1)[1]]
+            else:
+                continue
+            if targets:
+                yield node, targets
+
+    pkg = os.path.join(ROOT, "etl_sh_design_spark")
+    cross, late, loaded = [], [], set()
+    for fname in _registry_modules():
+        tree = ast.parse(open(os.path.join(pkg, fname)).read())
+        loader = next(
+            (n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "_load_extensions"),
+            None,
+        )
+        if fname == "registry.py" and loader is not None:
+            loaded = {t for _, targets in registry_imports(loader) for t in targets}
+        for node, targets in registry_imports(tree):
+            if loader is None or node not in ast.walk(loader):
+                cross.append(f"{fname}:{node.lineno} {targets}")
+        defined = False
+        for node in tree.body:
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                if defined:
+                    late.append(f"{fname}:{node.lineno}")
+            elif not (isinstance(node, ast.Expr) and isinstance(node.value, ast.Constant)):
+                defined = True
+    assert not cross, cross
+    assert not late, late
+    on_disk = {f[:-3] for f in _registry_modules() if f != "registry.py"}
+    assert loaded == on_disk, (sorted(loaded), sorted(on_disk))
 
 
 if __name__ == "__main__":

@@ -8,10 +8,8 @@ import math
 
 from pyspark.sql import functions as F
 
-from etl_sh_design_spark.registry_r5 import (
-    q_quantile_sketch_events,
-    q_semantic_dedup,
-)
+from etl_sh_design_spark.registry_dedup import q_semantic_dedup
+from etl_sh_design_spark.registry_relational import q_quantile_sketch_events
 from tests.conftest import SF_SMOKE
 
 
@@ -137,7 +135,7 @@ def test_quantile_sketch_shard_count_invariant(spark):
     e = spark.read.parquet(SF_SMOKE + "/events.parquet")
     reshard = e.withColumn("user_id", F.col("event_id"))  # different shard split
     # reuse the registry pipeline by substituting the table via a temp view
-    from etl_sh_design_spark import registry_r5 as r5
+    from etl_sh_design_spark import registry_relational as r5
 
     b = reshard.select(
         "event_type",
@@ -191,7 +189,7 @@ def test_bloom_decontamination_no_false_negatives(spark):
     the same contaminated docs and shared-gram count as the
     broadcast-probe decontamination query (false positives only ever
     add candidate pairs, never drop a true hit)."""
-    from etl_sh_design_spark.registry_pipeline import (
+    from etl_sh_design_spark.registry_selection import (
         q_bloom_decontamination,
         q_decontamination,
     )
@@ -210,7 +208,7 @@ def test_cms_linear_merge_and_overestimate_sign(spark):
     commute), and every probe estimate must be >= the exact count
     (collisions only ever add)."""
     from etl_sh_design_spark.operators.dedup import md5_int64
-    from etl_sh_design_spark import registry_r5 as r5
+    from etl_sh_design_spark import registry_quality as r5
 
     rows = r5.q_cms_token_frequency(spark, SF_SMOKE).collect()
     assert len(rows) == r5._CMS_TOPN
@@ -261,7 +259,7 @@ def test_bpe_learns_hand_computed_merges(spark):
     (a,a)=3, (a,ab)=3, (ab,ab)=2 -> lexicographic tie-break picks
     (a,a). Covers the weighted counting, the greedy overlap rule,
     merged-symbol pairs, and the deterministic tie order."""
-    from etl_sh_design_spark.registry_r5 import bpe_learn_merges
+    from etl_sh_design_spark.registry_quality import bpe_learn_merges
 
     w = spark.createDataFrame(
         [(3, "|a||a||a||b|"), (2, "|a||b||a||b|")], "cnt INT, ws STRING"

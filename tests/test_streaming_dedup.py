@@ -4,7 +4,7 @@ document dedup built on it.
 
 Contract chain: minhash_signatures_mapside == minhash_signatures_wide
 (bit-identical per-doc minima) -> the stream's survivor-key set ==
-the batch distinct-signature universe (registry_r8's oracled twins)
+the batch distinct-signature universe (registry_dedup's oracled twins)
 -> re-delivered documents in a LATER micro-batch are still dropped
 while inside the watermark horizon."""
 

@@ -3,7 +3,7 @@ composite-quality admission filter and its bounded-state scoreboard.
 
 Contract chain: the shared `gate_summary` transformation applied to
 the STREAM equals it applied to the static table (stream == batch) ->
-the batch form is the driver-oracled registry_r8.quality_gate_admissions
+the batch form is the driver-oracled registry_quality.quality_gate_admissions
 -> so the DuckDB oracle transitively pins the streaming path. Plus the
 two properties the gate's 100 TB story rests on: the admission filter
 is map-only (legal in front of any stateful operator), and raising the

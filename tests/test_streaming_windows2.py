@@ -159,7 +159,7 @@ def test_streaming_session_window_equals_batch(spark):
 def test_session_window_matches_gaps_islands_sessionization(spark):
     """Cross-formulation pin: session_window sessions must carry the
     same (user, session_start, n_events) triples as the lag-based
-    gaps-and-islands batch sessionization (registry_extra)."""
+    gaps-and-islands batch sessionization (registry_relational)."""
     from etl_sh_design_spark.registry import queries
     from etl_sh_design_spark.streaming.windows import session_agg
 

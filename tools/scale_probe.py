@@ -336,7 +336,7 @@ def _decade_probe(spark, label: str, probes: list) -> None:
 
 
 def main() -> None:
-    from etl_sh_design_spark import registry, registry_ext
+    from etl_sh_design_spark import registry, registry_dedup
     from etl_sh_design_spark.session import get_spark
 
     new_only = "--new-only" in sys.argv
@@ -555,7 +555,7 @@ def main() -> None:
             minhash_signatures_wide,
             word_shingles,
         )
-        from etl_sh_design_spark.registry_ext import _corpus_mutated
+        from etl_sh_design_spark.registry import _corpus_mutated
 
         build_10x(spark)
         build_100x_docs(spark)
@@ -739,16 +739,16 @@ def main() -> None:
         ("cms_token_frequency", "docs", qs["cms_token_frequency"]),
         ("bpe_merge_learn", "docs", qs["bpe_merge_learn"]),
         ("quantile_sketch_events", "events", qs["quantile_sketch_events"]),
-        # registry_r5b late additions
+        # late round-5 additions: budget, MAD outliers, BPE curve, boilerplate
         ("token_budget_selection", "docs", qs["token_budget_selection"]),
         ("mad_outliers_events", "events", qs["mad_outliers_events"]),
         ("bpe_compression_curve", "docs", qs["bpe_compression_curve"]),
         ("boilerplate_prefix_clusters", "docs", qs["boilerplate_prefix_clusters"]),
-        # round-5 late rewrites + registry_r5c label-eval pair
+        # round-5 late rewrites + the kNN label-eval pair
         ("similarity_ann_lsh", "vecs", qs["similarity_ann_lsh"]),
         ("knn_label_accuracy", "vecs", qs["knn_label_accuracy"]),
         ("class_separation", "vecs", qs["class_separation"]),
-        # registry_r5c monitoring / graph / pipeline batch
+        # monitoring / graph / pipeline batch
         ("quality_psi_drift", "docs", qs["quality_psi_drift"]),
         ("keep_rate_ab_test", "docs", qs["keep_rate_ab_test"]),
         ("zipf_slope_sources", "docs", qs["zipf_slope_sources"]),
@@ -845,7 +845,7 @@ def main() -> None:
             sw0 = shuffle_write_bytes(spark)
             t0 = time.perf_counter()
             if fn is None:
-                registry_ext.dedup_components(spark, sf_dir).count()
+                registry_dedup.dedup_components(spark, sf_dir).count()
             else:
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0

@@ -74,7 +74,7 @@ def build_10x_tpch(spark) -> None:
 
 
 def main() -> None:
-    from etl_sh_design_spark import registry, registry_ext
+    from etl_sh_design_spark import registry, registry_dedup
     from etl_sh_design_spark.plans import acceptance
     from etl_sh_design_spark.session import get_spark
     from etl_sh_design_spark.sources.io import reference_dir
@@ -114,7 +114,7 @@ def main() -> None:
             sw0 = shuffle_write_bytes(spark)
             t0 = time.perf_counter()
             if name == "dedup_family_shared":
-                registry_ext.dedup_components(spark, sf_dir).count()
+                registry_dedup.dedup_components(spark, sf_dir).count()
             else:
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             dt = round(time.perf_counter() - t0, 2)
