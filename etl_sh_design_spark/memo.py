@@ -4,7 +4,11 @@ Several registry families rebuild the same small intermediates over and
 over within one session: the dee slot tables and face plans, the
 synthetic tiling chain, the multi-variant ray hits, the PQ/IVF-PQ
 codebooks and ADC tables, the GEMM probe panels, the dedup signatures
-and the preference comparison stream. This module is their one owner.
+and the preference comparison stream. The driver tables' parquet
+schemas (``table_schema``, keyed on each table's files, so a rewrite
+re-infers) spare every read its footer-probe job, and the live k-means
+centroid broadcast (``gemm_centroids``) is swapped, not accumulated.
+This module is their one owner.
 
 Policy (the same for every family):
 
@@ -23,7 +27,9 @@ Policy (the same for every family):
   prefix is computed per session changes. Reusing the built plan also
   reuses its expression IDs, so the generated code text stays stable
   and the Janino compile cache hits — for dimension-sized pipelines
-  compilation, not data, is the cost.
+  compilation, not data, is the cost. The one exception is
+  ``gemm_centroids``: a slot its owner overwrites, holding only which
+  broadcast to unpersist next.
 - ``clear(family)`` drops a family and releases what it held: persisted
   DataFrames are unpersisted and broadcasts destroyed. Lazy
   ``localCheckpoint`` results are only dropped: PySpark has no handle

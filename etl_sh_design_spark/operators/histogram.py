@@ -115,29 +115,16 @@ def profile_rollup(df: DataFrame, bin_cols: list[str], value: str) -> DataFrame:
     )
 
 
-def efficiency(
-    num: DataFrame, den: DataFrame, on: list[str], n_col: str = "cnt"
-) -> DataFrame:
-    """J7: per-bin ratio of two histograms with binomial errors
-    (example.ipynb cell16-17 `num.divide(den, binomial=True)`).
-
-    Joins numerator to denominator on the bin keys (broadcast — both
-    sides are bin-sized), eff = n/d, err = sqrt(eff*(1-eff)/d).
-    """
-    n = num.select(*on, F.col(n_col).alias("_n"))
-    d = den.select(*on, F.col(n_col).alias("_d"))
-    eff = F.col("_n") / F.col("_d")
-    return (
-        d.join(F.broadcast(n), on, "left")
-        .fillna({"_n": 0})
-        .select(
-            *on,
-            (eff).alias("eff"),
-            F.sqrt(eff * (1 - eff) / F.col("_d")).alias("err"),
-            F.col("_n").alias("n_num"),
-            F.col("_d").alias("n_den"),
-        )
-    )
+def efficiency(n_num: str | Column, n_den: str | Column) -> tuple[Column, Column]:
+    """J7: per-bin efficiency ``eff = n_num / n_den`` and its binomial
+    error ``sqrt(eff * (1 - eff) / n_den)`` (example.ipynb cell16-17
+    `num.divide(den, binomial=True)`). Count both in the one
+    aggregation that bins the rows, e.g. ``count_if(pass)`` beside
+    ``count(*)``: no second scan and no join of two histograms."""
+    n = F.col(n_num) if isinstance(n_num, str) else n_num
+    d = F.col(n_den) if isinstance(n_den, str) else n_den
+    eff = n / d
+    return eff, F.sqrt(eff * (1 - eff) / d)
 
 
 def histogram_mean(hist: DataFrame, center: str = "bin_center", cnt: str = "cnt") -> DataFrame:

@@ -21,8 +21,12 @@ round structure.
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from etl_sh_design_spark import memo
 
 _SQDIST = (
     "round(aggregate(zip_with(v, c, (a, b) -> (a - b) * (a - b)), "
@@ -50,23 +54,22 @@ def _assign(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-# One live centroid broadcast per SparkContext: each _assign_gemm call
-# unpersists the previous call's broadcast (unpersist, NOT destroy —
-# a still-lazy earlier plan that re-executes simply refetches the
-# value from the driver, so correctness is unaffected; only the
-# executor-cached blocks are reclaimed). Without this, one Lloyd
-# round per query per bench entry accumulates broadcast blocks for
-# the whole session (ADVICE r9).
-_GEMM_BC_LAST: dict = {}
-
-
-def _evict_prior_gemm_broadcast(sc) -> None:
-    prior = _GEMM_BC_LAST.pop(id(sc), None)
+# One live centroid broadcast per Spark application (memo family
+# "gemm_centroids"): each _assign_gemm call unpersists the previous
+# call's broadcast (unpersist, NOT destroy — a still-lazy earlier plan
+# that re-executes simply refetches the value from the driver, so
+# correctness is unaffected; only the executor-cached blocks are
+# reclaimed). Without this, one Lloyd round per query per bench entry
+# accumulates broadcast blocks for the whole session. The memo holds a
+# plain namespace, which `memo.clear` drops without destroying what
+# it points to.
+def _swap_gemm_broadcast(spark, bc) -> None:
+    """Make ``bc`` the application's live centroid broadcast and
+    unpersist the one it replaces."""
+    slot = memo.get(spark, "gemm_centroids", "live", SimpleNamespace)
+    prior, slot.bc = getattr(slot, "bc", None), bc
     if prior is not None:
-        try:
-            prior.unpersist(blocking=False)
-        except Exception:
-            pass  # context already stopped — nothing to reclaim
+        prior.unpersist(blocking=False)
 
 
 # Centroid-block shard width for the GEMM assignment kernel: the
@@ -116,7 +119,7 @@ def _assign_gemm(
     per task however large k grows; centroids are k x dim —
     driver-tiny at any corpus size. One Lloyd round = one centroid
     broadcast; the previous round's broadcast is unpersisted on the
-    next call (`_evict_prior_gemm_broadcast`) so long bench/scale
+    next call (`_swap_gemm_broadcast`) so long bench/scale
     sessions don't accumulate broadcast blocks."""
     import numpy as np
 
@@ -127,10 +130,8 @@ def _assign_gemm(
     )
     cluster_ids = np.array([c for c, _ in cents], dtype="int64")
     cmat = np.array([v for _, v in cents], dtype="float64")  # k x dim
-    sc = spark.sparkContext
-    _evict_prior_gemm_broadcast(sc)
-    bc = sc.broadcast((cluster_ids, cmat))
-    _GEMM_BC_LAST[id(sc)] = bc
+    bc = spark.sparkContext.broadcast((cluster_ids, cmat))
+    _swap_gemm_broadcast(spark, bc)
 
     def fn(batches):
         import pandas as pd

@@ -40,6 +40,7 @@ from etl_sh_design_spark.operators.histogram import (
     histogram1d,
     histogram2d,
 )
+from etl_sh_design_spark.session import read_table
 from etl_sh_design_spark.sources.io import reference_dir
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -48,12 +49,7 @@ ORACLE: dict[str, str] = {}
 N_RAYS = 20_000  # MC ray count for oracle-checked acceptance queries
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        from etl_sh_design_spark.session import read_events
-
-        return read_events(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+_t = read_table  # every query reads its driver tables through this
 
 
 def query(name: str, sql: str | None = None):
@@ -352,7 +348,10 @@ LIMIT 10
 """,
 )
 def q3(spark, sf_dir):
-    """J-chain + agg + deterministic top-k (TPC-H Q3 shape; §2.7)."""
+    """J-chain + agg + deterministic top-k (TPC-H Q3 shape; §2.7) —
+    orders and customer broadcast, the lineitem side streams (the
+    planner sizes customer x orders as a product and would otherwise
+    broadcast lineitem as the build side)."""
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
@@ -363,8 +362,8 @@ def q3(spark, sf_dir):
     # in the AGG BUFFER forced SortAggregate (two full sorts of the
     # joined lineitems — the plan's only non-broadcast cost).
     rev = (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, li.l_orderkey == o.o_orderkey)
+        li.join(F.broadcast(o), li.l_orderkey == o.o_orderkey)
+        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .groupBy(li.l_orderkey.alias("o_orderkey"), F.col("c_mktsegment"))
         .agg(
             F.sum(li.l_extendedprice * (1 - li.l_discount)).alias("revenue"),
@@ -490,18 +489,18 @@ FROM (
 )
 def q_efficiency(spark, sf_dir):
     """J7/A15: binned efficiency ratio with binomial errors — the
-    reference's `num.divide(den, binomial=True)` (example.ipynb c16-17)."""
+    reference's `num.divide(den, binomial=True)` (example.ipynb c16-17).
+    Numerator and denominator come from one aggregation over one scan."""
     li = _t(spark, sf_dir, "lineitem").filter(_QTY_BINS.in_range("l_quantity"))
-    binned = li.withColumn("qty_bin", _QTY_BINS.bin_of("l_quantity"))
-    num = binned.filter(F.col("l_returnflag") == "R").groupBy("qty_bin").agg(
-        F.count(F.lit(1)).alias("cnt")
+    counts = li.groupBy(_QTY_BINS.bin_of("l_quantity").alias("qty_bin")).agg(
+        F.count_if(F.col("l_returnflag") == "R").alias("n_num"),
+        F.count(F.lit(1)).alias("n_den"),
     )
-    den = binned.groupBy("qty_bin").agg(F.count(F.lit(1)).alias("cnt"))
-    eff = efficiency(num, den, on=["qty_bin"])
-    return eff.select(
+    eff, err = efficiency("n_num", "n_den")
+    return counts.select(
         "qty_bin",
-        F.round("eff", 6).alias("eff"),
-        F.round("err", 6).alias("err"),
+        F.round(eff, 6).alias("eff"),
+        F.round(err, 6).alias("err"),
         "n_num",
         "n_den",
     )

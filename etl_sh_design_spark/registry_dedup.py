@@ -1582,10 +1582,10 @@ _NFC_SQL = f"""
 WITH corpus AS (
   SELECT doc_id, source, text FROM documents
   UNION ALL
-  SELECT doc_id + 2000000, source, {_NFC_MARK_DUCK_C} FROM documents
+  SELECT doc_id + {2 * MUTATED_ID_OFFSET}, source, {_NFC_MARK_DUCK_C} FROM documents
   WHERE doc_id % 11 = 0
   UNION ALL
-  SELECT doc_id + 3000000, source, {_NFC_MARK_DUCK_D} FROM documents
+  SELECT doc_id + {3 * MUTATED_ID_OFFSET}, source, {_NFC_MARK_DUCK_D} FROM documents
   WHERE doc_id % 11 = 0
 ),
 h AS (
@@ -1615,19 +1615,19 @@ def q_nfc_dedup_audit(spark, sf_dir):
         # element-wise (parity asserted in tests); no per-row lambda.
         return s.str.normalize("NFC")
 
-    d = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    d = _t(spark, sf_dir, "documents").select(_guarded_doc_id(), "source", "text")
     plants = d.filter(F.col("doc_id") % 11 == 0)
     corpus = (
         d.unionByName(
             plants.select(
-                (F.col("doc_id") + 2000000).alias("doc_id"),
+                (F.col("doc_id") + 2 * MUTATED_ID_OFFSET).alias("doc_id"),
                 "source",
                 F.expr(_NFC_MARK_SPARK_C).alias("text"),
             )
         )
         .unionByName(
             plants.select(
-                (F.col("doc_id") + 3000000).alias("doc_id"),
+                (F.col("doc_id") + 3 * MUTATED_ID_OFFSET).alias("doc_id"),
                 "source",
                 F.expr(_NFC_MARK_SPARK_D).alias("text"),
             )

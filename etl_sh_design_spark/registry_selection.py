@@ -50,6 +50,7 @@ from etl_sh_design_spark.registry import (
     _SCORED_DOCS_SQL,
     _TOKS,
     _TOKS_DUCK,
+    _guarded_doc_id,
     _repartitioned,
     _scored_docs_sql,
     _t,
@@ -274,12 +275,12 @@ def q_corpus_snapshot_diff(spark, sf_dir):
 # --------------------------------------------------------------------
 
 # Corpus with planted exact duplicates (docs with doc_id % 19 == 4 are
-# cloned at +2_000_000) so the dedup stage demonstrably removes rows —
-# the raw synthetic corpus has no verbatim dups.
-_E2E_CORPUS_SQL = """
+# cloned at +2 * MUTATED_ID_OFFSET) so the dedup stage demonstrably
+# removes rows — the raw synthetic corpus has no verbatim dups.
+_E2E_CORPUS_SQL = f"""
   SELECT doc_id, source, text FROM documents
   UNION ALL
-  SELECT doc_id + 2000000, source, text FROM documents WHERE doc_id % 19 = 4
+  SELECT doc_id + {2 * MUTATED_ID_OFFSET}, source, text FROM documents WHERE doc_id % 19 = 4
 """
 
 
@@ -325,10 +326,10 @@ def q_curation_pipeline_e2e(spark, sf_dir):
     cut — composed; nothing multiplies. Duplicates are planted
     (doc_id % 19 clones) so the dedup stage visibly removes rows.
     """
-    d = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    d = _t(spark, sf_dir, "documents").select(_guarded_doc_id(), "source", "text")
     corpus = d.unionByName(
         d.filter(F.col("doc_id") % 19 == 4).select(
-            (F.col("doc_id") + 2000000).alias("doc_id"), "source", "text"
+            (F.col("doc_id") + 2 * MUTATED_ID_OFFSET).alias("doc_id"), "source", "text"
         )
     )
     scored = corpus.select(
@@ -659,10 +660,10 @@ def q_context_window_fit(spark, sf_dir):
 # source in the per-doc ordering), so the normalized dedup key links
 # source pairs deterministically — the cross-SOURCE twin of
 # normalized_dedup's within-source plant.
-_XSL_PLANT_DUCK = """
+_XSL_PLANT_DUCK = f"""
 SELECT doc_id, source, text FROM documents
 UNION ALL
-SELECT d.doc_id + 2000000 AS doc_id, o.source,
+SELECT d.doc_id + {2 * MUTATED_ID_OFFSET} AS doc_id, o.source,
        upper(d.text) || '  ' AS text
 FROM documents d
 JOIN (SELECT doc_id, source FROM documents) o ON o.doc_id = d.doc_id + 1
@@ -700,13 +701,13 @@ def q_cross_source_leakage(spark, sf_dir):
     duplicated doc across s sources, with s <= |sources|, a
     mixture-design constant), never by corpus size. The rollup
     groups on source pairs — dimension-bounded output."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    d = _t(spark, sf_dir, "documents").select(_guarded_doc_id(), "source", "text")
     nxt = d.select((F.col("doc_id") - 1).alias("doc_id"), F.col("source").alias("next_source"))
     planted = (
         d.filter(F.col("doc_id") % 10 == 0)
         .join(nxt, "doc_id")
         .select(
-            (F.col("doc_id") + 2000000).alias("doc_id"),
+            (F.col("doc_id") + 2 * MUTATED_ID_OFFSET).alias("doc_id"),
             F.col("next_source").alias("source"),
             F.concat(F.upper("text"), F.lit("  ")).alias("text"),
         )

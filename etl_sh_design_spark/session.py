@@ -11,7 +11,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+from etl_sh_design_spark import memo
 
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -71,7 +73,62 @@ def get_spark(
     return spark
 
 
-def read_events(spark: SparkSession, sf_dir: str):
+# session confs that change what parquet schema inference returns: the
+# memoized schema is only reused under the values it was inferred with
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
+def _files_key(path: str) -> tuple:
+    """(relative name, size, mtime_ns, inode) of every file of a
+    parquet table: the file itself, or each file under a directory."""
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = sorted(os.path.join(d, f) for d, _, names in os.walk(path) for f in names)
+    out = []
+    for f in files:
+        st = os.stat(f)
+        out.append((os.path.relpath(f, path), st.st_size, st.st_mtime_ns, st.st_ino))
+    return tuple(out)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """A fresh relation over the parquet table at ``path``.
+
+    Inferring a parquet schema runs a Spark job that reads a footer.
+    The schema is inferred once per session (``memo`` family
+    ``table_schema``) and handed to the reader after that. The key is
+    the absolute path, the inference confs and every file's name,
+    size, mtime and inode, so a table rewritten in place is inferred
+    again. Only the schema is shared: every call builds a new relation
+    with new expression IDs, and nothing is cached. A location that is
+    not a local path (a store URI, or a missing file) goes to Spark as
+    is, so Spark resolves it and its errors stay Spark's own.
+    """
+    if not os.path.exists(path):
+        return spark.read.parquet(path)
+    path = os.path.abspath(path)
+    key = (path, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS), _files_key(path))
+    schema = memo.get(spark, "table_schema", key, lambda: spark.read.parquet(path).schema)
+    return spark.read.schema(schema).parquet(path)
+
+
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The driver table ``name`` (``<sf_dir>/<name>.parquet``) as a
+    fresh relation, its schema inferred once per session. The events
+    table comes normalized by ``read_events``."""
+    if name == "events":
+        return read_events(spark, sf_dir)
+    return _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read the events table, normalizing ``ts`` to a plain TIMESTAMP.
 
     The generator has shipped two physical encodings of ``ts``:
@@ -91,7 +148,7 @@ def read_events(spark: SparkSession, sf_dir: str):
     from pyspark.sql import functions as F
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     ts_type = dict(df.dtypes).get("ts")
     if ts_type in ("bigint", "long"):
         # Integer division: float division (ts/1000) loses precision for
@@ -120,9 +177,8 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict:
     ]
     out = {}
     for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = read_events(spark, sf_dir) if name == "events" else spark.read.parquet(path)
+        if os.path.exists(os.path.join(sf_dir, f"{name}.parquet")):
+            df = read_table(spark, sf_dir, name)
             df.createOrReplaceTempView(name)
             out[name] = df
     return out

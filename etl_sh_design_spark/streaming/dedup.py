@@ -27,19 +27,19 @@ epoch — stand-in for the crawl/ingest timestamp a real feed carries.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_sh_design_spark.operators.dedup import minhash_signatures_mapside
+from etl_sh_design_spark.session import read_table
 
 
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the documents parquet (schema from a
-    batch footer read; pathGlobFilter scopes the directory listing —
-    same pattern as windows.read_events_stream)."""
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
+    """File-source stream over the documents parquet (schema from
+    `session.read_table`, inferred once per session; pathGlobFilter
+    scopes the directory listing — same pattern as
+    windows.read_events_stream)."""
+    schema = read_table(spark, sf_dir, "documents").schema
     return (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")

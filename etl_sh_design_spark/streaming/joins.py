@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_sh_design_spark.session import read_table
 from etl_sh_design_spark.streaming.windows import read_events_stream
 
 
@@ -81,9 +82,7 @@ def streaming_enriched_segment_counts(
     shuffled for the join — the canonical dimension-enrichment shape.
     At scale the dimension re-read per batch is the mechanism that
     picks up slowly-changing dims without restarting the query."""
-    import os
-
-    customers = spark.read.parquet(os.path.join(sf_dir, "customer.parquet")).select(
+    customers = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     enriched = (

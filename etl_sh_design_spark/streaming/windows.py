@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_sh_design_spark.session import _read_parquet
+
 EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -87,13 +89,14 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (driver tables are
     single files; pathGlobFilter scopes the directory listing).
 
-    The stream schema is taken from a batch footer read (cheap — one
-    file footer, no data scan) so both physical ``ts`` encodings the
-    generator has shipped (INT64 nanos, TIMESTAMP(MICROS) NTZ) are
-    normalized to a plain TIMESTAMP exactly like ``session.read_events``.
+    The stream schema is the batch reader's physical schema (inferred
+    once per session, like every driver table's) so both physical
+    ``ts`` encodings the generator has shipped (INT64 nanos,
+    TIMESTAMP(MICROS) NTZ) are normalized to a plain TIMESTAMP exactly
+    like ``session.read_events``.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    physical = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    physical = _read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
     raw = (
         spark.readStream.schema(physical)
         .option("pathGlobFilter", "events.parquet")

@@ -140,7 +140,7 @@ def test_mutated_id_offset_collision_fails_loudly(spark, tmp_path):
     make the shifted copies collide with originals; every fixture that
     shifts doc_ids raises inside the job instead of returning silently
     wrong pairs."""
-    from etl_sh_design_spark import registry, registry_dedup
+    from etl_sh_design_spark import registry, registry_dedup, registry_selection
 
     n = registry.MUTATED_ID_OFFSET + 1
     spark.range(n).select(
@@ -158,15 +158,23 @@ def test_mutated_id_offset_collision_fails_loudly(spark, tmp_path):
     ):
         with pytest.raises(Exception, match="MUTATED_ID_OFFSET"):
             corpus(spark, str(tmp_path)).agg(F.max("doc_id")).collect()
+    # queries that plant their own shifted copies inline
+    for q in (
+        registry_dedup.q_nfc_dedup_audit,
+        registry_selection.q_curation_pipeline_e2e,
+        registry_selection.q_cross_source_leakage,
+    ):
+        with pytest.raises(Exception, match="MUTATED_ID_OFFSET"):
+            q(spark, str(tmp_path)).collect()
 
 
 def _memo_like(name: str) -> bool:
-    return name.upper().endswith(("_MEMO", "_CACHE"))
+    return name.upper().endswith(("_MEMO", "_CACHE", "_LAST"))
 
 
 def test_no_module_level_memo_dicts():
     """Every session memo goes through etl_sh_design_spark.memo: no
-    module keeps its own *_MEMO / *_CACHE dict, and bench.py reaches
+    module keeps its own *_MEMO / *_CACHE / *_LAST dict, and bench.py reaches
     no module's private memo."""
     offenders = []
     for path in sorted((REPO / "etl_sh_design_spark").rglob("*.py")):

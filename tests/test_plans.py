@@ -36,6 +36,46 @@ def test_q5_join_broadcasts_dims(spark):
     assert "SortMergeJoin" not in plan
 
 
+def _subtrees(plan: str, node: str) -> list[str]:
+    """The text of every subtree of ``plan`` rooted at a ``node`` line."""
+    lines = plan.splitlines()
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out = []
+    for i, line in enumerate(lines):
+        if line.lstrip(" :+-").startswith(node):
+            d = depth(line)
+            end = next((j for j in range(i + 1, len(lines)) if depth(lines[j]) <= d), len(lines))
+            out.append("\n".join(lines[i:end]))
+    return out
+
+
+def test_q3_streams_lineitem_under_broadcast_dims(spark):
+    """Q3 shape: orders and customer broadcast and the lineitem scan
+    streams — no BroadcastExchange sits over it."""
+    from etl_sh_design_spark.registry import queries
+
+    plan = _plan(queries()["q3_top_orders"](spark, SF_SMOKE))
+    assert "lineitem.parquet" in plan
+    exchanges = _subtrees(plan, "BroadcastExchange")
+    assert len(exchanges) >= 2, plan
+    assert not any("lineitem.parquet" in sub for sub in exchanges), plan
+    assert "SortMergeJoin" not in plan
+
+
+def test_efficiency_returns_is_one_scan_no_join(spark):
+    """J7: numerator and denominator come from one aggregation over a
+    single lineitem scan — no second scan, no join of two histograms."""
+    from etl_sh_design_spark.registry import queries
+
+    plan = _plan(queries()["efficiency_returns"](spark, SF_SMOKE))
+    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+    assert len(scans) == 1 and "lineitem.parquet" in scans[0], plan
+    assert "Join" not in plan, plan
+
+
 def test_containment_join_uses_layer_hash_key(spark):
     """J1: the layer equi-conjunct must make the containment join a
     BroadcastHashJoin (range predicate as post-condition), NOT a

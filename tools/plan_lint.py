@@ -56,9 +56,6 @@ WHITELIST: dict[str, dict[str, str]] = {
     "mc_sanity_probe": {
         "NESTED_LOOP": "1 probe ray x 4-row layers dim cross join",
     },
-    "efficiency_returns": {
-        "NESTED_LOOP": "scalar total broadcast join (1-row side)",
-    },
     # TPC-H scalar-subquery shapes: 1-row aggregate broadcast
     "q6_revenue_change": {"NESTED_LOOP": "1-row scalar threshold"},
     "q14_promo_ratio": {"NESTED_LOOP": "1-row scalar ratio"},
