@@ -26,8 +26,6 @@ Execution contract for 100 TB:
 
 from __future__ import annotations
 
-from functools import partial
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -36,15 +34,18 @@ from pyspark.sql import functions as F
 PACK_SCHEMA = "shard int, chunk_id bigint, n_docs bigint, sum_tokens bigint"
 
 
-def _pack(pdf: pd.DataFrame, budget: int, id_col: str, tokens_col: str) -> pd.DataFrame:
-    """One shard's greedy scan in `id_col` order. Module-level, so it
-    pickles by reference: workers import this module, which is why the
-    session puts the package root on their path."""
+def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One shard's greedy scan in `doc_id` order, under the frame's
+    `budget` column. Module-level and type-hinted, so it pickles by
+    reference (workers import this module, which is why the session
+    puts the package root on their path) and Spark reads its eval type
+    from the hints."""
     shard = int(pdf["shard"].iloc[0])
-    pdf = pdf.sort_values(id_col)
+    budget = int(pdf["budget"].iloc[0])
+    pdf = pdf.sort_values("doc_id")
     rows = []
     chunk, run, n = -1, 0, 0
-    for tok in pdf[tokens_col]:
+    for tok in pdf["n_tokens"]:
         tok = int(tok)
         if chunk < 0 or run + tok > budget:
             if n > 0:
@@ -73,11 +74,11 @@ def greedy_pack(
     """
     sharded = docs_with_tokens.select(
         (F.col(id_col) % n_shards).cast("int").alias("shard"),
-        F.col(id_col),
-        F.col(tokens_col),
+        F.col(id_col).alias("doc_id"),
+        F.col(tokens_col).alias("n_tokens"),
+        F.lit(budget).alias("budget"),
     )
-    scan = partial(_pack, budget=budget, id_col=id_col, tokens_col=tokens_col)
-    return sharded.groupBy("shard").applyInPandas(scan, PACK_SCHEMA)
+    return sharded.groupBy("shard").applyInPandas(_pack, PACK_SCHEMA)
 
 
 def pack_oracle_sql(

@@ -7,9 +7,12 @@ Every Spark query of the family is a composition of two pieces, over
 one scan of the rays:
 
     rays (tags…, event_id, eta, tanth, cphi, sphi)
-        │ per layer L: P14 point p_L, its grid cell floor(p_L / CELL_MM)
-        │ hit_L = EXISTS broadcast(cell-exploded rects)
-        │         WHERE layer = L AND cell = cell(p_L)
+        │ cells = rects of ALL layers, each exploded into the packed
+        │         keys cell_key(layer, cell_x, cell_y) of its grid
+        │         cells: one table, one broadcast
+        │ per layer L: P14 point p_L,
+        │ hit_L = EXISTS cells
+        │         WHERE cell = cell_key(L, floor(p_L / CELL_MM))
         │           [AND rect tag = ray tag] AND containment
         ▼
     `per_ray_hits`: (tags…, event_id, eta, n = Σ hit_L), every ray,
@@ -18,11 +21,12 @@ one scan of the rays:
     `profile` / `hit_histogram`: one groupBy per (tags…, eta_bin) or
     (tags…, n)                                       # A10-A12, J7, P13
 
-Spark plans each EXISTS as a BroadcastHashJoin ExistenceJoin on the
-cell keys inside the ray stage, so no candidate row, per-event
-aggregate or join back to the rays exists, and the only exchange is
-the bins-sized aggregation. The DuckDB `*_sql` builders are the
-reference implementation (layers cross join, containment join,
+Spark plans each EXISTS as a BroadcastHashJoin ExistenceJoin on the one
+bigint cell key inside the ray stage; the four lookups probe the same
+broadcast (one BroadcastExchange, three ReusedExchanges). No candidate
+row, per-event aggregate or join back to the rays exists, and the only
+shuffle is the bins-sized aggregation. The DuckDB `*_sql` builders are
+the reference implementation (layers cross join, containment join,
 count(DISTINCT layer), per-ray LEFT JOIN); both shapes round to the
 same values.
 """
@@ -78,12 +82,11 @@ def per_ray_hits(rays: DataFrame, rects: DataFrame, tags=()) -> DataFrame:
             *[F.col(t).alias(f"rect_{t}") for t in shared], "layer", "ax1", "ax2", "ay1", "ay2"
         ),
         CELL_MM,
+        layer="layer",
     )
     on = {f"rect_{t}": F.col(f"ray.{t}") for t in shared}
     hits = [
-        contains_point(
-            cells.filter(F.col("layer") == layer), CELL_MM, *project_to_layer(F.lit(z)), on
-        ).cast("int")
+        contains_point(cells, CELL_MM, *project_to_layer(F.lit(z)), layer, on).cast("int")
         for layer, z in enumerate(datagen.LAYER_Z_MM, 1)
     ]
     return ray.select(*tags, "event_id", "eta", reduce(add, hits).alias("n"))

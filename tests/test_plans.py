@@ -89,7 +89,7 @@ def test_containment_join_uses_layer_hash_key(spark):
 def test_binned_containment_is_pure_hash_join(spark):
     """Spatial binning leaves NO nested-loop join anywhere in the
     flagship plan: each layer's lookup is a hash join on the point's
-    (cell_x, cell_y), and no layers cross join is left."""
+    packed cell key, and no layers cross join is left."""
     from etl_sh_design_spark.plans.acceptance import acceptance_profile
 
     plan = _plan(acceptance_profile(spark, 1000))
@@ -272,6 +272,129 @@ def test_per_ray_lookup_matches_brute_force(spark):
     for v, eid, n in want:
         by_ray.setdefault(eid, set()).add(n)
     assert sum(len(ns) > 1 for ns in by_ray.values()) > 50
+
+
+def test_acceptance_profile_shares_one_single_key_broadcast(spark):
+    """The four layer lookups of the flagship probe one packed bigint
+    cell key against ONE broadcast of the cell table: the executed plan
+    has a single BroadcastExchange, keyed on one bigint column (a
+    LongHashedRelation, no UnsafeRow key per probe), and the other
+    three lookups are ReusedExchanges of it. A collect runs 3 jobs: the
+    broadcast, the ray stage and the bins-sized aggregation."""
+    import re
+
+    from etl_sh_design_spark.plans.acceptance import acceptance_profile
+
+    sc = spark.sparkContext
+    group = "plans::acceptance_profile"
+    df = acceptance_profile(spark, 1000)
+    sc.setJobGroup(group, group)
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    spark._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+
+    final = _plan(df).split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final, final
+    (exchange,) = _subtrees(final, "BroadcastExchange")
+    head = exchange.splitlines()[0]
+    assert re.search(
+        r"BroadcastExchange HashedRelationBroadcastMode\(List\(input\[\d+, bigint, \w+\]\),", head
+    ), head
+    assert "Generate explode" in exchange and "cell#" in exchange, exchange
+    reused = [ln for ln in final.splitlines() if "ReusedExchange" in ln]
+    assert len(reused) == 3, final
+    assert all("cell#" in ln and "BroadcastExchange" in ln for ln in reused), final
+
+
+def test_packed_cell_key_aliasing_is_harmless(spark):
+    """Cells one packed-field width (2**CELL_KEY_BITS cells) apart on an
+    axis share a hash key; the strict predicate must still decide. Rects
+    on negative cells and on both sides of zero, rects moved one width
+    out, and points at every combination of -1/0/+1 widths from each
+    rect: `binned_containment_join` and `per_ray_hits` both match a
+    brute-force strict-`<` scan, and many point/rect pairs really alias."""
+    import math
+
+    from etl_sh_design_spark.datagen import LAYER_Z_MM
+    from etl_sh_design_spark.operators.containment import CELL_KEY_BITS, binned_containment_join
+    from etl_sh_design_spark.plans.acceptance import CELL_MM, per_ray_hits
+
+    width = 1 << CELL_KEY_BITS
+    wrap = width * CELL_MM  # one packed-field width, in mm (exact)
+    rects, points = [], []
+    for layer in range(1, 5):
+        for k in range(-3, 3):
+            for j in (-2, -1, 0, 1):
+                bx, by = k * CELL_MM + 20.0, j * CELL_MM + 30.0
+                rects.append((len(rects), layer, bx - 5.0, bx + 5.0, by - 5.0, by + 5.0))
+                if k == j:  # and one width out: cells near -2**24 in x, +2**24 in y
+                    x, y = bx - wrap, by + wrap
+                    rects.append((len(rects), layer, x - 5.0, x + 5.0, y - 5.0, y + 5.0))
+                for ox in (-1, 0, 1):
+                    for oy in (-1, 0, 1):
+                        points.append((len(points), layer, bx + ox * wrap, by + oy * wrap))
+
+    def contains(r, x, y):
+        return r[2] < x < r[3] and r[4] < y < r[5]
+
+    def cell(v):
+        return math.floor(v / CELL_MM)
+
+    def rect_cells(r):
+        xs, ys = range(cell(r[2]), cell(r[3]) + 1), range(cell(r[4]), cell(r[5]) + 1)
+        return [(cx, cy) for cx in xs for cy in ys]
+
+    # point/rect pairs of one layer whose cells differ but share a key
+    aliased = sum(
+        1
+        for _, pl, px, py in points
+        for r in rects
+        if r[1] == pl
+        and (cell(px), cell(py)) not in rect_cells(r)
+        and any(
+            (cx - cell(px)) % width == 0 and (cy - cell(py)) % width == 0
+            for cx, cy in rect_cells(r)
+        )
+    )
+    assert aliased > 100
+
+    want = sorted(
+        (pid, r[0])
+        for pid, pl, px, py in points
+        for r in rects
+        if r[1] == pl and contains(r, px, py)
+    )
+    pdf = spark.createDataFrame(points, "pid INT, layer INT, px DOUBLE, py DOUBLE")
+    rdf = spark.createDataFrame(
+        rects, "rid INT, layer INT, ax1 DOUBLE, ax2 DOUBLE, ay1 DOUBLE, ay2 DOUBLE"
+    )
+    binned = binned_containment_join(pdf, rdf, CELL_MM, extra_keys=["layer"])
+    assert sorted(tuple(r) for r in binned.select("pid", "rid").collect()) == want
+    assert len(want) > len(points) // 9
+
+    # one ray per point, landing on it (to an ulp) in the point's layer;
+    # the brute force below repeats Spark's P14 arithmetic exactly
+    rays = [
+        (pid, 1.0, px / LAYER_Z_MM[pl - 1], py / LAYER_Z_MM[pl - 1])
+        for pid, pl, px, py in points
+    ]
+    want_n = sorted(
+        (eid, sum(
+            any(r[1] == layer and contains(r, z * t * c, z * t * s) for r in rects)
+            for layer, z in enumerate(LAYER_Z_MM, 1)
+        ))
+        for eid, t, c, s in rays
+    )
+    ray_df = spark.createDataFrame(
+        [(eid, 2.0, t, c, s) for eid, t, c, s in rays],
+        "event_id BIGINT, eta DOUBLE, tanth DOUBLE, cphi DOUBLE, sphi DOUBLE",
+    )
+    got = per_ray_hits(ray_df, rdf).select("event_id", "n")
+    assert sorted(tuple(r) for r in got.collect()) == want_n
+    assert {n for _, n in want_n} >= {0, 4}
 
 
 def test_incremental_dedup_broadcasts_key_side(spark):
