@@ -18,8 +18,8 @@ Layout
                    similarity, partition DP, BV grouping)
 - ``plans``      : end-to-end pipelines mirroring the reference's entry
                    points (MC acceptance, tiling, occupancy, bias voltage)
-- ``streaming``  : Structured Streaming extensions (labeled as such —
-                   the reference is batch-only, SURVEY.md §2.9)
+- ``sources``    : TSV / YAML / CSV / Parquet scans and sinks (batch
+                   only, like the reference)
 """
 
 __version__ = "0.1.0"

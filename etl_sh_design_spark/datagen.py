@@ -167,41 +167,6 @@ FROM (
 
 
 # ------------------------------------------------- small dimension tables
-def bv_curves(spark: SparkSession) -> DataFrame:
-    """Bias-voltage breakdown-curve coefficients — the reference's
-    EXACT published functions (sensors.py:4-36, one per
-    vendor/variant/charge): r_min_allowed = a * ln(r_max) + b.
-    Round-6 fidelity fix: earlier rounds carried partially
-    transcribed values; every row below now matches the reference
-    source line for line."""
-    rows = [
-        ("FBK", "w19", 5.0, 307.12, -1468.9),
-        ("FBK", "w15", 5.0, 497.95, -2630.6),
-        ("FBK", "w13", 2.5, 499.43, -2618.8),
-        ("FBK", "w13", 5.0, 435.93, -2251.2),
-        ("FBK", "w13", 10.0, 363.91, -1834.6),
-        ("FBK", "w13", 15.0, 333.15, -1664.5),
-        ("HPK", "split4", 2.5, 578.03, -3103.6),
-        ("HPK", "split4", 5.0, 526.14, -2792.0),
-        ("HPK", "split4", 10.0, 481.91, -2544.6),
-        ("HPK", "split4", 15.0, 446.32, -2338.6),
-    ]
-    return spark.createDataFrame(
-        rows, "vendor STRING, variant STRING, charge_fc DOUBLE, a DOUBLE, b DOUBLE"
-    )
-
-
-BV_CURVES_SQL = (
-    "SELECT * FROM (VALUES "
-    "('FBK','w19',5.0,307.12,-1468.9),('FBK','w15',5.0,497.95,-2630.6),"
-    "('FBK','w13',2.5,499.43,-2618.8),('FBK','w13',5.0,435.93,-2251.2),"
-    "('FBK','w13',10.0,363.91,-1834.6),('FBK','w13',15.0,333.15,-1664.5),"
-    "('HPK','split4',2.5,578.03,-3103.6),('HPK','split4',5.0,526.14,-2792.0),"
-    "('HPK','split4',10.0,481.91,-2544.6),('HPK','split4',15.0,446.32,-2338.6)"
-    ") AS bv_curves(vendor, variant, charge_fc, a, b)"
-)
-
-
 def mod_partitions(spark: SparkSession) -> DataFrame:
     """Pinned per-row readout-board partitions (bias_voltage.py:75-102):
     (row_ordinal, n_boards, flavors ARRAY<INT>)."""

@@ -7,8 +7,9 @@ re-expression of `sensors.py` (reference file, semantics only):
 - P9  sensor_current      sensors.py:44-50
 - P10 per-sensor current  ETL.py:148-152
 - P11 sensor_occupancy    sensors.py:52-57
-- P12 BV breakdown curves sensors.py:4-36 (as a coefficient dim table —
-      see datagen.bv_curves — joined then `a*ln(r)+b`)
+- P12 BV breakdown curves sensors.py:4-36 (`a*ln(r)+b`; the (a, b)
+      pairs the studies use are literals in operators/bv_grouping.py
+      and registry_layout.py)
 """
 
 from __future__ import annotations

@@ -142,13 +142,6 @@ def char_entropy(text: str | Column = "text") -> Column:
     return F.coalesce(F.aggregate(cs, init, merge, finish), F.lit(0.0))
 
 
-def fingerprint(text: str | Column = "text") -> Column:
-    """Document fingerprint: 64-bit hash of the normalized text
-    (lowercased, whitespace-collapsed). xxhash64 is JVM-side and stable."""
-    norm = F.trim(F.regexp_replace(F.lower(_c(text)), r"\s+", " "))
-    return F.xxhash64(norm)
-
-
 def content_hash(text: str | Column = "text") -> Column:
     """Cross-engine-stable content hash (md5 hex of normalized text) —
     md5 is identical in Spark and DuckDB, so exact-dedup queries are

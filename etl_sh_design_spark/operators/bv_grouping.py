@@ -27,8 +27,8 @@ from pyspark.sql import functions as F
 from etl_sh_design_spark import datagen
 from etl_sh_design_spark.functions import physics
 
-# one breakdown curve per vendor (the 5 fC production rows of
-# datagen.bv_curves: fbk_w13_5fc / hpk_split4_5fc, sensors.py:15,29)
+# one breakdown curve per vendor (the 5 fC production curves
+# fbk_w13_5fc / hpk_split4_5fc, sensors.py:15,29)
 CURVES = {"FBK": (435.93, -2251.2), "HPK": (526.14, -2792.0)}
 
 

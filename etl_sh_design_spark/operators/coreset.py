@@ -25,7 +25,7 @@ and operators/graph.py):
   top-1.
 
 Determinism contract (what makes the DuckDB oracle hash-match, same
-rules as kmeans.lloyd):
+rules as kmeans.kmeans_cluster_profile):
 - all arithmetic in double (float -> double is exact);
 - pairwise squared distances rounded to 6 dp BEFORE the per-vector
   min (index-order fold on both engines);

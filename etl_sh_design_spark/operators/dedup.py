@@ -262,12 +262,12 @@ def minhash_signatures_mapside(
     map-side form wins when the cluster is network-bound and loses when
     CPU-bound — and it is the ONLY form usable under Structured
     Streaming, where an aggregation before a stateful dedup would chain
-    two stateful operators (streaming/dedup.py builds on this).
+    two stateful operators.
 
-    `keep_cols=True` carries every input column through (the streaming
-    ingest path needs the full row next to its signature); docs with no
-    n-gram (fewer than `n` tokens, or null text) are dropped exactly
-    like the wide form drops them."""
+    `keep_cols=True` carries every input column through
+    (`with_signature_key` needs the full row next to its signature);
+    docs with no n-gram (fewer than `n` tokens, or null text) are
+    dropped exactly like the wide form drops them."""
     passthrough = [F.col(c) for c in df.columns] if keep_cols else [F.col(id_col)]
     toks = f"filter(split(lower({text_col}), '\\\\s+'), t -> t != '')"
     gram_parts = ", ".join(f"toks[i + {j}]" for j in range(n))
@@ -295,6 +295,17 @@ def minhash_signatures_mapside(
         .select(*passthrough, F.expr(grams).alias("grams"))
         .select(*passthrough, F.expr(f"array({seed_mins})").alias("sig"))
     )
+
+
+def with_signature_key(docs: DataFrame, k: int = 8, n: int = 3) -> DataFrame:
+    """Every input column plus a deterministic near-exact dedup key: the
+    k-hash map-side MinHash signature rendered as one comma-joined
+    string (a scalar group/dedup key). Docs with no n-gram are dropped
+    (they cannot carry a signature)."""
+    sig = minhash_signatures_mapside(docs, k=k, n=n, keep_cols=True)
+    return sig.withColumn(
+        "sig_key", F.concat_ws(",", F.expr("transform(sig, x -> CAST(x AS STRING))"))
+    ).drop("sig")
 
 
 def minhash_signatures_mapside_sql(

@@ -91,27 +91,13 @@ def profile(df: DataFrame, bin_cols: list, value: str) -> DataFrame:
     """A12: mean of `value` per bin -> (bins..., cnt, mean_<value>).
 
     `bin_cols` is a list of (name, Column) pairs or plain column names.
-    Marginalization = re-profile with fewer bin columns (or use
-    `profile_rollup`).
+    Marginalization = re-profile with fewer bin columns.
     """
     keys = [c if isinstance(c, Column) else F.col(c) for c in bin_cols]
     names = [c._jc.toString() if isinstance(c, Column) else c for c in bin_cols]
     return df.groupBy(*[k.alias(n) for k, n in zip(keys, names)]).agg(
         F.count(F.lit(1)).alias("cnt"),
         F.avg(value).alias(f"mean_{value}"),
-    )
-
-
-def profile_rollup(df: DataFrame, bin_cols: list[str], value: str) -> DataFrame:
-    """A12 marginalization via ROLLUP: profiles at every prefix of
-    `bin_cols` in one pass (grouping-set aggregation — one shuffle)."""
-    return (
-        df.rollup(*bin_cols)
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.avg(value).alias(f"mean_{value}"),
-            F.grouping_id().alias("grouping_level"),
-        )
     )
 
 

@@ -196,29 +196,6 @@ def _update(assigned: DataFrame) -> DataFrame:
     )
 
 
-def lloyd(
-    embeddings: DataFrame,
-    k: int = 8,
-    iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Run `iterations` Lloyd rounds; returns the final assignment
-    (vec_id, cluster, dist) with distances to the LAST round's
-    centroids."""
-    vecs = embeddings.select(
-        F.col(id_col).alias("vec_id"), _as_double(vec_col).alias("v")
-    ).localCheckpoint(eager=False)
-    centroids = vecs.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").cast("int").alias("cluster"), F.col("v").alias("c")
-    )
-    assigned = None
-    for _ in range(iterations):
-        assigned = _assign(vecs, centroids)
-        centroids = _update(assigned).localCheckpoint(eager=False)
-    return assigned.select("vec_id", "cluster", "dist")
-
-
 def kmeans_cluster_profile(
     embeddings: DataFrame, k: int = 8, iterations: int = 2
 ) -> DataFrame:

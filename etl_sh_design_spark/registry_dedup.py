@@ -36,6 +36,7 @@ from etl_sh_design_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash,
     simhash_pairs,
+    with_signature_key,
     word_shingles,
     word_shingles_sql,
 )
@@ -77,7 +78,6 @@ from etl_sh_design_spark.registry import (
     _v2_corpus,
     query,
 )
-from etl_sh_design_spark.streaming.dedup import with_signature_key
 
 
 # ------------------------------------------------------------ exact dedup
@@ -1014,7 +1014,7 @@ def q_incremental_refresh_pipeline(spark, sf_dir):
     )
 
 
-_K = 8  # signature width for the streaming-dedup family (k md5s/row)
+_K = 8  # signature width for the signature-key dedup family (k md5s/row)
 
 _SIG_KEY_SQL = f"""
 WITH sig AS ({minhash_signatures_mapside_sql('documents', k=_K)})
@@ -1051,10 +1051,8 @@ HAVING COUNT(*) >= 2
 
 @query("signature_dedup_groups", _GROUPS_SQL)
 def q_signature_dedup_groups(spark, sf_dir):
-    """Near-exact duplicate groups by identical MinHash signature —
-    the batch twin of streaming/dedup.streaming_signature_dedup's
-    output contract. One |groups|-sized shuffle after the map-side
-    signature projection."""
+    """Near-exact duplicate groups by identical MinHash signature. One
+    |groups|-sized shuffle after the map-side signature projection."""
     docs = _t(spark, sf_dir, "documents")
     return (
         with_signature_key(docs, k=_K)

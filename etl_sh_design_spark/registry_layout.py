@@ -545,8 +545,8 @@ FROM (
 GROUP BY 1, 2
 """
 
-# CURVES constants from operators/bv_grouping.py (5 fC rows of
-# datagen.bv_curves): FBK w13 5fC (435.93, -2251.2), HPK split4 5fC (526.14, -2792.0).
+# CURVES constants from operators/bv_grouping.py (the 5 fC rows of
+# sensors.py:15,29): FBK w13 5fC (435.93, -2251.2), HPK split4 5fC (526.14, -2792.0).
 _GREEDY_SCAN_SQL = f"""
 WITH RECURSIVE mods AS ({_MODULES_SQL}),
 m AS MATERIALIZED (
@@ -1227,7 +1227,7 @@ def q_real_partition_flavors(spark, sf_dir):
 _AHX, _AHY = 42.5 / 2 - 0.5, 22.0 / 2 - 0.5
 
 # The study's 8 single-sensor configurations (bias_voltage.py:118-128)
-# = the w13/split4 rows of datagen.bv_curves (sensors.py:12-35).
+# = the w13/split4 breakdown curves of sensors.py:12-35.
 _BV_CONFIGS = [
     ("FBK_w13_2p5fC", 499.43, -2618.8),
     ("FBK_w13_5fC", 435.93, -2251.2),

@@ -13,6 +13,7 @@ value depends on accumulation order are rounded to 6 dp on both sides.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -36,7 +37,6 @@ from etl_sh_design_spark.registry import (
     _v2_corpus,
     query,
 )
-from etl_sh_design_spark.streaming.quality import DEFAULT_THRESHOLD, gate_summary
 
 
 # ------------------------------------------------------------ text analysis
@@ -1097,7 +1097,43 @@ def q_char_entropy_quality(spark, sf_dir):
     )
 
 
-# ------------------------------------------------- streaming quality gate twin
+# ------------------------------------------------------- ingest quality gate
+DEFAULT_THRESHOLD = 0.6  # splits the driver corpus near its median
+
+
+def admitted_docs(docs: DataFrame, threshold: float = DEFAULT_THRESHOLD) -> DataFrame:
+    """The quality gate: every input column plus the rounded composite
+    `quality` score; documents below the threshold are dropped.
+    Map-only (scan -> project -> filter), so it composes in front of
+    any downstream operator without an exchange."""
+    return docs.withColumn("quality", text.quality_score("text")).where(
+        F.col("quality") >= F.lit(threshold)
+    )
+
+
+def gate_summary(docs: DataFrame, threshold: float = DEFAULT_THRESHOLD) -> DataFrame:
+    """Per-(lang, source) admission counts and mean/min admitted
+    quality. The key space is bounded by the lang/source vocabularies,
+    so the aggregate's state does not grow with the corpus."""
+    # The mean is computed over exact 6-dp micro-units (each per-doc
+    # quality is already round(x, 6), so round(q * 1e6) is an exact
+    # integer): the sum is then order-independent, so the cross-engine
+    # hash cannot land on a round-half boundary the way round(avg(..))
+    # over non-associative double summation can (observed: one
+    # 0.686152 vs 0.686153 row at sf0.001).
+    micro = F.round(F.col("quality") * 1e6).cast("bigint")
+    return (
+        admitted_docs(docs, threshold)
+        .groupBy("lang", "source")
+        .agg(
+            F.count(F.lit(1)).alias("n_admitted"),
+            F.round(
+                F.sum(micro) / (F.count(F.lit(1)) * F.lit(1e6)), 6
+            ).alias("avg_quality"),
+            F.round(F.min("quality"), 6).alias("min_quality"),
+        )
+    )
+
 
 _QUALITY_GATE_SQL = f"""
 WITH scored AS (
@@ -1130,15 +1166,10 @@ GROUP BY 1, 2
 
 @query("quality_gate_admissions", _QUALITY_GATE_SQL)
 def q_quality_gate_admissions(spark, sf_dir):
-    """Batch twin of the STREAMING quality gate's scoreboard contract
-    (streaming/quality.py): per-(lang, source) admitted-document
-    counts and mean/min admitted quality at the default threshold.
-    The stream's drained complete-mode output is asserted equal to
-    this exact table by tests/test_streaming_quality.py, so the
-    driver oracle here transitively pins the streaming path too.
-    The aggregation key space is bounded (langs x sources), which is
-    what makes the streaming variant's state O(vocab), not O(corpus).
-    """
+    """Ingest quality-gate scoreboard: per-(lang, source)
+    admitted-document counts and mean/min admitted quality at the
+    default threshold. The aggregation key space is bounded
+    (langs x sources), so its state is O(vocab), not O(corpus)."""
     return gate_summary(_t(spark, sf_dir, "documents"), DEFAULT_THRESHOLD)
 
 

@@ -853,9 +853,8 @@ def q_sliding_window_events(spark, sf_dir):
     """Sliding event-time windows (10 min window, 5 min slide): each
     event lands in exactly window/slide = 2 windows. Spark's F.window
     generates the per-event window replicas map-side; the oracle
-    unnests the two slide-aligned starts explicitly. This is the batch
-    twin of the streaming sliding-window aggregation
-    (streaming/windows.py); shuffle is |windows|-sized."""
+    unnests the two slide-aligned starts explicitly; shuffle is
+    |windows|-sized."""
     e = _t(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("win"))
@@ -1574,9 +1573,8 @@ GROUP BY 1, 2
 """,
 )
 def q_sessionization(spark, sf_dir):
-    """Sessionization (30-min inactivity gap) via lag + running sum —
-    the batch twin of streaming `session_window` (OLAP pattern from the
-    engine's streaming layer, §2.9 extension)."""
+    """Sessionization (30-min inactivity gap) via lag + running sum
+    (the gaps-and-islands OLAP pattern)."""
     e = _t(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     marked = e.withColumn(
@@ -2292,12 +2290,10 @@ GROUP BY 1
 )
 def q_funnel_interval_join(spark, sf_dir):
     """Event-funnel interval join: click -> purchase by the same user
-    within 10 minutes (the batch twin of the stream-stream interval
-    join in tests/test_streaming_join.py). Equi-key on user_id with a
-    time-range residual: Spark executes it as a hash/sort-merge join
-    on user_id with the range as a post-filter — at 100 TB both sides
-    are bucketed by user_id so the join is co-located, and the range
-    bound keeps streaming state finite in the streaming twin."""
+    within 10 minutes. Equi-key on user_id with a time-range residual:
+    Spark executes it as a hash/sort-merge join on user_id with the
+    range as a post-filter — at 100 TB both sides are bucketed by
+    user_id so the join is co-located."""
     e = _t(spark, sf_dir, "events")
     c = e.filter(F.col("event_type") == "click").select(
         "user_id", F.unix_micros("ts").alias("c_us")
@@ -2403,7 +2399,7 @@ def q_resample_locf(spark, sf_dir):
     )
 
 
-# ----------------------------------------------- streaming-equivalent agg
+# ------------------------------------------------ tumbling-window agg
 @query(
     "tumbling_window_events",
     """
@@ -2416,9 +2412,8 @@ GROUP BY 1, 2
 """,
 )
 def q_tumbling(spark, sf_dir):
-    """Tumbling 1-hour windowed aggregation over events — the batch
-    twin of the Structured Streaming pipeline in
-    `etl_sh_design_spark.streaming` (§2.9 extension, labeled as such)."""
+    """Tumbling 1-hour windowed aggregation over events (one
+    |windows x event types|-sized shuffle)."""
     e = _t(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")

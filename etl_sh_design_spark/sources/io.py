@@ -251,44 +251,3 @@ def write_zordered(
         .parquet(path)
     )
 
-
-def read_jsonl(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """JSON-lines scan with an explicit schema (never inferSchema — a
-    schema-inference pass is a second full read of the data at scale)
-    and PERMISSIVE corrupt-record capture, mirroring the TSV scan's
-    skip-and-report contract (`split_corrupt` works on the result).
-
-    The schema the caller passes must NOT include _corrupt_record;
-    it is appended here."""
-    full = T.StructType(
-        list(schema.fields) + [T.StructField("_corrupt_record", T.StringType())]
-    )
-    return (
-        spark.read.option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .schema(full)
-        .json(path)
-    )
-
-
-def write_orc(df: DataFrame, path: str, sort_col: str | None = None) -> None:
-    """ORC sink (§2.1 breadth beside the Parquet/CSV/YAML/JSONL
-    family): ORC ships in Spark's JVM with the same columnar
-    footer-statistics contract as Parquet — predicate pushdown and
-    column pruning work unchanged, so the choice between the two at
-    100 TB is an ecosystem question (Hive/Trino interop), not a plan
-    question. An optional within-file sort keys the min/max stride
-    stats the reader prunes on (the write_zordered idea, single
-    column)."""
-    w = df
-    if sort_col is not None:
-        w = df.sortWithinPartitions(sort_col)
-    w.write.mode("overwrite").orc(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan; schema comes from the file footer (self-describing,
-    no inference pass)."""
-    return spark.read.orc(path)

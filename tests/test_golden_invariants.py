@@ -1,6 +1,6 @@
 """Golden invariants ported from the reference's own sanity checks
 (SURVEY.md §5) plus property tests for the non-SQL-expressible
-operators (W4 greedy scan, banded SimHash, streaming)."""
+operators (W4 greedy scan, banded SimHash)."""
 
 from __future__ import annotations
 
@@ -134,19 +134,6 @@ def test_histogram_totals(spark):
     hist_total = histogram1d(li, "l_extendedprice", spec).agg(F.sum("cnt")).collect()[0][0]
     raw_total = li.filter(spec.in_range("l_extendedprice")).count()
     assert hist_total == raw_total
-
-
-def test_streaming_equals_batch(spark):
-    """Structured Streaming tumbling agg == batch tumbling agg."""
-    from etl_sh_design_spark.registry_relational import q_tumbling
-    from etl_sh_design_spark.streaming.windows import streaming_tumbling_counts
-
-    stream_rows = {
-        tuple(r)
-        for r in streaming_tumbling_counts(spark, SF_SMOKE, query_name="t_stream_eq").collect()
-    }
-    batch_rows = {tuple(r) for r in q_tumbling(spark, SF_SMOKE).collect()}
-    assert stream_rows == batch_rows
 
 
 def test_approx_aggregates_sane(spark):

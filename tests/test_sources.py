@@ -90,32 +90,6 @@ def test_filter_blocked_polygons(spark):
     assert [r["slot_id"] for r in kept] == [1]
 
 
-def test_jsonl_scan_permissive(spark, tmp_path):
-    """JSONL source: explicit schema, bad lines quarantined not dropped."""
-    import pyspark.sql.types as T
-
-    from etl_sh_design_spark.sources.io import read_jsonl, split_corrupt
-
-    p = tmp_path / "rows.jsonl"
-    p.write_text(
-        '{"id": 1, "name": "a", "score": 0.5}\n'
-        '{"id": 2, "name": "b", "score": 1.5}\n'
-        'this is not json\n'
-        '{"id": "not-an-int", "name": "c", "score": 2.5}\n'
-    )
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-    clean, bad = split_corrupt(read_jsonl(spark, str(p), schema))
-    good = {r["id"] for r in clean.collect()}
-    assert good == {1, 2}
-    assert bad.count() == 2
-
-
 def test_rects_overlap_polygon_cases(spark):
     """J3 polygon-polygon overlap (reference ETL.py:552-553): every
     geometric relationship class, against a triangle (0,0)(10,0)(0,10)."""

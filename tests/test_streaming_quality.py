@@ -1,48 +1,27 @@
-"""Streaming quality-gate goldens (streaming/quality.py): the in-stream
-composite-quality admission filter and its bounded-state scoreboard.
+"""Ingest quality-gate goldens (registry_quality.py): the composite-
+quality admission filter `admitted_docs` and its bounded-state
+scoreboard `gate_summary`, the transformation behind the
+driver-oracled `quality_gate_admissions` query.
 
-Contract chain: the shared `gate_summary` transformation applied to
-the STREAM equals it applied to the static table (stream == batch) ->
-the batch form is the driver-oracled registry_quality.quality_gate_admissions
--> so the DuckDB oracle transitively pins the streaming path. Plus the
-two properties the gate's 100 TB story rests on: the admission filter
-is map-only (legal in front of any stateful operator), and raising the
+The properties the gate's 100 TB story rests on: the admission filter
+is map-only (legal in front of any stateful operator), raising the
 threshold admits a strict subset (no score is recomputed differently
-at a different threshold)."""
+at a different threshold), the scoreboard's key space is bounded by
+the (lang, source) vocabulary, and the rounded score is cross-engine
+bit-stable on adversarial texts."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from etl_sh_design_spark.streaming.dedup import with_signature_key
-from etl_sh_design_spark.streaming.quality import (
+from etl_sh_design_spark.registry_quality import (
     DEFAULT_THRESHOLD,
     admitted_docs,
     gate_summary,
-    streaming_gated_dedup,
-    streaming_quality_gate,
 )
 from tests.conftest import SF_SMOKE
 
 
 def _docs(spark):
     return spark.read.parquet(SF_SMOKE + "/documents.parquet")
-
-
-def _key(rows):
-    return sorted(
-        (r["lang"], r["source"], r["n_admitted"], r["avg_quality"], r["min_quality"])
-        for r in rows
-    )
-
-
-def test_streaming_gate_equals_batch(spark):
-    """Drained complete-mode scoreboard == the shared transformation on
-    the static table (the driver-oracled batch twin)."""
-    got = streaming_quality_gate(spark, SF_SMOKE, query_name="qgate_t1")
-    want = gate_summary(_docs(spark), DEFAULT_THRESHOLD)
-    assert _key(got.collect()) == _key(want.collect())
-    assert got.count() > 0
 
 
 def test_gate_filter_is_mapside(spark):
@@ -72,24 +51,6 @@ def test_threshold_monotonicity(spark):
     assert 0 < len(mid) < n_total  # the default threshold really gates
 
 
-def test_streaming_gated_dedup_equals_batch_composition(spark):
-    """Gate -> dedup composed in ONE stream: survivors carry exactly
-    the signature universe of the batch composition of the same two
-    shared transformations (both independently driver-oracled), and
-    every survivor passed the gate."""
-    got = streaming_gated_dedup(spark, SF_SMOKE, query_name="gdedup_t1")
-    batch_keys = {
-        r["sig_key"]
-        for r in with_signature_key(admitted_docs(_docs(spark), DEFAULT_THRESHOLD))
-        .select("sig_key")
-        .collect()
-    }
-    rows = got.collect()
-    assert {r["sig_key"] for r in rows} == batch_keys
-    assert len(rows) == len(batch_keys)  # one survivor per signature
-    assert all(r["quality"] >= DEFAULT_THRESHOLD for r in rows)
-
-
 def test_scoreboard_state_is_bounded(spark):
     """The scoreboard key space is exactly the (lang, source) vocabulary
     of the ADMITTED set — bounded by the full vocabulary product, never
@@ -99,85 +60,6 @@ def test_scoreboard_state_is_bounded(spark):
     board = gate_summary(docs, DEFAULT_THRESHOLD)
     vocab = docs.select("lang", "source").distinct().count()
     assert board.count() <= vocab
-
-
-def test_gated_ingest_restart_resumes_state(spark, tmp_path):
-    """Exactly-once restart contract of the durable ingest
-    (start_gated_ingest): stop the stream after delivery 1, deliver
-    batch 2 containing brand-new docs PLUS near-exact duplicates of
-    already-admitted batch-1 survivors (same text, new doc_ids), and
-    restart from the SAME checkpoint. The resumed query must (a) not
-    re-emit batch-1 files (offset recovery), (b) still drop the
-    re-delivered duplicates (dedup state-store recovery), (c) emit
-    exactly the genuinely-new admitted signatures."""
-    import shutil
-
-    from etl_sh_design_spark.streaming.quality import start_gated_ingest
-
-    src = tmp_path / "src"
-    out = tmp_path / "out"
-    ckpt = tmp_path / "ckpt"
-    src.mkdir()
-
-    docs = spark.read.parquet(SF_SMOKE + "/documents.parquet")
-    ids = sorted(r["doc_id"] for r in docs.select("doc_id").collect())
-    mid, top = ids[len(ids) // 2], ids[-1]
-    p1 = docs.filter(F.col("doc_id") <= mid)
-    p2_new = docs.filter(F.col("doc_id") > mid)
-
-    def deliver(df, name):
-        stage = tmp_path / ("stage_" + name)
-        df.coalesce(1).write.parquet(str(stage))
-        part = next(stage.glob("part-*.parquet"))
-        shutil.move(str(part), str(src / (name + ".parquet")))
-
-    deliver(p1, "p1")
-    q = start_gated_ingest(spark, str(src), str(out), str(ckpt), docs.schema)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    a = spark.read.parquet(str(out)).collect()
-    a_ids = {r["doc_id"] for r in a}
-    a_keys = {r["sig_key"] for r in a}
-    assert a_ids and a_ids <= set(ids[: len(ids) // 2 + 1])
-    assert all(r["quality"] >= DEFAULT_THRESHOLD for r in a)
-
-    # batch 2: the other half, plus near-exact duplicates of 3 admitted
-    # batch-1 survivors (same text -> same signature, fresh doc_ids)
-    dup_src_ids = sorted(a_ids)[:3]
-    dups = (
-        docs.filter(F.col("doc_id").isin(dup_src_ids))
-        .withColumn("doc_id", F.col("doc_id") + F.lit(top + 1000))
-    )
-    deliver(p2_new.unionByName(dups), "p2")
-
-    q2 = start_gated_ingest(spark, str(src), str(out), str(ckpt), docs.schema)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-    allrows = spark.read.parquet(str(out)).collect()
-    b = [r for r in allrows if r["doc_id"] not in a_ids]
-    b_ids = {r["doc_id"] for r in b}
-    b_keys = {r["sig_key"] for r in b}
-
-    # (a) offset recovery: nothing from batch 1 re-emitted
-    assert len(allrows) == len(a) + len(b)
-    assert b_ids <= {r["doc_id"] for r in p2_new.collect()} | {
-        i + top + 1000 for i in dup_src_ids
-    }
-    # (b) state recovery: every re-delivered duplicate dropped
-    assert not ({i + top + 1000 for i in dup_src_ids} & b_ids)
-    assert not (a_keys & b_keys)
-    # (c) exactly the new admitted signature universe
-    expected = {
-        r["sig_key"]
-        for r in with_signature_key(admitted_docs(p2_new, DEFAULT_THRESHOLD))
-        .select("sig_key")
-        .collect()
-    } - a_keys
-    assert b_keys == expected
 
 
 # --------------------------------------------------------------- fuzz

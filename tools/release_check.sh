@@ -18,7 +18,7 @@
 # 3. bench          — all queries at sf0.1, one JSON line; fails on
 #                     any query error (-1 entries)
 # 4. pytest         — the full local suite (goldens, plans, fuzz,
-#                     streaming, driver-contract replay at sf0.001)
+#                     reachability, driver-contract replay at sf0.001)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
