@@ -19,9 +19,9 @@ Policy (the same for every family):
   would hand out DataFrames bound to a dead context. On every access by
   a different application all entries are dropped without release —
   their context, and with it their storage, is gone.
-- Builds are lazy: ``build`` returns plans (lazily checkpointed or
-  persisted), broadcasts or driver-side tables; a build that raises
-  stores nothing.
+- Builds are lazy: ``build`` returns plans (lazily checkpointed, or
+  persisted through ``persisted``), broadcasts or driver-side tables;
+  a build that raises stores nothing.
 - Memoizing is a pure plan cache. Every build is deterministic, so a
   hit returns what a rebuild would compute; only how often the shared
   prefix is computed per session changes. Reusing the built plan also
@@ -72,6 +72,16 @@ def get(spark, family: str, key, build):
         value = build()
         _entries[full] = value
         return value
+
+
+def persisted(spark, family: str, key, build) -> DataFrame:
+    """The memoized ``build()`` DataFrame behind one lazy ``persist()``,
+    which runs no job: the first action fills the cache. Every access
+    re-marks it, as a ``catalog.clearCache()`` drops the registration."""
+    df = get(spark, family, key, build)
+    if df.storageLevel == StorageLevel.NONE:
+        df.persist()
+    return df
 
 
 def plan_key(df: DataFrame) -> int:

@@ -4,20 +4,23 @@ partition.py:3-67 semantics).
 Decompose a row length n into readout-board flavors (default {7,6,3}):
 maximize covered sum <= n, then minimize piece count, deterministic
 largest-first ordering. The reference memoizes a DP; at engine level
-the right shape is a LOOKUP DIMENSION TABLE (n is tiny, <= ~60) joined
-broadcast — a UDF would serialize the same computation per row for no
-reason (SURVEY.md §7.3).
+n is tiny (<= MAX_N), so the plans read a LITERAL of every partition —
+no join, no broadcast job, and no UDF serializing the same computation
+per row (SURVEY.md §7.3).
 
-`partition_lookup(spark, flavors=...)` builds the exploded (n,
-ordinal, flavor, n_boards, covered) table; `PARTITION_LOOKUP_SQL` is
-the identical literal (default flavors) for the DuckDB oracle.
+`partition_of(n, flavors=...)` is that lookup as one Column;
+`partition_lookup(spark, flavors=...)` is the exploded (n, ordinal,
+flavor, n_boards, covered) table; `PARTITION_LOOKUP_SQL` is the
+identical literal (default flavors) for the DuckDB oracle.
 """
 
 from __future__ import annotations
 
+import json
 from functools import lru_cache
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 MAX_N = 60
 DEFAULT_FLAVORS = (7, 6, 3)
@@ -50,6 +53,32 @@ def partition_rows(max_n: int = MAX_N, flavors: tuple[int, ...] = DEFAULT_FLAVOR
         for i, f in enumerate(p):
             rows.append((n, i + 1, f, len(p), sum(p)))
     return rows
+
+
+def partition_of(n: str | Column, flavors: tuple[int, ...] = DEFAULT_FLAVORS) -> Column:
+    """best_partition(n, flavors) for the integer column `n`, as
+    struct(covered, n_boards, boards: array<struct(ordinal, flavor,
+    offset)>), `offset` being the slots of the boards before it; NULL
+    for n outside 0..MAX_N. Read a board with `get(boards, i)`, never
+    `boards[i]`: n = 1 or 2 has none, and ANSI mode raises on the index."""
+    return F.get(F.expr(_partitions_sql(tuple(flavors))), n)
+
+
+_PARTITIONS_T = (
+    "array<struct<covered:int,n_boards:int,boards:array<struct<ordinal:int,flavor:int,offset:int>>>>"
+)
+
+
+@lru_cache(maxsize=None)
+def _partitions_sql(flavors: tuple[int, ...]) -> str:
+    """Every partition 0..MAX_N as ONE `from_json` literal: it folds to
+    the same constant as an array(named_struct…) tree, but the analyzer
+    reads one node, not hundreds (~13 vs ~80 ms per plan built on it)."""
+    parts = []
+    for p in (best_partition(n, flavors) for n in range(MAX_N + 1)):
+        boards = [{"ordinal": i + 1, "flavor": f, "offset": sum(p[:i])} for i, f in enumerate(p)]
+        parts.append({"covered": sum(p), "n_boards": len(p), "boards": boards})
+    return f"from_json('{json.dumps(parts)}', '{_PARTITIONS_T}')"
 
 
 def partition_lookup(

@@ -5,8 +5,8 @@ tiling whose counts the reference prints at dee_geometry.py:382-394).
 
 Shares its core with plans/tiling.py (the stand-in slot pipeline kept
 for the SQL-expressible §2 oracles): the blocked-geometry builders,
-the runs / two-pass fallback and the board placement window are
-tiling.py's, called here keyed by (face, iy). It differs in three
+the runs / two-pass fallback and the board placement are tiling.py's,
+called here keyed by (face, iy). It differs in three
 reference-fidelity respects:
 
 1. The slot grid is the reference's: built from a 1-module SuperModule
@@ -41,8 +41,11 @@ rect (operators/polygon.py: higher-order functions over the
 dimension-sized polygon set as a literal, no Python worker); the chain
 rule is one pass of two (face, iy) windows over the flags, read once —
 no join, so the slot table is one pipeline that shuffles on row keys
-only, and a 1000x finer grid still shuffles only row keys. Counting is
-a partition-lookup broadcast join + map-side combine aggregation.
+only, and a 1000x finer grid still shuffles only row keys. The faces,
+configurations and partitions are driver-side literals read as Column
+expressions (an `inline` generator per grid row, a `get` into the
+partition array of operators/partition.partition_of), so no plan here
+joins or broadcasts a dimension table.
 
 Committed-output validation: the shared algorithm (grid + corner
 conditions + partition + counting, no polygons) reproduces FIVE
@@ -58,7 +61,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_sh_design_spark import memo
-from etl_sh_design_spark.operators.partition import DEFAULT_FLAVORS, partition_lookup
+from etl_sh_design_spark.operators.partition import DEFAULT_FLAVORS, partition_of
 from etl_sh_design_spark.operators.polygon import point_in_polygon, rect_overlap_count
 from etl_sh_design_spark.plans.tiling import (
     ETL_OUTER,
@@ -150,30 +153,19 @@ def _annulus_ok(x1, y1, x2, y2, r_in: float, r_out: float):
 
 
 # The slot table feeds MANY downstream branches (the two-pass runs
-# split, totals/flavors/boards); memoized behind one lazy persist, the
-# polygon-flag stage (interpreted higher-order functions) runs once per
-# session and every consumer reads the 841-row-per-face result.
-# persist(), NOT localCheckpoint: even a lazy (eager=False) checkpoint
-# calls queryExecution.toRdd at build time, which pre-submits the
-# plan's broadcast-exchange jobs — breaking the no-jobs-at-construction
-# contract (tests/test_lazy_construction.py).
+# split, totals/flavors/boards); memoized behind one lazy persist
+# (memo.persisted), the polygon-flag stage (interpreted higher-order
+# functions) runs once per session and every consumer reads the
+# 841-row-per-face result.
 # The face plans below are memoized too: re-building them per call
 # would mint fresh expression IDs, which changes the generated code
 # TEXT and defeats the Janino compile cache.
 def all_face_slots(spark: SparkSession) -> DataFrame:
     """All four faces' slot tables in one cached DataFrame. Two plans
     only: face1 (special r_inner=322 + shorter attachments) and faces
-    2-4 together via the face-dim cross join — the per-plan cost here
-    is Catalyst/Janino time, not data."""
-    from pyspark import StorageLevel
-
-    slots = memo.get(spark, "dee_faces", "slots", lambda: _all_face_slots_plan(spark))
-    # a catalog.clearCache() (bench hygiene between queries) drops the
-    # registration; re-mark it (persist() runs no job — the next
-    # action materializes it once)
-    if slots.storageLevel == StorageLevel.NONE:
-        slots.persist()
-    return slots
+    2-4 together, one grid row per face — the per-plan cost here is
+    Catalyst/Janino time, not data."""
+    return memo.persisted(spark, "dee_faces", "slots", lambda: _all_face_slots_plan(spark))
 
 
 def _all_face_slots_plan(spark: SparkSession) -> DataFrame:
@@ -218,7 +210,7 @@ def config_slots_plan(
 ) -> DataFrame:
     """Dee.populate slot grids for an arbitrary configuration — the
     generalized form behind `face_slots`. `faces=[(label, orientation,
-    centering), ...]` run in ONE plan as a grid x face-dim cross join
+    centering), ...]` run in ONE plan, one row per face and grid cell
     (the faces differ only in their y origin and module offset), which
     matters because the per-plan cost here is Catalyst/Janino time, not
     data. `polys` is the blocked polygon set; with it the outer ring
@@ -232,9 +224,9 @@ def config_slots_plan(
     col_step = mod_h + GAP
     x0 = mod_h / 2 + edge_x
 
-    face_dim = spark.createDataFrame(
+    face_rows = literal_rows(
         [(label, face_y0(ori, cen), module_dy(ori)) for label, ori, cen in faces],
-        "face STRING, y0 DOUBLE, dy DOUBLE",
+        ("face", "y0", "dy"),
     )
 
     # dimension-sized grid: ONE partition => no multi-task scheduling
@@ -247,8 +239,8 @@ def config_slots_plan(
         .select(
             (F.col("id") / n_cols).cast("int").alias("iy"),
             (F.col("id") % n_cols).cast("int").alias("ix"),
+            face_rows,
         )
-        .crossJoin(F.broadcast(face_dim))
         .withColumn("xc", F.lit(x0) + F.col("ix").cast("double") * col_step)
         .withColumn(
             "yc", F.col("y0") + (F.lit(N_ROWS // 2) - F.col("iy")).cast("double") * SM_W
@@ -278,6 +270,13 @@ def config_slots_plan(
             "face", "iy", "ix", "xc", "yc", sm_ok.alias("sm_ok"), (mod_ok & ~sm_ok).alias("mod_only")
         )
     )
+
+
+def literal_rows(rows: list[tuple], names: tuple[str, ...]):
+    """The driver-side `rows`, as columns `names`, generated for every
+    input row: `inline(array(struct…))`, a cross join with no join."""
+    structs = [F.struct(*[F.lit(v).alias(n) for v, n in zip(r, names)]) for r in rows]
+    return F.inline(F.array(*structs))
 
 
 def slot_states(flags: DataFrame) -> DataFrame:
@@ -310,7 +309,7 @@ def face_runs(spark: SparkSession) -> DataFrame:
     return _face_plan(
         spark,
         "face_runs",
-        lambda: runs_two_pass_from(all_face_slots(spark), partition_lookup(spark), ("face", "iy")),
+        lambda: runs_two_pass_from(all_face_slots(spark), ("face", "iy")),
     )
 
 
@@ -325,11 +324,11 @@ def multi_config_module_totals_no_maybe(
     cost on these dimension-sized tables is compilation, not data:
     four chains measured ~7 s in a warm bench session, ~45 s cold).
     Here every per-config scalar (mod_h, x0, col_step, r_in, r_out,
-    grid bounds) becomes a COLUMN of a broadcast config×face dim, so
-    all configurations share one grid scan, one window, one groupBy —
-    one compile. Restricted to with_maybe=False (all five committed
-    notebook pins): no maybe machine, no two-pass fallback, so a run
-    is just a maximal island of sm-fits slots.
+    grid bounds) becomes a COLUMN of the config×face rows each grid
+    cell generates, so all configurations share one grid scan, one
+    window, one groupBy — one compile. Restricted to with_maybe=False
+    (all five committed notebook pins): no maybe machine, no two-pass
+    fallback, so a run is just a maximal island of sm-fits slots.
 
     Each `configs` entry: {label, faces: [(ori, cen)], mod_h,
     r_inner, r_outer?, edge_x?, flavors?}. Module width / PB / RB
@@ -356,21 +355,11 @@ def multi_config_module_totals_no_maybe(
                     r_in, r_out, n_rows, n_cols, n_rows // 2, fl_id,
                 )
             )
-    cfg_dim = spark.createDataFrame(
+    cfg_rows = literal_rows(
         dim_rows,
-        "config STRING, face STRING, y0 DOUBLE, x0 DOUBLE, col_step DOUBLE,"
-        " mod_h DOUBLE, r_in DOUBLE, r_out DOUBLE, n_rows INT, n_cols INT,"
-        " iy_center INT, fl INT",
+        ("config", "face", "y0", "x0", "col_step", "mod_h", "r_in", "r_out",
+         "n_rows", "n_cols", "iy_center", "fl"),
     )
-    lookup = None
-    for fl, fl_id in flavor_sets.items():
-        lk = (
-            partition_lookup(spark, fl)
-            .select("n", "covered")
-            .distinct()
-            .withColumn("fl", F.lit(fl_id))
-        )
-        lookup = lk if lookup is None else lookup.unionByName(lk)
     # shared id range sized to the LARGEST grid; each config decodes
     # its own (iy, ix) from id with its own n_cols and drops ids past
     # its own grid (same dimension-sized single-partition discipline
@@ -378,7 +367,7 @@ def multi_config_module_totals_no_maybe(
     slots = (
         spark.range(max_cells)
         .coalesce(1)
-        .crossJoin(F.broadcast(cfg_dim))
+        .select("id", cfg_rows)
         .filter(F.col("id") < F.col("n_rows") * F.col("n_cols"))
         .withColumn("iy", (F.col("id") / F.col("n_cols")).cast("int"))
         .withColumn("ix", F.pmod(F.col("id"), F.col("n_cols")).cast("int"))
@@ -399,29 +388,17 @@ def multi_config_module_totals_no_maybe(
     avail = slots.filter(sm_ok).select(
         "config", "face", "fl", "iy", "ix", F.lit("yes").alias("state")
     )
-    runs = (
-        _runs_from(avail, ("face", "iy"))
-        # face labels are config-unique here, so rejoin the per-face
-        # config/flavor ids via the dim
-        .join(
-            F.broadcast(cfg_dim.select("face", "config", "fl").distinct()), "face"
-        )
-    )
-    totals = (
-        runs.join(
-            F.broadcast(lookup),
-            (runs["fl"] == lookup["fl"]) & (runs["n_slots"] == lookup["n"]),
-            "left",
-        )
-        .groupBy("config")
-        .agg(F.sum(F.coalesce("covered", F.lit(0))).cast("bigint").alias("n_modules"))
-    )
-    # a config whose annulus admits no slot at all still gets its row
-    all_configs = cfg_dim.select("config").distinct()
+    # face labels are config-unique: config and fl as keys change no run
+    runs = _runs_from(avail, ("config", "face", "fl", "iy"))
+    by_set = F.array(*[partition_of("n_slots", fl) for fl in flavor_sets])
+    covered = F.coalesce(F.get(by_set, F.col("fl")).getField("covered"), F.lit(0))
+    # a config whose annulus admits no slot still gets its (zero) row
+    zeros = literal_rows([(c["label"], 0) for c in configs], ("config", "covered"))
     return (
-        all_configs.join(totals, "config", "left")
-        .fillna({"n_modules": 0})
-        .select("config", "n_modules")
+        runs.select("config", covered.alias("covered"))
+        .unionByName(spark.range(1).select(zeros))
+        .groupBy("config")
+        .agg(F.sum("covered").cast("bigint").alias("n_modules"))
     )
 
 
@@ -436,7 +413,7 @@ def config_module_totals(
     """Module total for an arbitrary configuration summed over the
     given (orientation, centering) faces — 1 row (config, n_modules),
     with the maybe machine and the two-pass fallback. All faces of a
-    config run in ONE plan via the face-dim cross join. No registered
+    config run in ONE plan (config_slots_plan). No registered
     query uses it: the notebook-pin query runs its no-maybe configs
     through multi_config_module_totals_no_maybe; the flavor-literal pin
     in tests/test_faces_tiling.py checks its maybe config here."""
@@ -446,13 +423,10 @@ def config_module_totals(
         with_maybe=with_maybe,
         **cfg,
     )
-    pl = partition_lookup(spark, flavors)
-    r = runs_two_pass_from(slots, pl, ("face", "iy"), flavors)
-    pl = F.broadcast(pl.select("n", "covered").distinct())
-    return (
-        r.join(pl, r.n_slots == pl.n, "left")
-        .agg(F.sum(F.coalesce("covered", F.lit(0))).cast("bigint").alias("n_modules"))
-        .select(F.lit(label).alias("config"), "n_modules")
+    r = runs_two_pass_from(slots, ("face", "iy"), flavors)
+    covered = F.coalesce(partition_of("n_slots", flavors).getField("covered"), F.lit(0))
+    return r.agg(F.sum(covered).cast("bigint").alias("n_modules")).select(
+        F.lit(label).alias("config"), "n_modules"
     )
 
 
@@ -466,7 +440,7 @@ def _face_supermodules_plan(spark: SparkSession) -> DataFrame:
     2nd+ run of a multi-row is garbage (ETL.py:700 resets start=length,
     not 0); we place each run from its own slots, which matches the
     reference for single-run rows and is what the reference intended."""
-    return place_boards(face_runs(spark), partition_lookup(spark), ("face", "iy"))
+    return place_boards(face_runs(spark), ("face", "iy"))
 
 
 def face_module_totals(spark: SparkSession) -> DataFrame:
@@ -477,14 +451,13 @@ def _face_module_totals_plan(spark: SparkSession) -> DataFrame:
     """Per-face totals in the shape the reference prints
     (dee_geometry.py:387-388): modules = covered slots, plus the
     supermodule count."""
-    r = face_runs(spark)
-    pl = F.broadcast(partition_lookup(spark).select("n", "covered", "n_boards").distinct())
     return (
-        r.join(pl, r.n_slots == pl.n, "left")
+        face_runs(spark)
+        .withColumn("p", partition_of("n_slots"))
         .groupBy("face")
         .agg(
-            F.sum(F.coalesce("covered", F.lit(0))).cast("bigint").alias("n_modules"),
-            F.sum(F.coalesce("n_boards", F.lit(0))).cast("bigint").alias("n_supermodules"),
+            F.sum(F.coalesce("p.covered", F.lit(0))).cast("bigint").alias("n_modules"),
+            F.sum(F.coalesce("p.n_boards", F.lit(0))).cast("bigint").alias("n_supermodules"),
         )
     )
 
@@ -519,25 +492,28 @@ VTRX_H, VTRX_W = 20.0, 10.0  # ETL.py:196-197
 VTRX_DX, VTRX_DY = 32.5, 6.0  # x = RB.x2 - 32.5, y = RB.y + 6 (ETL.py:198-199)
 
 
+# (face, y0, osign): grid-origin y and the orientation sign (+1 above:
+# RB sits at -PB_W/2, PB at +RB_W/2; -1 below mirrors — ETL.py:352-355)
+FACE_ORIENTATION = [
+    (face, face_y0(ori, cen), 1.0 if ori == "above" else -1.0)
+    for face, (ori, cen, _r) in FACE_CONFIGS.items()
+]
+
+
 def face_orientation_dim(spark: SparkSession) -> DataFrame:
-    """(face, y0, osign): grid-origin y and the orientation sign
-    (+1 above: RB sits at -PB_W/2, PB at +RB_W/2; -1 below mirrors —
-    ETL.py:352-355)."""
-    rows = [
-        (face, face_y0(ori, cen), 1.0 if ori == "above" else -1.0)
-        for face, (ori, cen, _r) in FACE_CONFIGS.items()
-    ]
-    return spark.createDataFrame(rows, "face STRING, y0 DOUBLE, osign DOUBLE")
+    return spark.createDataFrame(FACE_ORIENTATION, "face STRING, y0 DOUBLE, osign DOUBLE")
 
 
-def boards_from_supermodules(sm: DataFrame, face_dim: DataFrame) -> DataFrame:
+def boards_from_supermodules(sm: DataFrame) -> DataFrame:
     """Explode placed supermodules (face, iy, start_ix, flavor,
     sm_start) into their boards: one RB (full SM height), one VTRX
     positioned off the RB's outer-x end, and one or two PBs (split for
-    flavors > 5, right-aligned, ETL.py:506-533). Returns
-    (face, iy, sm_start, flavor, kind, board_ix, x, y, height, width,
-    x1, x2, y1, y2)."""
-    j = sm.join(F.broadcast(face_dim), "face")
+    flavors > 5, right-aligned, ETL.py:506-533); y0 and osign are
+    FACE_ORIENTATION's. Returns (face, iy, sm_start, flavor, kind,
+    board_ix, x, y, height, width, x1, x2, y1, y2)."""
+    j = sm.select("*", literal_rows(FACE_ORIENTATION, ("d_face", "y0", "osign"))).filter(
+        F.col("face") == F.col("d_face")
+    )
     sm_h = F.col("flavor") * MOD_H + (F.col("flavor") - 1) * GAP
     sm_x = F.lit(X0) + (F.col("sm_start") + (F.col("flavor") - 1) / 2.0) * COL_STEP
     sm_y = F.col("y0") + (F.lit(N_ROWS // 2) - F.col("iy")).cast("double") * SM_W
@@ -592,7 +568,7 @@ def face_boards(spark: SparkSession) -> DataFrame:
 
 def _face_boards_plan(spark: SparkSession) -> DataFrame:
     """Boards of the real 'updated'/'S' tiling, all four faces."""
-    return boards_from_supermodules(face_supermodules(spark), face_orientation_dim(spark))
+    return boards_from_supermodules(face_supermodules(spark))
 
 
 def boards_rollup(boards: DataFrame) -> DataFrame:

@@ -38,7 +38,11 @@ from etl_sh_design_spark.operators.bv_grouping import (
     modules_from_sensors,
 )
 from etl_sh_design_spark.operators.histogram import BinSpec, histogram1d
-from etl_sh_design_spark.operators.partition import PARTITION_LOOKUP_SQL, partition_lookup
+from etl_sh_design_spark.operators.partition import (
+    PARTITION_LOOKUP_SQL,
+    partition_lookup,
+    partition_of,
+)
 from etl_sh_design_spark.plans import dee_faces, tiling
 from etl_sh_design_spark.plans.acceptance import REAL_FACE_LAYERS, real_layout_sensor_rows
 from etl_sh_design_spark.registry import (
@@ -80,7 +84,7 @@ def q_tile_runs(spark, sf_dir):
 
 @query("tile_supermodules", tiling.SUPERMODULES_SQL)
 def q_tile_supermodules(spark, sf_dir):
-    """U2 partition join + running-sum placement of readout boards."""
+    """U2 partition lookup + offset placement of readout boards."""
     return tiling.supermodules(spark)
 
 
@@ -135,8 +139,8 @@ def q_ordinal_join(spark, sf_dir):
     # ordinal WITHOUT WindowExec: `runs` is the O(100)-row derived
     # layout table; rn = |rows sorting at-or-before me| via a broadcast
     # theta-join (bounded by construction) — no single-partition window.
-    # (tiling.runs is itself the session-memoized checkpoint since
-    # round 12 — no second checkpoint needed.)
+    # (tiling.runs is itself session-memoized behind a lazy persist —
+    # no second cache needed.)
     runs = tiling.runs(spark)
     r2 = runs.select(F.col("iy").alias("iy2"), F.col("start_ix").alias("sx2"))
     at_or_before = (F.col("iy2") < F.col("iy")) | (
@@ -250,7 +254,7 @@ def q_tile_real_face_modules(spark, sf_dir):
     provenance).
 
     Plan: codegen grid -> Column polygon-flag kernel per face
-    -> (face,iy)-keyed windows -> broadcast partition lookup -> 4-row
+    -> (face,iy)-keyed windows -> literal partition lookup -> 4-row
     agg. Shuffles only on row keys; a 1000x finer grid scales."""
     return dee_faces.face_module_totals(spark)
 
@@ -327,10 +331,10 @@ def q_tile_notebook_pins(spark, sf_dir):
 def _notebook_pins_plan(spark):
     # ONE fused plan for all four underlying tilings (round-9 rewrite
     # of the four-chain config_module_totals form: per-config scalars
-    # become columns of a broadcast dim, so the grid scan, window and
-    # lookup join compile ONCE — the old form paid a Janino compile
-    # per chain, ~7 s warm / ~45 s cold for four). The output rows are
-    # the base totals times each notebook's disk multiplier
+    # become columns of generated config rows, so the grid scan, window
+    # and partition lookup compile ONCE — the old form paid a Janino
+    # compile per chain, ~7 s warm / ~45 s cold for four). The output
+    # rows are the base totals times each notebook's disk multiplier
     # (example_modules_x4 and ga_large_module_x2 share a base tiling).
     base = dee_faces.multi_config_module_totals_no_maybe(
         spark,
@@ -347,7 +351,7 @@ def _notebook_pins_plan(spark):
             ),
         ],
     )
-    out_dim = spark.createDataFrame(
+    outputs = dee_faces.literal_rows(
         [
             ("example_modules_x4", "large", 4),
             ("ga_large_module_x2", "large", 2),
@@ -355,10 +359,11 @@ def _notebook_pins_plan(spark):
             ("descoped_above_pb", "descoped", 1),
             ("ga_flavors_6_11_14", "flavors", 1),
         ],
-        "out_config STRING, base STRING, mult INT",
+        ("out_config", "base", "mult"),
     )
     return (
-        base.join(F.broadcast(out_dim), base["config"] == out_dim["base"])
+        base.select("*", outputs)
+        .filter(F.col("config") == F.col("base"))
         .select(
             F.col("out_config").alias("config"),
             (F.col("n_modules") * F.col("mult")).cast("bigint").alias("n_modules"),
@@ -455,13 +460,11 @@ def q_boards_rollup(spark, sf_dir):
     full per-board SQL oracle: RB/PB/VTRX positions, the flavor>5 PB
     split with right-alignment (shifter 0 only for flavor 6), and the
     above/below orientation mirroring (ETL.py:163-204, 352-357,
-    506-533). Pure explode arithmetic, no UDF, broadcast face dim."""
+    506-533). Pure explode arithmetic, no UDF, face-keyed literal."""
     spark_sm = spark.createDataFrame(
         _SM_FIXTURE, "face STRING, iy INT, sm_start INT, flavor INT"
     )
-    b = dee_faces.boards_from_supermodules(
-        spark_sm, dee_faces.face_orientation_dim(spark)
-    )
+    b = dee_faces.boards_from_supermodules(spark_sm)
     return b.select(
         "face",
         "iy",
@@ -1203,14 +1206,14 @@ def q_real_partition_flavors(spark, sf_dir):
     module counts from the exported D2 x>0 centers, fed through the
     reference's getPartition DP (U2 — pinned equal to the reference's
     partition.py in tests/test_golden_invariants.py), tallying readout
-    boards per flavor. Broadcast lookup join over a 26-row dimension."""
+    boards per flavor. Each row's boards come from the partition
+    literal (partition_of), exploded; no join."""
     mods = _real_modules(spark)
     rows_ = mods.groupBy("row_ord").agg(
         F.count(F.lit(1)).cast("int").alias("n_modules")
     )
-    pl = F.broadcast(partition_lookup(spark))
     return (
-        rows_.join(pl, rows_.n_modules == pl.n)
+        rows_.select(F.inline(partition_of("n_modules").getField("boards")))
         .groupBy("flavor")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_boards"),

@@ -12,7 +12,13 @@ from etl_sh_design_spark.operators.bv_grouping import (
     greedy_bv_groups,
     modules_from_sensors,
 )
-from etl_sh_design_spark.operators.partition import best_partition, partition_rows
+from etl_sh_design_spark.operators.partition import (
+    DEFAULT_FLAVORS,
+    MAX_N,
+    best_partition,
+    partition_of,
+    partition_rows,
+)
 from tests.conftest import SF_SMOKE
 
 
@@ -45,7 +51,7 @@ def test_partition_dp_invariants():
         assert list(p) == sorted(p, reverse=True)
 
 
-def test_partition_rows_consistent():
+def test_partition_rows_consistent(spark):
     rows = partition_rows(30)
     by_n = {}
     for n, ordinal, flavor, n_boards, covered in rows:
@@ -54,6 +60,29 @@ def test_partition_rows_consistent():
         flavors = [f for _, f, _, _ in sorted(entries)]
         assert len(flavors) == entries[0][2]
         assert sum(flavors) == entries[0][3]
+
+    # the Column lookup the tilers read equals the exploded table, for
+    # every n and for a flavor set without 7; n = 1, 2 have no boards
+    for fl in (DEFAULT_FLAVORS, (14, 11, 6)):
+        want = {}
+        for n, ordinal, flavor, n_boards, covered in partition_rows(MAX_N, fl):
+            want.setdefault(n, (covered, n_boards, []))[2].append((ordinal, flavor))
+        p = partition_of("n", fl)
+        got = {
+            r["n"]: (r["covered"], r["n_boards"], r["boards"])
+            for r in spark.range(1, MAX_N + 1)
+            .select(F.col("id").cast("int").alias("n"))
+            .select("n", p.getField("covered").alias("covered"),
+                    p.getField("n_boards").alias("n_boards"),
+                    p.getField("boards").alias("boards"))
+            .collect()
+        }
+        assert set(got) == set(range(1, MAX_N + 1))
+        for n, (covered, n_boards, boards) in got.items():
+            assert [(b["ordinal"], b["flavor"]) for b in boards] == want.get(n, (0, 0, []))[2], n
+            assert (covered, n_boards) == want.get(n, (0, 0, []))[:2], n
+            offsets = [b["offset"] for b in boards]
+            assert offsets == [sum(b["flavor"] for b in boards[:i]) for i in range(len(boards))], n
 
 
 def test_bv_budget_invariant(spark):
@@ -255,31 +284,37 @@ def test_w6_two_pass_fallback_crowded_row(spark):
     - iy=2: yes,yes,no,maybe -> available run (0..1) is yes-led ->
       passes unchanged (the trailing maybe has no 'yes' neighbor and
       was never available)
+    - iy=3: maybe,yes -> n=2 (maybe-led) has an EMPTY partition, which
+      never fails its row (the reference tests `p and ...`) -> passes
+      unchanged; iy=4: a lone maybe, n=1, likewise. Reading the first
+      board of an empty partition must yield NULL, not an ANSI
+      index error.
 
     The same rows under two face labels, through the ("face", "iy")-
     keyed form the per-face tiler uses, give each face the same runs.
     """
-    from etl_sh_design_spark.operators.partition import partition_lookup
     from etl_sh_design_spark.plans.tiling import runs_two_pass_from
 
     rows = []
     rows += [(0, 0, "maybe", True), (0, 1, "yes", True), (0, 2, "yes", True)]
     rows += [(1, 0, "maybe", True)] + [(1, i, "yes", True) for i in range(1, 7)]
     rows += [(2, 0, "yes", True), (2, 1, "yes", True), (2, 2, "no", False), (2, 3, "maybe", False)]
+    rows += [(3, 0, "maybe", True), (3, 1, "yes", True)]
+    rows += [(4, 0, "maybe", True), (4, 1, "no", False)]
     slots_df = spark.createDataFrame(rows, "iy INT, ix INT, state STRING, available BOOLEAN")
 
     got = {
         (r["iy"], r["start_ix"], r["n_slots"])
-        for r in runs_two_pass_from(slots_df, partition_lookup(spark)).collect()
+        for r in runs_two_pass_from(slots_df).collect()
     }
-    assert got == {(0, 1, 2), (1, 0, 7), (2, 0, 2)}
+    assert got == {(0, 1, 2), (1, 0, 7), (2, 0, 2), (3, 0, 2), (4, 0, 1)}
 
     faces_df = spark.createDataFrame(
         [(face, *r) for face in ("faceA", "faceB") for r in rows],
         "face STRING, iy INT, ix INT, state STRING, available BOOLEAN",
     )
     by_face = {}
-    for r in runs_two_pass_from(faces_df, partition_lookup(spark), ("face", "iy")).collect():
+    for r in runs_two_pass_from(faces_df, ("face", "iy")).collect():
         by_face.setdefault(r["face"], set()).add((r["iy"], r["start_ix"], r["n_slots"]))
     assert by_face == {"faceA": got, "faceB": got}
 
@@ -333,7 +368,7 @@ def test_tiling_flavor_counts_reference_derived_fixture(spark):
 
     slots_df = spark.createDataFrame(rows, "iy INT, ix INT, state STRING, available BOOLEAN")
     pl = partition_lookup(spark)
-    runs = runs_two_pass_from(slots_df, pl)
+    runs = runs_two_pass_from(slots_df)
     counts = {
         r["flavor"]: r["n"] * 4
         for r in runs.join(pl, runs.n_slots == pl.n)

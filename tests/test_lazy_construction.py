@@ -89,16 +89,6 @@ EAGER_BUILDERS = {
     "kcenter_coreset": "greedy max-min rounds: each selection gates "
     "the next center set (same per-round checkpoint discipline as "
     "kmeans_profile)",
-    "j6_ordinal_join": "checkpointed runs table shared by both join "
-    "sides",
-    "tile_slots": "may pay the session-memoized synthetic slot-table "
-    "checkpoint (the 'tiling' memo family, round 12): whichever "
-    "tiling-chain consumer is constructed FIRST absorbs the one-time "
-    "build jobs — the minhash_lsh_neardup contract",
-    "tile_runs": "same shared memoized slots/runs chain",
-    "tile_supermodules": "same shared memoized slots/runs chain",
-    "tile_flavor_counts": "same shared memoized slots/runs chain",
-    "a5_slot_state_counts": "same shared memoized slots table",
     "c4_line_dedup": "size-measured boiler-set dispatch: one count() "
     "picks broadcast vs shuffle anti-join and doubles as the "
     "localCheckpoint materialization (LINE_DEDUP_BROADCAST_MAX_ROWS)",

@@ -475,7 +475,13 @@ def test_layout_loop_runs_no_python_worker(spark):
     output of the two studies) nor of the polygon-tiling and greedy-BV
     queries. The dee_faces / tiling_real memos are cleared first, so
     the persisted sub-plans inspected (printed under their
-    InMemoryRelation) are the ones built here."""
+    InMemoryRelation) are the ones built here.
+
+    The tilers' driver-side dimensions (faces, partitions, blocked
+    rects) are literal columns: the executed plans of the four tiling
+    ops, cached sub-plans included, hold no join and no broadcast."""
+    import re
+
     from etl_sh_design_spark import memo, registry
     from etl_sh_design_spark.operators import partition
     from etl_sh_design_spark.plans import dee_faces, studies, tiling
@@ -501,16 +507,22 @@ def test_layout_loop_runs_no_python_worker(spark):
         name: [n for n in python_nodes if n in _plan(df)] for name, df in frames.items()
     }
     assert not any(found.values()), {k: v for k, v in found.items() if v}
+    tilers = ("tiling.flavor_counts", "tiling.supermodules", "dee_faces.face_boards",
+              "dee_faces.face_flavor_counts")
+    joined = {
+        name: re.findall(r"\w*Join\w*|BroadcastExchange", _plan(frames[name])) for name in tilers
+    }
+    assert not any(joined.values()), joined
 
 
 def test_dee_face_slots_are_one_cached_table(spark):
     """The four faces' slot table is one cached relation whose plan
     runs the one-maybe-per-row rule as a window pass: no join back to
-    the flags and no cache nested inside it. The only join left is the
-    grid x face-dim cross join, one per slot plan (face1, faces 2-4).
-    So face_flavor_counts' executed plan scans cached data a handful
-    of times, and does not print the polygon literal under a nested
-    cache per consumer."""
+    the flags and no cache nested inside it. It joins nothing at all:
+    each grid cell generates its face rows from a literal. So
+    face_flavor_counts' executed plan scans cached data a handful of
+    times, and does not print the polygon literal under a nested cache
+    per consumer."""
     import re
 
     from etl_sh_design_spark import memo
@@ -520,7 +532,7 @@ def test_dee_face_slots_are_one_cached_table(spark):
     cached = _plan(dee_faces.all_face_slots(spark))
     assert cached.count("InMemoryRelation") == 1, cached.count("InMemoryRelation")
     joins = re.findall(r"\w*Join\w*", cached.split("InMemoryRelation", 1)[1])
-    assert joins == ["BroadcastNestedLoopJoin"] * 2, joins
+    assert joins == [], joins
     counts = _plan(dee_faces.face_flavor_counts(spark))
     assert counts.count("InMemoryTableScan") <= 5, counts.count("InMemoryTableScan")
 

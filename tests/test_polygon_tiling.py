@@ -246,11 +246,7 @@ def test_outer_attachment_cap_extends_inward():
 
 def test_runs_downstream_works_on_polygon_slots(spark):
     """The exact-geometry slot table feeds the same W5/W6 run logic."""
-    from etl_sh_design_spark.operators.partition import partition_lookup
-
-    runs = tiling.runs_two_pass_from(
-        tiling.slots_real(spark, "polygon"), partition_lookup(spark)
-    ).collect()
+    runs = tiling.runs_two_pass_from(tiling.slots_real(spark, "polygon")).collect()
     assert len(runs) > 0
     assert all(r["n_slots"] >= 1 for r in runs)
 

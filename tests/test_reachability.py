@@ -46,6 +46,8 @@ ALLOWED = {
     "functions.transforms.mm_to_cm": _COORDS,
     "plans.dee_faces.config_module_totals": "tests/test_faces_tiling.py pins it unchanged",
     "plans.dee_faces.face_slots": "tests/test_faces_tiling.py pins it unchanged",
+    "plans.dee_faces.face_orientation_dim": "tests/test_faces_tiling.py pins it unchanged "
+    "(the board geometry reads FACE_ORIENTATION as a literal)",
     "registry.withheld": "the registry contract tests' introspection API",
 }
 

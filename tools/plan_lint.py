@@ -34,7 +34,9 @@ Usage:
     python tools/plan_lint.py            # lint all queries at sf0.001
     python tools/plan_lint.py NAME ...   # lint matching queries
 
-Exit 1 if any non-whitelisted finding. Also importable:
+Exit 1 if any non-whitelisted finding. A whitelisted rule that did
+not fire on its query prints a STALE line (the entry may be deleted),
+but does not fail the run. Also importable:
 `lint_plan(df)` returns the finding list for one DataFrame, and
 `WHITELIST` documents every accepted exception in one place.
 """
@@ -107,7 +109,6 @@ WHITELIST: dict[str, dict[str, str]] = {
     "real_occupancy_bandwidth": {
         "NESTED_LOOP": "1-row sensor-totals crossJoin (lazified scalar)"
     },
-    "tile_supermodules": {"NESTED_LOOP": "O(100)-row layout tables"},
     "j6_ordinal_join": {"NESTED_LOOP": "bounded theta-join (plan-tested)"},
     "top_bigrams": {"NESTED_LOOP": "post-limit top-k theta-join"},
     "weighted_sample_docs": {"NESTED_LOOP": "k-th key scalar"},
@@ -154,23 +155,6 @@ WHITELIST: dict[str, dict[str, str]] = {
     "similarity_ann_ivf_multiprobe": {"NESTED_LOOP": "centroid broadcast"},
     # the one deliberate LATERAL/UDTF demo (documented alternative)
     "udtf_chunk_stats": {"ROW_PYTHON": "U5 UDTF demo (documented)"},
-    # J3 blocked-geometry overlap: slots x blocked-rects theta join over
-    # O(600)-row layout tables (golden-tested; both sides dee-bounded)
-    "a5_slot_state_counts": {"NESTED_LOOP": "slot x blocked-rect overlap (layout-bounded)"},
-    "tile_slots": {"NESTED_LOOP": "slot x blocked-rect overlap (layout-bounded)"},
-    "tile_runs": {"NESTED_LOOP": "slot x blocked-rect overlap (layout-bounded)"},
-    "tile_slots_real_bbox": {
-        "NESTED_LOOP": "slot x real-geometry bbox overlap (14-row dim)"
-    },
-    # faithful per-face tiling family: the grid x face-dim cross join
-    # (<=4-row broadcast dim) + the partition-lookup broadcast
-    "tile_real_face_modules": {"NESTED_LOOP": "grid x 4-row face-dim cross join"},
-    "tile_real_flavor_counts": {"NESTED_LOOP": "grid x 4-row face-dim cross join"},
-    "tile_real_slot_states": {"NESTED_LOOP": "grid x 4-row face-dim cross join"},
-    "tile_real_boards": {"NESTED_LOOP": "grid x 4-row face-dim cross join"},
-    "tile_notebook_pins": {
-        "NESTED_LOOP": "grid x face-dim cross joins (5 bare-annulus configs)"
-    },
     "acceptance_multi_variant": {"NESTED_LOOP": "rays x 3-row variant dim cross join"},
     "acceptance_multi_variant_hist": {"NESTED_LOOP": "rays x 3-row variant dim cross join"},
     "real_module_rows": {
@@ -183,7 +167,6 @@ WHITELIST: dict[str, dict[str, str]] = {
         "GLOBAL_WIN": "rank over the 52-row distinct-y layout dimension",
         "NESTED_LOOP": "8-row BV config dim cross joins (layout-bounded)",
     },
-    "tile_flavor_counts": {"NESTED_LOOP": "slot x blocked-rect overlap (layout-bounded)"},
     # J8: zones dim table is O(10) rows
     "bv_zone_counts": {"NESTED_LOOP": "zone range-lookup dim (O(10) rows)"},
     # 1-row scalar sides
@@ -271,6 +254,8 @@ def main() -> int:
             continue
         wl = WHITELIST.get(name, {})
         hard = [(r, ev) for r, ev in findings if r not in wl]
+        for r in sorted(set(wl) - {r for r, _ in findings}):
+            print(f"  STALE      {name}: {r} is whitelisted but did not fire")
         if hard:
             bad += 1
             for r, ev in hard:
